@@ -1,7 +1,8 @@
 package graft
 
-/** Benchmark main (driver contract): runs the headline queries on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line
+/** Benchmark main (driver contract): runs every query of
+  * [[SparkEntry.all]], in registry order, on SPARK_GRAFT_SF_DIR, prints
+  * ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","errors":{...},"spread":{...},
   * "total_sec":N,"n_queries":N,"n_errors":N,"sf":...}.
   *
@@ -17,7 +18,7 @@ package graft
   * 32-core audit record (VERDICT item #8). Timing methodology is
   * UNCHANGED: same queries, same scale factor, same warm-up+best-of-3.
   *
-  * Headline set = all declared queries, so every CORRECTNESS entry has a
+  * Every declared query is timed, so every CORRECTNESS entry has a
   * timing (q31 runs exact Jaccard on a bounded doc_id &lt; 200 slice — its
   * scale path is the MinHash candidates, q32). Each query is run once to
   * warm the JVM/code cache and then THREE timed runs, reporting the
@@ -28,122 +29,23 @@ package graft
   * queries get more samples instead of a false verdict.
   */
 object Bench {
-  val headline: Seq[String] = Seq(
-    "q01_pricing_summary", "q02_revenue_by_nation", "q03_topk_orders",
-    "q04_window_rank", "q05_market_share", "q06_set_ops",
-    "q07_cust_no_orders", "q08_events_hourly", "q09_json_props",
-    "q10_part_stats", "q11_orders_monthly", "q12_rollup",
-    "q13_distinct_counts", "q14_running_totals", "q15_event_gaps",
-    "q16_above_avg", "q17_sessionization", "q18_asof_join",
-    "q19_quantiles", "q75_histogram_quantiles",
-    "q47_pivot", "q48_stats_agg", "q49_approx_distinct",
-    "q51_topk_heap", "q53_range_join", "q54_cube",
-    "q55_sliding_window", "q56_salted_agg", "q63_salted_join",
-    "q58_range_frame", "q59_map_props", "q60_exists_subquery",
-    "q76_window_suite",
-    "q20_vec_dot_topk", "q21_vec_l2_knn", "q22_vec_cosine_topk",
-    "q23_vec_knn_join", "q24_meta_filter_cosine", "q25_label_centroids",
-    "q26_meta_array_filter", "q35_ann_lsh", "q52_ann_ivf", "q70_sq_topk",
-    "q30_dedup_exact", "q31_ngram_jaccard", "q32_minhash_lsh",
-    "q33_simhash", "q34_embed_neardup",
-    "q36_dedup_clusters", "q37_simhash_neardup", "q38_winnow_fp",
-    "q40_token_stats", "q41_quality_scores", "q42_langid",
-    "q43_fingerprint", "q44_chunking", "q45_top_terms", "q46_hash_split",
-    "q50_multimodal_hist", "q57_frame_features", "q61_hash_sample",
-    "q62_token_chunks", "q64_rag_topk", "q65_incremental_dedup",
-    "q66_pii_scrub", "q67_repetition", "q68_stratified_sample",
-    "q69_bloom_semijoin", "q71_quality_dedup", "q72_tfidf_terms",
-    "q73_sequence_packing", "q74_weighted_mixture",
-    "q77_decontaminate", "q78_unigram_logprob", "q79_crossdoc_ngrams",
-    "q80_zorder_layout", "q81_epoch_shuffle", "q82_bm25_topk",
-    "q83_chunk_dedup", "q84_matryoshka_topk", "q85_fixed_sample",
-    "q86_funnel", "q87_retention", "q88_binary_hamming", "q89_unpivot",
-    "q90_revenue_share", "q91_rolling_active", "q92_edit_distance",
-    "q93_length_curriculum",
-    "q94_semdedup", "q95_boolean_retrieval", "q96_gap_fill",
-    "q97_prefix_jaccard", "q98_winsorize", "q99_pq_adc",
-    "q100_dataset_card", "q101_attribution", "q102_bigram_logprob",
-    "q103_containment", "q104_label_cohesion", "q105_small_qty",
-    "q106_hourly_anomaly", "q107_ivf_pq", "q108_pagerank",
-    "q109_mad_outliers", "q110_type_correlation", "q111_ivf_append",
-    "q112_decontaminate_bloom", "q113_heavy_hitters",
-    "q114_contamination_source", "q115_token_drift",
-    "q116_weighted_reservoir", "q117_dsir_selection",
-    "q118_margin_mining", "q119_span_removal", "q120_alpha_sampling",
-    "q121_ccnet_pipeline", "q122_bm25_index", "q123_bm25_append",
-    "q124_quality_classifier", "q125_doremi_mixture", "q126_phash_neardup",
-    "q127_gopher_rules", "q128_cluster_split", "q129_source_cap",
-    "q130_kanonymity", "q131_zipf_slope", "q132_lexical_diversity",
-    "q133_vocab_overlap", "q134_pmi_collocations", "q135_corpus_diff",
-    "q136_kcenter_coreset", "q137_mmr_rerank", "q138_bpe_merges",
-    "q139_bpe_fertility", "q140_triangle_census", "q141_release_split",
-    "q142_decayed_counts", "q143_scd2_merge", "q144_table_checksum",
-    "q145_padding_waste", "q146_semantic_boundaries", "q147_variant_props",
-    "q148_lsh_plan", "q149_mixture_budget", "q150_rendezvous_shards",
-    "q151_lsh_recall", "q152_ivf_recall", "q153_bootstrap_ci",
-    "q154_ab_ttest", "q155_semantic_decon", "q156_knn_label_noise",
-    "q157_kn_bigram", "q158_dedup_sweep", "q159_char_entropy",
-    "q160_blocklist_gate", "q161_windowed_quantiles", "q162_shard_prep",
-    "q163_semantic_outliers", "q164_triplet_mining", "q165_novelty_curve",
-    "q166_pca_top", "q167_backoff_trigram", "q168_lm_index_score",
-    "q169_embedding_drift", "q170_lm_index_append", "q171_bpe_batched",
-    "q172_components_append", "q173_pca_deflate", "q174_pca_project",
-    "q175_retrieval_metrics", "q176_dedup_audit", "q177_calibration",
-    "q178_temp_scaling", "q179_span_corrupt", "q180_lm_compact",
-    "q181_bpe_encode", "q182_bpe_packing", "q183_maximal_spans",
-    "q184_bm25_compact", "q185_quality_auc", "q186_lm_time_travel",
-    "q187_annotator_kappa", "q188_bpe_roundtrip", "q189_langid_report",
-    "q190_bm25_time_travel", "q191_ivf_time_travel", "q192_filter_funnel",
-    "q193_gate_agreement", "q194_unimax", "q195_index_diff",
-    "q196_ann_rbo", "q197_soft_dedup", "q198_vocab_coverage",
-    "q199_conformal", "q200_score_drift",
-    "q201_avg_precision", "q202_source_jsd", "q203_ks_drift",
-    "q204_token_gini", "q205_rrf_blend", "q206_cluster_nmi",
-    "q207_spearman", "q208_heaps_law", "q209_ess",
-    "q210_mann_whitney", "q211_chi_square", "q212_brier",
-    "q213_l_diversity", "q214_cusum", "q215_mcnemar",
-    "q216_kendall_tau", "q217_theil_sen", "q218_acf",
-    "q219_isotonic", "q220_t_closeness", "q221_good_turing",
-    "q222_token_label_mi", "q223_neyman", "q224_assortativity",
-    "q225_contamination_runs", "q226_kcore", "q227_textrank",
-    "q228_seasonal", "q229_gate_plan", "q230_cochran_q",
-    "q231_jackknife", "q232_capture_recapture", "q233_change_point",
-    "q234_bpe_persisted", "q235_burstiness", "q236_cuped",
-    "q237_ks_by_source", "q238_cluster_ari", "q239_v_measure",
-    "q240_modularity", "q241_hits", "q242_mantel_haenszel",
-    "q243_drift_bh", "q244_ccf", "q245_cronbach", "q246_benford",
-    "q247_hill_tail", "q248_balance", "q249_gain_curve", "q250_power",
-    "q251_survival", "q252_isotropy", "q253_kruskal",
-    "q254_brown_forsythe", "q255_mann_kendall", "q256_chao1",
-    "q257_llr_keywords", "q258_burrows_delta", "q259_dispersion",
-    "q260_ngram_diversity", "q261_segmented_trend", "q262_skew_report",
-    "q263_importance_weights", "q264_ks_p", "q265_auc_ci",
-    "q266_cosine_tf", "q267_ca_trend", "q268_partial_corr",
-    "q269_sprt", "q270_readability", "q271_label_isotropy", "q272_wilson",
-    "q273_cvm", "q274_label_separation", "q275_hellinger", "q276_gwet_ac1",
-    "q277_jarque_bera", "q279_kendall_w", "q280_hubness",
-    "q282_edit_join", "q283_countmin", "q284_effect_size",
-    "q285_mw_matrix", "q286_perm_auc", "q287_krippendorff", "q288_logrank",
-    "q289_page_hinkley", "q290_jm_sweep", "q291_set_cover",
-    "q292_theil", "q293_runs_test", "q294_qte", "q295_mcc_sweep")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
-    val qs = SparkEntry.queries
     // dev convenience: `runMain graft.Bench q38_winnow_fp ...` times only
-    // the named queries (driver passes no args → full headline set);
+    // the named queries (driver passes no args → the whole registry);
     // unknown names fail loudly — a silent empty filter would report a
     // successful zero-query "benchmark" on a typo
-    val unknown = args.filterNot(headline.contains)
+    val names = SparkEntry.all.map(_.name)
+    val unknown = args.filterNot(names.contains)
     require(unknown.isEmpty,
-      s"unknown headline quer${if (unknown.length == 1) "y" else "ies"}: " +
-        s"${unknown.mkString(", ")} (known: ${headline.mkString(", ")})")
-    val selected = if (args.nonEmpty) headline.filter(args.toSet) else headline
+      s"unknown quer${if (unknown.length == 1) "y" else "ies"}: " +
+        s"${unknown.mkString(", ")} (known: ${names.mkString(", ")})")
+    val selected =
+      if (args.nonEmpty) SparkEntry.all.filter(q => args.contains(q.name)) else SparkEntry.all
     // a failing query must NOT be folded in as a fake near-zero timing —
     // it is excluded from `queries` and reported under `errors`
-    val runs = selected.filter(qs.contains).map { name =>
-      val fn = qs(name)
+    val runs = selected.map { case Query(name, fn, _) =>
       try {
         val t0 = System.nanoTime()
         fn(spark, sfDir).count() // warm-up (JIT/codegen/cache), untimed

@@ -3453,200 +3453,6 @@ object PipelineQueries {
           .as("sd_of_means"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q30_dedup_exact"     -> (dedupExact _),
-    "q31_ngram_jaccard"   -> (ngramJaccard _),
-    "q32_minhash_lsh"     -> (minhashCandidates _),
-    "q33_simhash"         -> (simhashFingerprints _),
-    "q34_embed_neardup"   -> (embeddingNearDups _),
-    "q36_dedup_clusters"  -> (dedupClusters _),
-    "q37_simhash_neardup" -> (simhashNearDups _),
-    "q40_token_stats"     -> (tokenStats _),
-    "q41_quality_scores"  -> (qualityScores _),
-    "q42_langid"          -> (langIdConfusion _),
-    "q43_fingerprint"     -> (fingerprints _),
-    "q44_chunking"        -> (chunkedDocs _),
-    "q45_top_terms"       -> (topTerms _),
-    "q38_winnow_fp"       -> (winnowFingerprints _),
-    "q46_hash_split"      -> (splitCounts _),
-    "q50_multimodal_hist" -> (multimodalHist _),
-    "q57_frame_features"  -> (frameFeatures _),
-    "q61_hash_sample"     -> (sampleSummary _),
-    "q62_token_chunks"    -> (tokenChunks _),
-    "q64_rag_topk"        -> (ragTopK _),
-    "q65_incremental_dedup" -> (incrementalDedup _),
-    "q66_pii_scrub"       -> (piiScrub _),
-    "q67_repetition"      -> (repetitionSummary _),
-    "q68_stratified_sample" -> (stratifiedByLang _),
-    "q71_quality_dedup"   -> (qualityDedup _),
-    "q72_tfidf_terms"     -> (tfidfTopTerms _),
-    "q73_sequence_packing" -> (sequencePacking _),
-    "q74_weighted_mixture" -> (weightedMixture _),
-    "q77_decontaminate"   -> (decontaminate _),
-    "q112_decontaminate_bloom" -> (decontaminateBloom _),
-    "q114_contamination_source" -> (decontaminateSources _),
-    "q115_token_drift"    -> (tokenDrift _),
-    "q116_weighted_reservoir" -> (weightedReservoir _),
-    "q78_unigram_logprob" -> (unigramLogProb _),
-    "q79_crossdoc_ngrams" -> (crossDocNgrams _),
-    "q80_zorder_layout"   -> (zorderLayout _),
-    "q81_epoch_shuffle"   -> (epochShuffle _),
-    "q82_bm25_topk"       -> (bm25TopK _),
-    "q83_chunk_dedup"     -> (chunkDedup _),
-    "q85_fixed_sample"    -> (fixedSample _),
-    "q86_funnel"          -> (funnel _),
-    "q87_retention"       -> (retention _),
-    "q89_unpivot"         -> (unpivotCharClasses _),
-    "q91_rolling_active"  -> (rollingActives _),
-    "q92_edit_distance"   -> (editDistancePairs _),
-    "q93_length_curriculum" -> (lengthCurriculum _),
-    "q94_semdedup"        -> (semDedup _),
-    "q95_boolean_retrieval" -> (booleanRetrieval _),
-    "q97_prefix_jaccard"  -> (prefixJaccard _),
-    "q100_dataset_card"   -> (datasetCard _),
-    "q102_bigram_logprob" -> (bigramLogProb _),
-    "q103_containment"    -> (containment _),
-    "q108_pagerank"       -> (pageRank _),
-    "q117_dsir_selection" -> (dsirSelection _),
-    "q119_span_removal"   -> (spanRemoval _),
-    "q120_alpha_sampling" -> (alphaSampling _),
-    "q121_ccnet_pipeline" -> (ccnetPipeline _),
-    "q122_bm25_index"     -> (bm25IndexTopK _),
-    "q123_bm25_append"    -> (bm25AppendTopK _),
-    "q124_quality_classifier" -> (qualityClassifier _),
-    "q125_doremi_mixture" -> (doremiMixture _),
-    "q126_phash_neardup"  -> (phashNearDup _),
-    "q127_gopher_rules"   -> (gopherQuality _),
-    "q128_cluster_split"  -> (clusterSplitSummary _),
-    "q129_source_cap"     -> (sourceCap _),
-    "q130_kanonymity"     -> (kAnonymity _),
-    "q131_zipf_slope"     -> (zipfSlopes _),
-    "q132_lexical_diversity" -> (lexicalDiversityBySource _),
-    "q133_vocab_overlap"  -> (vocabOverlapBySource _),
-    "q134_pmi_collocations" -> (pmiTopCollocations _),
-    "q135_corpus_diff"    -> (corpusDiffSummary _),
-    "q136_kcenter_coreset" -> (kcenterCoreset _),
-    "q137_mmr_rerank"     -> (mmrDiversified _),
-    "q138_bpe_merges"     -> (bpeTopMerges _),
-    "q139_bpe_fertility"  -> (bpeFertilityByLang _),
-    "q140_triangle_census" -> (nearDupTriangles _),
-    "q141_release_split"  -> (releaseSplit _),
-    "q143_scd2_merge"     -> (scd2Customers _),
-    "q144_table_checksum" -> (tableChecksums _),
-    "q145_padding_waste"  -> (paddingWaste _),
-    "q146_semantic_boundaries" -> (semanticBoundaries _),
-    "q148_lsh_plan"       -> (lshPlanEstimate _),
-    "q149_mixture_budget" -> (mixtureBudgetPlan _),
-    "q150_rendezvous_shards" -> (rendezvousRebalance _),
-    "q151_lsh_recall"     -> (lshRecallAudit _),
-    "q153_bootstrap_ci"   -> (bootstrapCi _),
-    "q157_kn_bigram"      -> (knBigramLogProb _),
-    "q158_dedup_sweep"    -> (dedupSweep _),
-    "q159_char_entropy"   -> (charEntropyProfile _),
-    "q160_blocklist_gate" -> (blocklistGate _),
-    "q161_windowed_quantiles" -> (windowedQuantilesQuery _),
-    "q162_shard_prep"     -> (shardPrep _),
-    "q164_triplet_mining" -> (tripletMining _),
-    "q165_novelty_curve"  -> (noveltyCurve _),
-    "q167_backoff_trigram" -> (backoffTrigram _),
-    "q168_lm_index_score" -> (lmIndexScore _),
-    "q170_lm_index_append" -> (lmIndexAppendScore _),
-    "q171_bpe_batched"    -> (bpeBatchedMerges _),
-    "q172_components_append" -> (componentsAppend _),
-    "q175_retrieval_metrics" -> (retrievalMetrics _),
-    "q176_dedup_audit"    -> (dedupAudit _),
-    "q177_calibration"    -> (calibrationAudit _),
-    "q178_temp_scaling"   -> (temperatureScaling _),
-    "q179_span_corrupt"   -> (spanCorruption _),
-    "q180_lm_compact"     -> (lmIndexCompactScore _),
-    "q181_bpe_encode"     -> (bpeEncodeQuery _),
-    "q182_bpe_packing"    -> (bpePacking _),
-    "q183_maximal_spans"  -> (maximalSpans _),
-    "q184_bm25_compact"   -> (bm25CompactTopK _),
-    "q185_quality_auc"    -> (qualityAuc _),
-    "q186_lm_time_travel" -> (lmTimeTravelScore _),
-    "q187_annotator_kappa" -> (annotatorKappa _),
-    "q188_bpe_roundtrip"  -> (bpeRoundtrip _),
-    "q189_langid_report"  -> (langIdReport _),
-    "q190_bm25_time_travel" -> (bm25TimeTravelTopK _),
-    "q192_filter_funnel"  -> (filterFunnelQuery _),
-    "q193_gate_agreement" -> (gateAgreement _),
-    "q194_unimax"         -> (uniMaxPlan _),
-    "q195_index_diff"     -> (indexVersionDiff _),
-    "q197_soft_dedup"     -> (softDedupWeights _),
-    "q198_vocab_coverage" -> (vocabCoverageCurve _),
-    "q199_conformal"      -> (conformalAudit _),
-    "q200_score_drift"    -> (scoreDriftAudit _),
-    "q201_avg_precision"  -> (qualityAp _),
-    "q202_source_jsd"     -> (sourceJsdMatrix _),
-    "q203_ks_drift"       -> (ksDrift _),
-    "q204_token_gini"     -> (tokenGiniBySource _),
-    "q205_rrf_blend"      -> (rrfBlend _),
-    "q206_cluster_nmi"    -> (clusterNmi _),
-    "q207_spearman"       -> (spearmanSignals _),
-    "q208_heaps_law"      -> (heapsLaw _),
-    "q209_ess"            -> (essBySource _),
-    "q210_mann_whitney"   -> (mannWhitneyDrift _),
-    "q211_chi_square"     -> (sourceLangChiSquare _),
-    "q212_brier"          -> (brierAudit _),
-    "q213_l_diversity"    -> (lDiversity _),
-    "q215_mcnemar"        -> (gateMcnemar _),
-    "q219_isotonic"       -> (isotonicAudit _),
-    "q220_t_closeness"    -> (tCloseness _),
-    "q221_good_turing"    -> (goodTuringReadout _),
-    "q222_token_label_mi" -> (tokenLabelMiTop _),
-    "q223_neyman"         -> (neymanBudget _),
-    "q224_assortativity"  -> (nearDupAssortativity _),
-    "q225_contamination_runs" -> (contaminationRunsReport _),
-    "q226_kcore"          -> (nearDupKCore _),
-    "q227_textrank"       -> (textRankTop _),
-    "q229_gate_plan"      -> (gatePlanQuery _),
-    "q230_cochran_q"      -> (gateCochranQ _),
-    "q231_jackknife"      -> (jackknifeKeepRate _),
-    "q232_capture_recapture" -> (dedupCaptureRecapture _),
-    "q234_bpe_persisted"  -> (bpePersistedEncode _),
-    "q235_burstiness"     -> (burstinessTop _),
-    "q237_ks_by_source"   -> (ksDriftBySource _),
-    "q238_cluster_ari"    -> (clusterAri _),
-    "q239_v_measure"      -> (clusterVMeasure _),
-    "q240_modularity"     -> (nearDupModularity _),
-    "q241_hits"           -> (eventHits _),
-    "q242_mantel_haenszel" -> (lengthGateMh _),
-    "q243_drift_bh"       -> (sourceDriftBh _),
-    "q245_cronbach"       -> (gateCronbach _),
-    "q247_hill_tail"      -> (docLengthHill _),
-    "q249_gain_curve"     -> (qualityGainCurve _),
-    "q252_isotropy"       -> (embeddingIsotropy _),
-    "q253_kruskal"        -> (sourceScoreKruskal _),
-    "q254_brown_forsythe" -> (sourceScoreSpread _),
-    "q256_chao1"          -> (sourceChao1 _),
-    "q257_llr_keywords"   -> (sourceKeywords _),
-    "q258_burrows_delta"  -> (sourceStyleDelta _),
-    "q259_dispersion"     -> (tokenDispersion _),
-    "q260_ngram_diversity" -> (sourceNgramDiversity _),
-    "q263_importance_weights" -> (sourceImportanceWeights _),
-    "q264_ks_p"           -> (ksDriftTest _),
-    "q265_auc_ci"         -> (qualityAucCi _),
-    "q266_cosine_tf"      -> (cosineNearDup _),
-    "q267_ca_trend"       -> (gopherLengthTrend _),
-    "q268_partial_corr"   -> (scoreKeepPartial _),
-    "q270_readability"    -> (sourceReadability _),
-    "q271_label_isotropy" -> (labelIsotropy _),
-    "q272_wilson"         -> (sourceKeepWilson _),
-    "q273_cvm"            -> (cvmDrift _),
-    "q274_label_separation" -> (labelSeparation _),
-    "q275_hellinger"      -> (sourceHellinger _),
-    "q276_gwet_ac1"       -> (langIdAc1 _),
-    "q279_kendall_w"      -> (signalKendallW _),
-    "q283_countmin"       -> (tokenCountMin _),
-    "q287_krippendorff"   -> (gateKrippendorff _),
-    "q285_mw_matrix"      -> (sourceMwMatrix _),
-    "q286_perm_auc"       -> (signalPermAucNull _),
-    "q290_jm_sweep"       -> (jmLambdaSweep _),
-    "q291_set_cover"      -> (vocabSetCover _),
-    "q292_theil"          -> (sourceTheil _),
-    "q295_mcc_sweep"      -> (classifierMccSweep _))
-
   private val norm = "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')"
 
   /** DuckDB CTE chain ending in `st` (doc_id, shingle-code rows): per-doc
@@ -4061,8 +3867,8 @@ object PipelineQueries {
        |  SELECT d.doc_id, flatten(list(wid.ids ORDER BY d.pos)) AS tids
        |  FROM dtw d JOIN wid ON wid.w = d.w GROUP BY d.doc_id)""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "q117_dsir_selection" ->
+  val all: Seq[Query] = Seq(
+    Query("q117_dsir_selection", dsirSelection,
       s"""WITH tk0 AS (
          |  SELECT doc_id, lang = 'en' AS tgt,
          |    unnest(string_split($norm, ' ')) AS token
@@ -4082,8 +3888,8 @@ object PipelineQueries {
          |  FROM tk JOIN lr USING (token) GROUP BY 1)
          |SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
          |  ROUND(CAST(sm AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * 1000000), 6) AS avg_log_ratio
-         |FROM d ORDER BY avg_log_ratio DESC, doc_id LIMIT 50""".stripMargin,
-    "q119_span_removal" ->
+         |FROM d ORDER BY avg_log_ratio DESC, doc_id LIMIT 50""".stripMargin),
+    Query("q119_span_removal", spanRemoval,
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
          |hh AS (
          |  SELECT doc_id, list_transform(w, tk -> ${duckFold("tk", graft.expr.DedupKernel.B1)}) AS h
@@ -4110,8 +3916,8 @@ object PipelineQueries {
          |  CAST(len(ds) AS BIGINT) AS n_dup_spans,
          |  CAST(len(w) - len(kept) AS BIGINT) AS n_removed,
          |  COALESCE(array_to_string(list_transform(kept, p -> w[p]), ' '), '') AS clean_text
-         |FROM k ORDER BY doc_id""".stripMargin,
-    "q183_maximal_spans" ->
+         |FROM k ORDER BY doc_id""".stripMargin),
+    Query("q183_maximal_spans", maximalSpans,
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
          |hh AS (
          |  SELECT doc_id, list_transform(w, tk -> ${duckFold("tk", graft.expr.DedupKernel.B1)}) AS h
@@ -4159,8 +3965,8 @@ object PipelineQueries {
          |  COALESCE(array_to_string(list_transform(sp,
          |    x -> x.st || ':' || (x.fin - x.st + 1)), ','), '') AS spans_str,
          |  COALESCE(array_to_string(list_transform(kept, p -> w[p]), ' '), '') AS clean_text
-         |FROM kk ORDER BY doc_id""".stripMargin,
-    "q120_alpha_sampling" ->
+         |FROM kk ORDER BY doc_id""".stripMargin),
+    Query("q120_alpha_sampling", alphaSampling,
       s"""WITH s AS (SELECT lang, COUNT(*) AS n_g FROM documents GROUP BY 1),
          |t AS (SELECT SUM(n_g) AS n FROM s),
          |qr AS (
@@ -4179,8 +3985,8 @@ object PipelineQueries {
          |FROM documents d JOIN r USING (lang)
          |WHERE CAST(CAST(concat('0x', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS DOUBLE)
          |      < r.rate * 4294967296.0
-         |ORDER BY doc_id""".stripMargin,
-    "q121_ccnet_pipeline" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q121_ccnet_pipeline", ccnetPipeline,
       s"""WITH keep AS (
          |  SELECT md5($norm) AS fp, MIN(doc_id) AS doc_id
          |  FROM documents GROUP BY 1),
@@ -4262,9 +4068,9 @@ object PipelineQueries {
          |  FROM sc JOIN bb2 USING (predicted))
          |SELECT predicted, bucket, COUNT(*) AS n_docs,
          |  MIN(avg_logprob) AS min_lp, MAX(avg_logprob) AS max_lp
-         |FROM fin GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q64_rag_topk" -> ragOracle,
-    "q77_decontaminate" ->
+         |FROM fin GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Query("q64_rag_topk", ragTopK, ragOracle),
+    Query("q77_decontaminate", decontaminate,
       s"""WITH ${ngramCtes(8)},
          |b AS (SELECT doc_id, $bucketExpr AS bucket FROM documents),
          |ev AS (
@@ -4279,20 +4085,20 @@ object PipelineQueries {
          |  CAST(COALESCE(hits.n_hits, 0) AS BIGINT) AS n_hits,
          |  CAST(COALESCE(hits.n_hits, 0) AS DOUBLE) / len(tr.ng) AS hit_frac
          |FROM tr LEFT JOIN hits USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // q116: A-ES weighted sample — md5-derived uniforms, one ln per row,
     // micro-quantized keys with id tiebreak so the sort replays exactly
-    "q116_weighted_reservoir" ->
+    Query("q116_weighted_reservoir", weightedReservoir,
       """SELECT doc_id, n_chars,
         |  CAST(round(ln((CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) AS DOUBLE) + 0.5)
         |      / 4503599627370496.0)
         |    / CAST(n_chars AS DOUBLE) * 1e6) AS BIGINT) AS wkey_micro
         |FROM documents
         |WHERE n_chars > 0
-        |ORDER BY wkey_micro DESC, doc_id LIMIT 100""".stripMargin,
+        |ORDER BY wkey_micro DESC, doc_id LIMIT 100""".stripMargin),
     // q115: PSI token drift — integer counts + one fixed-order double
     // formula per token, quantized to nano-units (the q78 device)
-    "q115_token_drift" ->
+    Query("q115_token_drift", tokenDrift,
       s"""WITH b AS (SELECT doc_id, $bucketExpr AS bucket FROM documents),
          |ta AS (
          |  SELECT t AS token FROM (
@@ -4326,8 +4132,8 @@ object PipelineQueries {
          |SELECT token, n_train, n_test, psi_nano,
          |  CAST(psi_nano AS DOUBLE) / 1e9 AS psi_contrib
          |FROM c
-         |ORDER BY psi_nano DESC, token""".stripMargin,
-    "q114_contamination_source" ->
+         |ORDER BY psi_nano DESC, token""".stripMargin),
+    Query("q114_contamination_source", decontaminateSources,
       s"""WITH ${ngramCtes(8)},
          |b AS (SELECT doc_id, $bucketExpr AS bucket FROM documents),
          |ev AS (
@@ -4346,11 +4152,11 @@ object PipelineQueries {
          |  FROM ov)
          |SELECT doc_id, eval_id, CAST(n_shared AS BIGINT) AS n_shared
          |FROM rk WHERE rn = 1
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // q112 replays the bloom-gated path: the SQL is the PLAIN overlap
     // (no bloom) — hash-equality proves the exact survivor join strips
     // every bloom false positive from the report
-    "q112_decontaminate_bloom" ->
+    Query("q112_decontaminate_bloom", decontaminateBloom,
       s"""WITH ${ngramCtes(6)},
          |b AS (SELECT doc_id, $bucketExpr AS bucket FROM documents),
          |ev AS (
@@ -4365,8 +4171,8 @@ object PipelineQueries {
          |  CAST(COALESCE(hits.n_hits, 0) AS BIGINT) AS n_hits,
          |  CAST(COALESCE(hits.n_hits, 0) AS DOUBLE) / len(tr.ng) AS hit_frac
          |FROM tr LEFT JOIN hits USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q78_unigram_logprob" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q78_unigram_logprob", unigramLogProb,
       s"""WITH toks AS (
          |  SELECT doc_id, unnest(string_split($norm, ' ')) AS token FROM documents),
          |t AS (SELECT doc_id, token FROM toks WHERE length(token) > 0),
@@ -4381,8 +4187,8 @@ object PipelineQueries {
          |  CAST(SUM(micro) AS BIGINT) AS sum_micro_nats,
          |  ROUND(CAST(SUM(micro) AS DOUBLE) /
          |    (CAST(COUNT(*) AS DOUBLE) * CAST(1000000.0 AS DOUBLE)), 6) AS avg_logprob
-         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q79_crossdoc_ngrams" ->
+         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q79_crossdoc_ngrams", crossDocNgrams,
       s"""WITH ${ngramCtes(8)},
          |u AS (SELECT doc_id, unnest(ng) AS ngram FROM ng),
          |sh AS (SELECT ngram FROM u GROUP BY ngram HAVING COUNT(*) >= 2),
@@ -4393,8 +4199,8 @@ object PipelineQueries {
          |  CAST(COALESCE(hits.n_shared, 0) AS BIGINT) AS n_shared,
          |  CAST(COALESCE(hits.n_shared, 0) AS DOUBLE) / len(ng.ng) AS shared_frac
          |FROM ng LEFT JOIN hits USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q89_unpivot" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q89_unpivot", unpivotCharClasses,
       """WITH wide AS (
         |  SELECT lang,
         |    CAST(SUM(length(text) - length(regexp_replace(text, '[aeiou]', '', 'g'))) AS BIGINT) AS n_vowels,
@@ -4405,8 +4211,8 @@ object PipelineQueries {
         |  SELECT lang, 'n_vowels' AS metric, n_vowels AS n FROM wide
         |  UNION ALL SELECT lang, 'n_digits', n_digits FROM wide
         |  UNION ALL SELECT lang, 'n_punct', n_punct FROM wide) u
-        |ORDER BY lang, metric""".stripMargin,
-    "q93_length_curriculum" -> {
+        |ORDER BY lang, metric""".stripMargin),
+    Query("q93_length_curriculum", lengthCurriculum, {
       // replays the q75 fixed-width-histogram sketch (128 bins) that the
       // Spark side uses for the decile bounds — same binning, cumulative
       // crossing, and interpolation arithmetic, so the bounds are
@@ -4447,8 +4253,8 @@ object PipelineQueries {
          |SELECT bucket, COUNT(*) AS n_docs,
          |  MIN(n_chars) AS min_chars, MAX(n_chars) AS max_chars
          |FROM a GROUP BY bucket ORDER BY bucket""".stripMargin
-    },
-    "q92_edit_distance" ->
+    }),
+    Query("q92_edit_distance", editDistancePairs,
       s"""WITH $minhashCtes,
          |d AS (SELECT doc_id, $norm AS nt FROM documents),
          |p AS (
@@ -4462,8 +4268,8 @@ object PipelineQueries {
          |  ROUND(CAST(1.0 AS DOUBLE) - CAST(lev AS DOUBLE) / ml, 6) AS edit_sim
          |FROM p
          |WHERE CAST(1.0 AS DOUBLE) - CAST(lev AS DOUBLE) / ml >= 0.4
-         |ORDER BY a_id, b_id""".stripMargin,
-    "q91_rolling_active" ->
+         |ORDER BY a_id, b_id""".stripMargin),
+    Query("q91_rolling_active", rollingActives,
       """WITH s AS (
         |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
         |a AS (
@@ -4477,8 +4283,8 @@ object PipelineQueries {
         |  FROM a, mx)
         |SELECT window_period, COUNT(DISTINCT user_id) AS n_active
         |FROM v GROUP BY 1
-        |ORDER BY window_period""".stripMargin,
-    "q87_retention" ->
+        |ORDER BY window_period""".stripMargin),
+    Query("q87_retention", retention,
       """WITH s AS (
         |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
         |a AS (
@@ -4490,8 +4296,8 @@ object PipelineQueries {
         |  COUNT(DISTINCT a.user_id) AS n_users
         |FROM a JOIN c USING (user_id)
         |GROUP BY 1, 2
-        |ORDER BY cohort, period_offset""".stripMargin,
-    "q86_funnel" ->
+        |ORDER BY cohort, period_offset""".stripMargin),
+    Query("q86_funnel", funnel,
       """WITH v AS (
         |  SELECT user_id, MIN(ts) AS t0 FROM events
         |  WHERE event_type = 'view' GROUP BY 1),
@@ -4511,15 +4317,15 @@ object PipelineQueries {
         |  SELECT CAST(1 AS BIGINT), 'click', COUNT(*) FROM c
         |  UNION ALL
         |  SELECT CAST(2 AS BIGINT), 'purchase', COUNT(*) FROM p) f
-        |ORDER BY stage_idx""".stripMargin,
-    "q85_fixed_sample" ->
+        |ORDER BY stage_idx""".stripMargin),
+    Query("q85_fixed_sample", fixedSample,
       """SELECT doc_id, lang, n_chars FROM (
         |  SELECT doc_id, lang, n_chars
         |  FROM documents
         |  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
         |  LIMIT 25) s
-        |ORDER BY doc_id""".stripMargin,
-    "q83_chunk_dedup" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q83_chunk_dedup", chunkDedup,
       s"""WITH t AS (
          |  SELECT doc_id, string_split($norm, ' ') AS w FROM documents
          |  WHERE length($norm) > 0),
@@ -4543,8 +4349,8 @@ object PipelineQueries {
          |SELECT g.chunk_fp, g.n_copies, g.n_docs, k.keep_doc, k.keep_idx
          |FROM g JOIN k USING (chunk_fp)
          |WHERE g.n_copies >= 2
-         |ORDER BY chunk_fp""".stripMargin,
-    "q80_zorder_layout" ->
+         |ORDER BY chunk_fp""".stripMargin),
+    Query("q80_zorder_layout", zorderLayout,
       """WITH b AS (
         |  SELECT (o_custkey % 1024) AS x,
         |    ((CAST(FLOOR(epoch(o_orderdate)) AS BIGINT) // 86400) % 1024) AS y
@@ -4555,16 +4361,16 @@ object PipelineQueries {
         |  FROM b)
         |SELECT z >> 14 AS zbucket, COUNT(*) AS n_orders,
         |  MIN(z) AS min_z, MAX(z) AS max_z, CAST(SUM(z) AS BIGINT) AS sum_z
-        |FROM z GROUP BY 1 ORDER BY zbucket""".stripMargin,
-    "q81_epoch_shuffle" ->
+        |FROM z GROUP BY 1 ORDER BY zbucket""".stripMargin),
+    Query("q81_epoch_shuffle", epochShuffle,
       """SELECT doc_id, lang,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY lang
         |    ORDER BY md5(CAST(doc_id AS VARCHAR) || ':1'), doc_id) - 1 AS BIGINT) AS pos
         |FROM documents
-        |ORDER BY lang, pos""".stripMargin,
-    "q82_bm25_topk" -> bm25Oracle,
-    "q175_retrieval_metrics" -> rankMetricsOracle,
-    "q176_dedup_audit" -> {
+        |ORDER BY lang, pos""".stripMargin),
+    Query("q82_bm25_topk", bm25TopK, bm25Oracle),
+    Query("q175_retrieval_metrics", retrievalMetrics, rankMetricsOracle),
+    Query("q176_dedup_audit", dedupAudit, {
       def d(x: Double) = s"CAST($x AS DOUBLE)"
       s"""WITH ${minhashCtesFrom("(SELECT * FROM documents WHERE doc_id < 200)")},
          |tt AS (
@@ -4597,17 +4403,17 @@ object PipelineQueries {
          |    THEN CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE)
          |    ELSE ${d(0.0)} END, 6) AS band_recall
          |FROM nt, nc, nh""".stripMargin
-    },
+    }),
     // the index-backed serving path must be LOSSLESS: its oracle is the
     // identical from-scratch recompute — hash equality proves the
     // persisted postings/df/dl/stats reproduce the live computation
-    "q122_bm25_index" -> bm25Oracle,
+    Query("q122_bm25_index", bm25IndexTopK, bm25Oracle),
     // append-maintained index: build(<250) + append(>=250) must serve
     // identically to the one-shot full-corpus computation
-    "q123_bm25_append" -> bm25Oracle,
-    "q184_bm25_compact" -> bm25Oracle,
-    "q190_bm25_time_travel" -> bm25Oracle("doc_id < 250"),
-    "q195_index_diff" ->
+    Query("q123_bm25_append", bm25AppendTopK, bm25Oracle),
+    Query("q184_bm25_compact", bm25CompactTopK, bm25Oracle),
+    Query("q190_bm25_time_travel", bm25TimeTravelTopK, bm25Oracle("doc_id < 250")),
+    Query("q195_index_diff", indexVersionDiff,
       s"""SELECT doc_id,
          |  CAST(len(list_filter(string_split($norm, ' '),
          |    x -> length(x) > 0)) AS BIGINT) AS dl,
@@ -4615,11 +4421,11 @@ object PipelineQueries {
          |FROM documents
          |WHERE doc_id >= 250
          |  AND len(list_filter(string_split($norm, ' '), x -> length(x) > 0)) > 0
-         |ORDER BY doc_id""".stripMargin,
+         |ORDER BY doc_id""".stripMargin),
     // q124 replays the full classifier: feature list (unigrams + adjacent
     // bigrams of the normalized text), polynomial bucket hash, LCG
     // stand-in weight table, exact integer score sum
-    "q124_quality_classifier" -> {
+    Query("q124_quality_classifier", qualityClassifier, {
       import graft.ops.QualityModel.{NumBuckets, WeightMul, WeightAdd, WeightMod, WeightHalf}
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
          |fx AS (
@@ -4640,11 +4446,11 @@ object PipelineQueries {
          |  ROUND(CAST(sm AS DOUBLE) / (CAST(n_features AS DOUBLE) * 1000000), 6) AS score,
          |  CAST(CASE WHEN sm > 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
          |FROM d ORDER BY doc_id""".stripMargin
-    },
+    }),
     // q177 composes the q124 classifier replay (score → sigmoid conf)
     // with the q127 rule-gate replay (keep) and replays the integer
     // binning, per-bin gaps and the exact-integer ECE
-    "q177_calibration" -> {
+    Query("q177_calibration", calibrationAudit, {
       import graft.ops.QualityModel.{NumBuckets, WeightMul, WeightAdd, WeightMod, WeightHalf}
       def d(x: Double) = s"CAST($x AS DOUBLE)"
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
@@ -4706,11 +4512,11 @@ object PipelineQueries {
          |  ROUND(CAST(gap_micro AS DOUBLE) / 1e6, 6) AS gap,
          |  ROUND(CAST(gsum AS DOUBLE) / (CAST(n AS DOUBLE) * 1e6), 6) AS ece
          |FROM pg, tot ORDER BY bin""".stripMargin
-    },
+    }),
     // q185 reuses q177's two replays (classifier + rule gate), then
     // computes the exact integer U-statistic over per-distinct-micro-
     // score class counts: 2U = sum np*(2*below + nn)
-    "q185_quality_auc" -> {
+    Query("q185_quality_auc", qualityAuc, {
       import graft.ops.QualityModel.{NumBuckets, WeightMul, WeightAdd, WeightMod, WeightHalf}
       def d(x: Double) = s"CAST($x AS DOUBLE)"
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
@@ -4770,10 +4576,10 @@ object PipelineQueries {
          |      (${d(2.0)} * CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)), 6)
          |    ELSE ${d(0.5)} END AS auc
          |FROM t2""".stripMargin
-    },
+    }),
     // q199: the q177 classifier + gopher replays, then the exact-integer
     // conformal k, the grid order statistic and the held-out coverage
-    "q199_conformal" -> {
+    Query("q199_conformal", conformalAudit, {
       import graft.ops.QualityModel.{NumBuckets, WeightMul, WeightAdd, WeightMod, WeightHalf}
       def d(x: Double) = s"CAST($x AS DOUBLE)"
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
@@ -4832,10 +4638,10 @@ object PipelineQueries {
          |  ROUND(CAST(q.qm AS DOUBLE) / 1e6, 6) AS threshold,
          |  ROUND(CAST(cov.n_cov AS DOUBLE) / CAST(ne.n_eval AS DOUBLE), 6) AS coverage
          |FROM kk, ne, q, cov""".stripMargin
-    },
+    }),
     // q200: the q177 classifier replay split by cohort, integer binning,
     // add-one smoothing, per-bin PSI terms and the carried total
-    "q200_score_drift" -> {
+    Query("q200_score_drift", scoreDriftAudit, {
       import graft.ops.QualityModel.{NumBuckets, WeightMul, WeightAdd, WeightMod, WeightHalf}
       def d(x: Double) = s"CAST($x AS DOUBLE)"
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
@@ -4882,10 +4688,10 @@ object PipelineQueries {
          |  ROUND(CAST(pt.s AS DOUBLE) / 1e6, 6) AS psi_total
          |FROM tm, pt
          |ORDER BY bin""".stripMargin
-    },
+    }),
     // q201: classifier + gopher replays, then the micro-score grid,
     // the DESCENDING cumulative precision and the exact-integer AP sum
-    "q201_avg_precision" ->
+    Query("q201_avg_precision", qualityAp,
       s"""WITH $classifierPredCtes,
          |$gopherLabCtes,
          |j AS (
@@ -4916,10 +4722,10 @@ object PipelineQueries {
          |  CASE WHEN n_pos > 0
          |    THEN ROUND(CAST(tsum AS DOUBLE) / (CAST(n_pos AS DOUBLE) * 1e6), 6)
          |    ELSE CAST(0.0 AS DOUBLE) END AS ap
-         |FROM t2""".stripMargin,
+         |FROM t2""".stripMargin),
     // q202: token counts per source, densified over the global vocab,
     // one self-join on token, nano-quantized pointwise JSD terms
-    "q202_source_jsd" ->
+    Query("q202_source_jsd", sourceJsdMatrix,
       s"""WITH tk AS (
          |  SELECT g, t AS token FROM (
          |    SELECT source AS g, unnest(string_split($norm, ' ')) AS t
@@ -4949,10 +4755,10 @@ object PipelineQueries {
          |SELECT group_a, group_b, CAST(COUNT(*) AS BIGINT) AS n_types,
          |  ROUND(CAST(SUM(jn) AS DOUBLE) / 1e9, 6) + 0.0 AS jsd
          |FROM tm GROUP BY 1, 2
-         |ORDER BY group_a, group_b""".stripMargin,
+         |ORDER BY group_a, group_b""".stripMargin),
     // q203: classifier replay split by cohort, grid CDFs, exact
     // cross-multiplied sup selection (smallest score on argmax ties)
-    "q203_ks_drift" ->
+    Query("q203_ks_drift", ksDrift,
       s"""WITH $classifierPredCtes,
          |ga AS (
          |  SELECT CAST(round(conf * 1e6) AS BIGINT) AS sm,
@@ -4980,10 +4786,10 @@ object PipelineQueries {
          |  ROUND(CAST(MIN(dn) AS DOUBLE) /
          |    (CAST(MIN(ta) AS DOUBLE) * CAST(MIN(tb) AS DOUBLE)), 6) AS d,
          |  ROUND(CAST(MIN(sm) AS DOUBLE) / 1e6, 6) AS d_at
-         |FROM df, dm WHERE df.dn = dm.d""".stripMargin,
+         |FROM df, dm WHERE df.dn = dm.d""".stripMargin),
     // q237: the q203 replay keyed by source — per-source grid CDFs,
     // PARTITIONed windows, per-source sup with the same tie-break
-    "q237_ks_by_source" ->
+    Query("q237_ks_by_source", ksDriftBySource,
       s"""WITH $classifierPredCtes,
          |ps AS (
          |  SELECT d.source AS g, p.doc_id < 250 AS isa,
@@ -5013,10 +4819,10 @@ object PipelineQueries {
          |  CASE WHEN MIN(ta) = 0 OR MIN(tb) = 0 THEN CAST(0.0 AS DOUBLE)
          |    ELSE ROUND(CAST(MIN(sm) AS DOUBLE) / 1e6, 6) END AS d_at
          |FROM df2 d2 JOIN dm ON d2.g = dm.g AND d2.dn = dm.dmx
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
     // q238: lang-id replay, contingency cells, the four exact C(n,2)
     // pair sums, one fixed-order ARI with the degenerate conventions
-    "q238_cluster_ari" ->
+    Query("q238_cluster_ari", clusterAri,
       s"""WITH $langIdPredCtes,
          |cells AS (
          |  SELECT lang AS a, predicted AS b, CAST(COUNT(*) AS BIGINT) AS n
@@ -5045,10 +4851,10 @@ object PipelineQueries {
          |      ((CAST(sa AS DOUBLE) + CAST(sb AS DOUBLE)) / 2.0 -
          |        CAST(CAST(sa AS HUGEINT) * CAST(sb AS HUGEINT) AS DOUBLE) /
          |        CAST((nn * (nn - 1)) // 2 AS DOUBLE)), 6) + 0.0 END AS ari
-         |FROM sij, sa, sb""".stripMargin,
+         |FROM sij, sa, sb""".stripMargin),
     // q239: the q206 cells + a third (joint) nano-quantized entropy;
     // homogeneity/completeness from integer entropy differences
-    "q239_v_measure" ->
+    Query("q239_v_measure", clusterVMeasure,
       s"""WITH $langIdPredCtes,
          |cells AS (
          |  SELECT lang AS a, predicted AS b, CAST(COUNT(*) AS BIGINT) AS n
@@ -5083,10 +4889,10 @@ object PipelineQueries {
          |  ROUND(comc, 6) AS completeness,
          |  CASE WHEN homc + comc <= 0.0 THEN CAST(0.0 AS DOUBLE)
          |    ELSE ROUND(2.0 * homc * comc / (homc + comc), 6) END AS v_measure
-         |FROM vm""".stripMargin,
+         |FROM vm""".stripMargin),
     // q240: MinHash candidates, canonical edges, two label joins,
     // degree/intra sums per source, exact-integer q-terms
-    "q240_modularity" ->
+    Query("q240_modularity", nearDupModularity,
       s"""WITH $minhashCtes,
          |e AS (
          |  SELECT DISTINCT LEAST(a_id, b_id) AS a, GREATEST(a_id, b_id) AS b
@@ -5117,10 +4923,10 @@ object PipelineQueries {
          |  FROM per)
          |SELECT community, n_nodes, d_sum, e_within, q_term,
          |  ROUND(CAST(qn AS DOUBLE) / 1e9, 6) + 0.0 AS q_total
-         |FROM per, qt ORDER BY community""".stripMargin,
+         |FROM per, qt ORDER BY community""".stripMargin),
     // q241: distinct bipartite edges, uniform ppb start, six unrolled
     // half-steps with exact floor-division renormalization
-    "q241_hits" -> {
+    Query("q241_hits", eventHits, {
       def half(k: Int, from: String, joinKey: String, groupKey: String,
           out: String): String =
         s"""${out}${k}r AS (
@@ -5153,10 +4959,10 @@ object PipelineQueries {
          |  SELECT 'auth' AS side, auth AS id, a AS score_ppb, deg
          |  FROM a3 JOIN ad USING (auth)) u
          |ORDER BY side, score_ppb DESC, id""".stripMargin
-    },
+    }),
     // q242: classifier replay, five stratified 2×2 cells, nano-quantized
     // MH sums, per-stratum and pooled ORs with honest NULLs
-    "q242_mantel_haenszel" ->
+    Query("q242_mantel_haenszel", lengthGateMh,
       s"""WITH $classifierPredCtes,
          |cx AS (
          |  SELECT d.lang AS stratum, (d.n_chars > 300) AS e, (p.conf >= 0.5) AS o
@@ -5182,10 +4988,10 @@ object PipelineQueries {
          |      (CAST(expo_noout AS DOUBLE) * CAST(unexp_out AS DOUBLE)), 6) END AS or_stratum,
          |  CASE WHEN sbc = 0 THEN NULL
          |    ELSE ROUND(CAST(sad AS DOUBLE) / CAST(sbc AS DOUBLE), 6) END AS or_mh
-         |FROM cells2, tm ORDER BY stratum""".stripMargin,
+         |FROM cells2, tm ORDER BY stratum""".stripMargin),
     // q243: classifier replay, 199 md5-seeded relabelings, exact
     // HUGEINT cross-multiplied comparisons, integer BH cut
-    "q243_drift_bh" ->
+    Query("q243_drift_bh", sourceDriftBh,
       s"""WITH $classifierPredCtes,
          |bse AS (
          |  SELECT d.source AS g, d.doc_id AS id, (d.doc_id < 250) AS inn,
@@ -5230,10 +5036,10 @@ object PipelineQueries {
          |    CAST(sob AS DOUBLE) / CAST(cob AS DOUBLE)) / 1e6, 6) AS d_obs,
          |  perm_ge, 1 + perm_ge AS p_num, CAST(200 AS BIGINT) AS p_den, p_rank,
          |  (p_rank <= COALESCE(kmax, 0)) AS rejected
-         |FROM rk, km ORDER BY p_rank""".stripMargin,
+         |FROM rk, km ORDER BY p_rank""".stripMargin),
     // q204: per-(source, length) counts, length-grid cumulative, the
     // exact grouped Gini identity in HUGEINT, one final divide
-    "q204_token_gini" ->
+    Query("q204_token_gini", tokenGiniBySource,
       s"""WITH t AS (
          |  SELECT source AS grp,
          |    CAST(len(string_split($norm, ' ')) AS BIGINT) AS len
@@ -5254,10 +5060,10 @@ object PipelineQueries {
          |SELECT grp AS "group", n_docs, CAST(tot AS BIGINT) AS total_tokens,
          |  ROUND(CAST(num - (n_docs + 1) * tot AS DOUBLE) /
          |    CAST(n_docs * tot AS DOUBLE), 6) AS gini
-         |FROM agg ORDER BY grp""".stripMargin,
+         |FROM agg ORDER BY grp""".stripMargin),
     // q205: classifier + unigram-LM replays, per-signal grid
     // competition ranks, exact nano RRF fusion, top-50 cut
-    "q205_rrf_blend" ->
+    Query("q205_rrf_blend", rrfBlend,
       s"""WITH $classifierPredCtes,
          |toks AS (
          |  SELECT doc_id, unnest(string_split($norm, ' ')) AS token FROM documents),
@@ -5301,10 +5107,10 @@ object PipelineQueries {
          |  FROM ja JOIN jb USING (doc_id))
          |SELECT doc_id, rank_a, rank_b, rrf_nano,
          |  ROUND(CAST(rrf_nano AS DOUBLE) / 1e9, 6) AS rrf
-         |FROM fuse ORDER BY rrf_nano DESC, doc_id LIMIT 50""".stripMargin,
+         |FROM fuse ORDER BY rrf_nano DESC, doc_id LIMIT 50""".stripMargin),
     // q206: lang-id replay, contingency cells, nano-quantized entropy
     // and pointwise-MI terms, one fixed-order normalization
-    "q206_cluster_nmi" ->
+    Query("q206_cluster_nmi", clusterNmi,
       s"""WITH $langIdPredCtes,
          |cells AS (
          |  SELECT lang AS a, predicted AS b, CAST(COUNT(*) AS BIGINT) AS n
@@ -5333,11 +5139,11 @@ object PipelineQueries {
          |    THEN ROUND(CAST(mim AS DOUBLE) /
          |      sqrt(CAST(ha AS DOUBLE) * CAST(hb AS DOUBLE)), 6) + 0.0
          |    ELSE CAST(0.0 AS DOUBLE) END AS nmi
-         |FROM tot, hA, hB, mi""".stripMargin,
+         |FROM tot, hA, hB, mi""".stripMargin),
     // q207: classifier + unigram-LM replays, doubled-average-rank
     // grids (2·below + ties + 1, exact integers even at .5 midpoints),
     // HUGEINT Pearson sums, one fixed-order double ratio
-    "q207_spearman" ->
+    Query("q207_spearman", spearmanSignals,
       s"""WITH $classifierPredCtes,
          |toks AS (
          |  SELECT doc_id, unnest(string_split($norm, ' ')) AS token FROM documents),
@@ -5398,11 +5204,11 @@ object PipelineQueries {
          |      (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
          |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) + 0.0
          |  ELSE CAST(0.0 AS DOUBLE) END AS rho
-         |FROM t2""".stripMargin,
+         |FROM t2""".stripMargin),
     // q208: tokenization, first-source word attribution, the bounded
     // cumulative curve, nano-quantized ln/ln²/ln·ln OLS terms, exact
     // integer sums, one fixed-order slope/intercept/r² readout
-    "q208_heaps_law" ->
+    Query("q208_heaps_law", heapsLaw,
       s"""WITH tok AS (
          |  SELECT source AS grp, unnest(string_split($norm, ' ')) AS t
          |  FROM documents),
@@ -5448,10 +5254,10 @@ object PipelineQueries {
          |  ROUND(exp(ln_k), 6) AS k,
          |  CASE WHEN var_y > 0 THEN ROUND(cov * cov / (var_x * var_y), 6)
          |    ELSE CAST(1.0 AS DOUBLE) END AS r2
-         |FROM b""".stripMargin,
+         |FROM b""".stripMargin),
     // q209: the q197 closure + weights, micro-quantized, then the
     // exact-integer Kish identity per source
-    "q209_ess" ->
+    Query("q209_ess", essBySource,
       s"""WITH RECURSIVE $minhashCtes,
          |sym AS (
          |  SELECT a_id AS a, b_id AS b FROM cand
@@ -5479,10 +5285,10 @@ object PipelineQueries {
          |  ROUND(CAST(SUM(wq) AS DOUBLE) * CAST(SUM(wq) AS DOUBLE) /
          |    CAST(SUM(CAST(wq AS HUGEINT) * wq) AS DOUBLE) /
          |    CAST(COUNT(*) AS DOUBLE), 6) AS ess_ratio
-         |FROM w GROUP BY source ORDER BY source""".stripMargin,
+         |FROM w GROUP BY source ORDER BY source""".stripMargin),
     // q210: classifier replay, cohort grids, exact 2U + tie sums in
     // HUGEINT, fixed-order z / rank-biserial readouts
-    "q210_mann_whitney" ->
+    Query("q210_mann_whitney", mannWhitneyDrift,
       s"""WITH $classifierPredCtes,
          |ga AS (
          |  SELECT CAST(round(conf * 1e6) AS BIGINT) AS sm,
@@ -5522,10 +5328,10 @@ object PipelineQueries {
          |          ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) *
          |           (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) - 1.0)))), 6) + 0.0
          |  ELSE CAST(0.0 AS DOUBLE) END AS z
-         |FROM t2""".stripMargin,
+         |FROM t2""".stripMargin),
     // q211: source×lang contingency INCLUDING zero-observed cells via
     // the marginals cross join, nano-quantized (o−e)²/e terms
-    "q211_chi_square" ->
+    Query("q211_chi_square", sourceLangChiSquare,
       s"""WITH cells AS (
          |  SELECT source AS a, lang AS b, CAST(COUNT(*) AS BIGINT) AS n
          |  FROM documents GROUP BY 1, 2),
@@ -5558,10 +5364,10 @@ object PipelineQueries {
          |      (CAST(n AS DOUBLE) *
          |       CAST(LEAST(n_rows - 1, n_cols - 1) AS DOUBLE))), 6)
          |    ELSE CAST(0.0 AS DOUBLE) END AS cramers_v
-         |FROM cnt, terms""".stripMargin,
+         |FROM cnt, terms""".stripMargin),
     // q212: classifier + gopher replays, pure-integer Brier sum,
     // q177 binning, nano-quantized reliability/resolution terms
-    "q212_brier" ->
+    Query("q212_brier", brierAudit,
       s"""WITH $classifierPredCtes,
          |$gopherLabCtes,
          |j AS (
@@ -5601,10 +5407,10 @@ object PipelineQueries {
          |     CAST(res9 AS DOUBLE) / (CAST(n AS DOUBLE) * 1e9) +
          |     (CAST(syt AS DOUBLE) / CAST(n AS DOUBLE)) *
          |     (1.0 - CAST(syt AS DOUBLE) / CAST(n AS DOUBLE))), 6) AS within_bin_resid
-         |FROM tot, terms""".stripMargin,
+         |FROM tot, terms""".stripMargin),
     // q213: quasi-identifier cells, per-(cell, lang) entropy terms,
     // distinct-l and entropy-l floors per source
-    "q213_l_diversity" ->
+    Query("q213_l_diversity", lDiversity,
       s"""WITH v AS (
          |  SELECT source, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
          |    lang, CAST(COUNT(*) AS BIGINT) AS nv
@@ -5626,11 +5432,11 @@ object PipelineQueries {
          |  CAST(SUM(CASE WHEN ldist < 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_risky_cells,
          |  CAST(SUM(CASE WHEN ldist < 2 THEN n ELSE 0 END) AS BIGINT) AS n_risky_rows,
          |  ROUND(exp(CAST(MIN(hsum) AS DOUBLE) / 1e9), 6) AS entropy_l_floor
-         |FROM cj GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM cj GROUP BY 1 ORDER BY 1""".stripMargin),
     // q193: the q177/q185 classifier + gopher replays plus the q160
     // blocklist, melted to (item, label) ratings and folded through the
     // exact-integer Fleiss identity
-    "q193_gate_agreement" -> {
+    Query("q193_gate_agreement", gateAgreement, {
       import graft.ops.QualityModel.{NumBuckets, WeightMul, WeightAdd, WeightMod, WeightHalf}
       def d(x: Double) = s"CAST($x AS DOUBLE)"
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
@@ -5700,11 +5506,11 @@ object PipelineQueries {
          |    ELSE ROUND(CAST((s2 - nn) * nn - c2 * 2 AS DOUBLE) /
          |      CAST(2 * (nn * nn - c2) AS DOUBLE), 6) + 0.0 END AS kappa
          |FROM fin, cat""".stripMargin
-    },
+    }),
     // q178 extends q177: the same two replays, swept over the literal
     // temperature grid (unnest of CAST AS DOUBLE values — the p-list
     // convention), per-T integer binning/ECE, argmin flagged
-    "q178_temp_scaling" -> {
+    Query("q178_temp_scaling", temperatureScaling, {
       import graft.ops.QualityModel.{NumBuckets, WeightMul, WeightAdd, WeightMod, WeightHalf}
       def d(x: Double) = s"CAST($x AS DOUBLE)"
       val gridList = (1 to 16).map(i => d(i * 0.25)).mkString("[", ", ", "]")
@@ -5768,10 +5574,10 @@ object PipelineQueries {
          |SELECT tv AS t, ece,
          |  CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS is_best
          |FROM rk ORDER BY t""".stripMargin
-    },
+    }),
     // q179 replays span corruption: tokenization, per-block md5 offsets
     // (the q46 hex device), sentinel splicing and both assemblies
-    "q179_span_corrupt" -> {
+    Query("q179_span_corrupt", spanCorruption, {
       val B = 8; val S = 2; val M = B - S + 1
       s"""WITH w0 AS (
          |  SELECT doc_id, list_filter(string_split($norm, ' '), x -> length(x) > 0) AS w
@@ -5798,11 +5604,11 @@ object PipelineQueries {
          |    || ['<extra_id_' || CAST(nb AS VARCHAR) || '>'], ' ') AS target_text,
          |  CAST(nb AS BIGINT) AS n_spans
          |FROM ob ORDER BY doc_id""".stripMargin
-    },
+    }),
     // q125 replays the whole DoReMi chain: exact micro-nat token
     // log-probs per domain, one-divide means, max anchor, nano-quantized
     // exp(excess/τ), normalized weights
-    "q125_doremi_mixture" ->
+    Query("q125_doremi_mixture", doremiMixture,
       s"""WITH tk0 AS (
          |  SELECT source, unnest(string_split($norm, ' ')) AS token FROM documents),
          |tk AS (SELECT * FROM tk0 WHERE length(token) > 0),
@@ -5825,12 +5631,12 @@ object PipelineQueries {
          |SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
          |  ROUND(avg_lp, 6) AS avg_logprob,
          |  ROUND(CAST(qm AS DOUBLE) / CAST(z AS DOUBLE), 6) AS mixture_weight
-         |FROM q, z ORDER BY source""".stripMargin,
+         |FROM q, z ORDER BY source""".stripMargin),
     // q126 replays the average-hash kernel bit-for-bit: per-position byte
     // codes (docs are printable ASCII — q50's verified premise, so
     // ascii(substr) == payload byte), cell = ((i-1)*64)//n, cross-
     // multiplied sign test, 4×16-bit banding, exact Hamming verify
-    "q126_phash_neardup" ->
+    Query("q126_phash_neardup", phashNearDup,
       s"""WITH md AS (
          |  SELECT doc_id, text FROM documents
          |  UNION ALL
@@ -5862,10 +5668,10 @@ object PipelineQueries {
          |    CAST(bit_count(xor(x.phash, y.phash)) AS BIGINT) AS hamming
          |  FROM bd x JOIN bd y ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id)
          |SELECT a_id, b_id, hamming FROM cand
-         |WHERE hamming <= 3 ORDER BY a_id, b_id""".stripMargin,
+         |WHERE hamming <= 3 ORDER BY a_id, b_id""".stripMargin),
     // q127 replays every rule with the same integer decisions
     // (cross-multiplied bounds) and one-divide rounded report columns
-    "q127_gopher_rules" ->
+    Query("q127_gopher_rules", gopherQuality,
       s"""WITH t AS (
          |  SELECT doc_id, list_filter(string_split($norm, ' '), x -> length(x) > 0) AS w
          |  FROM documents),
@@ -5888,8 +5694,8 @@ object PipelineQueries {
          |SELECT doc_id, n_words, mean_word_len, alpha_frac, n_stop_hits,
          |  r_words, r_meanlen, r_alpha, r_stop,
          |  r_words * r_meanlen * r_alpha * r_stop AS keep
-         |FROM r ORDER BY doc_id""".stripMargin,
-    "q65_incremental_dedup" ->
+         |FROM r ORDER BY doc_id""".stripMargin),
+    Query("q65_incremental_dedup", incrementalDedup,
       s"""WITH $minhashBandCtes
          |SELECT batch_id, corpus_id, est AS est_jaccard FROM (
          |  SELECT DISTINCT y.doc_id AS batch_id, x.doc_id AS corpus_id,
@@ -5898,14 +5704,14 @@ object PipelineQueries {
          |    ON x.band = y.band AND x.key = y.key
          |  WHERE x.doc_id % 5 <> 0 AND y.doc_id % 5 = 0) d
          |WHERE est >= 0.4
-         |ORDER BY batch_id, corpus_id""".stripMargin,
-    "q32_minhash_lsh" ->
+         |ORDER BY batch_id, corpus_id""".stripMargin),
+    Query("q32_minhash_lsh", minhashCandidates,
       s"""WITH $minhashCtes
-         |SELECT a_id, b_id, est AS est_jaccard FROM cand ORDER BY a_id, b_id""".stripMargin,
-    "q33_simhash" ->
+         |SELECT a_id, b_id, est AS est_jaccard FROM cand ORDER BY a_id, b_id""".stripMargin),
+    Query("q33_simhash", simhashFingerprints,
       s"""WITH $simhashCtes
-         |SELECT doc_id, simhash FROM fps ORDER BY doc_id""".stripMargin,
-    "q36_dedup_clusters" ->
+         |SELECT doc_id, simhash FROM fps ORDER BY doc_id""".stripMargin),
+    Query("q36_dedup_clusters", dedupClusters,
       s"""WITH RECURSIVE $minhashCtes,
          |sym AS (
          |  SELECT a_id AS a, b_id AS b FROM cand
@@ -5916,8 +5722,8 @@ object PipelineQueries {
          |  SELECT a, b FROM sym
          |  UNION
          |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)
-         |SELECT a AS id, MIN(b) AS component FROM reach GROUP BY a ORDER BY id""".stripMargin,
-    "q197_soft_dedup" ->
+         |SELECT a AS id, MIN(b) AS component FROM reach GROUP BY a ORDER BY id""".stripMargin),
+    Query("q197_soft_dedup", softDedupWeights,
       s"""WITH RECURSIVE $minhashCtes,
          |sym AS (
          |  SELECT a_id AS a, b_id AS b FROM cand
@@ -5936,8 +5742,8 @@ object PipelineQueries {
          |SELECT doc_id, component, csize,
          |  ROUND(CAST(1.0 AS DOUBLE) / CAST(csize AS DOUBLE), 6) AS weight
          |FROM lab JOIN sz USING (component)
-         |ORDER BY doc_id""".stripMargin,
-    "q198_vocab_coverage" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q198_vocab_coverage", vocabCoverageCurve,
       s"""WITH tk AS (
          |  SELECT unnest(string_split($norm, ' ')) AS t FROM documents),
          |c AS (
@@ -5964,8 +5770,8 @@ object PipelineQueries {
          |  g.total_tokens,
          |  ROUND(CAST(1.0 AS DOUBLE) - CAST(r.cum AS DOUBLE) / CAST(g.total_tokens AS DOUBLE), 6) AS oov_rate
          |FROM g JOIN r ON r.rank = g.vocab_size
-         |ORDER BY threshold""".stripMargin,
-    "q37_simhash_neardup" ->
+         |ORDER BY threshold""".stripMargin),
+    Query("q37_simhash_neardup", simhashNearDups,
       s"""WITH $simhashCtes,
          |banded AS (
          |  SELECT doc_id, simhash, b.b AS band, (simhash >> (b.b * 16)) & 65535 AS chunk
@@ -5975,13 +5781,13 @@ object PipelineQueries {
          |    CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
          |  FROM banded x JOIN banded y
          |    ON x.band = y.band AND x.chunk = y.chunk AND x.doc_id < y.doc_id)
-         |SELECT a_id, b_id, hamming FROM pairs WHERE hamming <= 3 ORDER BY a_id, b_id""".stripMargin,
-    "q30_dedup_exact" ->
+         |SELECT a_id, b_id, hamming FROM pairs WHERE hamming <= 3 ORDER BY a_id, b_id""".stripMargin),
+    Query("q30_dedup_exact", dedupExact,
       s"""SELECT md5($norm) AS fp, COUNT(*) AS n_docs, MIN(doc_id) AS keep_id
          |FROM documents
          |GROUP BY 1
-         |ORDER BY fp""".stripMargin,
-    "q31_ngram_jaccard" ->
+         |ORDER BY fp""".stripMargin),
+    Query("q31_ngram_jaccard", ngramJaccard,
       s"""WITH t AS (
          |  SELECT doc_id, string_split($norm, ' ') AS w
          |  FROM documents WHERE doc_id < 200),
@@ -6001,8 +5807,8 @@ object PipelineQueries {
          |JOIN sz sa ON a_id = sa.doc_id
          |JOIN sz sb ON b_id = sb.doc_id
          |WHERE CAST(ni AS DOUBLE) / (sa.n + sb.n - ni) >= 0.2
-         |ORDER BY a_id, b_id""".stripMargin,
-    "q34_embed_neardup" ->
+         |ORDER BY a_id, b_id""".stripMargin),
+    Query("q34_embed_neardup", embeddingNearDups,
       s"""WITH ${VectorQueries.srpBucketCtes(numPlanes = 5, dim = 64, numTables = 10)},
          |cand AS (
          |  SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
@@ -6020,8 +5826,8 @@ object PipelineQueries {
          |  GROUP BY 1, 2)
          |SELECT a_id, b_id, cos_sim FROM sims
          |WHERE cos_sim >= 0.4
-         |ORDER BY a_id, b_id""".stripMargin,
-    "q40_token_stats" ->
+         |ORDER BY a_id, b_id""".stripMargin),
+    Query("q40_token_stats", tokenStats,
       s"""SELECT lang, COUNT(*) AS n_docs,
          |  CAST(SUM(len(string_split($norm, ' '))) AS BIGINT) AS sum_tokens,
          |  CAST(SUM(len(regexp_extract_all(text, '[A-Za-z]{1,8}|[0-9]{1,3}|[^A-Za-z0-9\\s]'))) AS BIGINT) AS sum_subwords,
@@ -6030,8 +5836,8 @@ object PipelineQueries {
          |  CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars
          |FROM documents
          |GROUP BY lang
-         |ORDER BY lang""".stripMargin,
-    "q38_winnow_fp" -> {
+         |ORDER BY lang""".stripMargin),
+    Query("q38_winnow_fp", winnowFingerprints, {
       val P = 1000000007L; val B = 131L
       val coef = (0 until 8).map(j => (0 until j).foldLeft(1L)((a, _) => a * B % P))
       val terms = coef.zipWithIndex
@@ -6050,8 +5856,8 @@ object PipelineQueries {
          |SELECT doc_id, COUNT(*) AS n_fps, MIN(fp) AS min_fp, MAX(fp) AS max_fp,
          |  CAST(SUM(fp) AS BIGINT) AS sum_fp
          |FROM w GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-    "q46_hash_split" ->
+    }),
+    Query("q46_hash_split", splitCounts,
       """WITH b AS (
         |  SELECT doc_id, n_chars,
         |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS bucket
@@ -6066,8 +5872,8 @@ object PipelineQueries {
         |  MAX(doc_id) AS max_id, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
         |FROM s
         |GROUP BY split
-        |ORDER BY split""".stripMargin,
-    "q41_quality_scores" ->
+        |ORDER BY split""".stripMargin),
+    Query("q41_quality_scores", qualityScores,
       s"""SELECT doc_id, length(text) AS len,
          |  len(string_split($norm, ' ')) AS n_tokens,
          |  length(text) - length(regexp_replace(text, '[aeiou]', '', 'g')) AS n_vowels,
@@ -6080,18 +5886,18 @@ object PipelineQueries {
          |    WHEN len(string_split($norm, ' ')) >= 20 THEN 'fair'
          |    ELSE 'short' END AS quality
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "q42_langid" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q42_langid", langIdConfusion,
       s"""WITH $langIdPredCtes
          |SELECT lang, predicted, COUNT(*) AS n
          |FROM p
          |GROUP BY lang, predicted
-         |ORDER BY lang, predicted""".stripMargin,
-    "q43_fingerprint" ->
+         |ORDER BY lang, predicted""".stripMargin),
+    Query("q43_fingerprint", fingerprints,
       s"""SELECT doc_id, md5($norm) AS fp
          |FROM documents
-         |ORDER BY doc_id""".stripMargin,
-    "q44_chunking" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q44_chunking", chunkedDocs,
       """WITH starts AS (
         |  SELECT doc_id, text,
         |    unnest(generate_series(1, length(text), 224)) AS s
@@ -6100,8 +5906,8 @@ object PipelineQueries {
         |  CAST(length(substr(text, CAST(s AS INTEGER), 256)) AS BIGINT) AS chunk_len,
         |  md5(substr(text, CAST(s AS INTEGER), 256)) AS chunk_fp
         |FROM starts
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q45_top_terms" ->
+        |ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("q45_top_terms", topTerms,
       s"""SELECT token, COUNT(DISTINCT doc_id) AS doc_freq, COUNT(*) AS total_tf
          |FROM (
          |  SELECT doc_id, unnest(string_split($norm, ' ')) AS token
@@ -6109,8 +5915,8 @@ object PipelineQueries {
          |WHERE length(token) > 0
          |GROUP BY token
          |ORDER BY doc_freq DESC, total_tf DESC, token
-         |LIMIT 50""".stripMargin,
-    "q62_token_chunks" ->
+         |LIMIT 50""".stripMargin),
+    Query("q62_token_chunks", tokenChunks,
       s"""WITH t AS (
          |  SELECT doc_id, string_split($norm, ' ') AS w FROM documents
          |  WHERE length($norm) > 0),
@@ -6123,15 +5929,15 @@ object PipelineQueries {
          |  CAST(len(w[s : s + 63]) AS BIGINT) AS n_tokens,
          |  md5(array_to_string(w[s : s + 63], ' ')) AS chunk_fp
          |FROM c
-         |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q61_hash_sample" ->
+         |ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("q61_hash_sample", sampleSummary,
       """SELECT lang, COUNT(*) AS n_docs, MIN(doc_id) AS min_id,
         |  MAX(doc_id) AS max_id, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
         |FROM documents
         |WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 10
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "q57_frame_features" -> {
+        |ORDER BY lang""".stripMargin),
+    Query("q57_frame_features", frameFeatures, {
       val bins = Seq(2 -> "2f", 3 -> "3f", 4 -> "4f", 5 -> "5f", 6 -> "6f", 7 -> "7e")
         .map { case (j, hi) =>
           s"""CAST(CAST(length(ch) - length(regexp_replace(ch, '[\\x${j}0-\\x$hi]', '', 'g')) AS FLOAT)
@@ -6152,8 +5958,8 @@ object PipelineQueries {
          |  $bins
          |FROM c
          |ORDER BY doc_id, frame_idx""".stripMargin
-    },
-    "q71_quality_dedup" ->
+    }),
+    Query("q71_quality_dedup", qualityDedup,
       s"""WITH RECURSIVE $minhashCtes,
          |sym AS (
          |  SELECT a_id AS a, b_id AS b FROM cand
@@ -6176,8 +5982,8 @@ object PipelineQueries {
          |      ORDER BY n_chars DESC, id ASC) AS rn
          |  FROM j) t
          |WHERE rn = 1
-         |ORDER BY component""".stripMargin,
-    "q72_tfidf_terms" ->
+         |ORDER BY component""".stripMargin),
+    Query("q72_tfidf_terms", tfidfTopTerms,
       s"""WITH toks AS (
          |  SELECT doc_id, unnest(string_split($norm, ' ')) AS token FROM documents),
          |t AS (SELECT doc_id, token FROM toks WHERE length(token) > 0),
@@ -6194,8 +6000,8 @@ object PipelineQueries {
          |    ORDER BY tfidf DESC, token) AS rn
          |  FROM sc) x
          |WHERE rn <= 3
-         |ORDER BY doc_id, rn""".stripMargin,
-    "q73_sequence_packing" ->
+         |ORDER BY doc_id, rn""".stripMargin),
+    Query("q73_sequence_packing", sequencePacking,
       s"""WITH t AS (
          |  SELECT doc_id, lang,
          |    CAST(len(string_split($norm, ' ')) AS BIGINT) AS n_tokens
@@ -6208,8 +6014,8 @@ object PipelineQueries {
          |SELECT doc_id, lang, n_tokens,
          |  cum // 256 AS seq_id, cum % 256 AS tok_offset
          |FROM c
-         |ORDER BY lang, doc_id""".stripMargin,
-    "q74_weighted_mixture" ->
+         |ORDER BY lang, doc_id""".stripMargin),
+    Query("q74_weighted_mixture", weightedMixture,
       """SELECT lang, COUNT(*) AS n_docs, MIN(doc_id) AS min_id,
         |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars
         |FROM documents
@@ -6217,8 +6023,8 @@ object PipelineQueries {
         |  < CASE lang WHEN 'en' THEN 50 WHEN 'zh' THEN 100 WHEN 'de' THEN 25
         |              WHEN 'fr' THEN 75 WHEN 'es' THEN 10 ELSE 100 END
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "q66_pii_scrub" -> {
+        |ORDER BY lang""".stripMargin),
+    Query("q66_pii_scrub", piiScrub, {
       import graft.ops.PiiScrub.{EmailRe, Ipv4Re, PhoneRe}
       s"""WITH t AS (
          |  SELECT c_custkey,
@@ -6239,8 +6045,8 @@ object PipelineQueries {
          |    '$Ipv4Re', '<IP>', 'g') AS redacted
          |FROM t
          |ORDER BY cust_id""".stripMargin
-    },
-    "q67_repetition" -> {
+    }),
+    Query("q67_repetition", repetitionSummary, {
       val P = graft.expr.DedupKernel.P
       val B = graft.expr.DedupKernel.B1
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
@@ -6258,8 +6064,8 @@ object PipelineQueries {
          |  CAST(len(ng) - len(list_distinct(ng)) AS DOUBLE) / len(ng) AS dup_frac
          |FROM g
          |ORDER BY doc_id""".stripMargin
-    },
-    "q68_stratified_sample" -> {
+    }),
+    Query("q68_stratified_sample", stratifiedByLang, {
       val P = graft.expr.DedupKernel.P
       val (a, b) = graft.expr.DedupKernel.perm(1)
       s"""SELECT doc_id, lang, rn FROM (
@@ -6269,8 +6075,8 @@ object PipelineQueries {
          |  FROM documents) s
          |WHERE rn <= 25
          |ORDER BY lang, rn""".stripMargin
-    },
-    "q50_multimodal_hist" -> {
+    }),
+    Query("q50_multimodal_hist", multimodalHist, {
       val bins = Seq(2 -> "2f", 3 -> "3f", 4 -> "4f", 5 -> "5f", 6 -> "6f", 7 -> "7e")
         .map { case (j, hi) =>
           s"""CAST(CAST(length(text) - length(regexp_replace(text, '[\\x${j}0-\\x$hi]', '', 'g')) AS FLOAT)
@@ -6280,8 +6086,8 @@ object PipelineQueries {
          |  $bins
          |FROM documents
          |ORDER BY doc_id""".stripMargin
-    },
-    "q108_pagerank" -> {
+    }),
+    Query("q108_pagerank", pageRank, {
       def iter(k: Int): String =
         s"""c$k AS (
            |  SELECT a.dst, CAST(SUM(r.r // d.deg) AS BIGINT) AS sc
@@ -6305,8 +6111,8 @@ object PipelineQueries {
          |SELECT r3.id AS doc_id, r3.r AS pr_micro, d.deg
          |FROM r3 JOIN deg d ON r3.id = d.src
          |ORDER BY pr_micro DESC, doc_id""".stripMargin
-    },
-    "q102_bigram_logprob" ->
+    }),
+    Query("q102_bigram_logprob", bigramLogProb,
       s"""WITH w AS (
          |  SELECT doc_id, string_split($norm, ' ') AS ws FROM documents
          |  WHERE len(string_split($norm, ' ')) >= 2),
@@ -6329,8 +6135,8 @@ object PipelineQueries {
          |  CAST(SUM(micro) AS BIGINT) AS sum_micro_nats,
          |  ROUND(CAST(SUM(micro) AS DOUBLE) /
          |    (CAST(COUNT(*) AS DOUBLE) * CAST(1000000.0 AS DOUBLE)), 6) AS avg_logprob
-         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q103_containment" ->
+         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q103_containment", containment,
       s"""WITH ${shingleSetCtes(5)},
          |dfreq AS (SELECT shingle, COUNT(*) AS df FROM st GROUP BY 1),
          |rare AS (
@@ -6350,8 +6156,8 @@ object PipelineQueries {
          |  ROUND(CAST(ni AS DOUBLE) / za.n, 6) AS containment
          |FROM inter JOIN sz za ON za.doc_id = a_id
          |WHERE CAST(ni AS DOUBLE) / za.n >= 0.7
-         |ORDER BY a_id, b_id""".stripMargin,
-    "q94_semdedup" ->
+         |ORDER BY a_id, b_id""".stripMargin),
+    Query("q94_semdedup", semDedup,
       s"""WITH ${VectorQueries.kmeansCtes("", "embedding", 64, 16, 42L, _ => "TRUE", unitNorm = true)},
          |cells AS (
          |  SELECT vec_id, cell FROM (
@@ -6373,8 +6179,8 @@ object PipelineQueries {
          |SELECT b_id AS vec_id, cell, MIN(a_id) AS trigger_id, MAX(sim) AS max_sim
          |FROM sims WHERE sim >= 0.4
          |GROUP BY b_id, cell
-         |ORDER BY vec_id""".stripMargin,
-    "q95_boolean_retrieval" ->
+         |ORDER BY vec_id""".stripMargin),
+    Query("q95_boolean_retrieval", booleanRetrieval,
       s"""WITH hits AS (
          |  SELECT doc_id,
          |    COUNT(DISTINCT term) AS n_terms, COUNT(*) AS tf
@@ -6387,8 +6193,8 @@ object PipelineQueries {
          |  CAST(ROW_NUMBER() OVER (ORDER BY tf DESC, doc_id) AS BIGINT) AS rnk
          |FROM hits
          |ORDER BY tf DESC, doc_id
-         |LIMIT 20""".stripMargin,
-    "q97_prefix_jaccard" ->
+         |LIMIT 20""".stripMargin),
+    Query("q97_prefix_jaccard", prefixJaccard,
       s"""WITH ${shingleSetCtes(5)},
          |dfreq AS (SELECT shingle, COUNT(*) AS df FROM st GROUP BY 1),
          |ord AS (
@@ -6415,8 +6221,8 @@ object PipelineQueries {
          |JOIN sz za ON za.doc_id = a_id
          |JOIN sz zb ON zb.doc_id = b_id
          |WHERE CAST(ni AS DOUBLE) / (za.n + zb.n - ni) >= 0.2
-         |ORDER BY a_id, b_id""".stripMargin,
-    "q100_dataset_card" ->
+         |ORDER BY a_id, b_id""".stripMargin),
+    Query("q100_dataset_card", datasetCard,
       s"""WITH base AS (
          |  SELECT source,
          |    COUNT(*) AS n_docs,
@@ -6435,9 +6241,9 @@ object PipelineQueries {
          |  CAST(b.n_exact_dups AS DOUBLE) / b.n_docs AS dup_rate,
          |  CAST(b.sum_chars AS DOUBLE) / b.n_docs AS avg_chars
          |FROM base b JOIN tl USING (source)
-         |ORDER BY b.source""".stripMargin,
+         |ORDER BY b.source""".stripMargin),
 
-    "q128_cluster_split" ->
+    Query("q128_cluster_split", clusterSplitSummary,
       s"""WITH RECURSIVE $minhashCtes,
          |sym AS (
          |  SELECT a_id AS a, b_id AS b FROM cand
@@ -6465,9 +6271,9 @@ object PipelineQueries {
          |SELECT split, COUNT(DISTINCT component) AS n_clusters, COUNT(*) AS n_docs,
          |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
          |  (SELECT leaked_pairs FROM leaked) AS leaked_pairs
-         |FROM sp GROUP BY split ORDER BY split""".stripMargin,
+         |FROM sp GROUP BY split ORDER BY split""".stripMargin),
 
-    "q129_source_cap" ->
+    Query("q129_source_cap", sourceCap,
       """WITH r AS (
         |  SELECT doc_id, source, n_chars,
         |    ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn
@@ -6480,9 +6286,9 @@ object PipelineQueries {
         |    MIN(n_chars) AS cap_cutoff
         |  FROM r WHERE rn <= 25 GROUP BY source)
         |SELECT t.source, t.n_docs, t.sum_chars, k.n_kept, k.kept_chars, k.cap_cutoff
-        |FROM tot t JOIN k USING (source) ORDER BY t.source""".stripMargin,
+        |FROM tot t JOIN k USING (source) ORDER BY t.source""".stripMargin),
 
-    "q130_kanonymity" ->
+    Query("q130_kanonymity", kAnonymity,
       """WITH c AS (
         |  SELECT source, lang, CAST(floor(n_chars / 100) AS BIGINT) AS len_bucket,
         |    COUNT(*) AS n
@@ -6491,9 +6297,9 @@ object PipelineQueries {
         |  CAST(SUM(CASE WHEN n < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_risky_cells,
         |  CAST(SUM(CASE WHEN n < 5 THEN n ELSE 0 END) AS BIGINT) AS n_risky_rows,
         |  CAST(MIN(n) AS BIGINT) AS anonymity
-        |FROM c GROUP BY source ORDER BY source""".stripMargin,
+        |FROM c GROUP BY source ORDER BY source""".stripMargin),
 
-    "q131_zipf_slope" ->
+    Query("q131_zipf_slope", zipfSlopes,
       s"""WITH t AS (
          |  SELECT lang, unnest(string_split($norm, ' ')) AS tk FROM documents),
          |f AS (
@@ -6520,9 +6326,9 @@ object PipelineQueries {
          |         CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
          |        (CAST(n_types AS DOUBLE) * CAST(sxx AS DOUBLE) -
          |         CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) + 0.0 END AS zipf_slope
-         |FROM s ORDER BY lang""".stripMargin,
+         |FROM s ORDER BY lang""".stripMargin),
 
-    "q132_lexical_diversity" ->
+    Query("q132_lexical_diversity", lexicalDiversityBySource,
       s"""WITH t AS (
          |  SELECT source, list_filter(string_split($norm, ' '), x -> length(x) > 0) AS w
          |  FROM documents),
@@ -6540,9 +6346,9 @@ object PipelineQueries {
          |  COALESCE(b.n_bigram_types, 0) AS n_bigram_types,
          |  CASE WHEN COALESCE(b.n_bigrams, 0) = 0 THEN NULL
          |  ELSE ROUND(CAST(b.n_bigram_types AS DOUBLE) / b.n_bigrams, 6) END AS distinct2
-         |FROM uni u LEFT JOIN bi b USING (source) ORDER BY u.source""".stripMargin,
+         |FROM uni u LEFT JOIN bi b USING (source) ORDER BY u.source""".stripMargin),
 
-    "q133_vocab_overlap" -> {
+    Query("q133_vocab_overlap", vocabOverlapBySource, {
       val P = graft.expr.DedupKernel.P
       val (a, b) = graft.expr.DedupKernel.perm(0)
       val kp = 63L * P
@@ -6581,9 +6387,9 @@ object PipelineQueries {
          |  CAST(cnt * est_union // ku AS BIGINT) AS est_inter,
          |  ROUND(CAST(cnt AS DOUBLE) / ku, 6) AS jacc_est
          |FROM q ORDER BY group_a, group_b""".stripMargin
-    },
+    }),
 
-    "q134_pmi_collocations" ->
+    Query("q134_pmi_collocations", pmiTopCollocations,
       s"""WITH t AS (
          |  SELECT list_filter(string_split($norm, ' '), x -> length(x) > 0) AS w
          |  FROM documents),
@@ -6606,9 +6412,9 @@ object PipelineQueries {
          |SELECT wa || ' ' || wb AS bigram, n_ab,
          |  ROUND(ln((CAST(n_ab AS DOUBLE) * n1 * n1) / (CAST(n2 AS DOUBLE) * n_a * n_b)), 6) + 0.0 AS pmi
          |FROM j, n1, n2
-         |ORDER BY pmi DESC, bigram LIMIT 20""".stripMargin,
+         |ORDER BY pmi DESC, bigram LIMIT 20""".stripMargin),
 
-    "q135_corpus_diff" ->
+    Query("q135_corpus_diff", corpusDiffSummary,
       s"""WITH oldv AS (SELECT doc_id, md5($norm) AS fp FROM documents),
          |v2raw AS (
          |  SELECT doc_id,
@@ -6626,9 +6432,9 @@ object PipelineQueries {
          |            WHEN fo <> fn THEN 'changed'
          |            ELSE 'same' END AS change,
          |  COUNT(*) AS n_docs
-         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    "q136_kcenter_coreset" ->
+    Query("q136_kcenter_coreset", kcenterCoreset,
       """WITH RECURSIVE
         |e AS (SELECT vec_id, embedding AS v FROM embeddings),
         |sel(it, ids) AS (
@@ -6657,9 +6463,9 @@ object PipelineQueries {
         |    FROM e ex, e ey
         |    WHERE ex.vec_id = o.vec_id AND list_contains(o.ids[1:o.sel_order - 1], ey.vec_id)
         |  ) END AS radius
-        |FROM ord o ORDER BY o.sel_order""".stripMargin,
+        |FROM ord o ORDER BY o.sel_order""".stripMargin),
 
-    "q137_mmr_rerank" -> {
+    Query("q137_mmr_rerank", mmrDiversified, {
       // 6-dp-rounded cosine of two list columns — the q22 formula as an
       // inline expression (list_sum is sequential like the codegen kernel)
       def sim(a: String, b: String): String = {
@@ -6697,9 +6503,9 @@ object PipelineQueries {
          |          WHERE cx.vec_id = o.vec_id AND list_contains(o.ids[1:o.rnk - 1], cy.vec_id)) END AS mmr
          |  FROM ord o JOIN cand c ON c.vec_id = o.vec_id)
          |SELECT rnk, vec_id, rel, mmr FROM res ORDER BY rnk""".stripMargin
-    },
+    }),
 
-    "q138_bpe_merges" -> {
+    Query("q138_bpe_merges", bpeTopMerges, {
       // 5 unrolled merge rounds: pair counts over the symbol table,
       // argmax (cnt desc, pair asc), left-to-right non-overlapping
       // replace — the exact TextAnalysis.bpeMerges trajectory
@@ -6730,9 +6536,9 @@ object PipelineQueries {
          |$iterCtes
          |$finals
          |ORDER BY iter""".stripMargin
-    },
+    }),
 
-    "q139_bpe_fertility" -> {
+    Query("q139_bpe_fertility", bpeFertilityByLang, {
       // q138's 5 training rounds with the word identity carried through,
       // then the encoded symbol counts joined back per (lang, word)
       val iterCtes = (1 to 5).map { i =>
@@ -6765,9 +6571,9 @@ object PipelineQueries {
          |  ROUND(CAST(SUM(wl.freq * length(wl.w)) AS DOUBLE) / CAST(SUM(wl.freq * e.n_syms) AS DOUBLE), 6) AS chars_per_subword
          |FROM wl JOIN enc e USING (w)
          |GROUP BY wl.lang ORDER BY wl.lang""".stripMargin
-    },
+    }),
 
-    "q171_bpe_batched" -> {
+    Query("q171_bpe_batched", bpeBatchedMerges, {
       // 3 unrolled BATCHED rounds, R = 2, lookahead 8: rank the round's
       // pairs (cnt desc, pair asc), accept rank 1, accept the lowest-
       // ranked window pair sharing no symbol with it — "symbol" includes
@@ -6777,12 +6583,12 @@ object PipelineQueries {
       s"""WITH $bpeBatchedCtes
          |$bpeFinalsSql
          |ORDER BY iter""".stripMargin
-    },
+    }),
 
     // append ≡ full recompute: the oracle is q36's closure over the
     // ENTIRE candidate pair set — the incremental path must land on
     // exactly the labeling a from-scratch solve produces
-    "q172_components_append" ->
+    Query("q172_components_append", componentsAppend,
       s"""WITH RECURSIVE $minhashCtes,
          |sym AS (
          |  SELECT a_id AS a, b_id AS b FROM cand
@@ -6793,9 +6599,9 @@ object PipelineQueries {
          |  SELECT a, b FROM sym
          |  UNION
          |  SELECT r.a, s.b FROM reach r JOIN sym s ON r.b = s.a)
-         |SELECT a AS id, MIN(b) AS component FROM reach GROUP BY a ORDER BY id""".stripMargin,
+         |SELECT a AS id, MIN(b) AS component FROM reach GROUP BY a ORDER BY id""".stripMargin),
 
-    "q140_triangle_census" ->
+    Query("q140_triangle_census", nearDupTriangles,
       s"""WITH $minhashCtes,
          |e AS (
          |  SELECT DISTINCT LEAST(a_id, b_id) AS a, GREATEST(a_id, b_id) AS b
@@ -6815,9 +6621,9 @@ object PipelineQueries {
          |  CASE WHEN n_wedges = 0 THEN 0.0
          |    ELSE ROUND(3.0 * CAST(n_triangles AS DOUBLE) / CAST(n_wedges AS DOUBLE), 6)
          |  END AS clustering_coeff
-         |FROM tri, w""".stripMargin,
+         |FROM tri, w""".stripMargin),
 
-    "q141_release_split" ->
+    Query("q141_release_split", releaseSplit,
       s"""WITH RECURSIVE capped AS (
          |  SELECT doc_id, text, n_chars FROM (
          |    SELECT doc_id, text, n_chars,
@@ -6850,9 +6656,9 @@ object PipelineQueries {
          |SELECT split, COUNT(DISTINCT component) AS n_clusters, COUNT(*) AS n_docs,
          |  CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
          |  (SELECT leaked_pairs FROM leaked) AS leaked_pairs
-         |FROM sp GROUP BY split ORDER BY split""".stripMargin,
+         |FROM sp GROUP BY split ORDER BY split""".stripMargin),
 
-    "q143_scd2_merge" ->
+    Query("q143_scd2_merge", scd2Customers,
       """WITH cur AS (
         |  SELECT c_custkey, c_acctbal, CAST(0 AS BIGINT) AS valid_from,
         |    CAST(999999 AS BIGINT) AS valid_to, CAST(1 AS BIGINT) AS is_current
@@ -6877,9 +6683,9 @@ object PipelineQueries {
         |  FROM j WHERE newv IS NOT NULL AND (vf IS NULL OR newv <> oldv))
         |SELECT c_custkey, c_acctbal, valid_from, valid_to, is_current FROM m
         |WHERE c_custkey < 200 OR (c_custkey >= 1000000 AND c_custkey < 1000200)
-        |ORDER BY c_custkey, valid_from""".stripMargin,
+        |ORDER BY c_custkey, valid_from""".stripMargin),
 
-    "q144_table_checksum" -> {
+    Query("q144_table_checksum", tableChecksums, {
       // injective rendering, mirroring Integrity.tableChecksum: escape
       // '\' and '|', tag NULL as '\N' (unreachable by any escaped value)
       def ck(table: String, cols: Seq[String]): String = {
@@ -6895,9 +6701,9 @@ object PipelineQueries {
          |UNION ALL
          |${ck("region", Seq("r_regionkey", "r_name"))}
          |ORDER BY table_name""".stripMargin
-    },
+    }),
 
-    "q145_padding_waste" ->
+    Query("q145_padding_waste", paddingWaste,
       s"""WITH t AS (
          |  SELECT CAST(len(string_split($norm, ' ')) AS BIGINT) AS n_tokens
          |  FROM documents),
@@ -6909,9 +6715,9 @@ object PipelineQueries {
          |  CAST(SUM(bucket - n_tokens) AS BIGINT) AS pad_tokens,
          |  ROUND(CAST(SUM(bucket - n_tokens) AS DOUBLE) /
          |    CAST(bucket * COUNT(*) AS DOUBLE), 6) AS pad_frac
-         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
+         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
 
-    "q146_semantic_boundaries" -> {
+    Query("q146_semantic_boundaries", semanticBoundaries, {
       // q64's chunk grid + polyEmbed replay, then adjacent-chunk cosine
       val P = graft.expr.DedupKernel.P
       def dims(src: String) = (0 until 64).map { d =>
@@ -6943,18 +6749,18 @@ object PipelineQueries {
          |  CAST(SUM(CASE WHEN cos < 0.5 THEN 1 ELSE 0 END) AS BIGINT) AS n_boundaries,
          |  MIN(cos) AS min_adj_cos
          |FROM adj GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
+    }),
 
-    "q148_lsh_plan" ->
+    Query("q148_lsh_plan", lshPlanEstimate,
       s"""WITH $minhashBandCtes,
          |bc AS (SELECT band, key, COUNT(*) AS c FROM banded GROUP BY band, key)
          |SELECT CAST(band AS BIGINT) AS band, COUNT(*) AS n_buckets,
          |  CAST(MAX(c) AS BIGINT) AS max_bucket,
          |  CAST(SUM(c * (c - 1) // 2) AS BIGINT) AS candidate_pairs,
          |  CAST(SUM(c) AS BIGINT) AS n_rows
-         |FROM bc GROUP BY band ORDER BY band""".stripMargin,
+         |FROM bc GROUP BY band ORDER BY band""".stripMargin),
 
-    "q194_unimax" ->
+    Query("q194_unimax", uniMaxPlan,
       s"""WITH tk AS (
          |  SELECT lang, CAST(len(list_filter(string_split($norm, ' '),
          |    x -> length(x) > 0)) AS BIGINT) AS n
@@ -6984,9 +6790,9 @@ object PipelineQueries {
          |    ELSE ROUND(CAST(b - psat AS DOUBLE) / CAST(lt - k AS DOUBLE), 6) END)
          |    / CAST(b AS DOUBLE), 6) AS share
          |FROM st, cut
-         |ORDER BY lang""".stripMargin,
+         |ORDER BY lang""".stripMargin),
 
-    "q149_mixture_budget" ->
+    Query("q149_mixture_budget", mixtureBudgetPlan,
       s"""WITH tk0 AS (
          |  SELECT source, unnest(string_split($norm, ' ')) AS token FROM documents),
          |tk AS (SELECT * FROM tk0 WHERE length(token) > 0),
@@ -7018,9 +6824,9 @@ object PipelineQueries {
          |  quota_tokens,
          |  ROUND(CAST(quota_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS epochs,
          |  CAST(CASE WHEN quota_tokens > n_tokens THEN 1 ELSE 0 END AS BIGINT) AS oversampled
-         |FROM p ORDER BY source""".stripMargin,
+         |FROM p ORDER BY source""".stripMargin),
 
-    "q150_rendezvous_shards" ->
+    Query("q150_rendezvous_shards", rendezvousRebalance,
       """WITH x AS (
         |  SELECT doc_id, s.s AS shard,
         |    CAST(concat('0x', substr(md5(concat_ws(':', doc_id, s.s)), 1, 8)) AS BIGINT) AS hw
@@ -7038,9 +6844,9 @@ object PipelineQueries {
         |SELECT CAST(s11 AS BIGINT) AS shard, COUNT(*) AS n_docs,
         |  CAST(SUM(CASE WHEN s10 <> s11 THEN 1 ELSE 0 END) AS BIGINT) AS n_moved_in
         |FROM a10 JOIN a11 USING (doc_id)
-        |GROUP BY 1 ORDER BY shard""".stripMargin,
+        |GROUP BY 1 ORDER BY shard""".stripMargin),
 
-    "q151_lsh_recall" ->
+    Query("q151_lsh_recall", lshRecallAudit,
       s"""WITH $minhashCtes,
          |gt AS (
          |  SELECT doc_id, string_split($norm, ' ') AS w
@@ -7071,9 +6877,9 @@ object PipelineQueries {
          |    ELSE ROUND(CAST(n_hits AS DOUBLE) / CAST(n_truth AS DOUBLE), 6) END AS recall,
          |  CASE WHEN n_candidates = 0 THEN 0.0
          |    ELSE ROUND(CAST(n_hits AS DOUBLE) / CAST(n_candidates AS DOUBLE), 6) END AS precision
-         |FROM tt, cc, h""".stripMargin,
+         |FROM tt, cc, h""".stripMargin),
 
-    "q153_bootstrap_ci" ->
+    Query("q153_bootstrap_ci", bootstrapCi,
       """WITH x AS (
         |  SELECT b.b AS b, n_chars
         |  FROM documents, generate_series(0, 63) b(b)
@@ -7090,9 +6896,9 @@ object PipelineQueries {
         |  ROUND(CAST(s AS DOUBLE) / CAST(n_replicas AS DOUBLE), 6) AS mean_of_means,
         |  ROUND(SQRT((CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) /
         |    CAST(n_replicas AS DOUBLE)) / CAST(n_replicas AS DOUBLE)), 6) AS sd_of_means
-        |FROM agg""".stripMargin,
+        |FROM agg""".stripMargin),
 
-    "q157_kn_bigram" ->
+    Query("q157_kn_bigram", knBigramLogProb,
       s"""WITH w AS (
          |  SELECT doc_id, string_split($norm, ' ') AS ws FROM documents
          |  WHERE len(string_split($norm, ' ')) >= 2),
@@ -7115,9 +6921,9 @@ object PipelineQueries {
          |  CAST(SUM(micro) AS BIGINT) AS sum_micro_nats,
          |  ROUND(CAST(SUM(micro) AS DOUBLE) /
          |    (CAST(COUNT(*) AS DOUBLE) * CAST(1000000.0 AS DOUBLE)), 6) AS avg_logprob
-         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
+         |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
-    "q158_dedup_sweep" ->
+    Query("q158_dedup_sweep", dedupSweep,
       s"""WITH ${minhashBandCtesFrom("documents")},
          |cand AS (
          |  SELECT DISTINCT x.doc_id AS a_id, y.doc_id AS b_id,
@@ -7128,9 +6934,9 @@ object PipelineQueries {
          |g AS (SELECT band_lo, COUNT(*) AS n_pairs FROM bl GROUP BY 1)
          |SELECT band_lo, n_pairs,
          |  CAST(SUM(n_pairs) OVER (ORDER BY band_lo DESC) AS BIGINT) AS cum_pairs
-         |FROM g ORDER BY band_lo""".stripMargin,
+         |FROM g ORDER BY band_lo""".stripMargin),
 
-    "q159_char_entropy" ->
+    Query("q159_char_entropy", charEntropyProfile,
       s"""WITH t AS (
          |  SELECT doc_id, $norm AS nt FROM documents WHERE length($norm) > 0),
          |cx AS (
@@ -7150,9 +6956,9 @@ object PipelineQueries {
          |  FROM cx)
          |SELECT doc_id, CAST(L AS BIGINT) AS n_chars,
          |  ROUND(CAST(nano AS DOUBLE) / CAST(1000000000.0 AS DOUBLE), 6) AS entropy_nats
-         |FROM e ORDER BY doc_id""".stripMargin,
+         |FROM e ORDER BY doc_id""".stripMargin),
 
-    "q161_windowed_quantiles" ->
+    Query("q161_windowed_quantiles", windowedQuantilesQuery,
       """WITH b AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600)*3600 AS BIGINT) AS window_epoch, event_type,
         |    least(greatest(CAST(floor((value - 0.0) / 500.0 * 100) AS BIGINT), 0), 99) AS bin
@@ -7174,15 +6980,15 @@ object PipelineQueries {
         |  ROUND(0.0 + 5.0 * (bin + CAST(needed - cumb AS DOUBLE) / n), 6) AS est,
         |  CAST(nn AS BIGINT) AS n
         |FROM r WHERE cumb < needed AND needed <= cumb + n
-        |ORDER BY window_epoch, event_type, p""".stripMargin,
+        |ORDER BY window_epoch, event_type, p""".stripMargin),
 
-    "q167_backoff_trigram" -> backoffTrigramOracle,
-    "q168_lm_index_score" -> backoffTrigramOracle,
-    "q170_lm_index_append" -> backoffTrigramOracle,
-    "q180_lm_compact" -> backoffTrigramOracle,
-    "q186_lm_time_travel" ->
-      backoffTrigramOracle("doc_id % 10 <> 0 AND doc_id < 250"),
-    "q187_annotator_kappa" ->
+    Query("q167_backoff_trigram", backoffTrigram, backoffTrigramOracle),
+    Query("q168_lm_index_score", lmIndexScore, backoffTrigramOracle),
+    Query("q170_lm_index_append", lmIndexAppendScore, backoffTrigramOracle),
+    Query("q180_lm_compact", lmIndexCompactScore, backoffTrigramOracle),
+    Query("q186_lm_time_travel", lmTimeTravelScore,
+      backoffTrigramOracle("doc_id % 10 <> 0 AND doc_id < 250")),
+    Query("q187_annotator_kappa", annotatorKappa,
       s"""WITH $langIdPredCtes,
          |cells AS (
          |  SELECT lang AS a, predicted AS b, CAST(COUNT(*) AS BIGINT) AS n
@@ -7203,8 +7009,8 @@ object PipelineQueries {
          |  CASE WHEN n_total * n_total - s = 0 THEN CAST(1.0 AS DOUBLE)
          |    ELSE ROUND(CAST(n_total * agree - s AS DOUBLE) /
          |      CAST(n_total * n_total - s AS DOUBLE), 6) + 0.0 END AS kappa
-         |FROM tot, sx""".stripMargin,
-    "q189_langid_report" ->
+         |FROM tot, sx""".stripMargin),
+    Query("q189_langid_report", langIdReport,
       s"""WITH $langIdPredCtes,
          |cells AS (
          |  SELECT lang AS a, predicted AS b, CAST(COUNT(*) AS BIGINT) AS n
@@ -7233,8 +7039,8 @@ object PipelineQueries {
          |  ROUND(CAST(f1m AS DOUBLE) / 1e6, 6) AS f1,
          |  ROUND(CAST(fsum AS DOUBLE) / (CAST(k AS DOUBLE) * 1e6), 6) AS macro_f1
          |FROM pm, mac
-         |ORDER BY class""".stripMargin,
-    "q192_filter_funnel" ->
+         |ORDER BY class""".stripMargin),
+    Query("q192_filter_funnel", filterFunnelQuery,
       s"""WITH $funnelGateCtes,
          |fr AS (
          |  SELECT CASE WHEN g_keep = 0 THEN 0 WHEN b_keep = 0 THEN 1
@@ -7255,14 +7061,14 @@ object PipelineQueries {
          |  n_in - n_rejected AS n_out,
          |  ROUND(CASE WHEN n_in > 0 THEN CAST(n_rejected AS DOUBLE) / CAST(n_in AS DOUBLE)
          |    ELSE CAST(0.0 AS DOUBLE) END, 6) AS reject_share
-         |FROM k2 ORDER BY stage""".stripMargin,
-    "q181_bpe_encode" ->
+         |FROM k2 ORDER BY stage""".stripMargin),
+    Query("q181_bpe_encode", bpeEncodeQuery,
       s"""WITH $bpeBatchedCtes,
          |$bpeEncodeCtes
          |SELECT doc_id, CAST(len(tids) AS BIGINT) AS n_tokens,
          |  array_to_string(list_transform(tids, x -> CAST(x AS VARCHAR)), '_') AS tokens_str
-         |FROM enc ORDER BY doc_id""".stripMargin,
-    "q188_bpe_roundtrip" ->
+         |FROM enc ORDER BY doc_id""".stripMargin),
+    Query("q188_bpe_roundtrip", bpeRoundtrip,
       s"""WITH $bpeBatchedCtes,
          |$bpeEncodeCtes,
          |dx AS (
@@ -7282,8 +7088,8 @@ object PipelineQueries {
          |  CAST(length(decoded) AS BIGINT) AS n_chars,
          |  CAST(CASE WHEN decoded = r THEN 1 ELSE 0 END AS BIGINT) AS ok
          |FROM dec JOIN ref USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-    "q182_bpe_packing" ->
+         |ORDER BY doc_id""".stripMargin),
+    Query("q182_bpe_packing", bpePacking,
       s"""WITH $bpeBatchedCtes,
          |$bpeEncodeCtes,
          |tt AS (
@@ -7296,8 +7102,8 @@ object PipelineQueries {
          |  FROM tt)
          |SELECT doc_id, lang, n_tokens,
          |  cum // 256 AS seq_id, cum % 256 AS tok_offset
-         |FROM cc ORDER BY lang, doc_id""".stripMargin,
-    "q165_novelty_curve" ->
+         |FROM cc ORDER BY lang, doc_id""".stripMargin),
+    Query("q165_novelty_curve", noveltyCurve,
       s"""WITH fps AS (
          |  SELECT source, md5($norm) AS fp FROM documents),
          |ps AS (
@@ -7313,9 +7119,9 @@ object PipelineQueries {
          |  CAST(SUM(COALESCE(f.n_novel, 0)) OVER (ORDER BY ps.source) AS BIGINT) AS cum_novel,
          |  ROUND(CAST(COALESCE(f.n_novel, 0) AS DOUBLE) / ps.n_distinct_fps, 6) AS novelty_rate
          |FROM ps LEFT JOIN fsrc f USING (source)
-         |ORDER BY ps.source""".stripMargin,
+         |ORDER BY ps.source""".stripMargin),
 
-    "q164_triplet_mining" ->
+    Query("q164_triplet_mining", tripletMining,
       s"""WITH $minhashCtes,
          |pool AS (
          |  SELECT doc_id AS neg_id FROM documents
@@ -7330,9 +7136,9 @@ object PipelineQueries {
          |  FROM x)
          |SELECT a_id AS anchor_id, b_id AS pos_id, neg_id,
          |  ROUND(est, 6) AS est_jaccard
-         |FROM r WHERE rn = 1 ORDER BY anchor_id, pos_id""".stripMargin,
+         |FROM r WHERE rn = 1 ORDER BY anchor_id, pos_id""".stripMargin),
 
-    "q162_shard_prep" ->
+    Query("q162_shard_prep", shardPrep,
       s"""WITH nt AS (
          |  SELECT doc_id, lang, $norm AS nrm FROM documents),
          |keep AS (
@@ -7351,9 +7157,9 @@ object PipelineQueries {
          |  FROM surv)
          |SELECT lang, cum // 256 AS seq_id, COUNT(*) AS n_docs,
          |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-         |FROM c GROUP BY 1, 2 ORDER BY lang, seq_id""".stripMargin,
+         |FROM c GROUP BY 1, 2 ORDER BY lang, seq_id""".stripMargin),
 
-    "q160_blocklist_gate" ->
+    Query("q160_blocklist_gate", blocklistGate,
       s"""WITH w AS (
          |  SELECT doc_id, string_split($norm, ' ') AS ws FROM documents)
          |SELECT doc_id,
@@ -7361,11 +7167,11 @@ object PipelineQueries {
          |  CAST(len(list_filter(ws, t -> list_contains(['big', 'broken', 'slow'], t))) AS BIGINT) AS n_hits,
          |  CASE WHEN len(list_filter(ws, t -> list_contains(['big', 'broken', 'slow'], t))) = 0
          |    THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS keep
-         |FROM w ORDER BY doc_id""".stripMargin,
+         |FROM w ORDER BY doc_id""".stripMargin),
 
     // q215: the q177 classifier + gopher replays thresholded to paired
     // gates, exact off-diagonal cells, continuity-corrected statistic
-    "q215_mcnemar" ->
+    Query("q215_mcnemar", gateMcnemar,
       s"""WITH $classifierPredCtes,
          |$gopherLabCtes,
          |j AS (
@@ -7385,11 +7191,11 @@ object PipelineQueries {
          |    ELSE ROUND(CAST((abs(only_a - only_b) - 1) *
          |        (abs(only_a - only_b) - 1) AS DOUBLE) /
          |      CAST(only_a + only_b AS DOUBLE), 6) END AS chi2
-         |FROM c""".stripMargin,
+         |FROM c""".stripMargin),
 
     // q219: the q177 binning extended with prefix sums, bins^2 segment
     // means and the bins^3 PAV minimax lattice, before/after ECE
-    "q219_isotonic" ->
+    Query("q219_isotonic", isotonicAudit,
       s"""WITH $classifierPredCtes,
          |$gopherLabCtes,
          |j AS (
@@ -7446,11 +7252,11 @@ object PipelineQueries {
          |  ROUND(CAST(bo.iso_micro AS DOUBLE) / 1e6, 6) AS iso_fit,
          |  ROUND(CAST(tot.g0 AS DOUBLE) / (CAST(tot.n AS DOUBLE) * 1e6), 6) AS ece_before,
          |  ROUND(CAST(tot.g1 AS DOUBLE) / (CAST(tot.n AS DOUBLE) * 1e6), 6) AS ece_after
-         |FROM bo, tot ORDER BY bin""".stripMargin,
+         |FROM bo, tot ORDER BY bin""".stripMargin),
 
     // q220: dense (cell x language) completion, exact common-denominator
     // integer deviations |ncv*N - gv*nc|, worst-cell TVD per source
-    "q220_t_closeness" ->
+    Query("q220_t_closeness", tCloseness,
       """WITH v AS (
         |  SELECT source, CAST(FLOOR(n_chars / 100) AS BIGINT) AS len_bucket,
         |    lang, CAST(COUNT(*) AS BIGINT) AS ncv
@@ -7482,11 +7288,11 @@ object PipelineQueries {
         |    AS n_risky_cells,
         |  CAST(SUM(CASE WHEN tvd_micro > 200000 THEN nc ELSE 0 END) AS BIGINT)
         |    AS n_risky_rows
-        |FROM tv GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM tv GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // q221: count-of-counts over the corpus vocabulary, r* donor join on
     // r+1, missing mass N1/N on every row
-    "q221_good_turing" ->
+    Query("q221_good_turing", goodTuringReadout,
       s"""WITH tk AS (
          |  SELECT unnest(string_split($norm, ' ')) AS t FROM documents),
          |w AS (SELECT t FROM tk WHERE length(t) > 0),
@@ -7508,11 +7314,11 @@ object PipelineQueries {
          |  tot.n AS total_tokens
          |FROM coc c LEFT JOIN nxt USING (r), tot
          |WHERE c.r IN (SELECT r FROM coc ORDER BY r LIMIT 10)
-         |ORDER BY c.r""".stripMargin,
+         |ORDER BY c.r""".stripMargin),
 
     // q222: distinct (doc, token) presence cells vs lang='en', four
     // nano-quantized MI terms, top-25 on (mi_nano, token)
-    "q222_token_label_mi" ->
+    Query("q222_token_label_mi", tokenLabelMiTop,
       s"""WITH tk AS (
          |  SELECT doc_id, unnest(string_split($norm, ' ')) AS token FROM documents),
          |dt AS (SELECT DISTINCT doc_id, token FROM tk WHERE length(token) > 0),
@@ -7548,11 +7354,11 @@ object PipelineQueries {
          |  FROM pt, tot WHERE df >= 5)
          |SELECT token, df, n11,
          |  ROUND(CAST(mi_nano AS DOUBLE) / 1e9, 6) + 0.0 AS mi
-         |FROM mi ORDER BY mi_nano DESC, token LIMIT 25""".stripMargin,
+         |FROM mi ORDER BY mi_nano DESC, token LIMIT 25""".stripMargin),
 
     // q223: exact per-stratum moments over micro-quantized lengths,
     // sigma micro-quantization, proportional vs Neyman budgets
-    "q223_neyman" ->
+    Query("q223_neyman", neymanBudget,
       """WITH s AS (
         |  SELECT source AS stratum, CAST(COUNT(*) AS BIGINT) AS n_rows,
         |    SUM(CAST(CAST(round(CAST(n_chars AS DOUBLE) * 1e6) AS BIGINT) AS HUGEINT)) AS sv,
@@ -7579,11 +7385,11 @@ object PipelineQueries {
         |  CASE WHEN tot.wt = 0 THEN CAST(0 AS BIGINT)
         |    ELSE LEAST(n_rows, CAST(round(CAST(1000 AS DOUBLE) * CAST(wgt AS DOUBLE) /
         |      CAST(tot.wt AS DOUBLE)) AS BIGINT)) END AS alloc_neyman
-        |FROM w, tot ORDER BY stratum""".stripMargin,
+        |FROM w, tot ORDER BY stratum""".stripMargin),
 
     // q224: the q140 candidate edges, exact integer degree moments over
     // both orientations, Newman's ratio
-    "q224_assortativity" ->
+    Query("q224_assortativity", nearDupAssortativity,
       s"""WITH $minhashCtes,
          |e AS (
          |  SELECT DISTINCT LEAST(a_id, b_id) AS a, GREATEST(a_id, b_id) AS b
@@ -7615,11 +7421,11 @@ object PipelineQueries {
          |       (CAST(s.sx AS DOUBLE) / (CAST(2.0 AS DOUBLE) * CAST(s.n_edges AS DOUBLE))) *
          |       (CAST(s.sx AS DOUBLE) / (CAST(2.0 AS DOUBLE) * CAST(s.n_edges AS DOUBLE)))), 6)
          |  END AS assortativity
-         |FROM nn, s""".stripMargin,
+         |FROM nn, s""".stripMargin),
 
     // q225: positional 8-gram codes, the q77 split, hit positions via the
     // broadcast-set join, islands (pos - row_number) run arithmetic
-    "q225_contamination_runs" ->
+    Query("q225_contamination_runs", contaminationRunsReport,
       s"""WITH t AS (SELECT doc_id, string_split($norm, ' ') AS w FROM documents),
          |hh AS (
          |  SELECT doc_id, list_transform(w, tk -> ${duckFold("tk", graft.expr.DedupKernel.B1)}) AS h
@@ -7647,13 +7453,13 @@ object PipelineQueries {
          |  CAST(COUNT(*) AS BIGINT) AS n_runs,
          |  CAST(MAX(run) AS BIGINT) AS max_run,
          |  CAST(MAX(run) + 7 AS BIGINT) AS max_token_span
-         |FROM runs GROUP BY 1 ORDER BY doc_id""".stripMargin,
+         |FROM runs GROUP BY 1 ORDER BY doc_id""".stripMargin),
     // q226: unrolled 2-core peeling — every round recomputes degrees on
     // the remaining edges and drops sub-2 nodes; rounds past the
     // fixpoint are no-ops, so 12 unrolls ≡ the Spark op's converged
     // fixpoint (which THROWS if it needs more than its matching
     // maxRounds=12 — a mismatch can't pass silently)
-    "q226_kcore" -> {
+    Query("q226_kcore", nearDupKCore, {
       // MATERIALIZED: each round is referenced by the next round's
       // degree count, filter and NOT IN probes — inlining would expand
       // e12 into an exponential tree of base-table scans
@@ -7674,10 +7480,10 @@ object PipelineQueries {
          |SELECT id AS doc_id, CAST(COUNT(*) AS BIGINT) AS deg FROM (
          |  SELECT a AS id FROM e12 UNION ALL SELECT b FROM e12)
          |GROUP BY 1 ORDER BY doc_id""".stripMargin
-    },
+    }),
     // q227: the q108 PageRank iteration replayed verbatim on the
     // adjacent-token bigram graph with token-STRING node ids
-    "q227_textrank" -> {
+    Query("q227_textrank", textRankTop, {
       def iter(k: Int): String =
         s"""c$k AS (
            |  SELECT a.dst, CAST(SUM(r.r // d.deg) AS BIGINT) AS sc
@@ -7707,10 +7513,10 @@ object PipelineQueries {
          |SELECT r3.id AS token, r3.r AS pr_micro, d.deg
          |FROM r3 JOIN deg d ON r3.id = d.src
          |ORDER BY pr_micro DESC, token ASC LIMIT 25""".stripMargin
-    },
+    }),
     // q229: independent pass counts over the q192 gate replays, the
     // (n_pass, gate) ordering, and the est recurrence unrolled per stage
-    "q229_gate_plan" ->
+    Query("q229_gate_plan", gatePlanQuery,
       s"""WITH $funnelGateCtes,
          |fl AS (
          |  SELECT g_keep, b_keep,
@@ -7745,8 +7551,8 @@ object PipelineQueries {
          |  END AS BIGINT) AS est_rows_in,
          |  r.joint AS n_out_final
          |FROM r, s1, s2
-         |ORDER BY planned_stage""".stripMargin,
-    "q230_cochran_q" ->
+         |ORDER BY planned_stage""".stripMargin),
+    Query("q230_cochran_q", gateCochranQ,
       s"""WITH $funnelGateCtes,
          |fl AS (
          |  SELECT g_keep, b_keep,
@@ -7767,10 +7573,10 @@ object PipelineQueries {
          |      CAST(((c0*c0 + c1*c1 + c2*c2) * 3 - t * t) * 2 AS DOUBLE) /
          |      CAST(t * 3 - sr2 AS DOUBLE), 6)
          |  END AS q_stat
-         |FROM m""".stripMargin,
+         |FROM m""".stripMargin),
     // q245: the q230 gate replay, cancelled-n² item/total variance
     // integers, one fixed-order alpha
-    "q245_cronbach" ->
+    Query("q245_cronbach", gateCronbach,
       s"""WITH $funnelGateCtes,
          |fl AS (
          |  SELECT g_keep, b_keep,
@@ -7792,10 +7598,10 @@ object PipelineQueries {
          |        (CAST(n AS HUGEINT) * c2 - c2 * c2) AS DOUBLE) /
          |      CAST(CAST(n AS HUGEINT) * st2 - t * t AS DOUBLE)), 6)
          |  END AS alpha
-         |FROM m""".stripMargin,
+         |FROM m""".stripMargin),
     // q247: top-51 order statistics, nano-quantized log ratios, the
     // Hill identity with an honest NULL on a flat tail
-    "q247_hill_tail" ->
+    Query("q247_hill_tail", docLengthHill,
       """WITH t AS (
         |  SELECT CAST(n_chars AS BIGINT) AS x FROM documents
         |  ORDER BY x DESC LIMIT 51),
@@ -7809,11 +7615,11 @@ object PipelineQueries {
         |  ROUND(CAST(sl AS DOUBLE) / 50.0 / 1e9, 6) AS inv_alpha,
         |  CASE WHEN sl = 0 THEN NULL
         |    ELSE ROUND(50.0 * 1e9 / CAST(sl AS DOUBLE), 6) END AS alpha
-        |FROM nn, tl, sl""".stripMargin,
+        |FROM nn, tl, sl""".stripMargin),
     // q249: classifier + Gopher-label replays, desc score-grid
     // prefixes, whole-score bucket cuts (cp monotone in cd, so the
     // max-pair IS the boundary row)
-    "q249_gain_curve" ->
+    Query("q249_gain_curve", qualityGainCurve,
       s"""WITH $classifierPredCtes,
          |$gopherLabCtes,
          |grid AS (
@@ -7840,10 +7646,10 @@ object PipelineQueries {
          |FROM sp s CROSS JOIN tt
          |LEFT JOIN cum c ON c.cd <= (s.bucket * tt.nn) // 10
          |GROUP BY s.bucket, tt.nn, tt.pp
-         |ORDER BY s.bucket""".stripMargin,
+         |ORDER BY s.bucket""".stripMargin),
     // q252: left-fold norms, micro unit grid, per-dim HUGEINT sums,
     // the ‖Σû‖² − Σ‖û‖² identity, two fixed-order ratios
-    "q252_isotropy" ->
+    Query("q252_isotropy", embeddingIsotropy,
       """WITH nrm AS (
         |  SELECT embedding,
         |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
@@ -7872,10 +7678,10 @@ object PipelineQueries {
         |  ROUND(CAST(qq AS DOUBLE) / CAST(n AS DOUBLE) / 1e12, 6) AS mean_self,
         |  ROUND(CAST(ss - qq AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE) / 1e12, 6)
         |    + 0.0 AS mean_pairwise_cos
-        |FROM tt, nn""".stripMargin,
+        |FROM tt, nn""".stripMargin),
     // q253: classifier replay, doubled integer ranks on the score
     // grid, HUGEINT rank sums, the div/mod quotient device, tie term
-    "q253_kruskal" ->
+    Query("q253_kruskal", sourceScoreKruskal,
       s"""WITH $classifierPredCtes,
          |j AS (SELECT d.source AS g, CAST(round(p.conf * 1e6) AS BIGINT) AS sm
          |      FROM pred p JOIN documents d USING (doc_id)),
@@ -7919,10 +7725,10 @@ object PipelineQueries {
          |      (1.0 - CAST(tc AS DOUBLE) / (CAST(n AS DOUBLE) *
          |        CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(n AS DOUBLE))), 6)
          |    ELSE NULL END AS h_adj
-         |FROM ag, tc""".stripMargin,
+         |FROM ag, tc""".stripMargin),
     // q254: per-source lower-median scan, exact micro deviations,
     // per-group and global div/mod quotient splits, fixed-order F
-    "q254_brown_forsythe" ->
+    Query("q254_brown_forsythe", sourceScoreSpread,
       s"""WITH $classifierPredCtes,
          |j AS (SELECT d.source AS g, CAST(round(p.conf * 1e6) AS BIGINT) AS sm
          |      FROM pred p JOIN documents d USING (doc_id)),
@@ -7975,10 +7781,10 @@ object PipelineQueries {
          |    THEN ROUND((between_ / (CAST(k_groups AS DOUBLE) - 1.0)) /
          |      (within_ / (CAST(n AS DOUBLE) - CAST(k_groups AS DOUBLE))), 6)
          |    ELSE NULL END AS f
-         |FROM a4""".stripMargin,
+         |FROM a4""".stripMargin),
     // q256: clean token grid, per-source singleton/doubleton counts,
     // the closed-form bias-corrected chao1
-    "q256_chao1" ->
+    Query("q256_chao1", sourceChao1,
       s"""WITH tk AS (
          |  SELECT source, unnest(list_filter(string_split($norm, ' '),
          |    x -> length(x) > 0)) AS w
@@ -7994,10 +7800,10 @@ object PipelineQueries {
          |  ROUND(CAST(v_obs AS DOUBLE) + CAST(f1 AS DOUBLE) *
          |    (CAST(f1 AS DOUBLE) - 1.0) /
          |    ((CAST(f2 AS DOUBLE) + 1.0) * 2.0), 6) AS chao1
-         |FROM ag""".stripMargin,
+         |FROM ag""".stripMargin),
     // q257: exact counts, the integer overrepresentation cross-compare,
     // one fixed-order G2 per row, nano ranking with token tie-break
-    "q257_llr_keywords" ->
+    Query("q257_llr_keywords", sourceKeywords,
       s"""WITH tk AS (
          |  SELECT source, unnest(list_filter(string_split($norm, ' '),
          |    x -> length(x) > 0)) AS w
@@ -8027,10 +7833,10 @@ object PipelineQueries {
          |  ORDER BY g2n DESC, w ASC) AS r FROM g2x)
          |SELECT grp AS "group", w AS token, a AS cnt, b AS rest_cnt,
          |  ROUND(CAST(g2n AS DOUBLE) / 1e9, 6) + 0.0 AS g2
-         |FROM rk WHERE r <= 5""".stripMargin,
+         |FROM rk WHERE r <= 5""".stripMargin),
     // q258: top-30 cut, nano rates on the M x k frame, per-word
     // HUGEINT moments, nano |dz| pair sums
-    "q258_burrows_delta" ->
+    Query("q258_burrows_delta", sourceStyleDelta,
       s"""WITH tk AS (
          |  SELECT source, unnest(list_filter(string_split($norm, ' '),
          |    x -> length(x) > 0)) AS w
@@ -8072,10 +7878,10 @@ object PipelineQueries {
          |  GROUP BY 1, 2)
          |SELECT src_a, src_b, m1.m AS n_words,
          |  ROUND(CAST(sdz AS DOUBLE) / 1e9 / CAST(m1.m AS DOUBLE), 6) AS delta
-         |FROM pr, m1""".stripMargin,
+         |FROM pr, m1""".stripMargin),
     // q259: top-20 cut, exact |v*N - n*f| HUGEINT numerators, one
     // final double division
-    "q259_dispersion" ->
+    Query("q259_dispersion", tokenDispersion,
       s"""WITH tk AS (
          |  SELECT source, unnest(list_filter(string_split($norm, ' '),
          |    x -> length(x) > 0)) AS w
@@ -8097,10 +7903,10 @@ object PipelineQueries {
          |SELECT w AS token, f AS total_cnt,
          |  ROUND(CAST(SUM(num) AS DOUBLE) * 0.5 /
          |    (CAST(f AS DOUBLE) * CAST(nn AS DOUBLE)), 6) AS dp
-         |FROM nm GROUP BY w, f, nn""".stripMargin,
+         |FROM nm GROUP BY w, f, nn""".stripMargin),
     // q276: the q187 cells, union marginals m_k = na_k + nb_k, the
     // cleared-denominator (4N(K-1)agree - S)/(4N^2(K-1) - S) ratio
-    "q276_gwet_ac1" ->
+    Query("q276_gwet_ac1", langIdAc1,
       s"""WITH $langIdPredCtes,
          |cells AS (
          |  SELECT lang AS a, predicted AS b, CAST(COUNT(*) AS BIGINT) AS n
@@ -8135,10 +7941,10 @@ object PipelineQueries {
          |      CAST(CAST(n_total AS HUGEINT) * n_total * 4 *
          |        (k_classes - 1) - s AS DOUBLE), 6) + 0.0
          |    ELSE CAST(1.0 AS DOUBLE) END AS ac1
-         |FROM tot, ks, sx""".stripMargin,
+         |FROM tot, ks, sx""".stripMargin),
     // q279: classifier + unigram-LM + length replays, three doubled-rank
     // grids with tie cubes, exact-integer S' and the cleared W denominator
-    "q279_kendall_w" ->
+    Query("q279_kendall_w", signalKendallW,
       s"""WITH $classifierPredCtes,
          |toks AS (
          |  SELECT doc_id, unnest(string_split($norm, ' ')) AS token FROM documents),
@@ -8215,10 +8021,10 @@ object PipelineQueries {
          |      ROUND(3.0 * (CAST(n AS DOUBLE) - 1.0) *
          |        (3.0 * CAST(sp AS DOUBLE) / CAST(den AS DOUBLE)), 6)
          |    ELSE CAST(0.0 AS DOUBLE) END AS friedman_chi2
-         |FROM nn, s2, dn""".stripMargin,
+         |FROM nn, s2, dn""".stripMargin),
     // q295: classifier + gopher replays, reverse-cumulative confusion
     // grid, DECIMAL-exact MCC numerator, fixed-order sqrt denominator
-    "q295_mcc_sweep" ->
+    Query("q295_mcc_sweep", classifierMccSweep,
       s"""WITH $classifierPredCtes,
          |$gopherLabCtes,
          |j AS (
@@ -8263,10 +8069,10 @@ object PipelineQueries {
          |SELECT CAST(sm AS DOUBLE) / 1e6 AS threshold, tp, fp, fn, tn,
          |  mcc, youden_j,
          |  CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS is_best
-         |FROM rk ORDER BY threshold""".stripMargin,
+         |FROM rk ORDER BY threshold""".stripMargin),
     // q286: classifier + LM + gopher replays, the md5-bucket
     // permutation bijection, six exact U-statistic AUC blocks
-    "q286_perm_auc" -> {
+    Query("q286_perm_auc", signalPermAucNull, {
       // one exact-AUC block over `src`(sm BIGINT, keep) → `<p>auc`(auc)
       def aucBlock(p: String, src: String): String =
         s"""${p}g AS (
@@ -8362,10 +8168,10 @@ object PipelineQueries {
          |  SELECT 'len', crauc.n_pos, crauc.n_neg, crauc.auc, cpauc.auc,
          |    crauc.auc - cpauc.auc FROM crauc, cpauc)
          |ORDER BY signal""".stripMargin
-    },
+    }),
     // q285: classifier replay + source join, per-source grids, pair
     // expansion, doubled-rank HUGEINT sums, fixed-order z per pair
-    "q285_mw_matrix" ->
+    Query("q285_mw_matrix", sourceMwMatrix,
       s"""WITH $classifierPredCtes,
          |sg AS (
          |  SELECT d.source AS gsrc, CAST(round(p2.conf * 1e6) AS BIGINT) AS sm,
@@ -8417,10 +8223,10 @@ object PipelineQueries {
          |             ((CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) - 1.0)))), 6)
          |      + 0.0
          |    ELSE CAST(0.0 AS DOUBLE) END AS z
-         |FROM t2 ORDER BY src_a, src_b""".stripMargin,
+         |FROM t2 ORDER BY src_a, src_b""".stripMargin),
     // q292: the q204 length grid, nano within/total/between Theil
     // terms, cleared shares (+0.0: quantized relative entropies)
-    "q292_theil" ->
+    Query("q292_theil", sourceTheil,
       s"""WITH t AS (
          |  SELECT source AS grp,
          |    CAST(len(string_split($norm, ' ')) AS BIGINT) AS len
@@ -8463,10 +8269,10 @@ object PipelineQueries {
          |  ROUND(CAST(tot.tsum AS DOUBLE) /
          |    (1e9 * CAST(tt.x AS DOUBLE)), 6) + 0.0 AS theil_total
          |FROM gr JOIN win ON gr.grp = win.grp, tt, tot, btw
-         |ORDER BY "group"""".stripMargin,
+         |ORDER BY "group"""".stripMargin),
     // q290: the q168 split, ML bigram/unigram tables, OOV drop, one
     // micro term per (pair, lambda), exact sums, argmax flag
-    "q290_jm_sweep" -> {
+    Query("q290_jm_sweep", jmLambdaSweep, {
       val lams = (1 to 9).map(i => s"CAST(${i / 10.0d} AS DOUBLE)")
         .mkString(", ")
       s"""WITH w AS (
@@ -8522,10 +8328,10 @@ object PipelineQueries {
          |  ROUND(exp(-avg_logprob), 6) AS perplexity,
          |  CAST(CASE WHEN rn = 1 THEN 1 ELSE 0 END AS BIGINT) AS is_best
          |FROM rk, oov ORDER BY lambda""".stripMargin
-    },
+    }),
     // q291: recursive greedy argmax (the q137 device) + first-covering-
     // pick word attribution for the gain/cumulative readouts
-    "q291_set_cover" ->
+    Query("q291_set_cover", vocabSetCover,
       s"""WITH RECURSIVE
          |dw AS (
          |  SELECT doc_id, unnest(list_distinct(list_filter(
@@ -8563,10 +8369,10 @@ object PipelineQueries {
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
          |    AS cum_words
          |FROM ord o LEFT JOIN gains g USING (rank)
-         |ORDER BY o.rank""".stripMargin,
+         |ORDER BY o.rank""".stripMargin),
     // q283: bit-exact CMS rebuild — polynomial item codes, the shared
     // (a,b) hash rows, integer mod buckets, min-over-rows estimate
-    "q283_countmin" -> {
+    Query("q283_countmin", tokenCountMin, {
       val P = graft.expr.DedupKernel.P
       val hjRows = (0 until 4).map { j =>
         val (a, b) = graft.expr.DedupKernel.perm(j)
@@ -8598,10 +8404,10 @@ object PipelineQueries {
          |SELECT token, exact_cnt, cms_est,
          |  CAST(cms_est - exact_cnt AS BIGINT) AS overshoot
          |FROM es ORDER BY exact_cnt DESC, token""".stripMargin
-    },
+    }),
     // q287: the q230 gate replay with lang-id ABSTAINING on 'und',
     // per-item nano disagreement terms, cleared D_e integers
-    "q287_krippendorff" ->
+    Query("q287_krippendorff", gateKrippendorff,
       s"""WITH $funnelGateCtes,
          |votes AS (
          |  SELECT doc_id, CAST(g_keep AS VARCHAR) AS v FROM sig
@@ -8647,10 +8453,10 @@ object PipelineQueries {
          |      ((CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(sqc AS DOUBLE)) /
          |       (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))), 6) + 0.0
          |    ELSE CAST(1.0 AS DOUBLE) END AS alpha
-         |FROM nt, dob, de""".stripMargin,
+         |FROM nt, dob, de""".stripMargin),
     // q275: classifier replay, calibration binning, nano sqrt(p*q)
     // terms summed as integers, the clamp and H = sqrt(1-BC)
-    "q275_hellinger" ->
+    Query("q275_hellinger", sourceHellinger,
       s"""WITH $classifierPredCtes,
          |j AS (SELECT d.source AS g, p.conf
          |  FROM pred p JOIN documents d USING (doc_id)),
@@ -8676,10 +8482,10 @@ object PipelineQueries {
          |  ROUND(sqrt(GREATEST(CAST(1.0 AS DOUBLE) -
          |    LEAST(CAST(bc9 AS DOUBLE) / 1e9, CAST(1.0 AS DOUBLE)),
          |    CAST(0.0 AS DOUBLE))), 6) AS hellinger
-         |FROM ag ORDER BY "group"""".stripMargin,
+         |FROM ag ORDER BY "group"""".stripMargin),
     // q273: the q203 grid with (na+nb)-weighted squared cross-mult
     // terms, one final division, the asymptotic 5% criterion
-    "q273_cvm" ->
+    Query("q273_cvm", cvmDrift,
       s"""WITH $classifierPredCtes,
          |ga AS (
          |  SELECT CAST(round(conf * 1e6) AS BIGINT) AS sm,
@@ -8719,10 +8525,10 @@ object PipelineQueries {
          |     (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) *
          |     (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE))) > 0.46136
          |    THEN 1 ELSE 0 END AS BIGINT) AS reject_05
-         |FROM ag""".stripMargin,
+         |FROM ag""".stripMargin),
     // q274: the q271 per-label grids self-joined on dim — every pair
     // dot an exact HUGEINT, diagonal via the isotropy identity
-    "q274_label_separation" ->
+    Query("q274_label_separation", labelSeparation,
       """WITH nrm AS (
         |  SELECT label, embedding,
         |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
@@ -8761,10 +8567,10 @@ object PipelineQueries {
         |FROM pr
         |JOIN tg ta ON pr.src_a = ta.label
         |JOIN tg tb ON pr.src_b = tb.label
-        |ORDER BY src_a, src_b""".stripMargin,
+        |ORDER BY src_a, src_b""".stripMargin),
     // q271: per-label norms, micro unit grids, per-(label, dim) sums,
     // the quadratic-form identity per label, single-vector NULL
-    "q271_label_isotropy" ->
+    Query("q271_label_isotropy", labelIsotropy,
       """WITH nrm AS (
         |  SELECT label, embedding,
         |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
@@ -8795,10 +8601,10 @@ object PipelineQueries {
         |    ROUND(CAST(ss - qq AS DOUBLE) /
         |      (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) / 1e12, 6) + 0.0
         |    ELSE NULL END AS mean_pairwise_cos
-        |FROM tt ORDER BY "group"""".stripMargin,
+        |FROM tt ORDER BY "group"""".stripMargin),
     // q272: gopher labels x source, exact counts, the fixed-order
     // Wilson centre and half-width at the baked z literal
-    "q272_wilson" ->
+    Query("q272_wilson", sourceKeepWilson,
       s"""WITH $gopherLabCtes,
          |f AS (SELECT d.source AS g, l.keep AS y
          |  FROM lab l JOIN documents d USING (doc_id)),
@@ -8821,10 +8627,10 @@ object PipelineQueries {
          |SELECT g AS "group", n, r, ROUND(p, 6) AS rate,
          |  ROUND(center - half, 6) + 0.0 AS lo95,
          |  ROUND(center + half, 6) AS hi95
-         |FROM w2 ORDER BY "group"""".stripMargin,
+         |FROM w2 ORDER BY "group"""".stripMargin),
     // q270: clean tokens, [.!?]+ sentence splits, vowel-group syllable
     // clamp, exact integer counts, fixed-order Flesch
-    "q270_readability" ->
+    Query("q270_readability", sourceReadability,
       s"""WITH t AS (
          |  SELECT source,
          |    list_filter(string_split($norm, ' '), x -> length(x) > 0) AS ws,
@@ -8857,10 +8663,10 @@ object PipelineQueries {
          |    CAST(84.6 AS DOUBLE) *
          |      (CAST(n_syllables AS DOUBLE) / CAST(n_words AS DOUBLE)), 6)
          |    AS flesch
-         |FROM ag""".stripMargin,
+         |FROM ag""".stripMargin),
     // q267: gopher labels + fixed-width buckets, exact A/B integers,
     // fixed-order t/var/z ratios
-    "q267_ca_trend" ->
+    Query("q267_ca_trend", gopherLengthTrend,
       s"""WITH $gopherLabCtes,
          |f AS (
          |  SELECT LEAST(d.n_chars // 500, 9) AS w, l.keep AS y
@@ -8890,10 +8696,10 @@ object PipelineQueries {
          |      sqrt(CAST(b AS DOUBLE) / (CAST(n AS DOUBLE) *
          |        CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6) + 0.0
          |    ELSE NULL END AS z
-         |FROM ab""".stripMargin,
+         |FROM ab""".stripMargin),
     // q268: classifier + gopher replays, micro grids for all three
     // variables, nine HUGEINT moments, the first-order partial
-    "q268_partial_corr" ->
+    Query("q268_partial_corr", scoreKeepPartial,
       s"""WITH $classifierPredCtes,
          |$gopherLabCtes,
          |fr AS (
@@ -8937,10 +8743,10 @@ object PipelineQueries {
          |    THEN ROUND((rxy - rxz * ryz) /
          |      sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz)), 6) + 0.0
          |    ELSE NULL END AS r_partial
-         |FROM rr""".stripMargin,
+         |FROM rr""".stripMargin),
     // q266: BRUTE-FORCE all-pairs cosine on the same quantized grid —
     // a match proves the AllPairs prefix filter complete
-    "q266_cosine_tf" ->
+    Query("q266_cosine_tf", cosineNearDup,
       s"""WITH ws AS (
          |  SELECT doc_id, list_filter(string_split($norm, ' '),
          |    x -> length(x) > 0) AS t
@@ -8964,10 +8770,10 @@ object PipelineQueries {
          |  FROM u a JOIN u b ON a.w = b.w AND a.doc_id < b.doc_id
          |  GROUP BY 1, 2)
          |SELECT a_id, b_id, ROUND(CAST(sim AS DOUBLE) / 1e12, 6) AS cos
-         |FROM p WHERE sim >= 800000000000""".stripMargin,
+         |FROM p WHERE sim >= 800000000000""".stripMargin),
     // q264: the q203 replay + lambda and the 100-term pico-quantized
     // Kolmogorov series (order-free integer sum)
-    "q264_ks_p" ->
+    Query("q264_ks_p", ksDriftTest,
       s"""WITH $classifierPredCtes,
          |ga AS (
          |  SELECT CAST(round(conf * 1e6) AS BIGINT) AS sm,
@@ -9016,10 +8822,10 @@ object PipelineQueries {
          |  CASE WHEN dmn = 0 THEN CAST(1.0 AS DOUBLE)
          |    ELSE GREATEST(LEAST(ROUND(CAST(ps AS DOUBLE) * 2.0 / 1e12, 6),
          |      CAST(1.0 AS DOUBLE)), CAST(0.0 AS DOUBLE)) END AS p_value
-         |FROM ser""".stripMargin,
+         |FROM ser""".stripMargin),
     // q265: the q185 grid with doubled placements both ways, exact
     // HUGEINT a2 and squared-deviation sums, fixed-order se/CI
-    "q265_auc_ci" ->
+    Query("q265_auc_ci", qualityAucCi,
       s"""WITH $classifierPredCtes,
          |$gopherLabCtes,
          |jj AS (SELECT p.conf, l.keep FROM pred p JOIN lab l USING (doc_id)),
@@ -9065,10 +8871,10 @@ object PipelineQueries {
          |  ROUND(se, 6) AS se,
          |  ROUND(auc - 1.959964 * se, 6) + 0.0 AS lo95,
          |  ROUND(auc + 1.959964 * se, 6) AS hi95
-         |FROM fin""".stripMargin,
+         |FROM fin""".stripMargin),
     // q263: group counts, the nano weight grid, the exact clip, both
     // HUGEINT ESS moments, fixed-order readouts
-    "q263_importance_weights" ->
+    Query("q263_importance_weights", sourceImportanceWeights,
       """WITH c AS (
         |  SELECT source AS grp, CAST(COUNT(*) AS BIGINT) AS n_rows
         |  FROM documents GROUP BY 1),
@@ -9093,10 +8899,10 @@ object PipelineQueries {
         |  ROUND(CAST(wq AS DOUBLE) / 1e9, 6) AS w,
         |  e2.ess,
         |  ROUND(e2.ess / CAST(nn AS DOUBLE), 6) AS ess_frac
-        |FROM w2, e2""".stripMargin,
+        |FROM w2, e2""".stripMargin),
     // q260: three gram streams (never crossing document boundaries),
     // per-order totals/distincts, NULL ratios on empty orders
-    "q260_ngram_diversity" ->
+    Query("q260_ngram_diversity", sourceNgramDiversity,
       s"""WITH t AS (
          |  SELECT source, list_filter(string_split($norm, ' '),
          |    x -> length(x) > 0) AS w
@@ -9134,8 +8940,8 @@ object PipelineQueries {
          |  CASE WHEN COALESCE(a3.t3, 0) > 0 THEN ROUND(CAST(a3.d3c AS DOUBLE) /
          |    CAST(a3.t3 AS DOUBLE), 6) ELSE NULL END AS d3
          |FROM base b LEFT JOIN a1 USING (source) LEFT JOIN a2 USING (source)
-         |LEFT JOIN a3 USING (source)""".stripMargin,
-    "q235_burstiness" ->
+         |LEFT JOIN a3 USING (source)""".stripMargin),
+    Query("q235_burstiness", burstinessTop,
       s"""WITH tk AS (
          |  SELECT doc_id, unnest(string_split($norm, ' ')) AS token
          |  FROM documents),
@@ -9155,17 +8961,17 @@ object PipelineQueries {
          |      CAST(CAST(nd.n AS HUGEINT) * tf AS DOUBLE)) AS BIGINT) AS fn
          |  FROM pt, nd WHERE df >= 5)
          |SELECT token, df, tf, CAST(fn AS DOUBLE) / 1000000000.0 AS fano
-         |FROM f ORDER BY fn DESC, token LIMIT 25""".stripMargin,
+         |FROM f ORDER BY fn DESC, token LIMIT 25""".stripMargin),
     // q234: identical SQL to q181 — the oracle replays the LIVE
     // training + encode, so the persisted-artifact serving path must
     // hash-match it (persisted ≡ live ≡ DuckDB)
-    "q234_bpe_persisted" ->
+    Query("q234_bpe_persisted", bpePersistedEncode,
       s"""WITH $bpeBatchedCtes,
          |$bpeEncodeCtes
          |SELECT doc_id, CAST(len(tids) AS BIGINT) AS n_tokens,
          |  array_to_string(list_transform(tids, x -> CAST(x AS VARCHAR)), '_') AS tokens_str
-         |FROM enc ORDER BY doc_id""".stripMargin,
-    "q231_jackknife" ->
+         |FROM enc ORDER BY doc_id""".stripMargin),
+    Query("q231_jackknife", jackknifeKeepRate,
       s"""WITH $gopherCtes,
          |u AS (
          |  SELECT d.source, CAST(COUNT(*) AS BIGINT) AS ns,
@@ -9188,8 +8994,8 @@ object PipelineQueries {
          |  ROUND(CAST(tot.t AS DOUBLE) / CAST(tot.n AS DOUBLE), 6) AS rate,
          |  ROUND(sqrt(CAST((tot.s * a.sqq - a.sq * a.sq) * (tot.s - 1) AS DOUBLE))
          |    / CAST(tot.s AS DOUBLE) / 1000000000.0, 6) AS se_jack
-         |FROM tot, a""".stripMargin,
-    "q232_capture_recapture" ->
+         |FROM tot, a""".stripMargin),
+    Query("q232_capture_recapture", dedupCaptureRecapture,
       s"""WITH $minhashCtes,
          |p1 AS MATERIALIZED (
          |  SELECT DISTINCT LEAST(a_id, b_id) AS a, GREATEST(a_id, b_id) AS b
@@ -9219,7 +9025,7 @@ object PipelineQueries {
          |    ELSE ROUND(CAST(n_tier1 AS DOUBLE) / est, 6) END AS recall_tier1,
          |  CASE WHEN est <= 0 THEN CAST(0.0 AS DOUBLE)
          |    ELSE ROUND(CAST(n_tier2 AS DOUBLE) / est, 6) END AS recall_tier2
-         |FROM m2""".stripMargin)
+         |FROM m2""".stripMargin))
 
   /** Shared by q167 (live) and q168 (persisted-model serving): the
     * oracle replays the LIVE computation, so a q168 hash match proves

@@ -1444,77 +1444,6 @@ object RelationalQueries {
       .orderBy($"channel")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary"  -> (pricingSummary _),
-    "q02_revenue_by_nation" -> (revenueByNation _),
-    "q03_topk_orders"      -> (topOrders _),
-    "q04_window_rank"      -> (topOrdersPerCustomer _),
-    "q05_market_share"     -> (marketSegmentStats _),
-    "q06_set_ops"          -> (setOpsCustomers _),
-    "q07_cust_no_orders"   -> (customersWithoutOrders _),
-    "q08_events_hourly"    -> (eventsHourly _),
-    "q09_json_props"       -> (eventsJsonProps _),
-    "q10_part_stats"       -> (partStats _),
-    "q11_orders_monthly"   -> (ordersMonthly _),
-    "q12_rollup"           -> (pricingRollup _),
-    "q13_distinct_counts"  -> (distinctCounts _),
-    "q14_running_totals"   -> (runningTotals _),
-    "q15_event_gaps"       -> (eventGaps _),
-    "q16_above_avg"        -> (aboveAvgOrders _),
-    "q17_sessionization"   -> (sessionization _),
-    "q18_asof_join"        -> (eventsAsOfOrders _),
-    "q19_quantiles"        -> (valueQuantiles _),
-    "q47_pivot"            -> (eventTypePivot _),
-    "q48_stats_agg"        -> (statsAggregates _),
-    "q49_approx_distinct"  -> (approxDistinct _),
-    "q51_topk_heap"        -> (topkHeapPerCustomer _),
-    "q53_range_join"       -> (purchaseClickWindows _),
-    "q54_cube"             -> (ordersCube _),
-    "q55_sliding_window"   -> (slidingWindowStats _),
-    "q56_salted_agg"       -> (saltedAgg _),
-    "q63_salted_join"      -> (saltedJoinStats _),
-    "q58_range_frame"      -> (rangeFrameTotals _),
-    "q59_map_props"        -> (mapProps _),
-    "q60_exists_subquery"  -> (existsSubquery _),
-    "q69_bloom_semijoin"   -> (bloomSemiJoinStats _),
-    "q75_histogram_quantiles" -> (histogramQuantiles _),
-    "q76_window_suite"     -> (windowSuite _),
-    "q90_revenue_share"    -> (revenueShare _),
-    "q96_gap_fill"         -> (gapFillHourly _),
-    "q105_small_qty"       -> (smallQtyRevenue _),
-    "q106_hourly_anomaly"  -> (hourlyAnomalies _),
-    "q109_mad_outliers"    -> (madOutliers _),
-    "q110_type_correlation" -> (typeCorrelation _),
-    "q113_heavy_hitters"  -> (heavyHitterUsers _),
-    "q98_winsorize"        -> (winsorizedStats _),
-    "q101_attribution"     -> (lastTouchAttribution _),
-    "q142_decayed_counts"  -> (decayedCounts _),
-    "q147_variant_props"   -> (variantProps _),
-    "q154_ab_ttest"        -> (abTest _),
-    "q214_cusum"           -> (cusumHourly _),
-    "q216_kendall_tau"     -> (kendallHourly _),
-    "q217_theil_sen"       -> (theilSenHourly _),
-    "q218_acf"             -> (acfHourly _),
-    "q228_seasonal"        -> (seasonalHourly _),
-    "q233_change_point"    -> (changePointHourly _),
-    "q236_cuped"           -> (cupedExperiment _),
-    "q244_ccf"             -> (errorSignupCcf _),
-    "q246_benford"         -> (eventValueBenford _),
-    "q248_balance"         -> (experimentBalance _),
-    "q250_power"           -> (experimentPower _),
-    "q251_survival"        -> (userSurvival _),
-    "q255_mann_kendall"    -> (hourlyMannKendall _),
-    "q261_segmented_trend" -> (hourlySegmentedTrend _),
-    "q262_skew_report"     -> (eventKeySkew _),
-    "q269_sprt"            -> (hourlyErrorSprt _),
-    "q277_jarque_bera"     -> (eventValueJarqueBera _),
-    "q282_edit_join"       -> (partNameEditJoin _),
-    "q284_effect_size"     -> (experimentEffectSizes _),
-    "q288_logrank"         -> (cohortLogRank _),
-    "q289_page_hinkley"    -> (hourlyPageHinkley _),
-    "q293_runs_test"       -> (hourlyRunsTest _),
-    "q294_qte"             -> (experimentQte _))
-
   /** Bloom-pruned semi-join (ops.BloomJoin): lineitems of URGENT orders,
     * with the probe side dropped map-side by a bloom of the build keys
     * before the exact LeftSemi join — the runtime-filter regime where the
@@ -1565,9 +1494,9 @@ object RelationalQueries {
        |ORDER BY l_returnflag""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
-    "q49_approx_distinct" -> kmvOracle,
-    "q109_mad_outliers" ->
+  val all: Seq[Query] = Seq(
+    Query("q49_approx_distinct", approxDistinct, kmvOracle),
+    Query("q109_mad_outliers", madOutliers,
       """WITH li AS (
         |  SELECT l_returnflag, CAST(l_extendedprice AS DECIMAL(18,2)) AS price
         |  FROM lineitem),
@@ -1594,14 +1523,14 @@ object RelationalQueries {
         |  CAST(SUM(CASE WHEN dev.absdev > mad.mad * 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM dev JOIN mad USING (l_returnflag)
         |GROUP BY dev.l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
+        |ORDER BY l_returnflag""".stripMargin),
     // q113's oracle is sketch-free on purpose: CMS never under-counts,
     // so the exact verify pass makes the result equal the plain HAVING
-    "q113_heavy_hitters" ->
+    Query("q113_heavy_hitters", heavyHitterUsers,
       """SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n
         |FROM events GROUP BY user_id HAVING COUNT(*) >= 80
-        |ORDER BY n DESC, user_id""".stripMargin,
-    "q110_type_correlation" ->
+        |ORDER BY n DESC, user_id""".stripMargin),
+    Query("q110_type_correlation", typeCorrelation,
       """WITH hourly AS (
         |  SELECT event_type, CAST(FLOOR(epoch(ts)/3600)*3600 AS BIGINT) AS hr,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS v
@@ -1619,8 +1548,8 @@ object RelationalQueries {
         |    sqrt((n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
         |         (n * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) + 0.0 AS corr_v
         |FROM p
-        |ORDER BY type_a, type_b""".stripMargin,
-    "q106_hourly_anomaly" ->
+        |ORDER BY type_a, type_b""".stripMargin),
+    Query("q106_hourly_anomaly", hourlyAnomalies,
       """WITH hourly AS (
         |  SELECT event_type,
         |    CAST(FLOOR(epoch(ts)/3600)*3600 AS BIGINT) AS hour_epoch,
@@ -1638,8 +1567,8 @@ object RelationalQueries {
         |  FROM hourly h JOIN stats USING (event_type))
         |SELECT event_type, hour_epoch, hr_value, z FROM z
         |WHERE ABS(z) > 2.0
-        |ORDER BY event_type, hour_epoch""".stripMargin,
-    "q105_small_qty" ->
+        |ORDER BY event_type, hour_epoch""".stripMargin),
+    Query("q105_small_qty", smallQtyRevenue,
       """WITH pp AS (
         |  SELECT l_partkey AS pk,
         |    SUM(CAST(l_quantity AS DECIMAL(18,4))) AS sum_qty,
@@ -1652,8 +1581,8 @@ object RelationalQueries {
         |JOIN part ON l_partkey = p_partkey
         |WHERE CAST(l_quantity AS DECIMAL(18,4)) * 5 * n_qty < sum_qty
         |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
-    "q96_gap_fill" ->
+        |ORDER BY p_brand""".stripMargin),
+    Query("q96_gap_fill", gapFillHourly,
       """WITH hourly AS (
         |  SELECT user_id, date_trunc('hour', ts) AS hr,
         |    COUNT(*) AS n_events,
@@ -1670,8 +1599,8 @@ object RelationalQueries {
         |    PARTITION BY g.user_id ORDER BY g.hr
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
         |FROM grid g LEFT JOIN hourly h ON g.user_id = h.user_id AND g.hr = h.hr
-        |ORDER BY g.user_id, hour_epoch""".stripMargin,
-    "q98_winsorize" ->
+        |ORDER BY g.user_id, hour_epoch""".stripMargin),
+    Query("q98_winsorize", winsorizedStats,
       """WITH li AS (
         |  SELECT l_returnflag, CAST(l_extendedprice AS DECIMAL(18,2)) AS price
         |  FROM lineitem),
@@ -1696,8 +1625,8 @@ object RelationalQueries {
         |               WHEN price > p95 THEN p95 ELSE price END) AS DOUBLE) / COUNT(*) AS win_mean
         |FROM li JOIN th USING (l_returnflag)
         |GROUP BY li.l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q101_attribution" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    Query("q101_attribution", lastTouchAttribution,
       """WITH attr AS (
         |  SELECT event_type, value,
         |    COALESCE(last_value(
@@ -1712,8 +1641,8 @@ object RelationalQueries {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM attr WHERE event_type = 'purchase'
         |GROUP BY channel
-        |ORDER BY channel""".stripMargin,
-    "q90_revenue_share" ->
+        |ORDER BY channel""".stripMargin),
+    Query("q90_revenue_share", revenueShare,
       """WITH r AS (
         |  SELECT p_brand,
         |    SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS rev_d
@@ -1724,8 +1653,8 @@ object RelationalQueries {
         |  ROUND(CAST(rev_d AS DOUBLE) / CAST(total_d AS DOUBLE), 6) AS share
         |FROM r, t
         |WHERE ROUND(CAST(rev_d AS DOUBLE) / CAST(total_d AS DOUBLE), 6) > 0.04
-        |ORDER BY p_brand""".stripMargin,
-    "q76_window_suite" ->
+        |ORDER BY p_brand""".stripMargin),
+    Query("q76_window_suite", windowSuite,
       """SELECT o_orderkey, o_orderstatus, o_totalprice, ntile4, prk, cd,
         |  next_price, first_price
         |FROM (
@@ -1739,8 +1668,8 @@ object RelationalQueries {
         |  WINDOW w AS (PARTITION BY o_orderstatus
         |               ORDER BY o_totalprice, o_orderkey)) t
         |WHERE o_orderkey < 2000
-        |ORDER BY o_orderkey""".stripMargin,
-    "q75_histogram_quantiles" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q75_histogram_quantiles", histogramQuantiles,
       """WITH ext AS (
         |  SELECT event_type, MIN(CAST(value AS DOUBLE)) AS lo,
         |    MAX(CAST(value AS DOUBLE)) AS hi, COUNT(value) AS n
@@ -1771,8 +1700,8 @@ object RelationalQueries {
         |                  (bin + CAST(needed - cb AS DOUBLE) / c) END, 6) AS est,
         |  n
         |FROM sel
-        |ORDER BY event_type, p""".stripMargin,
-    "q69_bloom_semijoin" ->
+        |ORDER BY event_type, p""".stripMargin),
+    Query("q69_bloom_semijoin", bloomSemiJoinStats,
       """SELECT l_returnflag,
         |  COUNT(*) AS n_items,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
@@ -1781,23 +1710,23 @@ object RelationalQueries {
         |              WHERE o.o_orderkey = l.l_orderkey
         |                AND o.o_orderpriority = '1-URGENT')
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q60_exists_subquery" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    Query("q60_exists_subquery", existsSubquery,
       """SELECT s_suppkey, s_name
         |FROM supplier s
         |WHERE EXISTS (
         |  SELECT 1 FROM lineitem l
         |  WHERE l.l_suppkey = s.s_suppkey AND l.l_quantity >= 49.0)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q58_range_frame" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("q58_range_frame", rangeFrameTotals,
       """SELECT event_id, user_id,
         |  COUNT(*) OVER w AS n_10min,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS sum_10min
         |FROM (SELECT event_id, user_id, epoch_us(ts) AS t, value FROM events) e
         |WINDOW w AS (PARTITION BY user_id ORDER BY t
         |  RANGE BETWEEN 600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "q59_map_props" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q59_map_props", mapProps,
       """SELECT event_type,
         |  COUNT(k) AS n_with_k,
         |  CAST(SUM(k) AS BIGINT) AS sum_k,
@@ -1806,8 +1735,8 @@ object RelationalQueries {
         |        TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
         |      FROM events) t
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q55_sliding_window" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q55_sliding_window", slidingWindowStats,
       """WITH e AS (SELECT epoch(ts) AS t, event_type, value FROM events),
         |w AS (
         |  SELECT event_type, value, t,
@@ -1820,8 +1749,8 @@ object RelationalQueries {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_value
         |FROM w
         |GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin,
-    "q63_salted_join" ->
+        |ORDER BY 1, 2""".stripMargin),
+    Query("q63_salted_join", saltedJoinStats,
       """WITH l AS (
         |  SELECT CASE WHEN l_linenumber > 1 THEN 0 ELSE l_suppkey % 25 END AS skew_key,
         |    l_quantity
@@ -1831,15 +1760,15 @@ object RelationalQueries {
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
         |FROM l JOIN nation n ON l.skew_key = n.n_nationkey
         |GROUP BY 1
-        |ORDER BY 1""".stripMargin,
-    "q56_salted_agg" ->
+        |ORDER BY 1""".stripMargin),
+    Query("q56_salted_agg", saltedAgg,
       """SELECT l_returnflag,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         |  COUNT(*) AS n
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q53_range_join" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    Query("q53_range_join", purchaseClickWindows,
       """WITH p AS (
         |  SELECT user_id, event_id AS click_id, epoch_us(ts) AS t
         |  FROM events WHERE event_type = 'click'),
@@ -1851,8 +1780,8 @@ object RelationalQueries {
         |  MIN(p.click_id) AS min_click_id, MAX(p.click_id) AS max_click_id
         |FROM iv JOIN p ON iv.user_id = p.user_id AND p.t >= iv.lo AND p.t <= iv.hi
         |GROUP BY 1, 2
-        |ORDER BY purchase_id""".stripMargin,
-    "q54_cube" ->
+        |ORDER BY purchase_id""".stripMargin),
+    Query("q54_cube", ordersCube,
       """WITH t AS (
         |  SELECT o_orderstatus, CAST(year(o_orderdate) AS BIGINT) AS o_year, o_totalprice
         |  FROM orders)
@@ -1861,8 +1790,8 @@ object RelationalQueries {
         |  CAST(GROUPING(o_orderstatus, o_year) AS BIGINT) AS gid
         |FROM t
         |GROUP BY CUBE (o_orderstatus, o_year)
-        |ORDER BY gid, o_orderstatus ASC NULLS FIRST, o_year ASC NULLS FIRST""".stripMargin,
-    "q01_pricing_summary" ->
+        |ORDER BY gid, o_orderstatus ASC NULLS FIRST, o_year ASC NULLS FIRST""".stripMargin),
+    Query("q01_pricing_summary", pricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -1871,8 +1800,8 @@ object RelationalQueries {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2000-12-01 00:00:00'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_revenue_by_nation" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q02_revenue_by_nation", revenueByNation,
       """SELECT n_name,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -1881,82 +1810,82 @@ object RelationalQueries {
         |JOIN nation   ON c_nationkey = n_nationkey
         |JOIN region   ON n_regionkey = r_regionkey AND r_name = 'ASIA'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "q03_topk_orders" ->
+        |ORDER BY revenue DESC, n_name""".stripMargin),
+    Query("q03_topk_orders", topOrders,
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-    "q04_window_rank" ->
+        |LIMIT 10""".stripMargin),
+    Query("q04_window_rank", topOrdersPerCustomer,
       """SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn
         |  FROM orders) t
         |WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin,
-    "q05_market_share" ->
+        |ORDER BY o_custkey, rn""".stripMargin),
+    Query("q05_market_share", marketSegmentStats,
       """SELECT c_mktsegment, COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_total,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_total
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q06_set_ops" ->
+        |ORDER BY c_mktsegment""".stripMargin),
+    Query("q06_set_ops", setOpsCustomers,
       """(SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
         | INTERSECT
         | SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
         |EXCEPT
         |SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY o_custkey""".stripMargin,
-    "q07_cust_no_orders" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Query("q07_cust_no_orders", customersWithoutOrders,
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q08_events_hourly" ->
+        |ORDER BY c_custkey""".stripMargin),
+    Query("q08_events_hourly", eventsHourly,
       """SELECT CAST(FLOOR(epoch(ts)/3600)*3600 AS BIGINT) AS hour_epoch,
         |  event_type, COUNT(*) AS n_events,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |FROM events
         |GROUP BY 1, 2
-        |ORDER BY hour_epoch, event_type""".stripMargin,
-    "q09_json_props" ->
+        |ORDER BY hour_epoch, event_type""".stripMargin),
+    Query("q09_json_props", eventsJsonProps,
       """SELECT event_type, COUNT(*) AS n,
         |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |  MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
         |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "q10_part_stats" ->
+        |ORDER BY event_type""".stripMargin),
+    Query("q10_part_stats", partStats,
       """SELECT p_brand, COUNT(*) AS n_parts,
         |  MIN(p_size) AS min_size, MAX(p_size) AS max_size,
         |  CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_retail,
         |  CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_retail
         |FROM part
         |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
-    "q11_orders_monthly" ->
+        |ORDER BY p_brand""".stripMargin),
+    Query("q11_orders_monthly", ordersMonthly,
       """SELECT CAST(epoch(date_trunc('month', o_orderdate)) AS BIGINT) AS month_epoch,
         |  COUNT(*) AS n_orders,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_total
         |FROM orders
         |GROUP BY 1
-        |ORDER BY month_epoch""".stripMargin,
-    "q12_rollup" ->
+        |ORDER BY month_epoch""".stripMargin),
+    Query("q12_rollup", pricingRollup,
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
         |FROM lineitem
         |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-    "q13_distinct_counts" ->
+        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin),
+    Query("q13_distinct_counts", distinctCounts,
       """SELECT l_returnflag,
         |  COUNT(DISTINCT l_partkey) AS nd_parts,
         |  COUNT(DISTINCT l_suppkey) AS nd_supps,
         |  COUNT(DISTINCT l_orderkey) AS nd_orders
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q14_running_totals" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    Query("q14_running_totals", runningTotals,
       """SELECT o_custkey, o_orderkey,
         |  CAST(FLOOR(epoch(o_orderdate)) AS BIGINT) AS od_epoch,
         |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
@@ -1966,16 +1895,16 @@ object RelationalQueries {
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_n
         |FROM orders
         |WHERE o_custkey < 100
-        |ORDER BY o_custkey, od_epoch, o_orderkey""".stripMargin,
-    "q15_event_gaps" ->
+        |ORDER BY o_custkey, od_epoch, o_orderkey""".stripMargin),
+    Query("q15_event_gaps", eventGaps,
       """SELECT user_id, event_id,
         |  CAST(FLOOR(epoch(ts)) AS BIGINT)
         |    - CAST(FLOOR(epoch(LAG(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT)
         |    AS gap_sec
         |FROM events
         |WHERE user_id < 5
-        |ORDER BY user_id, event_id""".stripMargin,
-    "q17_sessionization" ->
+        |ORDER BY user_id, event_id""".stripMargin),
+    Query("q17_sessionization", sessionization,
       """WITH marked AS (
         |  SELECT user_id, event_id, ts, value,
         |    CASE WHEN LAG(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -1993,8 +1922,8 @@ object RelationalQueries {
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS session_value
         |FROM sess
         |GROUP BY user_id, session_id
-        |ORDER BY user_id, session_id""".stripMargin,
-    "q48_stats_agg" ->
+        |ORDER BY user_id, session_id""".stripMargin),
+    Query("q48_stats_agg", statsAggregates,
       """SELECT l_returnflag,
         |  ROUND(corr(l_quantity, l_extendedprice), 6) + 0.0 AS corr_qty_price,
         |  ROUND(stddev_samp(l_extendedprice), 4) AS sd_price,
@@ -2002,8 +1931,8 @@ object RelationalQueries {
         |  ROUND(covar_samp(l_quantity, l_extendedprice), 2) + 0.0 AS cov_qty_price
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "q47_pivot" ->
+        |ORDER BY l_returnflag""".stripMargin),
+    Query("q47_pivot", eventTypePivot,
       """SELECT user_id % 10 AS user_bucket,
         |  COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS n_click,
         |  COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS n_error,
@@ -2012,8 +1941,8 @@ object RelationalQueries {
         |  COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS n_view
         |FROM events
         |GROUP BY 1
-        |ORDER BY user_bucket""".stripMargin,
-    "q19_quantiles" ->
+        |ORDER BY user_bucket""".stripMargin),
+    Query("q19_quantiles", valueQuantiles,
       """SELECT event_type, COUNT(*) AS n,
         |  ROUND(quantile_cont(value, 0.5), 6) AS p50,
         |  ROUND(quantile_cont(value, 0.9), 6) AS p90,
@@ -2021,8 +1950,8 @@ object RelationalQueries {
         |  MIN(value) AS min_v, MAX(value) AS max_v
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "q18_asof_join" ->
+        |ORDER BY event_type""".stripMargin),
+    Query("q18_asof_join", eventsAsOfOrders,
       """WITH o AS (
         |  SELECT o_custkey AS user_id, o_orderdate,
         |    MAX(o_orderkey) AS last_orderkey
@@ -2032,8 +1961,8 @@ object RelationalQueries {
         |SELECT e.event_id, e.user_id, o.last_orderkey,
         |  CAST(FLOOR(epoch(o.o_orderdate)) AS BIGINT) AS last_order_epoch
         |FROM e ASOF LEFT JOIN o ON e.user_id = o.user_id AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-    "q16_above_avg" ->
+        |ORDER BY e.event_id""".stripMargin),
+    Query("q16_above_avg", aboveAvgOrders,
       """WITH t AS (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey) AS DOUBLE)
@@ -2041,8 +1970,8 @@ object RelationalQueries {
         |  FROM orders WHERE o_custkey < 200)
         |SELECT o_custkey, o_orderkey, o_totalprice, avg_total FROM t
         |WHERE o_totalprice > avg_total
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q51_topk_heap" ->
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
+    Query("q51_topk_heap", topkHeapPerCustomer,
       """SELECT o_custkey, CAST(rk AS BIGINT) AS rk, o_orderkey, o_totalprice
         |FROM (
         |  SELECT o_custkey, o_orderkey, o_totalprice,
@@ -2050,9 +1979,9 @@ object RelationalQueries {
         |      ORDER BY o_totalprice DESC, o_orderkey DESC) AS rk
         |  FROM orders WHERE o_custkey < 300)
         |WHERE rk <= 3
-        |ORDER BY o_custkey, rk""".stripMargin,
+        |ORDER BY o_custkey, rk""".stripMargin),
 
-    "q142_decayed_counts" ->
+    Query("q142_decayed_counts", decayedCounts,
       """WITH e AS (
         |  SELECT event_type, CAST(FLOOR(epoch(ts)) AS BIGINT) AS ts_s FROM events),
         |mx AS (SELECT MAX(ts_s) AS tmax FROM e),
@@ -2062,18 +1991,18 @@ object RelationalQueries {
         |SELECT event_type, CAST(SUM(n_k) AS BIGINT) AS n_events,
         |  ROUND(CAST(SUM(CAST(ROUND(CAST(n_k AS DOUBLE) / POWER(2.0, k), 9)
         |    AS DECIMAL(20,9))) AS DOUBLE), 6) AS decayed_count
-        |FROM bk GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM bk GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q147_variant_props" ->
+    Query("q147_variant_props", variantProps,
       """SELECT event_type,
         |  COUNT(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_with_k,
         |  CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
         |  MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
         |  MAX(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
         |  COUNT(CAST(json_extract_string(props, '$.missing') AS BIGINT)) AS n_missing_field
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "q154_ab_ttest" ->
+    Query("q154_ab_ttest", abTest,
       """WITH e AS (
         |  SELECT CASE WHEN CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 50
         |    THEN 'A' ELSE 'B' END AS variant, value
@@ -2090,10 +2019,10 @@ object RelationalQueries {
         |  FROM st)
         |SELECT a.n AS n_a, a.mean AS mean_a, b.n AS n_b, b.mean AS mean_b,
         |  ROUND((a.mean - b.mean) / SQRT(a.variance / a.n + b.variance / b.n), 6) + 0.0 AS welch_t
-        |FROM w a, w b WHERE a.variant = 'A' AND b.variant = 'B'""".stripMargin,
+        |FROM w a, w b WHERE a.variant = 'A' AND b.variant = 'B'""".stripMargin),
     // q214: micro-quantized hourly means, integer deviations, the
     // prefix-sum/running-min drawup identity, alarm at h = 100
-    "q214_cusum" ->
+    Query("q214_cusum", cusumHourly,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600)*3600 AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2128,10 +2057,10 @@ object RelationalQueries {
         |  ROUND(CAST(slo AS DOUBLE) / 1e6, 6) AS cusum_lo,
         |  CASE WHEN shi > 100000000 OR slo > 100000000
         |    THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS alarm
-        |FROM s ORDER BY bucket""".stripMargin,
+        |FROM s ORDER BY bucket""".stripMargin),
     // q216: micro-quantized hourly (volume, mean) grid, quadratic pair
     // classification in pure integer sign arithmetic, tau-b tie correction
-    "q216_kendall_tau" ->
+    Query("q216_kendall_tau", kendallHourly,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600)*3600 AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -2164,10 +2093,10 @@ object RelationalQueries {
         |      sqrt(CAST(n1.n * (n1.n - 1) // 2 - ties_x AS DOUBLE) *
         |           CAST(n1.n * (n1.n - 1) // 2 - ties_y AS DOUBLE)), 6) + 0.0
         |    ELSE CAST(0.0 AS DOUBLE) END AS tau_b
-        |FROM s, n1""".stripMargin,
+        |FROM s, n1""".stripMargin),
     // q217: pairwise IEEE slopes over the micro-mean grid, two median
     // selections (slope, then residual) by rank, /1e6 unit scaling
-    "q217_theil_sen" ->
+    Query("q217_theil_sen", theilSenHourly,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2201,10 +2130,10 @@ object RelationalQueries {
         |SELECT n1.h AS n_points, n1.h * (n1.h - 1) // 2 AS n_pairs,
         |  ROUND(med.slope / 1e6, 6) + 0.0 AS slope,
         |  ROUND(med2.icpt / 1e6, 6) + 0.0 AS intercept
-        |FROM n1, med, med2""".stripMargin,
+        |FROM n1, med, med2""".stripMargin),
     // q218: micro-mean grid, lag equi-joins (gaps drop pairs), expanded
     // moments S1 - xbar*S2 + p*xbar^2 over full-series denominator
-    "q218_acf" ->
+    Query("q218_acf", acfHourly,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2243,8 +2172,8 @@ object RelationalQueries {
         |        CAST(tot.sx AS DOUBLE) / CAST(tot.n AS DOUBLE)), 6) + 0.0
         |  END AS acf
         |FROM lags l LEFT JOIN pl USING (lag), tot
-        |ORDER BY lag""".stripMargin,
-    "q228_seasonal" ->
+        |ORDER BY lag""".stripMargin),
+    Query("q228_seasonal", seasonalHourly,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2272,8 +2201,8 @@ object RelationalQueries {
         |SELECT hod AS hour_of_day, CAST(COUNT(*) AS BIGINT) AS n_hours,
         |  ROUND(CAST(SUM(x) AS DOUBLE) /
         |    (CAST(COUNT(*) AS DOUBLE) * 48 * 1000000.0), 6) AS seasonal
-        |FROM i GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q233_change_point" ->
+        |FROM i GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q233_change_point", changePointHourly,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2308,8 +2237,8 @@ object RelationalQueries {
         |  ROUND(CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE) / 1000000.0
         |    - CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) / 1000000.0, 6) + 0.0 AS shift
         |FROM cand
-        |ORDER BY f DESC, bucket LIMIT 1""".stripMargin,
-    "q236_cuped" ->
+        |ORDER BY f DESC, bucket LIMIT 1""".stripMargin),
+    Query("q236_cuped", cupedExperiment,
       """WITH e AS (
         |  SELECT user_id, CAST(epoch(ts) AS BIGINT) AS ep,
         |    CAST(round(value * 1e6) AS HUGEINT) AS vm
@@ -2364,10 +2293,10 @@ object RelationalQueries {
         |  ROUND(k, 6) + 0.0 AS theta,
         |  CASE WHEN denx <= 0 OR deny <= 0 THEN CAST(0.0 AS DOUBLE)
         |    ELSE ROUND(num * num / (denx * deny), 6) END AS var_reduction
-        |FROM m3""".stripMargin,
+        |FROM m3""".stripMargin),
     // q244: two micro-mean grids, a ±6 lag spine, per-lag HUGEINT pair
     // sums, full-series moments, one fixed-order ratio per lag
-    "q244_ccf" ->
+    Query("q244_ccf", errorSignupCcf,
       """WITH pbx AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2422,10 +2351,10 @@ object RelationalQueries {
         |        (CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) *
         |          CAST(sy AS DOUBLE) / CAST(ny AS DOUBLE))), 6) + 0.0 END AS ccf
         |FROM lags l LEFT JOIN pl ON l.lag = pl.lag, totx, toty
-        |ORDER BY l.lag""".stripMargin,
+        |ORDER BY l.lag""".stripMargin),
     // q246: micro-string first digits, 1..9 spine, closed-form Benford
     // expectations, nano-summed mean absolute deviation
-    "q246_benford" ->
+    Query("q246_benford", eventValueBenford,
       """WITH o AS (
         |  SELECT CAST(substr(CAST(CAST(round(value * 1e6) AS BIGINT) AS VARCHAR),
         |    1, 1) AS BIGINT) AS digit
@@ -2445,10 +2374,10 @@ object RelationalQueries {
         |  FROM per)
         |SELECT digit, n_obs, frac_obs, p_benford, abs_dev,
         |  ROUND(CAST(sd AS DOUBLE) / 9.0 / 1e9, 6) AS mad
-        |FROM per, md ORDER BY digit""".stripMargin,
+        |FROM per, md ORDER BY digit""".stripMargin),
     // q248: the q236 per-user pre-period frame, per-arm HUGEINT moments
     // per covariate, fixed-order sample variances and SMDs
-    "q248_balance" ->
+    Query("q248_balance", experimentBalance,
       """WITH e AS (
         |  SELECT user_id, CAST(epoch(ts) AS BIGINT) AS ep,
         |    CAST(round(value * 1e6) AS HUGEINT) AS vm
@@ -2509,10 +2438,10 @@ object RelationalQueries {
         |          CAST(na AS DOUBLE)) / (CAST(na AS DOUBLE) - 1.0) +
         |        (CAST(qnb AS DOUBLE) - CAST(snb AS DOUBLE) * CAST(snb AS DOUBLE) /
         |          CAST(nb AS DOUBLE)) / (CAST(nb AS DOUBLE) - 1.0)) / 2.0), 6) END
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin),
     // q250: the q236 post-period per-user frame, per-arm HUGEINT
     // moments, pooled sample variance, the literal-z sizing formula
-    "q250_power" ->
+    Query("q250_power", experimentPower,
       """WITH e AS (
         |  SELECT user_id, CAST(epoch(ts) AS BIGINT) AS ep,
         |    CAST(round(value * 1e6) AS HUGEINT) AS vm
@@ -2560,10 +2489,10 @@ object RelationalQueries {
         |    ELSE CAST(CEIL(2.0 * GREATEST(pooled, 0.0) *
         |      ((1.959964 + 0.841621) * (1.959964 + 0.841621)) /
         |      (delta * delta)) AS BIGINT) END AS n_required
-        |FROM m3""".stripMargin,
+        |FROM m3""".stripMargin),
     // q251: day-bucket lifespans with horizon censoring, reverse
     // cumulative at-risk counts, nano-ln running survival product
-    "q251_survival" ->
+    Query("q251_survival", userSurvival,
       """WITH s AS (
         |  SELECT user_id, CAST(FLOOR(epoch(ts)) AS BIGINT) AS es FROM events),
         |a AS (
@@ -2599,10 +2528,10 @@ object RelationalQueries {
         |  ROUND(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE), 6) AS hazard,
         |  CASE WHEN hit0 = 1 THEN CAST(0.0 AS DOUBLE)
         |    ELSE ROUND(exp(CAST(cl AS DOUBLE) / 1e9), 6) END AS survival
-        |FROM cumv ORDER BY t_period""".stripMargin,
+        |FROM cumv ORDER BY t_period""".stripMargin),
     // q282: BRUTE-FORCE all-pairs edit join — a match proves the
     // deletion-neighborhood blocking complete
-    "q282_edit_join" ->
+    Query("q282_edit_join", partNameEditJoin,
       """WITH d AS (
         |  SELECT DISTINCT p_name AS s FROM part
         |  WHERE p_name IS NOT NULL AND length(p_name) >= 2)
@@ -2610,10 +2539,10 @@ object RelationalQueries {
         |  CAST(levenshtein(a.s, b.s) AS BIGINT) AS dist
         |FROM d a JOIN d b ON a.s < b.s
         |WHERE levenshtein(a.s, b.s) <= 1
-        |ORDER BY a, b""".stripMargin,
+        |ORDER BY a, b""".stripMargin),
     // q294: per-arm micro grids, cumulative windows, exact integer
     // ceil-rank thresholds, quantum-aligned decile differences
-    "q294_qte" ->
+    Query("q294_qte", experimentQte,
       """WITH e AS (
         |  SELECT CASE WHEN CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 50
         |    THEN 'A' ELSE 'B' END AS variant,
@@ -2645,10 +2574,10 @@ object RelationalQueries {
         |  CAST(vb AS DOUBLE) / 1e6 AS val_b,
         |  CAST(va - vb AS DOUBLE) / 1e6 AS qte
         |FROM qa JOIN qb USING (k)
-        |ORDER BY q""".stripMargin,
+        |ORDER BY q""".stripMargin),
     // q293: micro-mean grid, rank median, equal-drops, lag run count,
     // fixed-order mu/sigma z (+0.0: signed)
-    "q293_runs_test" ->
+    Query("q293_runs_test", hourlyRunsTest,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2695,10 +2624,10 @@ object RelationalQueries {
         |  CASE WHEN n_above > 0 AND n_below > 0 AND v > 0.0
         |    THEN ROUND((CAST(n_runs AS DOUBLE) - mu) / sqrt(v), 6) + 0.0
         |    ELSE CAST(0.0 AS DOUBLE) END AS z
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin),
     // q289: hourly micro-mean grid, running-mean terms milli-quantized
     // BEFORE the prefix sum, drawup from the running minimum
-    "q289_page_hinkley" ->
+    Query("q289_page_hinkley", hourlyPageHinkley,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2734,10 +2663,10 @@ object RelationalQueries {
         |  ROUND(CAST(m - mn AS DOUBLE) / 1e9, 6) AS ph,
         |  CAST(CASE WHEN CAST(m - mn AS DOUBLE) / 1e9 > 5.0 THEN 1 ELSE 0 END
         |    AS BIGINT) AS alarm
-        |FROM c2 ORDER BY bucket""".stripMargin,
+        |FROM c2 ORDER BY bucket""".stripMargin),
     // q277: milli grid, rounded mean, three exact central sums, the
     // fixed-order g1/g2/JB readouts (+0.0 on the signed ones)
-    "q277_jarque_bera" ->
+    Query("q277_jarque_bera", eventValueJarqueBera,
       """WITH v AS (
         |  SELECT event_type AS g, CAST(round(value * 1e3) AS BIGINT) AS v
         |  FROM events),
@@ -2772,10 +2701,10 @@ object RelationalQueries {
         |  CASE WHEN m2 > 0 THEN
         |      ROUND(CAST(n AS DOUBLE) / 6.0 * (g1 * g1 + g2 * g2 / 4.0), 6)
         |    ELSE CAST(0.0 AS DOUBLE) END AS jb
-        |FROM f ORDER BY "group"""".stripMargin,
+        |FROM f ORDER BY "group"""".stripMargin),
     // q284: the q154 arms, exact DECIMAL moments, fixed-order pooled-sd
     // d / Hedges correction / Glass denominator (+0.0: signed readouts)
-    "q284_effect_size" ->
+    Query("q284_effect_size", experimentEffectSizes,
       """WITH e AS (
         |  SELECT CASE WHEN CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 50
         |    THEN 'A' ELSE 'B' END AS variant, value
@@ -2807,11 +2736,11 @@ object RelationalQueries {
         |    ELSE NULL END AS hedges_g,
         |  CASE WHEN vb > 0 THEN ROUND((ma - mb) / sqrt(vb), 6) + 0.0
         |    ELSE NULL END AS glass_delta
-        |FROM j""".stripMargin,
+        |FROM j""".stripMargin),
     // q288: per-user (cohort, first, last) collapse, the q251 at-risk
     // windows per cohort, nano-quantized hypergeometric O-E/variance
     // terms, one fixed-order chi-square
-    "q288_logrank" ->
+    Query("q288_logrank", cohortLogRank,
       """WITH s AS (
         |  SELECT user_id,
         |    CASE WHEN CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 50
@@ -2878,10 +2807,10 @@ object RelationalQueries {
         |    ROUND((CAST(oe AS DOUBLE) / 1e9) * (CAST(oe AS DOUBLE) / 1e9) /
         |      (CAST(v AS DOUBLE) / 1e9), 6)
         |    ELSE CAST(0.0 AS DOUBLE) END AS chi2
-        |FROM t2, sizes""".stripMargin,
+        |FROM t2, sizes""".stripMargin),
     // q255: the q217 micro-mean grid, sign pairs, tie term, the
     // continuity-corrected z in fixed double order
-    "q255_mann_kendall" ->
+    Query("q255_mann_kendall", hourlyMannKendall,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2912,10 +2841,10 @@ object RelationalQueries {
         |        THEN ROUND((CAST(sx.s AS DOUBLE) + 1.0) / sqrt(v.var_), 6) + 0.0
         |      ELSE CAST(0.0 AS DOUBLE) END
         |  ELSE CAST(0.0 AS DOUBLE) END AS z
-        |FROM n1, sx, v""".stripMargin,
+        |FROM n1, sx, v""".stripMargin),
     // q261: the q233 split search verbatim, then conditional HUGEINT
     // OLS moments per side and the fixed-order slope/intercept ratios
-    "q261_segmented_trend" ->
+    Query("q261_segmented_trend", hourlySegmentedTrend,
       """WITH pb AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
@@ -2983,10 +2912,10 @@ object RelationalQueries {
         |  CASE WHEN denp <> 0.0 AND denq <> 0.0
         |    THEN ROUND((numq / denq - nump / denp) / 1e6, 6) + 0.0
         |    ELSE NULL END AS slope_change
-        |FROM fits, tot, brk""".stripMargin,
+        |FROM fits, tot, brk""".stripMargin),
     // q269: hourly error grid, the four nano log constants, integer
     // LLR and boundary compares, first-crossing window
-    "q269_sprt" ->
+    Query("q269_sprt", hourlyErrorSprt,
       """WITH e AS (
         |  SELECT CAST(FLOOR(epoch(ts)/3600) AS BIGINT) AS bucket,
         |    CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y
@@ -3020,10 +2949,10 @@ object RelationalQueries {
         |  MIN(CASE WHEN decision <> 'continue' THEN bucket END)
         |    OVER (ORDER BY bucket
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS stop_bucket
-        |FROM d2 ORDER BY bucket""".stripMargin,
+        |FROM d2 ORDER BY bucket""".stripMargin),
     // q262: per-key exact counts, fixed-order shares, the exact
     // integer salt ceiling (cnt*P + N - 1) // N
-    "q262_skew_report" ->
+    Query("q262_skew_report", eventKeySkew,
       """WITH c AS (
         |  SELECT COALESCE(CAST(user_id AS VARCHAR), 'NULL') AS key,
         |    CAST(COUNT(*) AS BIGINT) AS cnt
@@ -3037,5 +2966,5 @@ object RelationalQueries {
         |  CAST((CAST(cnt AS HUGEINT) * 32 + t.n_rows - 1) // t.n_rows
         |    AS BIGINT) AS salt
         |FROM c, t
-        |ORDER BY cnt DESC, key ASC LIMIT 10""".stripMargin)
+        |ORDER BY cnt DESC, key ASC LIMIT 10""".stripMargin))
 }

@@ -2,11 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One declared query: its name, the engine function that builds it over
+  * a scale-factor directory, and the DuckDB-equivalent SQL the driver's
+  * correctness gate compares it with. */
+final case class Query(name: String, run: (SparkSession, String) => DataFrame, oracleSql: String)
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * Each entry in [[queries]] is one operator from SURVEY.md §2's inventory;
-  * [[oracleSql]] carries the DuckDB-equivalent SQL for the driver's
-  * correctness gate. Column names are aliased identically on both sides.
+  * [[all]] is the query registry, one entry per operator from SURVEY.md
+  * §2's inventory; [[queries]] and [[oracleSql]] are derived from it.
+  * Column names are aliased identically on both sides.
   *
   * Float determinism convention: any aggregate over double columns goes
   * through exact DECIMAL arithmetic and is cast back to DOUBLE at the end,
@@ -23,9 +28,21 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     VectorQueries.metaFilterCosine(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** `qs` unchanged if every name is distinct; a repeated name would
+    * otherwise make one family's entry silently replace another's in the
+    * derived maps. */
+  def registry(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  /** Every declared query, in registry order. */
+  val all: Seq[Query] =
+    registry(RelationalQueries.all ++ VectorQueries.all ++ PipelineQueries.all)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++ VectorQueries.queries ++ PipelineQueries.queries
+    all.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. All sketch/index arithmetic (MinHash,
@@ -35,5 +52,5 @@ object SparkEntry {
     * (engine-private registers) to the replayable KMV sketch
     * ([[graft.expr.KmvDistinct]]). */
   def oracleSql: Map[String, String] =
-    RelationalQueries.oracleSql ++ VectorQueries.oracleSql ++ PipelineQueries.oracleSql
+    all.map(q => q.name -> q.oracleSql).toMap
 }

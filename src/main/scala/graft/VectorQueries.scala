@@ -717,36 +717,6 @@ object VectorQueries {
       .orderBy($"rnk")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q20_vec_dot_topk"       -> (dotTopK _),
-    "q21_vec_l2_knn"         -> (l2TopK _),
-    "q22_vec_cosine_topk"    -> (cosineTopK _),
-    "q23_vec_knn_join"       -> (knnJoin _),
-    "q24_meta_filter_cosine" -> (metaFilterCosine _),
-    "q25_label_centroids"    -> (labelCentroids _),
-    "q26_meta_array_filter"  -> (metaArrayFilter _),
-    "q35_ann_lsh"            -> (annLsh _),
-    "q52_ann_ivf"            -> (annIvf _),
-    "q70_sq_topk"            -> (sqTopK _),
-    "q84_matryoshka_topk"    -> (matryoshkaTopK _),
-    "q88_binary_hamming"     -> (binaryHammingTopK _),
-    "q99_pq_adc"             -> (pqAdcTopK _),
-    "q104_label_cohesion"    -> (labelCohesion _),
-    "q107_ivf_pq"            -> (ivfPqTopK _),
-    "q111_ivf_append"        -> (annIvfAppend _),
-    "q191_ivf_time_travel"   -> (annIvfTimeTravel _),
-    "q196_ann_rbo"           -> (annRboAudit _),
-    "q118_margin_mining"     -> (marginMining _),
-    "q152_ivf_recall"        -> (ivfRecallAudit _),
-    "q155_semantic_decon"    -> (semanticDecontaminate _),
-    "q156_knn_label_noise"   -> (knnLabelNoise _),
-    "q163_semantic_outliers" -> (semanticOutliers _),
-    "q166_pca_top"           -> (pcaTop _),
-    "q169_embedding_drift"   -> (embeddingDrift _),
-    "q173_pca_deflate"       -> (pcaDeflate _),
-    "q174_pca_project"       -> (pcaProject _),
-    "q280_hubness"           -> (hubnessAudit _))
-
   /** q280: HUBNESS audit of the exact k-NN graph (Radovanović et al.
     * 2010) — the high-dimensional pathology every ANN/retrieval tier
     * sits on: the k-occurrence distribution (how many times each vector
@@ -1247,10 +1217,10 @@ object VectorQueries {
        |${tail("_2", "a2")}""".stripMargin
   }
 
-  val oracleSql: Map[String, String] = Map(
+  val all: Seq[Query] = Seq(
     // q280: full exact k-NN graph (6-dp cosine, n_id tie-break),
     // occurrence counts incl. zeros, then the q277 moment replay
-    "q280_hubness" ->
+    Query("q280_hubness", hubnessAudit,
       """WITH p AS (
         |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
         |    SUM(CAST(c.embedding[i.i] AS DOUBLE) * CAST(q.embedding[i.i] AS DOUBLE)) AS dp,
@@ -1308,8 +1278,8 @@ object VectorQueries {
         |  CASE WHEN m2 > 0 THEN ROUND(g2, 6) + 0.0
         |    ELSE CAST(0.0 AS DOUBLE) END AS ex_kurtosis,
         |  max_occ, n_antihubs
-        |FROM f, ex""".stripMargin,
-    "q118_margin_mining" ->
+        |FROM f, ex""".stripMargin),
+    Query("q118_margin_mining", marginMining,
       """WITH p AS (
         |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
         |    SUM(CAST(c.embedding[i.i] AS DOUBLE) * CAST(q.embedding[i.i] AS DOUBLE)) AS dp,
@@ -1339,8 +1309,8 @@ object VectorQueries {
         |    (CAST(xk.xs AS DOUBLE) / 8.0 + CAST(yk.ys AS DOUBLE) / 4.0), 6) AS margin
         |FROM sm s JOIN xk USING (q_id) JOIN yk USING (n_id)
         |ORDER BY margin DESC, q_id, n_id
-        |LIMIT 15""".stripMargin,
-    "q169_embedding_drift" ->
+        |LIMIT 15""".stripMargin),
+    Query("q169_embedding_drift", embeddingDrift,
       """WITH pe AS (
         |  SELECT vec_id % 2 AS snap, i.i - 1 AS pos,
         |    CAST(round(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS vm
@@ -1363,8 +1333,8 @@ object VectorQueries {
         |SELECT CAST(rnk AS BIGINT) AS rnk, CAST(pos AS BIGINT) AS pos,
         |  ROUND(CAST(dm AS DOUBLE) / 1000000.0, 6) AS dim_shift,
         |  centroid_cos, centroid_l2_shift
-        |FROM r, agg WHERE rnk <= 5 ORDER BY rnk""".stripMargin,
-    "q166_pca_top" -> {
+        |FROM r, agg WHERE rnk <= 5 ORDER BY rnk""".stripMargin),
+    Query("q166_pca_top", pcaTop, {
       // 5 unrolled power-iteration rounds over the integer-normalized
       // scaled covariance — mirrors Spectral.topComponent step for step
       val iterCtes = (1 to 5).map { i =>
@@ -1417,8 +1387,8 @@ object VectorQueries {
          |SELECT CAST(rnk AS BIGINT) AS rnk, CAST(p AS BIGINT) AS pos,
          |  ROUND(CAST(v AS DOUBLE) / 1000000.0, 6) AS loading, ev_share
          |FROM r, sh WHERE rnk <= 8 ORDER BY rnk""".stripMargin
-    },
-    "q173_pca_deflate" ->
+    }),
+    Query("q173_pca_deflate", pcaDeflate,
       // q166's replay × 2 components: after the first eigenvector, the
       // matrix is deflated cell-by-cell with the SAME left-associated
       // double expression the Scala driver evaluates, then the second
@@ -1433,9 +1403,9 @@ object VectorQueries {
          |  SELECT CAST(2 AS BIGINT), CAST(r.rnk AS BIGINT), CAST(r.p AS BIGINT),
          |    ROUND(CAST(r.v AS DOUBLE) / 1000000.0, 6), s.ev_share
          |  FROM r_2 r, sh_2 s WHERE r.rnk <= 4)
-         |ORDER BY comp, rnk""".stripMargin,
+         |ORDER BY comp, rnk""".stripMargin),
 
-    "q174_pca_project" ->
+    Query("q174_pca_project", pcaProject,
       // the projection half: every corpus vector's exact-integer dot
       // with both recovered eigenvectors, squared-norm in HUGEINT, the
       // SAME fixed-order double r² and scaling as the Scala map-only
@@ -1461,9 +1431,9 @@ object VectorQueries {
          |  ROUND((CAST(d2 AS DOUBLE) * CAST(d2 AS DOUBLE)) /
          |    (CAST(n2 AS DOUBLE) * CAST(v2_2 AS DOUBLE)), 6) AS r2_2
          |FROM proj, v2s
-         |ORDER BY d1 DESC, vec_id LIMIT 50""".stripMargin,
+         |ORDER BY d1 DESC, vec_id LIMIT 50""".stripMargin),
 
-    "q163_semantic_outliers" ->
+    Query("q163_semantic_outliers", semanticOutliers,
       """WITH pe AS (
         |  SELECT d.lang, e.vec_id AS doc_id, i.i - 1 AS pos,
         |    CAST(round(CAST(e.embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS vm
@@ -1490,8 +1460,8 @@ object VectorQueries {
         |  FROM cosv)
         |SELECT lang, CAST(rnk AS BIGINT) AS rnk, doc_id,
         |  ROUND(CAST(cm AS DOUBLE) / 1000000.0, 6) AS cos_centroid
-        |FROM r WHERE rnk <= 5 ORDER BY lang, rnk""".stripMargin,
-    "q155_semantic_decon" ->
+        |FROM r WHERE rnk <= 5 ORDER BY lang, rnk""".stripMargin),
+    Query("q155_semantic_decon", semanticDecontaminate,
       """WITH sims AS (
         |  SELECT c.vec_id, e.vec_id AS eval_id,
         |    ROUND(SUM(CAST(c.embedding[i.i] AS DOUBLE) * CAST(e.embedding[i.i] AS DOUBLE)) /
@@ -1504,8 +1474,8 @@ object VectorQueries {
         |r AS (
         |  SELECT f.*, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cos_sim DESC, eval_id) AS rn
         |  FROM f)
-        |SELECT vec_id, eval_id, cos_sim FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-    "q156_knn_label_noise" ->
+        |SELECT vec_id, eval_id, cos_sim FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin),
+    Query("q156_knn_label_noise", knnLabelNoise,
       """WITH sims AS (
         |  SELECT p.vec_id AS q_id, p.label AS q_label, n.vec_id AS n_id, n.label AS n_label,
         |    ROUND(SUM(CAST(n.embedding[i.i] AS DOUBLE) * CAST(p.embedding[i.i] AS DOUBLE)) /
@@ -1528,15 +1498,15 @@ object VectorQueries {
         |SELECT q_label AS label, COUNT(*) AS n_probes,
         |  CAST(SUM(CASE WHEN pred_label = q_label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
         |  ROUND(CAST(SUM(CASE WHEN pred_label = q_label THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*), 6) AS agree_rate
-        |FROM pred GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q35_ann_lsh" -> annLshOracle,
-    "q52_ann_ivf" -> annIvfOracle,
-    "q111_ivf_append" ->
-      annIvfOracleWith(q => s"($q.vec_id >= 3 AND $q.vec_id < 400)"),
-    "q191_ivf_time_travel" ->
+        |FROM pred GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q35_ann_lsh", annLsh, annLshOracle),
+    Query("q52_ann_ivf", annIvf, annIvfOracle),
+    Query("q111_ivf_append", annIvfAppend,
+      annIvfOracleWith(q => s"($q.vec_id >= 3 AND $q.vec_id < 400)")),
+    Query("q191_ivf_time_travel", annIvfTimeTravel,
       annIvfOracleWith(q => s"($q.vec_id >= 3 AND $q.vec_id < 400)",
-        cellsPred = "vec_id >= 3 AND vec_id < 400"),
-    "q196_ann_rbo" -> {
+        cellsPred = "vec_id >= 3 AND vec_id < 400")),
+    Query("q196_ann_rbo", annRboAudit, {
       val wts = graft.ops.RankMetrics.rboWeightsMicro(5, 0.9)
         .zipWithIndex.map { case (w, i) => s"(${i + 1}, CAST($w AS BIGINT))" }
         .mkString(", ")
@@ -1569,10 +1539,10 @@ object VectorQueries {
          |  ROUND(CAST(COALESCE(wm, 0) AS DOUBLE) / 1e6, 6) AS rbo
          |FROM qq LEFT JOIN g USING (q_id)
          |ORDER BY q_id""".stripMargin
-    },
-    "q99_pq_adc" -> pqAdcOracle,
-    "q107_ivf_pq" -> ivfPqOracle,
-    "q104_label_cohesion" ->
+    }),
+    Query("q99_pq_adc", pqAdcTopK, pqAdcOracle),
+    Query("q107_ivf_pq", ivfPqTopK, ivfPqOracle),
+    Query("q104_label_cohesion", labelCohesion,
       """WITH pe AS (
         |  SELECT label, vec_id, i.i - 1 AS pos,
         |    CAST(round(CAST(embedding[i.i] AS DOUBLE) * 1000000) AS BIGINT) AS vm
@@ -1597,10 +1567,10 @@ object VectorQueries {
         |  CAST(MIN(cm) AS DOUBLE) / 1000000.0 AS min_cos
         |FROM cosv
         |GROUP BY label
-        |ORDER BY label""".stripMargin,
+        |ORDER BY label""".stripMargin),
     // q88: sign-bit sketches in 32-bit lanes, Hamming candidate cut,
     // exact rerank — DuckDB packs and pops the identical bits
-    "q88_binary_hamming" -> {
+    Query("q88_binary_hamming", binaryHammingTopK, {
       def lanes(src: String) = (0 until 2).map { l =>
         s"CAST(list_sum(list_transform(generate_series(0, 31), " +
           s"j -> CASE WHEN $src[${32 * l} + j + 1] > 0 THEN (CAST(1 AS BIGINT) << j) ELSE 0 END)) AS BIGINT)"
@@ -1629,10 +1599,10 @@ object VectorQueries {
          |FROM rr
          |ORDER BY cos_sim DESC, vec_id
          |LIMIT 10""".stripMargin
-    },
+    }),
     // q84: prefix-dim candidate cut (dims 1..16, rounded cosine, id
     // tie-break) then exact 64-dim rerank — both phases replayed
-    "q84_matryoshka_topk" ->
+    Query("q84_matryoshka_topk", matryoshkaTopK,
       """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
         |ps AS (
         |  SELECT e.vec_id, e.embedding, q.qv,
@@ -1659,11 +1629,11 @@ object VectorQueries {
         |  ROUND(CASE WHEN na = 0 OR nb = 0 THEN 0 ELSE dp / (SQRT(na) * SQRT(nb)) END, 6) AS cos_sim
         |FROM rr
         |ORDER BY cos_sim DESC, vec_id
-        |LIMIT 10""".stripMargin,
+        |LIMIT 10""".stripMargin),
     // q70: DuckDB replays int8 quantization (round ties-away-from-zero),
     // the integer dot + norms, the top-20 approximate cut, and the exact
     // float rerank — every step portable arithmetic (see ops.Quantize)
-    "q70_sq_topk" ->
+    Query("q70_sq_topk", sqTopK,
       """WITH base AS (
         |  SELECT vec_id, embedding,
         |    list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS mx
@@ -1703,16 +1673,16 @@ object VectorQueries {
         |  ROUND(CASE WHEN na = 0 OR nb = 0 THEN 0 ELSE dp / (SQRT(na) * SQRT(nb)) END, 6) AS cos_sim
         |FROM rr
         |ORDER BY cos_sim DESC, vec_id
-        |LIMIT 10""".stripMargin,
-    "q20_vec_dot_topk" ->
+        |LIMIT 10""".stripMargin),
+    Query("q20_vec_dot_topk", dotTopK,
       s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
          |SELECT e.vec_id, ROUND($dotSum, 6) AS dot_sim
          |FROM embeddings e, q, generate_series(1, 64) i(i)
          |WHERE e.vec_id <> 0
          |GROUP BY e.vec_id
          |ORDER BY dot_sim DESC, vec_id
-         |LIMIT 20""".stripMargin,
-    "q21_vec_l2_knn" ->
+         |LIMIT 20""".stripMargin),
+    Query("q21_vec_l2_knn", l2TopK,
       """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
         |SELECT e.vec_id,
         |  ROUND(SQRT(SUM((CAST(e.embedding[i.i] AS DOUBLE) - CAST(q.qv[i.i] AS DOUBLE))
@@ -1721,8 +1691,8 @@ object VectorQueries {
         |WHERE e.vec_id <> 0
         |GROUP BY e.vec_id
         |ORDER BY l2_dist ASC, vec_id
-        |LIMIT 10""".stripMargin,
-    "q22_vec_cosine_topk" ->
+        |LIMIT 10""".stripMargin),
+    Query("q22_vec_cosine_topk", cosineTopK,
       """WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
         |SELECT vec_id, ROUND(CASE WHEN na = 0 OR nb = 0 THEN 0 ELSE dp / (SQRT(na) * SQRT(nb)) END, 6) AS cos_sim
         |FROM (
@@ -1734,8 +1704,8 @@ object VectorQueries {
         |  WHERE e.vec_id <> 0
         |  GROUP BY e.vec_id) t
         |ORDER BY cos_sim DESC, vec_id
-        |LIMIT 20""".stripMargin,
-    "q23_vec_knn_join" ->
+        |LIMIT 20""".stripMargin),
+    Query("q23_vec_knn_join", knnJoin,
       """WITH p AS (
         |  SELECT q.vec_id AS q_id, c.vec_id AS n_id,
         |    SUM(CAST(c.embedding[i.i] AS DOUBLE) * CAST(q.embedding[i.i] AS DOUBLE)) AS dp,
@@ -1753,19 +1723,19 @@ object VectorQueries {
         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rnk
         |  FROM r)
         |SELECT q_id, n_id, sim, rnk FROM rk WHERE rnk <= 3
-        |ORDER BY q_id, rnk""".stripMargin,
-    "q26_meta_array_filter" ->
+        |ORDER BY q_id, rnk""".stripMargin),
+    Query("q26_meta_array_filter", metaArrayFilter,
       """SELECT doc_id, lang, n_chars
         |FROM documents
         |WHERE n_chars >= 150 AND n_chars < 400 AND lang IN ('en', 'fr')
-        |ORDER BY doc_id""".stripMargin,
-    "q25_label_centroids" ->
+        |ORDER BY doc_id""".stripMargin),
+    Query("q25_label_centroids", labelCentroids,
       """SELECT label, i.i - 1 AS pos, COUNT(*) AS n,
         |  ROUND(AVG(CAST(embedding[i.i] AS DOUBLE)), 5) AS centroid_v
         |FROM embeddings, generate_series(1, 64) i(i)
         |GROUP BY 1, 2
-        |ORDER BY label, pos""".stripMargin,
-    "q24_meta_filter_cosine" ->
+        |ORDER BY label, pos""".stripMargin),
+    Query("q24_meta_filter_cosine", metaFilterCosine,
       s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
          |j AS (
          |  SELECT d.doc_id, d.lang, d.n_chars,
@@ -1777,9 +1747,9 @@ object VectorQueries {
          |SELECT doc_id, lang, n_chars, sim FROM j
          |WHERE sim > 0
          |ORDER BY sim DESC, doc_id
-         |LIMIT 10""".stripMargin,
+         |LIMIT 10""".stripMargin),
 
-    "q152_ivf_recall" ->
+    Query("q152_ivf_recall", ivfRecallAudit,
       s"""WITH ${annIvfCtes(q => s"$q.vec_id >= 3")},
          |exact AS (
          |  SELECT b.vec_id AS q_id, a.vec_id AS n_id,
@@ -1802,5 +1772,5 @@ object VectorQueries {
          |SELECT g.q_id, COALESCE(h.n_hits, 0) AS n_hits,
          |  ROUND(CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / 5.0, 6) AS recall_at_5
          |FROM (SELECT DISTINCT q_id FROM etop) g LEFT JOIN h USING (q_id)
-         |ORDER BY g.q_id""".stripMargin)
+         |ORDER BY g.q_id""".stripMargin))
 }

@@ -1,7 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -9,11 +9,10 @@ object Verify {
     // dev convenience: extra args restrict the dump to the named queries
     // (driver passes exactly 2 args → full set); unknown names fail loudly
     val only = args.drop(2).toSet
-    val unknown = only -- SparkEntry.queries.keySet
+    val unknown = only -- SparkEntry.all.map(_.name)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
+      if (only.isEmpty) SparkEntry.all else SparkEntry.all.filter(q => only(q.name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -22,7 +21,7 @@ object Verify {
     // recorded in _errors.json rather than silently vanishing from the
     // driver's correctness report (the r10 failure mode).
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    selected.foreach { case (name, fn) =>
+    selected.foreach { case Query(name, fn, _) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -42,8 +41,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.all
+      .map(e => s"${q(e.name)}: ${q(e.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -1,11 +1,11 @@
 package graft.tools
 
-import graft.{Bench, GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
-/** Dev tool: per-query shuffle audit — runs the headline queries and
+/** Dev tool: per-query shuffle audit — runs every registered query and
   * records shuffle read/write and spill bytes from stage metrics, writing
   * SHUFFLE.md. The evidence for SCALE.md's "what shuffles" analysis: a
   * query whose shuffle bytes scale with the fact table is the one that
@@ -41,14 +41,13 @@ object ShuffleAudit {
     sb.append("page-cache reads; the shuffle/spill columns are the signal.)\n\n")
     sb.append("| query | input MB | shuffle write MB | shuffle read MB | spill MB |\n")
     sb.append("|---|---|---|---|---|\n")
-    val qs = SparkEntry.queries
-    for (name <- Bench.headline if qs.contains(name)) {
-      qs(name)(spark, sfDir).count() // warm (listener counts it, reset below)
+    for (q <- SparkEntry.all) {
+      q.run(spark, sfDir).count() // warm (listener counts it, reset below)
       Thread.sleep(500) // let async listener events drain (dev tool)
       Seq(read, write, spillMem, spillDisk, input).foreach(_.set(0))
-      qs(name)(spark, sfDir).count()
+      q.run(spark, sfDir).count()
       Thread.sleep(500) // let async listener events drain (dev tool)
-      sb.append(s"| $name | ${mb(input.get)} | ${mb(write.get)} | ${mb(read.get)} " +
+      sb.append(s"| ${q.name} | ${mb(input.get)} | ${mb(write.get)} | ${mb(read.get)} " +
         s"| ${mb(spillMem.get + spillDisk.get)} |\n")
     }
     Files.writeString(Paths.get("SHUFFLE.md"), sb.toString)

@@ -1,7 +1,7 @@
 package graft
 
 /** Driver-contract smoke: every declared query runs at sf0.001, entry()
-  * returns rows, and queries/oracleSql stay consistent. (Value-level
+  * returns rows, and the registry keeps its names distinct. (Value-level
   * correctness is the DuckDB oracle gate — tools/check_correctness.py.) */
 class QueriesSmokeSpec extends SparkSpecBase {
   private val sfDir = "/root/testdata/sf0.001"
@@ -10,12 +10,15 @@ class QueriesSmokeSpec extends SparkSpecBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracleSql key has a matching queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
+  test("the registry declares 289 distinct names and rejects a repeated one") {
+    val names = SparkEntry.all.map(_.name)
+    assert(names.size == 289 && names.distinct.size == 289)
+    val repeated = SparkEntry.all.take(2) :+ SparkEntry.all.head
+    val e = intercept[IllegalArgumentException](SparkEntry.registry(repeated))
+    assert(e.getMessage == s"requirement failed: duplicate query names: ${names.head}")
   }
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+  for (Query(name, fn, _) <- SparkEntry.all.sortBy(_.name)) {
     test(s"$name runs at sf0.001 and is deterministic") {
       val df1 = fn(spark, sfDir)
       val rows1 = df1.collect()
