@@ -1,5 +1,7 @@
 package graft
 
+import graft.core.Pin
+
 /** Benchmark main (driver contract): runs every query of
   * [[SparkEntry.all]], in registry order, on SPARK_GRAFT_SF_DIR, prints
   * ONE JSON line
@@ -47,14 +49,13 @@ object Bench {
     // it is excluded from `queries` and reported under `errors`
     val runs = selected.map { case Query(name, fn, _) =>
       try {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count() // warm-up (JIT/codegen/cache), untimed
-        val warm = (System.nanoTime() - t0) / 1e9
+        // every run releases its pins, so no run reads another's cache
         def timed(): Double = {
           val t1 = System.nanoTime()
-          fn(spark, sfDir).count()
+          try fn(spark, sfDir).count() finally Pin.release(spark)
           (System.nanoTime() - t1) / 1e9
         }
+        val warm = timed() // warm-up (JIT/codegen), untimed
         val base = (1 to 3).map(_ => timed())
         // noisy sample → 2 extra runs before trusting the min (see doc)
         val times =

@@ -24,15 +24,10 @@ object GraftSession {
       // scale-safe because the cap is per-task GROUP COUNT, not bytes.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "65536")
-      // r17 session hygiene: ephemeral localCheckpoint blocks are only
-      // released when the DRIVER garbage-collects the abandoned RDD
-      // objects (ContextCleaner is GC-driven), and the default periodic
-      // System.gc() runs every 30 MIN — a long query suite (or any
-      // long-lived session) accumulates thousands of dead pinned
-      // partitions before the first sweep, degrading late queries under
-      // storage-memory pressure. 5 min bounds that accumulation at a
-      // few driver GCs per hour; measured flat on the bench total.
-      .config("spark.cleaner.periodicGC.interval", sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "5min"))
+      // pins are released by the run that made them (graft.core.Pin), so
+      // periodic GC now frees only lineage cuts (Pin.cut); 5 min, not the
+      // default 30, bounds the dead cut blocks a long session holds
+      .config("spark.cleaner.periodicGC.interval", "5min")
       .config("spark.ui.enabled", "false")
 
   def local(): SparkSession = {

@@ -1,9 +1,10 @@
 package graft
 
-import graft.ops.{Chunking, Curation, Decontaminate, Dedup, Multimodal, QualityModel, Sampling, Similarity, TextAnalysis}
+import graft.ops.{Chunking, Curation, Decontaminate, Dedup, Multimodal, QualityModel, Sampling, Similarity, SnapshotCache, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** LLM-data-pipeline operators over the `documents`/`embeddings` testdata:
   * dedup (exact / MinHash / SimHash / n-gram Jaccard / embedding cosine),
@@ -54,11 +55,11 @@ object PipelineQueries {
         threshold = 0.2)
       .filter(round($"jaccard", 6) >= 0.4)
       .select($"a_id", $"b_id")
-      .localCheckpoint(true)
+      .pin
     val cand = Dedup.minHashCandidates(slice, "doc_id", "text",
         numHashes = 32, bands = 8, w = 3, threshold = 0.4)
       .select($"a_id", $"b_id")
-      .localCheckpoint(true)
+      .pin
     truth.agg(count(lit(1)).as("n_truth"))
       .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
       .crossJoin(truth.join(cand, Seq("a_id", "b_id"))
@@ -1544,7 +1545,7 @@ object PipelineQueries {
     val toks = Tables.documents(s, dir)
       .select(explode(TextAnalysis.tokens($"text")).as("token"))
       .filter(length($"token") > 0)
-      .localCheckpoint(true) // corpus tokens, read by build + exact
+      .pin // corpus tokens, read by build + exact
     val code = graft.ops.Dedup.polyHashCol("token", 31L)
     val sketch = graft.ops.CountMin.build(toks, code)
     val top = toks.groupBy($"token").agg(count(lit(1)).as("exact_cnt"))
@@ -2186,15 +2187,15 @@ object PipelineQueries {
     *
     * All three passes (extent, bin counts, final bucket stats) read ONLY
     * `n_chars`, so that one-column projection is materialized once via
-    * an eager localCheckpoint (the q97 idiom; the ExactRank/madOutliers
+    * a pin (the q97 idiom; the ExactRank/madOutliers
     * cached-base pattern) — the parquet scan runs once instead of three
     * times, and the sketch passes read executor-local longs. At 100 TB
-    * the checkpoint is a compact single column spread over the cluster —
+    * the pin is a compact single column spread over the cluster —
     * strictly cheaper than two extra pruned corpus scans. */
   def lengthCurriculum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val nchars = Tables.documents(s, dir).select($"n_chars")
-      .localCheckpoint(true)
+      .pin
     val deciles = graft.ops.HistogramQuantile.quantiles(
       nchars.withColumn("_g", lit(1)),
       "_g", "n_chars", (1 to 9).map(_ / 10.0d))
@@ -2246,12 +2247,12 @@ object PipelineQueries {
     // quantile bounds and the final bucket join — unpinned, the langid
     // and LM passes each ran twice)
     val surv = docs.join(
-      keep.select($"doc_id").localCheckpoint(true), "doc_id")
+      keep.select($"doc_id").pin, "doc_id")
     val lang = TextAnalysis.langIdScores(surv, "text")
       .select($"doc_id", $"predicted")
     val lp = TextAnalysis.unigramLogProb(surv, "doc_id", "text")
       .select($"doc_id", $"avg_logprob")
-    val scored = lang.join(lp, "doc_id").localCheckpoint(true)
+    val scored = lang.join(lp, "doc_id").pin
     val bounds = graft.ops.HistogramQuantile.quantiles(
       scored, "predicted", "avg_logprob", Seq(1.0 / 3, 2.0 / 3))
     val bb = bounds.groupBy($"predicted").agg(
@@ -2862,13 +2863,12 @@ object PipelineQueries {
   private def splitSummaryOf(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     // the candidate graph feeds BOTH the components step and the leakage
-    // join — materialize it once (same pattern as the checkpoint inside
-    // connectedComponents) instead of running MinHash banding twice
+    // join — pin it once instead of running MinHash banding twice
     val pairs = Dedup.minHashCandidates(docs, "doc_id", "text",
-      threshold = 0.4).select($"a_id", $"b_id").localCheckpoint(true)
+      threshold = 0.4).select($"a_id", $"b_id").pin
     val split = Curation.clusterSplit(docs, "doc_id", pairs)
       .select($"doc_id", $"component", $"n_chars", $"split")
-      .localCheckpoint(true)
+      .pin
     val asg = split.select($"doc_id", $"split")
     val leaked = pairs
       .join(asg.toDF("a_id", "sa"), "a_id")
@@ -3074,66 +3074,59 @@ object PipelineQueries {
         .as[(String, String)].collect().toSeq
     })
 
-  private val signalCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  /** Build-once per-corpus signal in [[SnapshotCache]], keyed by the
+    * corpus fingerprint (version 0: a corpus has no manifest version). */
+  private def corpusSignal(s: SparkSession, dir: String, facet: String)(
+      build: => DataFrame): DataFrame =
+    SnapshotCache.persisted(SnapshotCache.key(s, "corpus",
+      VectorQueries.corpusFingerprint(s, dir), 0L, facet))(build)
 
   /** Build-once per-corpus CLASSIFIER CONFIDENCE (doc_id, conf) — the
     * q124 sigmoid readout that ~15 eval entries re-derive from scratch
-    * (each re-derivation is a full corpus featurize+score pass);
-    * localCheckpoint pins ONE scoring pass per corpus, the
-    * [[bpeEncodedFor]] discipline. Values identical by construction —
-    * this is plan reuse, not a semantic change. */
+    * (each a full corpus featurize+score pass); ONE scoring pass per
+    * corpus, the [[bpeEncodedFor]] discipline. Values identical by
+    * construction — plan reuse, not a semantic change. */
   private def confFor(s: SparkSession, dir: String): DataFrame =
-    signalCache.computeIfAbsent(
-      "conf|" + VectorQueries.corpusFingerprint(s, dir), _ => {
-        import s.implicits._
-        QualityModel.classifierScore(Tables.documents(s, dir),
-            "doc_id", "text")
-          .withColumn("conf",
-            round(lit(1.0d) / (lit(1.0d) + exp(negate($"score"))), 6))
-          .select($"doc_id", $"conf")
-          .localCheckpoint(true)
-      })
+    corpusSignal(s, dir, "conf") {
+      import s.implicits._
+      QualityModel.classifierScore(Tables.documents(s, dir),
+          "doc_id", "text")
+        .withColumn("conf",
+          round(lit(1.0d) / (lit(1.0d) + exp(negate($"score"))), 6))
+        .select($"doc_id", $"conf")
+    }
 
   /** Build-once per-corpus UNIGRAM LM log-prob (doc_id, avg_logprob) —
     * the q78 signal shared by the fusion/agreement entries. */
   private def lpFor(s: SparkSession, dir: String): DataFrame =
-    signalCache.computeIfAbsent(
-      "lp|" + VectorQueries.corpusFingerprint(s, dir), _ => {
-        import s.implicits._
-        TextAnalysis.unigramLogProb(Tables.documents(s, dir),
-            "doc_id", "text")
-          .select($"doc_id", $"avg_logprob")
-          .localCheckpoint(true)
-      })
+    corpusSignal(s, dir, "lp") {
+      import s.implicits._
+      TextAnalysis.unigramLogProb(Tables.documents(s, dir),
+          "doc_id", "text")
+        .select($"doc_id", $"avg_logprob")
+    }
 
   /** Build-once per-corpus GOPHER gate labels (doc_id, keep) — the
     * q127 rule verdicts the classifier-eval family scores against. */
   private def gopherKeepFor(s: SparkSession, dir: String): DataFrame =
-    signalCache.computeIfAbsent(
-      "gopher|" + VectorQueries.corpusFingerprint(s, dir), _ => {
-        import s.implicits._
-        TextAnalysis.gopherRules(Tables.documents(s, dir), "doc_id", "text")
-          .select($"doc_id", $"keep")
-          .localCheckpoint(true)
-      })
+    corpusSignal(s, dir, "gopher") {
+      import s.implicits._
+      TextAnalysis.gopherRules(Tables.documents(s, dir), "doc_id", "text")
+        .select($"doc_id", $"keep")
+    }
 
-  private val bpeEncCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-
-  /** Build-once cache for the ENCODED corpus + its vocab (the lmIndexFor
+  /** Build-once ENCODED corpus + its vocab (the lmIndexFor
     * build-once/probe-many discipline applied to tokenization): q181
     * ships the ids, q182 packs by them, q188 decodes them back — three
-    * entries, one encode pass. localCheckpoint pins the result so reuse
-    * costs a read, not a re-encode. */
-  private def bpeEncodedFor(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeEncCache.computeIfAbsent(VectorQueries.corpusFingerprint(s, dir), _ => {
-      val docs = Tables.documents(s, dir)
-      val merges = bpeMergesFor(s, dir)
-      (TextAnalysis.bpeEncode(docs, "doc_id", "text", merges)
-        .localCheckpoint(true),
-        TextAnalysis.bpeVocab(docs, "text", merges).localCheckpoint(true))
+    * entries, one encode pass. */
+  private def bpeEncodedFor(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    def docs = Tables.documents(s, dir)
+    (corpusSignal(s, dir, "bpe-enc") {
+      TextAnalysis.bpeEncode(docs, "doc_id", "text", bpeMergesFor(s, dir))
+    }, corpusSignal(s, dir, "bpe-vocab") {
+      TextAnalysis.bpeVocab(docs, "text", bpeMergesFor(s, dir))
     })
+  }
 
   /** q181: corpus BPE ENCODE to token ids ([[TextAnalysis.bpeEncode]])
     * — the tokenizer loop closed: q171's trained merges fold over the
@@ -3215,7 +3208,7 @@ object PipelineQueries {
     val pairs = Dedup.minHashCandidates(Tables.documents(s, dir),
         "doc_id", "text", threshold = 0.4)
       .select($"a_id", $"b_id")
-      .localCheckpoint(true) // split twice below; candidates run once
+      .pin // split twice below; candidates run once
     val oldPairs = pairs.filter($"a_id" < 250 && $"b_id" < 250)
     val newPairs = pairs.filter($"a_id" >= 250 || $"b_id" >= 250)
     graft.ops.Components.appendToComponents(
@@ -3400,11 +3393,11 @@ object PipelineQueries {
     import s.implicits._
     val slice = Tables.documents(s, dir).filter($"doc_id" < 200)
     val truth = Dedup.jaccardPairs(slice, "doc_id", "text", w = 3,
-      threshold = 0.4).select($"a_id", $"b_id").localCheckpoint(true)
+      threshold = 0.4).select($"a_id", $"b_id").pin
     val cand = Dedup.minHashCandidates(Tables.documents(s, dir), "doc_id",
         "text", numHashes = 32, bands = 8, w = 3, threshold = 0.4)
       .filter($"a_id" < 200 && $"b_id" < 200)
-      .select($"a_id", $"b_id").localCheckpoint(true)
+      .select($"a_id", $"b_id").pin
     val hits = truth.join(cand, Seq("a_id", "b_id"))
       .agg(count(lit(1)).as("n_hits"))
     truth.agg(count(lit(1)).as("n_truth"))

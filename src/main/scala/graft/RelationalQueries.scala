@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import graft.core.Pin._
 
 /** Relational extension surface over the TPC-H-ish testdata (SURVEY.md §2.3):
   * scans, filters, joins (broadcast + shuffle), aggregations, windows, top-k,
@@ -1180,72 +1181,67 @@ object RelationalQueries {
     // All passes run over InternalRow plan output (no per-row tuple
     // deserialization, measured ~2× kernel cost) and the valueCounts
     // passes range-filter through the DataFrame layer first.
-    val cached = li.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val h1 = ExactRank.radixHistogram(cached)
-      val medPlan = h1.toSeq.sortBy(_._1).map { case (g, slots) =>
-        val n = slots.iterator.map(_.cnt).sum
-        val rMed = (n + 1) / 2
-        val (iM, bM) = ExactRank.slotAt(slots, rMed)
-        (g, slots, n, rMed, iM, bM)
-      }
-      val ranges1 = medPlan.map { case (g, slots, _, _, iM, _) =>
-        g -> Array((slots(iM).mn, slots(iM).mx)) }.toMap
-      val lo1 = ranges1.valuesIterator.flatten.map(_._1).min
-      val hi1 = ranges1.valuesIterator.flatten.map(_._2).max
-      val vc1 = ExactRank.valueCounts(
-        cached.filter($"c" >= lo1 && $"c" <= hi1), ranges1)
-      val med: Map[String, Long] = medPlan.map { case (g, slots, _, rMed, iM, bM) =>
-        g -> ExactRank.valueAt(vc1(g), slots(iM).mn, slots(iM).mx, bM, rMed)
-      }.toMap
-      val dev = cached.select($"l_returnflag",
-        abs($"c" - element_at(typedlit(med), $"l_returnflag")).as("c"))
-      val h2 = ExactRank.radixHistogram(dev)
-      val madPlan = h2.toSeq.sortBy(_._1).map { case (g, slots) =>
-        val n = slots.iterator.map(_.cnt).sum
-        val rMed = (n + 1) / 2
-        val (iM, bM) = ExactRank.slotAt(slots, rMed)
-        // 3·MAD lands in [3·slot.mn, 3·slot.mx]; widen that region to
-        // the radix slots containing its endpoints so every slot
-        // intersecting it lies FULLY inside (slots are disjoint value
-        // intervals, so only the containing slots can straddle)
-        val lo3 = 3L * slots(iM).mn
-        val hi3 = 3L * slots(iM).mx
-        val loR = slots.find(sl => sl.mn <= lo3 && lo3 <= sl.mx).map(_.mn).getOrElse(lo3)
-        val hiR = slots.find(sl => sl.mn <= hi3 && hi3 <= sl.mx).map(_.mx).getOrElse(hi3)
-        (g, slots, n, rMed, iM, bM, loR, hiR)
-      }
-      val ranges2 = madPlan.map { case (g, slots, _, _, iM, _, loR, hiR) =>
-        g -> Array((slots(iM).mn, slots(iM).mx), (loR, hiR)) }.toMap
-      val lo2 = ranges2.valuesIterator.flatten.map(_._1).min
-      val hi2 = ranges2.valuesIterator.flatten.map(_._2).max
-      val vc2 = ExactRank.valueCounts(
-        dev.filter($"c" >= lo2 && $"c" <= hi2), ranges2)
-      def cents2(c: Long): Double =
-        java.math.BigDecimal.valueOf(c, 2).doubleValue
-      val rows = madPlan.map { case (g, slots, n, rMed, iM, bM, loR, hiR) =>
-        val values = vc2(g)
-        val mad = ExactRank.valueAt(values, slots(iM).mn, slots(iM).mx, bM, rMed)
-        val t = 3L * mad // t ∈ [loR, hiR] by construction
-        // count(absdev ≤ t): slots fully below the region (their values
-        // are all < loR ≤ t) + region values ≤ t; slots above the
-        // region hold only values > hiR ≥ t
-        var cnt = 0L
-        slots.foreach(sl => if (sl.mx < loR) cnt += sl.cnt)
-        values.foreach { case (v, c2) => if (v >= loR && v <= t) cnt += c2 }
-        org.apache.spark.sql.Row(g, n, cents2(med(g)), cents2(mad), n - cnt)
-      }
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("l_returnflag", StringType), StructField("n", LongType),
-        StructField("median", DoubleType), StructField("mad", DoubleType),
-        StructField("n_outliers", LongType)))
-      s.createDataFrame(
-        scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
-    } finally {
-      cached.unpersist(blocking = false)
-      ()
+    val cached = li.pin
+    val h1 = ExactRank.radixHistogram(cached)
+    val medPlan = h1.toSeq.sortBy(_._1).map { case (g, slots) =>
+      val n = slots.iterator.map(_.cnt).sum
+      val rMed = (n + 1) / 2
+      val (iM, bM) = ExactRank.slotAt(slots, rMed)
+      (g, slots, n, rMed, iM, bM)
     }
+    val ranges1 = medPlan.map { case (g, slots, _, _, iM, _) =>
+      g -> Array((slots(iM).mn, slots(iM).mx)) }.toMap
+    val lo1 = ranges1.valuesIterator.flatten.map(_._1).min
+    val hi1 = ranges1.valuesIterator.flatten.map(_._2).max
+    val vc1 = ExactRank.valueCounts(
+      cached.filter($"c" >= lo1 && $"c" <= hi1), ranges1)
+    val med: Map[String, Long] = medPlan.map { case (g, slots, _, rMed, iM, bM) =>
+      g -> ExactRank.valueAt(vc1(g), slots(iM).mn, slots(iM).mx, bM, rMed)
+    }.toMap
+    val dev = cached.select($"l_returnflag",
+      abs($"c" - element_at(typedlit(med), $"l_returnflag")).as("c"))
+    val h2 = ExactRank.radixHistogram(dev)
+    val madPlan = h2.toSeq.sortBy(_._1).map { case (g, slots) =>
+      val n = slots.iterator.map(_.cnt).sum
+      val rMed = (n + 1) / 2
+      val (iM, bM) = ExactRank.slotAt(slots, rMed)
+      // 3·MAD lands in [3·slot.mn, 3·slot.mx]; widen that region to
+      // the radix slots containing its endpoints so every slot
+      // intersecting it lies FULLY inside (slots are disjoint value
+      // intervals, so only the containing slots can straddle)
+      val lo3 = 3L * slots(iM).mn
+      val hi3 = 3L * slots(iM).mx
+      val loR = slots.find(sl => sl.mn <= lo3 && lo3 <= sl.mx).map(_.mn).getOrElse(lo3)
+      val hiR = slots.find(sl => sl.mn <= hi3 && hi3 <= sl.mx).map(_.mx).getOrElse(hi3)
+      (g, slots, n, rMed, iM, bM, loR, hiR)
+    }
+    val ranges2 = madPlan.map { case (g, slots, _, _, iM, _, loR, hiR) =>
+      g -> Array((slots(iM).mn, slots(iM).mx), (loR, hiR)) }.toMap
+    val lo2 = ranges2.valuesIterator.flatten.map(_._1).min
+    val hi2 = ranges2.valuesIterator.flatten.map(_._2).max
+    val vc2 = ExactRank.valueCounts(
+      dev.filter($"c" >= lo2 && $"c" <= hi2), ranges2)
+    def cents2(c: Long): Double =
+      java.math.BigDecimal.valueOf(c, 2).doubleValue
+    val rows = madPlan.map { case (g, slots, n, rMed, iM, bM, loR, hiR) =>
+      val values = vc2(g)
+      val mad = ExactRank.valueAt(values, slots(iM).mn, slots(iM).mx, bM, rMed)
+      val t = 3L * mad // t ∈ [loR, hiR] by construction
+      // count(absdev ≤ t): slots fully below the region (their values
+      // are all < loR ≤ t) + region values ≤ t; slots above the
+      // region hold only values > hiR ≥ t
+      var cnt = 0L
+      slots.foreach(sl => if (sl.mx < loR) cnt += sl.cnt)
+      values.foreach { case (v, c2) => if (v >= loR && v <= t) cnt += c2 }
+      org.apache.spark.sql.Row(g, n, cents2(med(g)), cents2(mad), n - cnt)
+    }
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("l_returnflag", StringType), StructField("n", LongType),
+      StructField("median", DoubleType), StructField("mad", DoubleType),
+      StructField("n_outliers", LongType)))
+    s.createDataFrame(
+      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
   }
 
   /** Exact heavy-hitter users (count ≥ 80) via the Count-Min prefilter

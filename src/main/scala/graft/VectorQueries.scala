@@ -5,6 +5,7 @@ import graft.ops.Quantize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.Pin._
 
 /** The vector-query surface (reference ops #5, #7, #15, #16 — SURVEY.md
   * §2.1) over the driver's `documents`/`embeddings` testdata.
@@ -784,7 +785,7 @@ object VectorQueries {
       .join(nn.groupBy($"n_id").agg(count(lit(1)).as("o")),
         $"vec_id" === $"n_id", "left")
       .select($"vec_id", coalesce($"o", lit(0L)).as("occ"))
-      .localCheckpoint(true) // corpus-sized ids + a long, read twice
+      .pin // corpus-sized ids + a long, read twice
     val shape = graft.ops.ClassifierEval.jarqueBera(
       occ.withColumn("g", lit("all")), "g", "occ")
     val extremes = occ.agg(max($"occ").as("max_occ"),

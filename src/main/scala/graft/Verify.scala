@@ -1,4 +1,5 @@
 package graft
+import graft.core.Pin
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each registered query's result → parquet,
@@ -27,7 +28,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         errors(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}"
-      }
+      } finally Pin.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

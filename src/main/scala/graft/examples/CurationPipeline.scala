@@ -1,6 +1,8 @@
 package graft.examples
 
 import graft.{GraftSession, Tables}
+import graft.core.Pin
+import graft.core.Pin._
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -59,10 +61,12 @@ object CurationPipeline {
       .filter(col("entropy_nats") >= 1.5).select("doc_id")
     val gated = quality.join(blockHits, Seq("doc_id"))
       .join(entropyOk, Seq("doc_id"))
+      .pin // read three times: candidates, survivors, dedup
 
     // 3. near-dup dedup, longest-doc survivor
     val pairs = Dedup.minHashCandidates(gated, "doc_id", "text",
       threshold = 0.5).select(col("a_id"), col("b_id"))
+      .pin // read twice: survivors and components
     val keep = Components.bestPerCluster(
         gated.withColumn("n_chars", length(col("text"))),
         "doc_id", pairs, "n_chars")
@@ -105,13 +109,14 @@ object CurationPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = GraftSession.local()
-    val out = curate(spark, Tables.documents(spark, sfDir)).cache()
+    val out = curate(spark, Tables.documents(spark, sfDir)).pin
     val n = out.count()
     println(s"=== curated corpus: $n documents ===")
     out.groupBy("split", "lang")
       .agg(count(lit(1)).as("docs"), max(col("seq_id")).as("max_seq"))
       .orderBy(col("split"), col("lang"))
       .show(30, truncate = false)
+    Pin.release(spark)
     spark.stop()
   }
 }

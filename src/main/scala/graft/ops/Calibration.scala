@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Classifier CALIBRATION audit — the reliability diagram + expected
   * calibration error (ECE) readout (Guo et al. 2017): before a curation
@@ -56,7 +57,7 @@ object Calibration {
         sum(col("_cm")).as("_sc"),
         sum(col(labelCol).cast("long")).as("_sp"),
         sum(when(offCond, lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // ≤ bins rows; guard + total + readout read the cache
+      .pin // ≤ bins rows; guard + total + readout read the cache
     val offRange = perBin0.filter(col("_bad") > 0L).count()
     require(offRange == 0L,
       "calibration audit needs non-NULL confidences in [0, 1] and labels in " +
@@ -116,7 +117,7 @@ object Calibration {
         sum(when(col(labelCol).isNull ||
             (col(labelCol) =!= 0L && col(labelCol) =!= 1L), lit(1L))
           .otherwise(lit(0L))).as("_bad"))
-      .localCheckpoint(true) // grid-sized; guard + final window below
+      .pin // grid-sized; guard + final window below
     val offRange = g0.filter(col("_sm").isNull || col("_bad") > 0L)
       .limit(1).count()
     require(offRange == 0L,
@@ -172,7 +173,7 @@ object Calibration {
         sum(when(col(labelCol).isNull ||
             (col(labelCol) =!= 0L && col(labelCol) =!= 1L), lit(1L))
           .otherwise(lit(0L))).as("_bad"))
-      .persist() // grid-sized; guard + final window read the cache
+      .pin // grid-sized; guard + final window read the cache
     val offRange = g0.filter(col("_sm").isNull || col("_bad") > 0L).count()
     require(offRange == 0L,
       "average precision needs non-NULL scores and labels in {0, 1} — " +
@@ -242,7 +243,7 @@ object Calibration {
         sum(col("_cm")).as("_sc"),
         sum(col(labelCol).cast("long")).as("_sp"),
         sum(when(offCond, lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // (T × bins)-sized; guard + sweep read the cache
+      .pin // (T × bins)-sized; guard + sweep read the cache
     val offRange = perTBin0.filter(col("_bad") > 0L).count()
     require(offRange == 0L,
       "temperature sweep needs non-NULL scores and labels in {0, 1} — " +
@@ -316,7 +317,7 @@ object Calibration {
         sum(col("_cm")).as("_sc"),
         sum(col(labelCol).cast("long")).as("_sp"),
         sum(when(offCond, lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .localCheckpoint(true) // bins-sized; seeds four bounded passes
+      .pin // bins-sized; seeds four bounded passes
     val offRange = perBin.filter(col("_bad") > 0L).limit(1).count()
     require(offRange == 0L,
       "isotonic calibration needs non-NULL confidences in [0, 1] and labels " +
@@ -414,7 +415,7 @@ object Calibration {
         sum((col("_cm") - col("_y") * lit(1000000L)).cast(dec) *
           (col("_cm") - col("_y") * lit(1000000L))).as("_sq"),
         sum(when(offCond, lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .localCheckpoint(true) // bins-sized, read twice (totals + terms)
+      .pin // bins-sized, read twice (totals + terms)
     val offRange = perBin.filter(col("_bad") > 0L).limit(1).count()
     require(offRange == 0L,
       "brierDecomposition needs non-NULL confidences in [0, 1] and labels " +
@@ -500,7 +501,7 @@ object Calibration {
     val cum = grid
       .withColumn("_cd", sum(col("_cnt")).over(wDesc))
       .withColumn("_cp", sum(col("_pos")).over(wDesc))
-      .localCheckpoint(true) // grid-bounded, read twice
+      .pin // grid-bounded, read twice
     val offDomain = cum.filter(col("_bad") > 0L).limit(1).count()
     require(offDomain == 0L, "gainCurve needs non-NULL scores and 0/1 " +
       s"labels in '$confCol'/'$labelCol' — NULLs would silently shift " +
@@ -580,14 +581,14 @@ object Calibration {
       .withColumn("_pabove", coalesce(sum(col("_np")).over(wDn), lit(0L)))
       .withColumn("_v10", lit(2L) * col("_nbelow") + col("_nn"))
       .withColumn("_v01", lit(2L) * col("_pabove") + col("_np"))
-      .localCheckpoint(true) // grid-sized, read twice (totals + devs)
+      .pin // grid-sized, read twice (totals + devs)
     val offRange = placed.filter(col("_sm").isNull || col("_bad") > 0L)
       .limit(1).count()
     require(offRange == 0L,
       "delongAucCi needs non-NULL scores and labels in {0, 1}")
     val tot = placed.agg(sum(col("_np")).as("_n1"), sum(col("_nn")).as("_n0"),
       sum(col("_np").cast(dec) * col("_v10")).as("_a2"))
-      .localCheckpoint(true)
+      .pin
     require(tot.filter(col("_n1") >= 2L && col("_n0") >= 2L)
         .limit(1).count() == 1L,
       "delongAucCi needs >= 2 positives and >= 2 negatives — sample " +

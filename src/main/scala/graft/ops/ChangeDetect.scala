@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Sequential change detection over a time-bucketed metric — the
   * monitoring layer between q106's per-hour z-score (memoryless: each
@@ -71,17 +72,12 @@ object ChangeDetect {
     * corpus before the real one): bad values surface as a counted flag
     * on the buckets-sized grid and NULL buckets land in the null group
     * key, so the guard reads the PINNED grid, not the input. Returns
-    * the checkpointed partial grid with the guard column dropped;
+    * the pinned partial grid with the guard column dropped;
     * `badValue` lets [[sprt]] extend the check to off-domain outcomes.
     * Error type/message identical to the old freestanding guard. */
   private[graft] def guardedPartials(df: DataFrame, bucketCol: String,
       valueCol: String, msg: => String,
       badValue: Column => Column = _.isNull): DataFrame = {
-    // persist (not localCheckpoint): the guard's full count below is
-    // ONE action, so AQE runs the aggregate's stages inside one job
-    // set and the result lands in the cache for every later pass —
-    // an eager checkpoint would materialize stage-by-stage with a
-    // driver barrier per exchange (measured ~2× slower on q192/q214)
     val g = df.select(col(bucketCol).as("bucket"),
         round(col(valueCol).cast("double") * 1e6d).cast("decimal(38,0)")
           .as("_vm"),
@@ -89,7 +85,7 @@ object ChangeDetect {
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"), sum(col("_vm")).as("_sm"),
         sum(when(col("_badv"), lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // buckets-sized; guard + every pass below
+      .pin // buckets-sized; guard + every pass below
     val bad = g.filter(col("bucket").isNull || col("_bad") > 0L).count()
     require(bad == 0L, msg)
     g.drop("_bad")
@@ -585,7 +581,7 @@ object ChangeDetect {
       .agg(sum(col("n")).as("n_obs"),
         sum(col("_sm").cast("decimal(38,0)")).as("_sm"))
       .withColumn("bucket", col("bucket").cast("long"))
-      .localCheckpoint(true) // grid-sized, read twice (guard + run)
+      .pin // grid-sized, read twice (guard + run)
     val frac = g.filter(expr("_sm % 1000000 != 0") ||
       col("_sm") < 0 || expr("_sm div 1000000") > col("n_obs"))
       .limit(1).count()
@@ -701,7 +697,7 @@ object ChangeDetect {
   def runsTest(df: DataFrame, bucketCol: String,
       valueCol: String): DataFrame = {
     val grid = mergedMeanGrid(partialGrid(df, bucketCol, valueCol))
-      .localCheckpoint(true) // bounded grid, read twice
+      .pin // bounded grid, read twice
     val h = grid.count()
     require(h >= 2L, s"runsTest needs >= 2 buckets, got $h")
     val med = medianOf(grid.select(col("_mean").cast("double").as("_v")),

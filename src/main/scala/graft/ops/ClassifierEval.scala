@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Label-quality readouts over a (gold, predicted) pair column — the
   * ANNOTATION-AGREEMENT tier of the eval stack next to
@@ -33,12 +34,12 @@ object ClassifierEval {
     * NULL probe — shared by both readouts. r17: the probe reads the
     * PINNED cell frame (NULL labels are null group keys), not the
     * corpus (guide §1.2 — the freestanding guard was a full extra
-    * pass), and the frame comes back checkpointed so callers no longer
+    * pass), and the frame comes back pinned so callers no longer
     * re-pin it. */
   private def cells(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val c = df.groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("n"))
-      .persist() // cells²-sized; guard + caller reads hit the cache
+      .pin // cells²-sized; guard + caller reads hit the cache
     val nulls = c.filter(col("a").isNull || col("b").isNull).count()
     require(nulls == 0L,
       s"agreement stats need non-NULL '$aCol'/'$bCol' labels — a NULL " +
@@ -126,7 +127,7 @@ object ClassifierEval {
         col("a") === col("b"), "full")
       .select((coalesce(col("_na"), lit(0L)) +
         coalesce(col("_nb"), lit(0L))).as("_m"))
-      .localCheckpoint(true) // K rows, read twice (K + S)
+      .pin // K rows, read twice (K + S)
     val ks = m.agg(count(lit(1)).as("k_classes"))
     def d(c2: Column) = c2.cast("double")
     val s = tot.crossJoin(broadcast(ks))
@@ -181,7 +182,7 @@ object ClassifierEval {
       sum(when(!a && !b, 1L).otherwise(0L)).as("neither"),
       sum(when(col(aCol).isNull || col(bCol).isNull, lit(1L))
         .otherwise(lit(0L))).as("_badn"))
-      .persist() // 1 row; guard + readout read the cache
+      .pin // 1 row; guard + readout read the cache
     val nulls = cellsRow.filter(col("_badn") > 0L).count()
     require(nulls == 0L,
       s"mcnemar needs non-NULL boolean '$aCol'/'$bCol' gate outcomes")
@@ -226,7 +227,7 @@ object ClassifierEval {
       .reduce(_ unionAll _)
     val cells = melted.groupBy(col("_item"), col("_lab"))
       .agg(count(lit(1)).as("_nij"))
-      .localCheckpoint(true) // items×labels-sized, read twice
+      .pin // items×labels-sized, read twice
     // r17: a NULL rater label is a null _lab group key on the pinned
     // cell frame — the typed check reads it, not the melted corpus
     // (the freestanding guard was one more full pass on top of the
@@ -291,7 +292,7 @@ object ClassifierEval {
         col(confCol).isNull || col(labelCol).isNull ||
           col(confCol) < 0.0d || col(confCol) > 1.0d ||
           (col(labelCol) =!= 0L && col(labelCol) =!= 1L))
-      .localCheckpoint(true) // grid aggregate + eval count share one pass
+      .pin // grid aggregate + eval count share one pass
     val chk = scored.agg(
       sum(when(col("_badrow"), lit(1L)).otherwise(lit(0L))).as("_nb"),
       sum(when(col("_cal"), lit(1L)).otherwise(lit(0L))).as("_ncal"),
@@ -396,7 +397,7 @@ object ClassifierEval {
         sum(when(col(confCol).isNull ||
             col(confCol) < 0.0d || col(confCol) > 1.0d, lit(1L))
           .otherwise(lit(0L))).as("_bad"))
-      .persist() // ≤ bins rows; guard + the PSI join read the cache
+      .pin // ≤ bins rows; guard + the PSI join read the cache
     val nulls = g.filter(col("_bad") > 0L).count()
     require(nulls == 0L,
       s"scoreDrift needs non-NULL confidences in [0, 1] ($out side)")
@@ -623,46 +624,63 @@ object ClassifierEval {
     * two 1-row aggregates. Scores may be any reals; NULLs fail typed. */
   def ksDistance(predA: DataFrame, predB: DataFrame,
       confCol: String): DataFrame = {
+    val sup = ksSup("ksDistance", predA, predB, confCol,
+      " — the sup over an empty CDF is undefined")
+    def d(c: String) = col(c).cast("double")
+    sup.select(col("n_a"), col("n_b"),
+      round(d("_dm") / (d("n_a") * d("n_b")), 6).as("d"),
+      round(d("_at") / 1e6d, 6).as("d_at"))
+  }
+
+  /** The two-sample grid (_sm, _na, _nb) of [[ksDistance]], [[mannWhitney]],
+    * [[ksTest]] and [[cramerVonMises]]: per-side micro-score counts (the
+    * `op`-named guards read the pinned side), full-outer joined. */
+  private def twoSampleCells(op: String, predA: DataFrame, predB: DataFrame,
+      confCol: String, emptyNote: String = ""): DataFrame = {
     def grid(df: DataFrame, out: String) = {
-      // r17: null + non-empty guards read the pinned grid (one corpus
-      // pass; was three — guard scan, empty probe, grid aggregate)
       val g = df.withColumn("_sm",
           round(col(confCol).cast("double") * 1e6d).cast("long"))
         .groupBy(col("_sm")).agg(count(lit(1)).as(out))
-        .persist() // grid-sized; guards agg materializes the cache
+        .pin // grid-sized; guards agg materializes the cache
       val chk = g.agg(
         sum(when(col("_sm").isNull, lit(1L)).otherwise(lit(0L))).as("_nb"),
         count(lit(1)).as("_n")).head()
       require(chk.isNullAt(0) || chk.getLong(0) == 0L,
-        s"ksDistance needs non-NULL scores ($out side)")
-      require(chk.getLong(1) >= 1L,
-        s"ksDistance needs a non-empty $out side — the sup over an empty " +
-          "CDF is undefined")
+        s"$op needs non-NULL scores ($out side)")
+      require(chk.getLong(1) >= 1L, s"$op needs a non-empty $out side$emptyNote")
       g
     }
-    val cells = grid(predA, "_na").join(grid(predB, "_nb"), Seq("_sm"), "full")
+    grid(predA, "_na").join(grid(predB, "_nb"), Seq("_sm"), "full")
       .select(col("_sm"),
         coalesce(col("_na"), lit(0L)).as("_na"),
         coalesce(col("_nb"), lit(0L)).as("_nb"))
+  }
+
+  /** [[twoSampleCells]] plus the inclusive cumulative counts (_ca, _cb)
+    * in score order — one bounded-grid window, pinned. */
+  private def twoSampleCdf(op: String, predA: DataFrame, predB: DataFrame,
+      confCol: String, emptyNote: String = ""): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("_sm"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = cells
+    twoSampleCells(op, predA, predB, confCol, emptyNote)
       .withColumn("_ca", sum(col("_na")).over(w))
       .withColumn("_cb", sum(col("_nb")).over(w))
-      .localCheckpoint(true) // grid-sized, read twice (max + argmax)
+      .pin // grid-sized, read twice
+  }
+
+  /** The KS sup of [[ksDistance]] and [[ksTest]], one row (n_a, n_b, _dm,
+    * _at): the cross-multiplied sup numerator and its smallest score. */
+  private def ksSup(op: String, predA: DataFrame, predB: DataFrame,
+      confCol: String, emptyNote: String = ""): DataFrame = {
+    val cum = twoSampleCdf(op, predA, predB, confCol, emptyNote)
     val tot = cum.agg(max(col("_ca")).as("_ta"), max(col("_cb")).as("_tb"))
     val diffs = cum.crossJoin(broadcast(tot))
       .withColumn("_dn", abs(col("_ca") * col("_tb") - col("_cb") * col("_ta")))
     val dMax = diffs.agg(max(col("_dn")).as("_dm"))
     diffs.crossJoin(broadcast(dMax))
       .filter(col("_dn") === col("_dm"))
-      .agg(
-        first(col("_ta")).as("n_a"),
-        first(col("_tb")).as("n_b"),
-        round(first(col("_dm")).cast("double") /
-          (first(col("_ta")).cast("double") * first(col("_tb")).cast("double")),
-          6).as("d"),
-        round(min(col("_sm")).cast("double") / 1e6d, 6).as("d_at"))
+      .agg(first(col("_ta")).as("n_a"), first(col("_tb")).as("n_b"),
+        first(col("_dm")).as("_dm"), min(col("_sm")).as("_at"))
   }
 
   /** Per-GROUP two-sample KS — [[ksDistance]] partitioned by a group
@@ -699,7 +717,7 @@ object ClassifierEval {
     val cum = cells
       .withColumn("_ca", sum(col("_na")).over(w))
       .withColumn("_cb", sum(col("_nb")).over(w))
-      .localCheckpoint(true) // grid-sized, read twice (totals + argmax)
+      .pin // grid-sized, read twice (totals + argmax)
     val bad = cum.filter(col("_g").isNull || col("_sm").isNull ||
       col("_bad") > 0L).limit(1).count()
     require(bad == 0L,
@@ -748,27 +766,8 @@ object ClassifierEval {
     * aggregate — never a data-sized sort. */
   def mannWhitney(predA: DataFrame, predB: DataFrame,
       confCol: String): DataFrame = {
-    def grid(df: DataFrame, out: String) = {
-      // r17: null + non-empty guards read the pinned grid (one corpus
-      // pass; was three — guard scan, empty probe, grid aggregate)
-      val g = df.withColumn("_sm",
-          round(col(confCol).cast("double") * 1e6d).cast("long"))
-        .groupBy(col("_sm")).agg(count(lit(1)).as(out))
-        .persist() // grid-sized; guards agg materializes the cache
-      val chk = g.agg(
-        sum(when(col("_sm").isNull, lit(1L)).otherwise(lit(0L))).as("_nb"),
-        count(lit(1)).as("_n")).head()
-      require(chk.isNullAt(0) || chk.getLong(0) == 0L,
-        s"mannWhitney needs non-NULL scores ($out side)")
-      require(chk.getLong(1) >= 1L,
-        s"mannWhitney needs a non-empty $out side")
-      g
-    }
     val dec = "decimal(38,0)"
-    val cells = grid(predA, "_na").join(grid(predB, "_nb"), Seq("_sm"), "full")
-      .select(col("_sm"),
-        coalesce(col("_na"), lit(0L)).as("_na"),
-        coalesce(col("_nb"), lit(0L)).as("_nb"))
+    val cells = twoSampleCells("mannWhitney", predA, predB, confCol)
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("_sm"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val sums = cells
@@ -820,9 +819,7 @@ object ClassifierEval {
     val dec = "decimal(38,0)"
     val joined = pred.select(col(idCol), col(confCol))
       .join(labels.select(col(idCol), col(labelCol)), Seq(idCol))
-    // r17: guard fused into the score-grid aggregate and the grid
-    // PINNED (guide §1.2) — one corpus pass; the old shape paid three
-    // (guard scan + unpinned grid recomputed for totals and cumsums)
+    // guard fused into the pinned score-grid aggregate (guide §1.2)
     val g = joined
       .withColumn("_sm", round(col(confCol).cast("double") * 1e6d).cast("long"))
       .groupBy(col("_sm"))
@@ -831,7 +828,7 @@ object ClassifierEval {
         sum(when(col(labelCol).isNull ||
             (col(labelCol) =!= 0L && col(labelCol) =!= 1L), lit(1L))
           .otherwise(lit(0L))).as("_bad"))
-      .persist() // grid-sized; guard + totals + sweep read the cache
+      .pin // grid-sized; guard + totals + sweep read the cache
     val offRange = g.filter(col("_sm").isNull || col("_bad") > 0L).count()
     require(offRange == 0L,
       "mccSweep needs non-NULL scores and labels in {0, 1}")
@@ -895,7 +892,7 @@ object ClassifierEval {
       .withColumn("_bkt", pmod(
         conv(substring(col("_md5"), 1, 8), 16, 10).cast("long"),
         lit(buckets.toLong)))
-      .localCheckpoint(true) // read 2× per signal
+      .pin // read 2× per signal
     val labels = base.select(col(idCol), col(labelCol))
     val wIds = org.apache.spark.sql.expressions.Window
       .partitionBy(col("_bkt")).orderBy(col("_md5"))
@@ -911,7 +908,8 @@ object ClassifierEval {
       (col("_bkt") +: row_number().over(wVals).as("_pos") +:
         scoreCols.map(col)).toIndexedSeq: _*)
     val permutedAll = slots.join(vals, Seq("_bkt", "_pos"))
-      .localCheckpoint(true) // corpus-rows × few columns; read per signal
+      .pin // corpus-rows × few columns; read per signal
+    permutedAll.count() // fills both pins before the concurrent reads
     // per-signal AUC pairs are independent — overlap their grid jobs
     // (guide §2.6); .par preserves result order, so the union below is
     // deterministic
@@ -956,13 +954,10 @@ object ClassifierEval {
     val g = df.select(col(groupCol).cast("string").as("_g"),
         round(col(scoreCol).cast("double") * 1e6d).cast("long").as("_sm"))
       .groupBy(col("_g"), col("_sm")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true) // grids, read by both pair sides
-    // r17: guard + group enumeration fused into ONE groups-sized collect
-    // (was two separate driver barriers: a guarded grid count plus a
-    // distinct().count()). The group list is source-count-sized by
-    // contract, so the driver holds it and the pair grid below becomes a
-    // broadcast local relation — the old grid-distinct Exchange and its
-    // pair self-join shuffle disappear from the plan.
+      .pin // grids, read by both pair sides
+    // guard + group enumeration fused into ONE groups-sized collect; the
+    // group list is source-count-sized by contract, so the pair grid
+    // below is a broadcast local relation, not a shuffled self-join
     val perG = g.groupBy(col("_g")).agg(
         sum(when(col("_sm").isNull, lit(1L)).otherwise(lit(0L))).as("_bad"))
       .collect()
@@ -1172,7 +1167,7 @@ object ClassifierEval {
       sum(ym.cast(dec) * ym).as("_syy"),
       sum(when(col(yCol).isNull || col(xCol).isNull, lit(1L))
         .otherwise(lit(0L))).as("_badn"))
-      .persist() // 1 row; guard + readout read the cache
+      .pin // 1 row; guard + readout read the cache
     val nulls = m.filter(col("_badn") > 0L).count()
     require(nulls == 0L,
       s"cupedLift needs non-NULL '$armCol'/'$yCol'/'$xCol' values")
@@ -1244,7 +1239,7 @@ object ClassifierEval {
           col(c).isNull || (col(c) =!= 0L && col(c) =!= 1L)).reduce(_ || _),
         lit(1L)).otherwise(lit(0L))).as("_badn"))
     val row = df.agg(aggs.head, aggs.drop(1): _*)
-      .persist() // 1 row; guard + readout read the cache
+      .pin // 1 row; guard + readout read the cache
     val offDomain = row.filter(col("_badn") > 0L).count()
     require(offDomain == 0L,
       s"cochranQ needs 0/1 gate values in ${gateCols.mkString(", ")} — " +
@@ -1302,7 +1297,7 @@ object ClassifierEval {
         count(lit(1)).as("n"),
         sum(when(col(exposureCol).isNull || col(outcomeCol).isNull,
           lit(1L)).otherwise(lit(0L))).as("_badn"))
-      .localCheckpoint(true) // |strata|-bounded, read twice
+      .pin // |strata|-bounded, read twice
     val nulls = cellsK.filter(col("stratum").isNull || col("_badn") > 0L)
       .limit(1).count()
     require(nulls == 0L, "mantelHaenszel needs non-NULL " +
@@ -1382,7 +1377,7 @@ object ClassifierEval {
         round(col(scoreCol).cast("double") * 1e6d).cast("long").as("_sm"),
         (col(cohortCol).isNull || col(scoreCol).isNull ||
           col(idCol).isNull).as("_badrow"))
-      .localCheckpoint(true) // read 2×: observed + replicates
+      .pin // read 2×: observed + replicates
     val obs = base.groupBy(col("g")).agg(
       coalesce(sum(when(col("_in"), col("_sm"))), lit(0L)).as("_soa"),
       coalesce(sum(when(col("_in"), lit(1L)).otherwise(lit(0L))), lit(0L))
@@ -1391,7 +1386,7 @@ object ClassifierEval {
       coalesce(sum(when(!col("_in"), lit(1L)).otherwise(lit(0L))), lit(0L))
         .as("_cob"),
       sum(when(col("_badrow"), lit(1L)).otherwise(lit(0L))).as("_badn"))
-      .localCheckpoint(true) // |groups|-bounded, read 4×
+      .pin // |groups|-bounded, read 4×
     val nulls = obs.filter(col("g").isNull || col("_badn") > 0L)
       .limit(1).count()
     require(nulls == 0L, "permutationDriftBh needs non-NULL " +
@@ -1501,7 +1496,7 @@ object ClassifierEval {
           col(c).isNull || (col(c) =!= 0L && col(c) =!= 1L)).reduce(_ || _),
         lit(1L)).otherwise(lit(0L))).as("_badn"))
     val row = df.agg(aggs.head, aggs.drop(1): _*)
-      .persist() // 1 row; guard + readout read the cache
+      .pin // 1 row; guard + readout read the cache
     val offDomain = row.filter(col("_badn") > 0L).count()
     require(offDomain == 0L,
       s"cronbachAlpha needs 0/1 gate values in ${gateCols.mkString(", ")} — " +
@@ -1572,7 +1567,7 @@ object ClassifierEval {
         side("b", col(armCol) === lit(armB))
     } :+ sum(when(covariates.map(col(_).isNull).reduce(_ || _), lit(1L))
       .otherwise(lit(0L))).as("_badn")
-    val row = df.agg(aggs.head, aggs.drop(1): _*).localCheckpoint(true)
+    val row = df.agg(aggs.head, aggs.drop(1): _*).pin
     require(row.filter(col("_badn") > 0L).isEmpty,
       s"covariateBalance needs non-NULL '$armCol' and " +
         s"covariates ${covariates.mkString(", ")}")
@@ -1648,7 +1643,7 @@ object ClassifierEval {
     val aggs = side("a", col(armCol) === lit(arms(0))) ++
       side("b", col(armCol) === lit(arms(1))) :+
       sum(when(col(yCol).isNull, lit(1L)).otherwise(lit(0L))).as("_badn")
-    val row = df.agg(aggs.head, aggs.drop(1): _*).localCheckpoint(true)
+    val row = df.agg(aggs.head, aggs.drop(1): _*).pin
     require(row.filter(col("_badn") > 0L).isEmpty,
       s"powerAnalysis needs non-NULL '$armCol'/'$yCol'")
     require(row.filter(col("_na") < 2L || col("_nb") < 2L).isEmpty,
@@ -1693,41 +1688,8 @@ object ClassifierEval {
     * window, then a 1-row × 100 literal explode — never a join. */
   def ksTest(predA: DataFrame, predB: DataFrame,
       confCol: String): DataFrame = {
-    def grid(df: DataFrame, out: String) = {
-      // r17: null + non-empty guards read the pinned grid (one corpus
-      // pass; was three — guard scan, empty probe, grid aggregate)
-      val g = df.withColumn("_sm",
-          round(col(confCol).cast("double") * 1e6d).cast("long"))
-        .groupBy(col("_sm")).agg(count(lit(1)).as(out))
-        .persist() // grid-sized; guards agg materializes the cache
-      val chk = g.agg(
-        sum(when(col("_sm").isNull, lit(1L)).otherwise(lit(0L))).as("_nb"),
-        count(lit(1)).as("_n")).head()
-      require(chk.isNullAt(0) || chk.getLong(0) == 0L,
-        s"ksTest needs non-NULL scores ($out side)")
-      require(chk.getLong(1) >= 1L,
-        s"ksTest needs a non-empty $out side")
-      g
-    }
-    val cells = grid(predA, "_na").join(grid(predB, "_nb"), Seq("_sm"), "full")
-      .select(col("_sm"),
-        coalesce(col("_na"), lit(0L)).as("_na"),
-        coalesce(col("_nb"), lit(0L)).as("_nb"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("_sm"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = cells
-      .withColumn("_ca", sum(col("_na")).over(w))
-      .withColumn("_cb", sum(col("_nb")).over(w))
-      .localCheckpoint(true) // grid-sized, read twice (max + argmax)
-    val tot = cum.agg(max(col("_ca")).as("_ta"), max(col("_cb")).as("_tb"))
-    val diffs = cum.crossJoin(broadcast(tot))
-      .withColumn("_dn", abs(col("_ca") * col("_tb") - col("_cb") * col("_ta")))
-    val dMax = diffs.agg(max(col("_dn")).as("_dm"))
-    val row = diffs.crossJoin(broadcast(dMax))
-      .filter(col("_dn") === col("_dm"))
-      .agg(first(col("_ta")).as("n_a"), first(col("_tb")).as("n_b"),
-        first(col("_dm")).as("_dm"), min(col("_sm")).as("_at"))
-      .localCheckpoint(true) // 1 row, read by the series explode
+    val row = ksSup("ksTest", predA, predB, confCol)
+      .pin // 1 row, read by the series explode
     def d(c: String) = col(c).cast("double")
     val lam = sqrt(d("n_a") * d("n_b") / (d("n_a") + d("n_b"))) *
       (d("_dm") / (d("n_a") * d("n_b")))
@@ -1783,7 +1745,7 @@ object ClassifierEval {
       .groupBy(col(groupCol).as("group"), col("_bin"))
       .agg(count(lit(1)).as("_c"),
         sum(when(offCond, lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .localCheckpoint(true) // (groups x bins)-sized, read twice
+      .pin // (groups x bins)-sized, read twice
     val bad = cells.filter(col("group").isNull || col("_bad") > 0L)
       .limit(1).count()
     require(bad == 0L, s"hellingerByGroup needs non-NULL '$groupCol' " +
@@ -1825,32 +1787,7 @@ object ClassifierEval {
   def cramerVonMises(predA: DataFrame, predB: DataFrame,
       confCol: String): DataFrame = {
     val dec = "decimal(38,0)"
-    def grid(df: DataFrame, out: String) = {
-      // r17: null + non-empty guards read the pinned grid (one corpus
-      // pass; was three — guard scan, empty probe, grid aggregate)
-      val g = df.withColumn("_sm",
-          round(col(confCol).cast("double") * 1e6d).cast("long"))
-        .groupBy(col("_sm")).agg(count(lit(1)).as(out))
-        .persist() // grid-sized; guards agg materializes the cache
-      val chk = g.agg(
-        sum(when(col("_sm").isNull, lit(1L)).otherwise(lit(0L))).as("_nb"),
-        count(lit(1)).as("_n")).head()
-      require(chk.isNullAt(0) || chk.getLong(0) == 0L,
-        s"cramerVonMises needs non-NULL scores ($out side)")
-      require(chk.getLong(1) >= 1L,
-        s"cramerVonMises needs a non-empty $out side")
-      g
-    }
-    val cells = grid(predA, "_na").join(grid(predB, "_nb"), Seq("_sm"), "full")
-      .select(col("_sm"),
-        coalesce(col("_na"), lit(0L)).as("_na"),
-        coalesce(col("_nb"), lit(0L)).as("_nb"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("_sm"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = cells
-      .withColumn("_ca", sum(col("_na")).over(w))
-      .withColumn("_cb", sum(col("_nb")).over(w))
-      .localCheckpoint(true) // grid-sized, read twice (totals + terms)
+    val cum = twoSampleCdf("cramerVonMises", predA, predB, confCol)
     val tot = cum.agg(max(col("_ca")).as("_ta"), max(col("_cb")).as("_tb"))
     def d(c: String) = col(c).cast("double")
     val agg = cum.crossJoin(broadcast(tot))
@@ -1899,7 +1836,7 @@ object ClassifierEval {
     val gg = df.select(col(groupCol).as("_g"),
         round(col(confCol).cast("double") * 1e6d).cast("long").as("_sm"))
       .groupBy(col("_g"), col("_sm")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true) // grid-bounded, read three times
+      .pin // grid-bounded, read three times
     val chk = gg.agg(
       sum(when(col("_g").isNull || col("_sm").isNull, lit(1L))
         .otherwise(lit(0L))).as("_nb"),
@@ -1927,7 +1864,7 @@ object ClassifierEval {
         col("_n").cast("double") * 1e9d).cast("long"))
     val ties = glob.agg(
       sum(col("_t").cast(dec) * col("_t") * col("_t") -
-        col("_t").cast(dec)).as("_tc")).localCheckpoint(true)
+        col("_t").cast(dec)).as("_tc")).pin
     def d(c: String) = col(c).cast("double")
     per.agg(sum(col("_n")).as("n"), count(lit(1)).as("k_groups"),
         sum(col("_q").cast(dec)).as("_Q"), sum(col("_f")).as("_F"))
@@ -1979,7 +1916,7 @@ object ClassifierEval {
     val gg = df.select(col(groupCol).as("_g"),
         round(col(confCol).cast("double") * 1e6d).cast("long").as("_sm"))
       .groupBy(col("_g"), col("_sm")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true) // grid-bounded, read three times
+      .pin // grid-bounded, read three times
     val nulls = gg.filter(col("_g").isNull || col("_sm").isNull)
       .limit(1).count()
     require(nulls == 0L,
@@ -2015,7 +1952,7 @@ object ClassifierEval {
         "cast((_sqt - _rt) / cast(n as decimal(38,0)) as decimal(38,0))"))
       .withColumn("_ft", round(col("_rt").cast("double") /
         col("n").cast("double") * 1e9d).cast("long"))
-      .localCheckpoint(true) // 1 row, read twice (guard + output)
+      .pin // 1 row, read twice (guard + output)
     require(agg.filter(col("n") > col("k_groups")).limit(1).count() == 1L,
       "brownForsythe needs N > k rows for a within-group dof")
     def d(c: String) = col(c).cast("double")
@@ -2072,7 +2009,7 @@ object ClassifierEval {
       sum(col("_w").cast(dec) * col("_n")).as("_swn"),
       sum(col("_w").cast(dec) * col("_w") * col("_n")).as("_swwn"),
       sum(col("_bad")).as("_badn"))
-      .persist() // 1 row; guard + readout read the cache
+      .pin // 1 row; guard + readout read the cache
     val bad = agg.filter(col("_badn") > 0L).count()
     require(bad == 0L, "cochranArmitage needs non-NULL buckets and " +
       s"0/1 labels in '$bucketCol'/'$labelCol'")
@@ -2117,7 +2054,7 @@ object ClassifierEval {
       .groupBy(col("group"))
       .agg(count(lit(1)).as("n"), sum(col("_y")).as("r"),
         sum(when(col("_badrow"), lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // groups-sized; guard + readout read the cache
+      .pin // groups-sized; guard + readout read the cache
     val bad = g.filter(col("group").isNull || col("_bad") > 0L).count()
     require(bad == 0L, s"wilsonInterval needs non-NULL '$groupCol' and " +
       s"0/1 labels in '$labelCol'")
@@ -2175,7 +2112,7 @@ object ClassifierEval {
         sum(col("_x").cast(dec) * col("_y")).as("_sxy"),
         sum(col("_x").cast(dec) * col("_z")).as("_sxz"),
         sum(col("_y").cast(dec) * col("_z")).as("_syz"))
-      .localCheckpoint(true) // 1 row, read twice (guard + output)
+      .pin // 1 row, read twice (guard + output)
     val bad = agg.filter(col("_badn") > 0L).limit(1).count()
     require(bad == 0L,
       s"partialCorrelation needs non-NULL '$xCol'/'$yCol'/'$zCol'")
@@ -2244,7 +2181,7 @@ object ClassifierEval {
       .select(col("g"), col("n"),
         round(col("_s1").cast("double") / col("n").cast("double"))
           .cast("long").as("_m"), col("_bad"))
-      .persist() // groups-sized; guard + broadcast join read the cache
+      .pin // groups-sized; guard + broadcast join read the cache
     val nulls = means.filter(col("g").isNull || col("_bad") > 0L).count()
     require(nulls == 0L,
       s"jarqueBera needs non-NULL '$groupCol' and '$valueCol'")
@@ -2303,10 +2240,10 @@ object ClassifierEval {
       s"kendallW needs >= 2 score columns, got ${scoreCols.size}")
     // r16: pin the projected input ONCE — the guard, the m per-signal
     // grids and the two final aggregates all re-evaluated the caller's
-    // join lineage (≈ 7 passes); one narrow checkpoint feeds them all
+    // join lineage (≈ 7 passes); one narrow pin feeds them all
     val base = df
       .select((col(idCol) +: scoreCols.map(col)).toIndexedSeq: _*)
-      .localCheckpoint(true)
+      .pin
     val nulls = base.filter(scoreCols.map(c => col(c).isNull)
       .foldLeft(col(idCol).isNull)(_ || _)).limit(1).count()
     require(nulls == 0L, "kendallW needs non-NULL ids and scores")
@@ -2401,7 +2338,7 @@ object ClassifierEval {
       .agg(count(lit(1)).as("_nic"),
         sum(when(col(raterCol).isNull, lit(1L)).otherwise(lit(0L)))
           .as("_badr"))
-      .localCheckpoint(true) // items×values-sized; guard + 2 reads below
+      .pin // items×values-sized; guard + 2 reads below
     val nulls = iv0.filter(col("_i").isNull || col("_v").isNull ||
       col("_badr") > 0L).limit(1).count()
     require(nulls == 0L,
@@ -2411,7 +2348,7 @@ object ClassifierEval {
       // Σ_{c<k} n_ic·n_ik = (m_i² − Σ n_ic²) / 2, exact integers
       ((sum(col("_nic").cast(dec) * col("_nic")))).as("_sq"))
       .filter(col("_mi") >= 2L)
-      .localCheckpoint(true) // items-sized, read 3×
+      .pin // items-sized, read 3×
     val pairable = iv.join(mi.select(col("_i")), Seq("_i"))
     val nTot = mi.agg(coalesce(sum(col("_mi")), lit(0L)).as("_n"),
       count(lit(1)).as("n_items"))
@@ -2470,7 +2407,7 @@ object ClassifierEval {
         .rowsBetween(
           org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
       val cum = g.withColumn("_cum", sum(col("_c")).over(w))
-        .localCheckpoint(true) // grid-sized, read 9×
+        .pin // grid-sized, read 9×
       val nRow = cum.agg(coalesce(max(col("_cum")), lit(0L))).head()
       (cum, nRow.getLong(0))
     }
@@ -2533,11 +2470,7 @@ object ClassifierEval {
       .select(col("n").as("n_a"), col("_mean").as("_ma"), col("_var").as("_va"))
     val b = stats.filter(col(armCol) === armB)
       .select(col("n").as("n_b"), col("_mean").as("_mb"), col("_var").as("_vb"))
-    // r17: pin the ≤1-row arm stats — the guard below used to run the
-    // corpus aggregate once and the readout ran it AGAIN (two full input
-    // passes per call); now the single pass materializes here and both
-    // the guard and the readout re-read one pinned row
-    val j = a.crossJoin(b).persist()
+    val j = a.crossJoin(b).pin // ≤ 1 row: the guard and readout re-read it
     val cnt = j.count()
     require(cnt == 1L, s"effectSizes needs both arms '$armA' and '$armB'")
     val nA = col("n_a").cast("double"); val nB = col("n_b").cast("double")

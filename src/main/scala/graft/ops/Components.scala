@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pin
+import graft.core.Pin._
 
 /** Connected components over near-duplicate candidate pairs — the step
   * that turns pairwise matches (MinHash/SimHash/embedding) into dedup
@@ -17,8 +19,8 @@ import org.apache.spark.sql.functions._
   * pathological near-dup shape: a drifting document edited 1000 times)
   * converges in ~12 rounds instead of 1000.
   *
-  * Per-round lineage is cut with localCheckpoint (executor-memory) by
-  * default; pass `checkpointDir` to cut with RELIABLE checkpoints on
+  * Per-round lineage is cut with [[graft.core.Pin.cut]] (executor-memory)
+  * by default; pass `checkpointDir` to cut with RELIABLE checkpoints on
   * durable storage instead — the cluster-scale option: a lost executor
   * replays from the checkpoint file rather than recomputing the whole
   * iteration chain (localCheckpoint blocks are lost with their executor).
@@ -29,16 +31,15 @@ object Components {
     * component = min id reachable through the pair graph.
     *
     * @param checkpointDir durable checkpoint directory (HDFS/S3/local
-    *   path) for cluster-scale runs; None = localCheckpoint.
+    *   path) for cluster-scale runs; None = [[graft.core.Pin.cut]].
     * @throws java.lang.IllegalStateException when maxIter rounds did not converge —
     *   a silent partial result would under-deduplicate. With pointer
     *   doubling the default 50 rounds covers diameters ≈ 2⁵⁰. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+    def cut(df: DataFrame, eager: Boolean = true): DataFrame =
+      if (checkpointDir.isDefined) df.checkpoint(eager) else Pin.cut(df, eager)
     val edges = cut(pairs
       .select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
@@ -67,26 +68,22 @@ object Components {
       // (labels start as ids and min() only selects existing ones), so the
       // inner self-join is total; labels are non-increasing, so
       // shortcutting preserves correctness.
-      // r16: the round's cut is LAZY for the plain rounds — the `changed`
-      // count right below is the single first action, so it materializes
-      // the cache in ITS job and the separate eager-checkpoint barrier
-      // disappears (one job per round instead of two). The pointer-
-      // doubling rounds keep an EAGER cut before the self-join: its two
-      // references would otherwise race-compute the same partitions.
-      def cutLazy(df: DataFrame): DataFrame =
-        if (checkpointDir.isDefined) df.checkpoint(eager = false)
-        else df.localCheckpoint(eager = false)
+      // The round's cut is LAZY — the `changed` count right below is its
+      // first action, one job per round. The pointer-doubling rounds keep
+      // an EAGER cut before the self-join: its two references would
+      // otherwise race-compute the same partitions.
       val next =
-        if (iter < 2) cutLazy(minRoundPlan)
+        if (iter < 2) cut(minRoundPlan, eager = false)
         else {
           // materialized before the self-join — referencing the plan twice
           // without the cut would run the union+aggregate pipeline twice
           val mr = cut(minRoundPlan)
-          cutLazy(mr
+          cut(mr
             .join(
               mr.select(col("id").as("component"), col("component").as("_c2")),
               Seq("component"))
-            .select(col("id"), col("_c2").as("component"), col("old")))
+            .select(col("id"), col("_c2").as("component"), col("old")),
+            eager = false)
         }
       val changed = next.filter(col("component") =!= col("old")).count()
       labels = next.select(col("id"), col("component"))
@@ -215,7 +212,7 @@ object Components {
     val adj = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
       .distinct()
-      .localCheckpoint(true)
+      .pin
     val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // N is a bounded scalar (node count), same driver footprint as
     // Ivf.train's nc-row init. An empty edge list means no nodes: return
@@ -242,7 +239,7 @@ object Components {
       // lineage grows one join+agg per round: a shallow run (the common
       // iters=3) stays fully lazy — one plan, no forced materialization —
       // while deep runs cut lineage every 5 rounds like connectedComponents
-      if (it % 5 == 0 && it < iters) ranks = ranks.localCheckpoint(true)
+      if (it % 5 == 0 && it < iters) ranks = Pin.cut(ranks, eager = true)
     }
     ranks.join(deg, col("id") === col("src"))
       .select(col("id"), col("r").as("pr_micro"), col("deg"))
@@ -265,7 +262,7 @@ object Components {
         greatest(col("a_id"), col("b_id")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(true)
+      .pin
     val tri = e.select(col("a"), col("b").as("m"))
       .join(e.select(col("a").as("m"), col("b").as("c")), "m")
       .select(col("a"), col("c"))
@@ -313,7 +310,7 @@ object Components {
         greatest(col("a_id"), col("b_id")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(true)
+      .pin
     val deg = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     val withDeg = e
@@ -368,29 +365,28 @@ object Components {
     * remaining edges + two anti joins against the sub-k node set (both
     * equi-joins on node id; the sub-k set shrinks rapidly and is
     * broadcast-sized after the first round), lineage cut per round with
-    * localCheckpoint — edges-sized state, never corpus-sized. */
+    * [[graft.core.Pin.cut]] — edges-sized state, never corpus-sized. */
   def kCore(pairs: DataFrame, k: Int, maxRounds: Int = 32): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxRounds >= 1 && maxRounds <= 256,
       s"maxRounds must be in [1, 256], got $maxRounds")
-    var e = pairs
+    var e = Pin.cut(pairs
       .select(least(col("a_id"), col("b_id")).as("a"),
         greatest(col("a_id"), col("b_id")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
       val deg = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("deg"))
-      val bad = deg.filter(col("deg") < k.toLong).select(col("id"))
-        .localCheckpoint(true) // referenced by BOTH anti joins
+      val bad = Pin.cut(deg.filter(col("deg") < k.toLong).select(col("id")),
+        eager = true) // referenced by BOTH anti joins
       if (bad.isEmpty) converged = true
-      else e = e
+      else e = Pin.cut(e
         .join(bad.withColumnRenamed("id", "a"), Seq("a"), "left_anti")
-        .join(bad.withColumnRenamed("id", "b"), Seq("b"), "left_anti")
-        .localCheckpoint(true)
+        .join(bad.withColumnRenamed("id", "b"), Seq("b"), "left_anti"),
+        eager = true)
       round += 1
     }
     if (!converged)
@@ -464,7 +460,7 @@ object Components {
         greatest(col("a_id"), col("b_id")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(true)
+      .pin
     val m = e.count()
     require(m > 0L, "modularity needs a non-empty edge set — Q is 0/0 " +
       "on a graph with no edges")
@@ -477,14 +473,14 @@ object Components {
       .select(col(commCol).as("_c"), col(idCol).isNull.as("_badid"))
       .groupBy(col("_c")).agg(count(lit(1)).as("n_nodes"),
         sum(when(col("_badid"), lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // |communities|-bounded; guard + join read the cache
+      .pin // |communities|-bounded; guard + join read the cache
     val nullLab = nNodes.filter(col("_c").isNull || col("_bad") > 0L)
       .count()
     require(nullLab == 0L, s"modularity needs non-NULL '$idCol'/'$commCol'")
     val j = e
       .join(lab.select(col("_id").as("a"), col("_c").as("_ca")), Seq("a"), "left")
       .join(lab.select(col("_id").as("b"), col("_c").as("_cb")), Seq("b"), "left")
-      .localCheckpoint(true) // read 3×: probe, degrees, intra-edges
+      .pin // read 3×: probe, degrees, intra-edges
     val unlabeled = j.filter(col("_ca").isNull || col("_cb").isNull)
       .limit(1).count()
     require(unlabeled == 0L, "modularity: an edge endpoint has no " +
@@ -507,7 +503,7 @@ object Components {
           col("d_sum").cast("decimal(38,0)") *
           col("d_sum").cast("decimal(38,0)")).cast("double") /
           (lit(4.0d) * lit(m).cast("double") * lit(m).cast("double")), 6))
-      .localCheckpoint(true) // |communities|-bounded, read twice
+      .pin // |communities|-bounded, read twice
     val qTot = per
       .select(round(col("q_term") * 1e9d).cast("long").as("_qn"))
       .agg(coalesce(sum(col("_qn")), lit(0L)).as("_qt"))
@@ -554,7 +550,7 @@ object Components {
         (col(hubCol).isNull || col(authCol).isNull).as("_badrow"))
       .groupBy(col("hub"), col("auth"))
       .agg(max(col("_badrow")).as("_bad"))
-      .localCheckpoint(true)
+      .pin
     val nulls = e0.filter(col("_bad")).limit(1).count()
     require(nulls == 0L, s"hitsBipartite needs non-NULL '$hubCol'/'$authCol'")
     val e = e0.drop("_bad")
@@ -562,22 +558,18 @@ object Components {
       return e.select(lit("hub").as("side"), col("hub").as("id"),
         lit(0L).as("score_ppb"), lit(0L).as("deg"))
     val hubDeg = e.groupBy(col("hub")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
+      .pin
     val authDeg = e.groupBy(col("auth")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
+      .pin
     val nAuth = authDeg.agg(count(lit(1)).as("_n")).head().getLong(0)
     // uniform integer start on the authority side: a₀ = M div |auth|
     var a = authDeg.select(col("auth"), expr(s"${M}L div ${nAuth}L").as("a"))
     var h: DataFrame = null
     var it = 0
     def rescale(raw: DataFrame, keyCol: String, out: String): DataFrame = {
-      // r16: ONE job per half-step — the lazy pin materializes inside the
-      // total aggregate's job, and the total (a single scalar either way)
-      // comes back as a driver literal instead of a broadcast join, so
-      // the old eager-checkpoint + broadcast-build pair of barriers is
-      // gone. Floor-div semantics (incl. the div-by-zero → NULL edge on
-      // an all-zero round) are byte-identical.
-      val r = raw.localCheckpoint(eager = false) // node-sized; read 2×
+      // one job per half-step: the lazy cut fills inside the total's
+      // job, and the total comes back as a driver literal
+      val r = Pin.cut(raw, eager = false) // node-sized; read 2×
       val totRow = r.agg(sum(col("_s")).as("_t")).head()
       // empty input → NULL sum; 0 divisor reproduces the old NULL-score
       // behavior of `div _t` with a NULL/zero total

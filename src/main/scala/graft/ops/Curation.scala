@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Corpus-curation operators a production training-data pipeline runs after
   * dedup and before sampling: leakage-safe splitting, per-domain caps, and
@@ -118,15 +119,13 @@ object Curation {
       gates.zipWithIndex.map { case ((_, pass), i) =>
         when(!pass, lit(i.toLong))
       } :+ lit(gates.size.toLong): _*)
-    // r17: the NULL-gate guard is fused into the one funnel aggregate
-    // (guide §1.2) — a row with any NULL gate lands on sentinel stage
-    // −1 of the (gates+2)-sized pinned counts frame instead of being
-    // hunted by a second full corpus pass
+    // NULL-gate guard fused into the funnel aggregate (guide §1.2): a row
+    // with any NULL gate lands on sentinel stage −1 of the pinned counts
     val anyNull = gates.map(_._2.isNull).reduce(_ || _)
     val counts = df.select(
         when(anyNull, lit(-1L)).otherwise(firstReject).as("stage"))
       .groupBy(col("stage")).agg(count(lit(1)).as("_rej"))
-      .persist() // bounded (≤ gates+2 rows); guard + chain read the cache
+      .pin // bounded (≤ gates+2 rows); guard + chain read the cache
     val nulls = counts.filter(col("stage") === -1L).count()
     require(nulls == 0L,
       "filterFunnel gates must be non-NULL booleans — a NULL would " +
@@ -262,7 +261,7 @@ object Curation {
     // (cell × value) frame — the typed check reads it, not the corpus
     val vals = df.groupBy((groupCols ++ cellCols :+ sensitiveCol).map(col): _*)
       .agg(count(lit(1)).as("_nv"))
-      .persist() // (cells × values)-sized; guard + both uses
+      .pin // (cells × values)-sized; guard + both uses
     val nulls = vals.filter(col(sensitiveCol).isNull).count()
     require(nulls == 0L, s"lDiversityProfile needs non-NULL " +
       s"'$sensitiveCol' values — a NULL is not a diversity class")
@@ -323,7 +322,7 @@ object Curation {
     val cellKey = groupCols ++ cellCols
     val vals = df.groupBy((cellKey :+ sensitiveCol).map(col): _*)
       .agg(count(lit(1)).as("_ncv"))
-      .localCheckpoint(true) // (cells × values)-sized; seeds all frames
+      .pin // (cells × values)-sized; seeds all frames
     // r17: a NULL sensitive value is a null group key on the pinned
     // frame — the typed check reads it, not the corpus
     val nulls = vals.filter(col(sensitiveCol).isNull).limit(1).count()
@@ -372,7 +371,7 @@ object Curation {
     * hidden).
     *
     * Plan: the corpus collapses ONCE to distinct (doc, word) rows
-    * (checkpointed); each of the k rounds is a words-sized anti-join +
+    * (pinned); each of the k rounds is a words-sized anti-join +
     * doc-sized aggregate + a 1-row argmax collect — k is a small
     * constant by contract (driver loop, the q137/IVF-train pattern),
     * never data-sized. At 100 TB run it on a candidate pool (e.g. the
@@ -386,8 +385,8 @@ object Curation {
         explode(TextAnalysis.tokens(col(textCol))).as("_w"))
       .filter(length(col("_w")) > 0)
       .distinct()
-      .localCheckpoint(true) // (doc, word) rows, read k+1 times
-    val docs = dw.select(col("_d")).distinct().localCheckpoint(true)
+      .pin // (doc, word) rows, read k+1 times
+    val docs = dw.select(col("_d")).distinct().pin
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     val chosen = scala.collection.mutable.Set.empty[Long]
     var cum = 0L

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Deduplication operators for large-scale corpus curation — the north-star
   * extension surface (BASELINE.json; absent from the reference, SURVEY.md
@@ -640,7 +641,7 @@ object Dedup {
       .withColumn("_u", round(col("_c").cast("double") * 1e6d / col("_nrm"))
         .cast("long"))
       .select(col("_id"), col("_w"), col("_u"))
-      .localCheckpoint(true) // reused: df counts, prefix, verify
+      .pin // reused: df counts, prefix, verify
     val norm2 = feats.groupBy(col("_id"))
       .agg(sum(col("_u") * col("_u")).as("_n2"))
     val mx = norm2.agg(max(col("_n2")).as("_mx"))
@@ -790,7 +791,7 @@ object Dedup {
         greatest(col("a_id"), col("b_id")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .localCheckpoint(true) // counted AND joined
+      .pin // counted AND joined
     val e1 = norm(pairs1)
     val e2 = norm(pairs2)
     val est = (col("n_tier1").cast("double") + 1.0d) *

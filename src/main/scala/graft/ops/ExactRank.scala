@@ -5,6 +5,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import graft.core.Pin._
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -45,8 +46,8 @@ import scala.jdk.CollectionConverters._
   * combine (depth 2) keeps the driver from merging one partial per
   * partition. Filters for each round's candidate ranges go through the
   * DataFrame layer first, so parquet row-group pruning still applies on
-  * uncached input. The base projection is persisted (MEMORY_AND_DISK)
-  * ONLY when the radix pass predicts ≥ 2 further rounds — building the
+  * uncached input. Unless the caller cached `df`, the base projection is
+  * pinned ONLY when the radix pass predicts ≥ 2 further rounds — building the
   * cache costs more than one extra pruned scan, so 2-job selections
   * skip it while wide-domain selections amortize it across their rounds.
   *
@@ -97,141 +98,131 @@ object ExactRank {
     require(buckets >= 2, s"need buckets >= 2, got $buckets")
     val base = df.select(col(groupCol).cast("string").as("g"),
       col(centsCol).cast("long").as("c"))
-    var cached: Option[DataFrame] = None
-    try {
-      // ---- radix pass: fused bounds + first histogram, one job over
-      // the shared InternalRow kernel (no per-row tuple deserialization)
-      val radix = radixHistogram(base).iterator.flatMap { case (g, slots) =>
-        slots.iterator.map(st => (g, st.cnt, st.mn, st.mx))
+    // ---- radix pass: fused bounds + first histogram, one job over
+    // the shared InternalRow kernel (no per-row tuple deserialization)
+    val radix = radixHistogram(base).iterator.flatMap { case (g, slots) =>
+      slots.iterator.map(st => (g, st.cnt, st.mn, st.mx))
+    }.toArray
+
+    var states: Seq[TargetState] = buildInitialStates(radix, rankOf)
+    val rankNames = states.map(_.name).distinct
+
+    def roundsFor(range: Long): Int = {
+      var w = range; var r = 0
+      while (w > 1) { w = (w + buckets - 1) / buckets; r += 1 }
+      r
+    }
+    val maxRounds = states.filter(!_.done)
+      .map(st => roundsFor(st.hi - st.lo + 1))
+      .maxOption.getOrElse(0)
+    val scan = if (maxRounds >= 2 && df.storageLevel == StorageLevel.NONE) base.pin else base
+
+    while (states.exists(!_.done)) {
+      val open = states.filter(!_.done).toArray
+      // width per target this round: ceil(range / buckets), floor 1.
+      // radix round 1 bounds every range at 2^52, so hi - lo + 1 can't
+      // wrap — the require guards future direct-state misuse
+      val widths = open.map { st =>
+        val range = st.hi - st.lo + 1
+        require(range > 0,
+          s"selection range overflow for ${st.group}/${st.name}: [${st.lo}, ${st.hi}]")
+        math.max(1L, (range + buckets - 1) / buckets)
+      }
+      val nBuckets = open.indices.map { i =>
+        ((open(i).hi - open(i).lo) / widths(i) + 1).toInt
       }.toArray
-
-      var states: Seq[TargetState] = buildInitialStates(radix, rankOf)
-      val rankNames = states.map(_.name).distinct
-
-      // cache the base only when ≥ 2 more rounds will scan it (callers
-      // that persisted df already back these scans — never double-cache)
-      def roundsFor(range: Long): Int = {
-        var w = range; var r = 0
-        while (w > 1) { w = (w + buckets - 1) / buckets; r += 1 }
-        r
-      }
-      val maxRounds = states.filter(!_.done)
-        .map(st => roundsFor(st.hi - st.lo + 1))
-        .maxOption.getOrElse(0)
-      if (maxRounds >= 2 && df.storageLevel == StorageLevel.NONE) {
-        base.persist(StorageLevel.MEMORY_AND_DISK)
-        cached = Some(base)
-      }
-
-      while (states.exists(!_.done)) {
-        val open = states.filter(!_.done).toArray
-        // width per target this round: ceil(range / buckets), floor 1.
-        // radix round 1 bounds every range at 2^52, so hi - lo + 1 can't
-        // wrap — the require guards future direct-state misuse
-        val widths = open.map { st =>
-          val range = st.hi - st.lo + 1
-          require(range > 0,
-            s"selection range overflow for ${st.group}/${st.name}: [${st.lo}, ${st.hi}]")
-          math.max(1L, (range + buckets - 1) / buckets)
-        }
-        val nBuckets = open.indices.map { i =>
-          ((open(i).hi - open(i).lo) / widths(i) + 1).toInt
-        }.toArray
-        val byGroup = open.indices.groupBy(i => open(i).group)
-          .map { case (g, is) => UTF8String.fromString(g) -> is.toArray }
-        // range filter through the DataFrame layer: parquet row-group
-        // pruning on uncached input, metadata-only on cached
-        val cLo = open.iterator.map(_.lo).min
-        val cHi = open.iterator.map(_.hi).max
-        // one map-only job over InternalRow plan output: per-partition
-        // bucket counts per target, tree-combined — ≤ targets × buckets
-        // longs, no shuffle, no per-row tuple deserialization
-        val roundRdd = internalRows(
-          base.filter(col("c") >= cLo && col("c") <= cHi))
-        val hist = roundRdd
-          .treeAggregate(Array.empty[Array[Long]])(
-            seqOp = (acc0, row) => {
-              if (row.isNullAt(0) || row.isNullAt(1)) acc0
-              else {
-                val acc = if (acc0.length == 0)
-                  nBuckets.map(new Array[Long](_)) else acc0
-                val g = row.getUTF8String(0)
-                val c = row.getLong(1)
-                byGroup.get(g) match {
-                  case Some(is) =>
-                    var j = 0
-                    while (j < is.length) {
-                      val i = is(j)
-                      val st = open(i)
-                      if (c >= st.lo && c <= st.hi)
-                        acc(i)(((c - st.lo) / widths(i)).toInt) += 1
-                      j += 1
-                    }
-                  case None =>
-                }
-                acc
-              }
-            },
-            combOp = (l, r) => {
-              if (l.length == 0) r
-              else if (r.length == 0) l
-              else {
-                var i = 0
-                while (i < l.length) {
-                  val li = l(i); val ri = r(i)
-                  var b = 0
-                  while (b < li.length) { li(b) += ri(b); b += 1 }
-                  i += 1
-                }
-                l
-              }
-            },
-            depth = treeDepth(roundRdd))
-
-        states = states.map { st =>
-          if (st.done) st
-          else {
-            val i = open.indexWhere(_ eq st)
-            val w = widths(i)
-            val slots = if (hist.length == 0) new Array[Long](0) else hist(i)
-            var cum = 0L
-            var b = -1L
-            var below = 0L
-            var j = 0
-            while (b < 0 && j < slots.length) {
-              val cnt = slots(j)
-              if (cnt > 0 && cum + cnt >= st.r) { b = j.toLong; below = cum }
-              cum += cnt
-              j += 1
-            }
-            require(b >= 0, s"rank ${st.r} not reached in ${st.group}/${st.name}")
-            if (w == 1L) TargetState(st.group, st.name,
-              st.lo + b, st.lo + b, 1L, done = true)
+      val byGroup = open.indices.groupBy(i => open(i).group)
+        .map { case (g, is) => UTF8String.fromString(g) -> is.toArray }
+      // range filter through the DataFrame layer: parquet row-group
+      // pruning on uncached input, metadata-only on cached
+      val cLo = open.iterator.map(_.lo).min
+      val cHi = open.iterator.map(_.hi).max
+      // one map-only job over InternalRow plan output: per-partition
+      // bucket counts per target, tree-combined — ≤ targets × buckets
+      // longs, no shuffle, no per-row tuple deserialization
+      val roundRdd = internalRows(
+        scan.filter(col("c") >= cLo && col("c") <= cHi))
+      val hist = roundRdd
+        .treeAggregate(Array.empty[Array[Long]])(
+          seqOp = (acc0, row) => {
+            if (row.isNullAt(0) || row.isNullAt(1)) acc0
             else {
-              val nlo = st.lo + b * w
-              val nhi = math.min(st.hi, nlo + w - 1)
-              TargetState(st.group, st.name, nlo, nhi, st.r - below)
+              val acc = if (acc0.length == 0)
+                nBuckets.map(new Array[Long](_)) else acc0
+              val g = row.getUTF8String(0)
+              val c = row.getLong(1)
+              byGroup.get(g) match {
+                case Some(is) =>
+                  var j = 0
+                  while (j < is.length) {
+                    val i = is(j)
+                    val st = open(i)
+                    if (c >= st.lo && c <= st.hi)
+                      acc(i)(((c - st.lo) / widths(i)).toInt) += 1
+                    j += 1
+                  }
+                case None =>
+              }
+              acc
             }
+          },
+          combOp = (l, r) => {
+            if (l.length == 0) r
+            else if (r.length == 0) l
+            else {
+              var i = 0
+              while (i < l.length) {
+                val li = l(i); val ri = r(i)
+                var b = 0
+                while (b < li.length) { li(b) += ri(b); b += 1 }
+                i += 1
+              }
+              l
+            }
+          },
+          depth = treeDepth(roundRdd))
+
+      states = states.map { st =>
+        if (st.done) st
+        else {
+          val i = open.indexWhere(_ eq st)
+          val w = widths(i)
+          val slots = if (hist.length == 0) new Array[Long](0) else hist(i)
+          var cum = 0L
+          var b = -1L
+          var below = 0L
+          var j = 0
+          while (b < 0 && j < slots.length) {
+            val cnt = slots(j)
+            if (cnt > 0 && cum + cnt >= st.r) { b = j.toLong; below = cum }
+            cum += cnt
+            j += 1
+          }
+          require(b >= 0, s"rank ${st.r} not reached in ${st.group}/${st.name}")
+          if (w == 1L) TargetState(st.group, st.name,
+            st.lo + b, st.lo + b, 1L, done = true)
+          else {
+            val nlo = st.lo + b * w
+            val nhi = math.min(st.hi, nlo + w - 1)
+            TargetState(st.group, st.name, nlo, nhi, st.r - below)
           }
         }
       }
-
-      // pivot driver-side: one row per group, a long column per rank name
-      val byGroupOut = states.groupBy(_.group)
-      val outRows = byGroupOut.toSeq.sortBy(_._1).map { case (g, sts) =>
-        val vals = sts.map(st => st.name -> st.lo).toMap
-        Row.fromSeq(g +: rankNames.map(n => vals.getOrElse(n,
-          throw new IllegalArgumentException(
-            s"rankOf must yield the same rank names for every group: " +
-              s"group '$g' lacks '$n' (has ${vals.keySet.mkString(", ")})"))))
-      }
-      val outSchema = StructType(
-        StructField(groupCol, StringType) +:
-          rankNames.map(n => StructField(n, LongType)))
-      s.createDataFrame(outRows.asJava, outSchema)
-    } finally {
-      cached.foreach(_.unpersist(blocking = false))
     }
+
+    // pivot driver-side: one row per group, a long column per rank name
+    val byGroupOut = states.groupBy(_.group)
+    val outRows = byGroupOut.toSeq.sortBy(_._1).map { case (g, sts) =>
+      val vals = sts.map(st => st.name -> st.lo).toMap
+      Row.fromSeq(g +: rankNames.map(n => vals.getOrElse(n,
+        throw new IllegalArgumentException(
+          s"rankOf must yield the same rank names for every group: " +
+            s"group '$g' lacks '$n' (has ${vals.keySet.mkString(", ")})"))))
+    }
+    val outSchema = StructType(
+      StructField(groupCol, StringType) +:
+        rankNames.map(n => StructField(n, LongType)))
+    s.createDataFrame(outRows.asJava, outSchema)
   }
 
   // ------------------------------------------------------------------

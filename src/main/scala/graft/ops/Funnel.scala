@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Ordered-funnel analysis over an event stream — the conversion query of
   * product analytics (view → click → purchase): for each user, the
@@ -151,17 +152,15 @@ object Funnel {
   def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
       periodSec: Long = 24L * 3600): DataFrame = {
     require(periodSec >= 1, s"period must be >= 1s, got $periodSec")
-    // r17: ONE corpus pass (guide §1.2) — the null guard is fused into
-    // the per-user aggregate (null user → null group key; null ts →
-    // counted flag) and the users-sized result is pinned: unpinned, the
-    // guard, horizon and duration grid each re-scanned the corpus
+    // ONE corpus pass (guide §1.2): null user → null group key, null ts
+    // → counted flag, on the pinned users-sized result
     val per = events
       .select(col(userCol).as("_u"), periodOf(tsCol, periodSec).as("_p"),
         col(tsCol).isNull.as("_badts"))
       .groupBy(col("_u"))
       .agg(min(col("_p")).as("_first"), max(col("_p")).as("_last"),
         sum(when(col("_badts"), lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // users-sized; guard + horizon + grid read the cache
+      .pin // users-sized; guard + horizon + grid read the cache
     val bad = per.filter(col("_u").isNull || col("_bad") > 0L).count()
     require(bad == 0L,
       s"kaplanMeier needs non-NULL '$userCol' and '$tsCol'")
@@ -225,11 +224,8 @@ object Funnel {
   def logRank(events: DataFrame, userCol: String, tsCol: String,
       cohortCol: String, periodSec: Long = 24L * 3600): DataFrame = {
     require(periodSec >= 1, s"period must be >= 1s, got $periodSec")
-    // r16: ONE corpus pass — the null guard is fused into the per-user
-    // aggregate (null user → null group key; null ts/cohort → counted
-    // flags) and the users-sized result is pinned: unpinned, the five
-    // downstream consumers (mixed guard, cohort collect, horizon, sizes,
-    // grid) each re-ran the corpus groupBy.
+    // ONE corpus pass: null user → null group key, null ts/cohort →
+    // counted flags, on the pinned users-sized result
     val per0 = events
       .select(col(userCol).as("_u"), col(cohortCol).cast("string").as("_c"),
         periodOf(tsCol, periodSec).as("_p"))
@@ -238,7 +234,7 @@ object Funnel {
         min(col("_p")).as("_first"), max(col("_p")).as("_last"),
         sum(when(col("_p").isNull, lit(1L)).otherwise(lit(0L))).as("_badp"),
         sum(when(col("_c").isNull, lit(1L)).otherwise(lit(0L))).as("_badc"))
-      .localCheckpoint(true) // users-sized; read by every step below
+      .pin // users-sized; read by every step below
     val bad = per0.filter(col("_u").isNull || col("_badp") > 0L ||
       col("_badc") > 0L).limit(1).count()
     require(bad == 0L,

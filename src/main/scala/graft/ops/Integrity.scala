@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Order-independent table checksums — the replica/migration integrity
   * primitive: two copies of a table (different clusters, different file
@@ -74,10 +75,8 @@ object Integrity {
     * then spine-join + 1-row broadcast combines. The audit of 100 TB
     * is a single scan with 9 counters. */
   def benfordAudit(df: DataFrame, valueCol: String): DataFrame = {
-    // r17: ONE corpus pass (guide §1.2) — the typed guard rides the
-    // digit aggregate as a counted flag and the ≤10-row digit frame is
-    // pinned (the old shape paid a guard pass PLUS two recomputations
-    // of the unpinned digit groupBy for the total and the spine join)
+    // ONE corpus pass (guide §1.2): the typed guard rides the digit
+    // aggregate as a counted flag and the ≤10-row digit frame is pinned
     val obs = df
       .select(substring(round(col(valueCol).cast("double") * 1e6d)
         .cast("long").cast("string"), 1, 1).cast("long").as("digit"),
@@ -85,7 +84,7 @@ object Integrity {
           round(col(valueCol).cast("double") * 1e6d) < 1.0d).as("_badrow"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"),
         sum(when(col("_badrow"), lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // ≤ 10 rows; guard + total + spine join read the cache
+      .pin // ≤ 10 rows; guard + total + spine join read the cache
     val bad = obs.filter(col("_bad") > 0L).count()
     require(bad == 0L, s"benfordAudit needs positive non-NULL '$valueCol' " +
       "values on the micro grid (≥ 5·10⁻⁷) — zero/negative/sub-grid " +
@@ -105,7 +104,7 @@ object Integrity {
         col("n_obs").cast("double") / col("_n").cast("double") -
           log(lit(1.0d) + lit(1.0d) / col("digit").cast("double")) /
             log(lit(10.0d))), 6))
-      .localCheckpoint(true) // 9 rows, read twice
+      .pin // 9 rows, read twice
     val mad = per
       .select(round(col("abs_dev") * 1e9d).cast("long").as("_d"))
       .agg(sum(col("_d")).as("_sd"))

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.Pin
 
 /** Persisted stupid-backoff LM model — the q122/q123
   * build-once/probe-many contract applied to the LM family: the
@@ -230,7 +231,8 @@ object LmIndex {
       alpha: Double, hotK: Int): DataFrame = {
     val (m1, m2, m3, nv, hots) = microTables(s, dir, snap, alpha, hotK)
     TextAnalysis.scoreBackoffTrigramsOn(
-      TextAnalysis.docTrigrams(batch, idCol, textCol).localCheckpoint(true),
+      // cut, not pinned: the serving plan then holds no corpus scan
+      Pin.cut(TextAnalysis.docTrigrams(batch, idCol, textCol), eager = true),
       idCol, m1, m2, m3, nv, alpha, hotK, Some(hots))
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Retrieval-quality metrics — the EVALUATION tier of the BM25 / ANN /
   * RAG retrieval stack (SURVEY.md §2.3 "similarity search"): given
@@ -167,7 +168,7 @@ object RankMetrics {
       val grid = sm.groupBy(col("_sm")).agg(count(lit(1)).as("_n"),
           sum(when(col(idCol).isNull, lit(1L)).otherwise(lit(0L)))
             .as("_badid"))
-        .localCheckpoint(true) // grid-sized; guard + rank window below
+        .pin // grid-sized; guard + rank window below
       val nulls = grid.filter(col("_sm").isNull || col("_badid") > 0L)
         .limit(1).count()
       require(nulls == 0L,
@@ -223,7 +224,7 @@ object RankMetrics {
       val grid = sm.groupBy(col("_sm")).agg(count(lit(1)).as("_n"),
           sum(when(col(idCol).isNull, lit(1L)).otherwise(lit(0L)))
             .as("_badid"))
-        .localCheckpoint(true) // grid-sized; guard + rank window below
+        .pin // grid-sized; guard + rank window below
       val nulls = grid.filter(col("_sm").isNull || col("_badid") > 0L)
         .limit(1).count()
       require(nulls == 0L,
@@ -293,10 +294,9 @@ object RankMetrics {
         round(col(yCol).cast("double") * 1e6d).cast("long").as("_y"),
         (col(keyCol).isNull || col(xCol).isNull || col(yCol).isNull)
           .as("_badrow"))
-      .localCheckpoint(true)
-    // r17: null guard, row count and key-distinctness check fused into
-    // ONE job over the pinned grid (was three: a full guard pass plus
-    // two counts)
+      .pin
+    // null guard, row count and key-distinctness check: ONE job over
+    // the pinned grid
     val chk = g.agg(
       sum(when(col("_badrow"), lit(1L)).otherwise(lit(0L))).as("_nb"),
       count(lit(1)).as("_n"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Deterministic dataset splitting and sampling for training pipelines.
   *
@@ -348,7 +349,7 @@ object Sampling {
         sum(col("_wq")).as("_sw"),
         sum(col("_wq").cast("decimal(19,0)") * col("_wq")).as("_sw2"),
         sum(when(col("_badw"), lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // groups-sized; guard + readout read the cache
+      .pin // groups-sized; guard + readout read the cache
     val bad = g.filter(col("group").isNull || col("_bad") > 0L).count()
     require(bad == 0L, s"effectiveSampleSize needs non-NULL groups and " +
       s"'$weightCol' weights in (0, 1e6] — zero/negative weights are " +
@@ -412,7 +413,7 @@ object Sampling {
       .withColumn("_sig_micro",
         round(sqrt(greatest(col("_var"), lit(0.0d)))).cast("long"))
       .withColumn("_w", col("n_rows").cast(dec) * col("_sig_micro"))
-      .localCheckpoint(true) // strata-sized; guard + read twice
+      .pin // strata-sized; guard + read twice
     val bad = strata.filter(col("stratum").isNull || col("_bad") > 0L)
       .limit(1).count()
     require(bad == 0L,
@@ -469,7 +470,7 @@ object Sampling {
         sum(when(col(flagCol).isNull ||
           (col(flagCol) =!= 0L && col(flagCol) =!= 1L), lit(1L))
           .otherwise(lit(0L))).as("_bad"))
-      .localCheckpoint(true) // bounded (distinct units); read 3x
+      .pin // bounded (distinct units); read 3x
     val chk = units.agg(
       sum(when(col(unitCol).isNull || col("_bad") > 0L, lit(1L))
         .otherwise(lit(0L))).as("_nb"),
@@ -587,7 +588,7 @@ object Sampling {
     val dec = "decimal(38,0)"
     val counts = df.select(col(groupCol).as("group"))
       .groupBy(col("group")).agg(count(lit(1)).as("n_rows"))
-      .localCheckpoint(true) // groups-sized, read twice
+      .pin // groups-sized, read twice
     // r17: a NULL group surfaces as the null group key on the pinned
     // groups frame — the typed check reads it, not the corpus
     val nulls = counts.filter(col("group").isNull).limit(1).count()
@@ -599,7 +600,7 @@ object Sampling {
       .withColumn("_wraw",
         round(d("_N") * 1e9d / (d("_k") * d("n_rows"))).cast("long"))
       .withColumn("_wq", least(col("_wraw"), lit(math.round(wMax * 1e9d))))
-      .localCheckpoint(true) // groups-sized, read twice (ESS + output)
+      .pin // groups-sized, read twice (ESS + output)
     // weights are wq/1e9, so (Σn·w)²/(Σn·w²) = _sw²/_sw2 in row units
     val essRow = g.agg(
         sum(col("n_rows").cast(dec) * col("_wq")).as("_sw"),

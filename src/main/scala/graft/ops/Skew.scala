@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.core.Pin._
 
 /** Skew mitigation for joins and aggregations (SCALE.md): when one key
   * carries a disproportionate share of rows (a viral user_id, an empty-
@@ -66,8 +67,8 @@ object Skew {
     *
     * Cost note: the lookup is referenced three times (key ranking, hot
     * selection, cold join), so it is materialized HERE once with a
-    * lazy localCheckpoint — the first reference computes it, the other
-    * two read the cached partitions; without this, an un-checkpointed
+    * lazy pin — the first reference computes it, the other two read
+    * the cached partitions; without this, an un-pinned
     * corpus-derived lookup lineage (a token count table is a full
     * corpus explode + groupBy) would re-run per reference. Lookups are
     * vocabulary-sized by contract, so the cached copy is model-sized. */
@@ -165,7 +166,7 @@ object Skew {
   def hotColdJoin(
       left: DataFrame, lookup: DataFrame, keys: Seq[String],
       weight: Column, hotK: Int, joinType: String = "inner"): DataFrame = {
-    val lkp = lookup.localCheckpoint(eager = false)
+    val lkp = lookup.pin
     hotColdJoinWith(left, lkp, keys, hotSet(lkp, keys, weight, hotK), joinType)
   }
 
@@ -251,7 +252,7 @@ object Skew {
     require(topK >= 1 && topK <= 1000, s"need 1 <= topK <= 1000, got $topK")
     val counts = partials
       .groupBy(col("key")).agg(sum(col("cnt")).as("cnt"))
-      .localCheckpoint(true) // keys-sized, read twice (totals + top-k)
+      .pin // keys-sized, read twice (totals + top-k)
     val tot = counts.agg(coalesce(sum(col("cnt")), lit(0L)).as("n_rows"),
       count(lit(1)).as("n_keys"))
     require(tot.filter(col("n_rows") > 0L).limit(1).count() == 1L,

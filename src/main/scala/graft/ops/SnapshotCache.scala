@@ -1,6 +1,9 @@
 package graft.ops
 
 import scala.collection.mutable
+import graft.core.Pin
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped SNAPSHOT CACHE for Manifest-served model artifacts —
   * the build-once pattern applied to the serving path: a probe against a
@@ -18,9 +21,10 @@ import scala.collection.mutable
   * keys, so caching cannot leak across snapshots (the q186/q190/q191
   * oracles stay exact by construction).
   *
-  * Memory contract: ONLY model-sized artifacts go in (centroid arrays,
-  * vocabulary-sized persisted aggregates, unpersisted scan PLANS) —
-  * never corpus-sized materializations. Bounded LRU (`MaxEntries`);
+  * Memory contract: ONLY model-sized artifacts (centroid arrays,
+  * vocabulary-sized persisted aggregates, unpersisted scan PLANS) and
+  * the few per-document signals many entries re-read ([[persisted]],
+  * keyed by corpus fingerprint) go in. Bounded LRU (`MaxEntries`);
   * eviction runs the entry's registered cleanup (unpersist for cached
   * DataFrames — safe, they rebuild from the immutable deltas on the
   * next miss). */
@@ -64,34 +68,45 @@ object SnapshotCache {
       case Some(v) => v.asInstanceOf[T]
       case None =>
         val latch = building.computeIfAbsent(k, _ => new Object)
-        latch.synchronized {
+        // removed even if the compute throws
+        try latch.synchronized {
           // a same-key racer may have built while this thread waited
           hit() match {
             case Some(v) => v.asInstanceOf[T]
             case None =>
               val v = compute
               entries.synchronized {
+                // unpersist-on-evict/replace is safe: a stale reference
+                // in flight recomputes from its immutable inputs
                 entries.put(k, Entry(v, () => cleanup(v)))
+                  .foreach(old => if (old.value ne v) runCleanup(old))
                 while (entries.size > MaxEntries) {
                   val (oldK, oldE) = entries.head
                   entries.remove(oldK)
-                  // unpersist-on-evict is safe: cached frames are
-                  // persist()ed, never checkpoint-truncated, so they
-                  // recompute from their immutable deltas if a stale
-                  // reference is still in flight
-                  try oldE.cleanup() catch { case _: Throwable => () }
+                  runCleanup(oldE)
                 }
               }
-              building.remove(k)
               v
           }
-        }
+        } finally building.remove(k, latch)
     }
   }
 
+  /** A frame persisted lazily under `k`, unpersisted on eviction; tagged
+    * with its file listing like a [[Pin]] (see [[Pin.listed]]). */
+  def persisted(k: String)(build: => DataFrame): DataFrame =
+    getOrCompute(k)(Pin.listed(build).persist(StorageLevel.MEMORY_AND_DISK))(
+      _.unpersist(false))
+
+  private def runCleanup(e: Entry): Unit =
+    try e.cleanup() catch { case _: Throwable => () }
+
+  /** Latches of builds in flight (test hook). */
+  private[ops] def pendingBuilds: Int = building.size
+
   /** Drop everything (test hook; never needed for correctness). */
   def clear(): Unit = entries.synchronized {
-    entries.values.foreach(e => try e.cleanup() catch { case _: Throwable => () })
+    entries.values.foreach(runCleanup)
     entries.clear()
   }
 }

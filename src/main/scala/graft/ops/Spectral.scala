@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Pin._
 
 /** Distributed spectral probes of an embedding corpus — the linear-
   * algebra tier of the pipeline: the top principal component of the
@@ -318,16 +319,15 @@ object Spectral {
   private[graft] def isotropyPartial(df: DataFrame,
       vecCol: String): DataFrame = {
     val dec = "decimal(38,0)"
-    // r17: guards fused into the one explode aggregate — the checks
-    // read the PINNED dims-sized grid (sentinel dims −1/−2), not the
-    // corpus (was: two freestanding full passes before the real one)
+    // guards fused into the one explode aggregate: the checks read the
+    // pinned dims-sized grid (sentinel dims −1/−2), not the corpus
     val g = withNormOf(df.select(col(vecCol).as("_v")))
       .select(expr(unitGridExplode))
       .groupBy(col("_dim"))
       .agg(count(lit(1)).as("_cnt"),
         sum(col("_u").cast(dec)).as("_s"),
         sum(col("_u").cast(dec) * col("_u")).as("_q"))
-      .persist() // dims-sized; the guard agg materializes the cache
+      .pin // dims-sized; the guard agg materializes the cache
     val flags = g.agg(
       sum(when(col("_dim") === -1, lit(1L)).otherwise(lit(0L))).as("_b1"),
       sum(when(col("_dim") === -2, lit(1L)).otherwise(lit(0L))).as("_b2"))
@@ -357,9 +357,8 @@ object Spectral {
   def isotropyByGroup(df: DataFrame, groupCol: String,
       vecCol: String): DataFrame = {
     val dec = "decimal(38,0)"
-    // r17: both typed guards fused into the explode aggregate (sentinel
-    // dims −1/−2, see [[unitGridExplode]]) — the checks read the pinned
-    // groups-sized frame, not the corpus (was: two extra full passes)
+    // both typed guards ride the explode aggregate (sentinel dims −1/−2,
+    // see [[unitGridExplode]]); the checks read the pinned groups frame
     val byG = withNormOf(
         df.select(col(groupCol).as("_g"), col(vecCol).as("_v")))
       .select(col("_g"), expr(unitGridExplode))
@@ -373,7 +372,7 @@ object Spectral {
         count(lit(1)).as("dim"),
         sum(when(col("_dim") === -1, lit(1L)).otherwise(lit(0L))).as("_b1"),
         sum(when(col("_dim") === -2, lit(1L)).otherwise(lit(0L))).as("_b2"))
-      .localCheckpoint(true) // groups-sized, read twice (guard + output)
+      .pin // groups-sized, read twice (guard + output)
     val flags = byG.agg(
       sum(when(col("_g").isNull || col("_b1") > 0L, lit(1L))
         .otherwise(lit(0L))).as("_n1"),
@@ -418,9 +417,8 @@ object Spectral {
   def crossGroupCosine(df: DataFrame, groupCol: String,
       vecCol: String): DataFrame = {
     val dec = "decimal(38,0)"
-    // r17: both typed guards fused into the explode aggregate (sentinel
-    // dims −1/−2, see [[unitGridExplode]]) — the checks read the pinned
-    // (groups × dims) grid, not the corpus (was: two extra full passes)
+    // both typed guards ride the explode aggregate (sentinel dims −1/−2,
+    // see [[unitGridExplode]]); the checks read the pinned grid
     val gd = withNormOf(
         df.select(col(groupCol).as("_g"), col(vecCol).as("_v")))
       .select(col("_g"), expr(unitGridExplode))
@@ -428,7 +426,7 @@ object Spectral {
       .agg(count(lit(1)).as("_cnt"),
         sum(col("_u").cast(dec)).as("_s"),
         sum(col("_u").cast(dec) * col("_u")).as("_q"))
-      .localCheckpoint(true) // (groups x dims)-sized, read three ways
+      .pin // (groups x dims)-sized, read three ways
     val flags = gd.agg(
       sum(when(col("_g").isNull || col("_dim") === -1, lit(1L))
         .otherwise(lit(0L))).as("_n1"),
@@ -476,7 +474,7 @@ object Spectral {
     val merged = partials.groupBy(col("_dim"))
       .agg(sum(col("_cnt")).as("_cnt"), sum(col("_s")).as("_s"),
         sum(col("_q")).as("_q"))
-      .localCheckpoint(true) // dims-sized, read twice (guard + forms)
+      .pin // dims-sized, read twice (guard + forms)
     val ns = merged.select(col("_cnt")).distinct()
       .limit(2).collect().map(_.getLong(0))
     require(ns.nonEmpty, "isotropy needs >= 2 vectors, got 0")

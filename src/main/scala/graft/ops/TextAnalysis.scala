@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Pin
+import graft.core.Pin._
 
 /** Text-analysis operators for corpus curation (north-star extension,
   * SURVEY.md §2.3 "Text analysis"): token counting, quality scoring,
@@ -233,7 +235,7 @@ object TextAnalysis {
       .select(col(groupCol).as("_g"), explode(tokens(col(textCol))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy(col("_g"), col("token")).agg(count(lit(1)).as("_n"))
-      .localCheckpoint(true) // vocab×groups-sized, read 3× (vocab/groups/dense)
+      .pin // vocab×groups-sized, read 3× (vocab/groups/dense)
     val groups = counts.select(col("_g")).distinct()
     val nGroups = groups.count()
     require(nGroups >= 2 && nGroups <= 64,
@@ -343,11 +345,11 @@ object TextAnalysis {
         tokenCount(col(textCol)).cast("long").as("_len"))
       .filter(col("_len") > 0)
       .groupBy(col("group"), col("_len")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true) // (group × length)-sized, read 3×
+      .pin // (group × length)-sized, read 3×
     val grp = lens.groupBy(col("group"))
       .agg(sum(col("_c")).as("n_docs"),
         sum(col("_c") * col("_len")).as("_xg"))
-      .localCheckpoint(true)
+      .pin
     val tot = grp.agg(sum(col("n_docs")).as("_n"), sum(col("_xg")).as("_x"))
     val withG = lens.join(grp, Seq("group")).crossJoin(broadcast(tot))
     val winTerm = withG.select(col("group"),
@@ -467,14 +469,11 @@ object TextAnalysis {
     * key at any scale. */
   def unigramLogProb(df: DataFrame, idCol: String, textCol: String,
       hotK: Int = 4096): DataFrame = {
-    // r16: pin the (doc, token, n) probe table — the count/ranked-head
-    // lineage and the final hot/cold join otherwise each re-ran the
-    // tokenize+explode+aggregate pass
     val docTok = df
       .select(col(idCol), explode(tokens(col(textCol))).as("token"))
       .filter(length(col("token")) > 0)
       .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("_n"))
-      .localCheckpoint(true)
+      .pin // probe table: read by the counts and the hot/cold join
     val counts = docTok.groupBy(col("token")).agg(sum(col("_n")).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("total"))
     val tokMicro = counts.crossJoin(broadcast(total))
@@ -511,12 +510,9 @@ object TextAnalysis {
     * carry no bigrams and are absent from the result. */
   def bigramLogProb(df: DataFrame, idCol: String, textCol: String,
       hotK: Int = 4096): DataFrame = {
-    // r16: ONE tokenize pass (pinned arrays) shared by the bigram table
-    // and the vocabulary count, and the (doc, p, c, n) probe table is
-    // pinned too — unpinned, the ranked-head probe and the final join
-    // each re-ran tokenize+explode+aggregate. Expression trees unchanged.
-    val toks = df.select(col(idCol), tokens(col(textCol)).as("_w"))
-      .localCheckpoint(true)
+    // ONE tokenize pass shared by the bigram table and the vocabulary
+    // count; the (doc, p, c, n) probe table is pinned too
+    val toks = df.select(col(idCol), tokens(col(textCol)).as("_w")).pin
     val docBi = toks
       .filter(size(col("_w")) >= 2)
       .select(col(idCol), explode(expr(
@@ -525,7 +521,7 @@ object TextAnalysis {
         .as("_b"))
       .select(col(idCol), col("_b.p").as("p"), col("_b.c").as("c"))
       .groupBy(col(idCol), col("p"), col("c")).agg(count(lit(1)).as("_n"))
-      .localCheckpoint(true)
+      .pin
     val pairCnt = docBi.groupBy(col("p"), col("c")).agg(sum(col("_n")).as("cpc"))
     val ctxCnt = pairCnt.groupBy(col("p")).agg(sum(col("cpc")).as("cp"))
     // V over the FULL corpus (single-token docs still contribute
@@ -671,7 +667,7 @@ object TextAnalysis {
         when(col("cw").isNotNull,
           col("cw").cast("double") / col("nw").cast("double"))
           .otherwise(lit(0.0d)))
-      .localCheckpoint(true) // held-out-bigram-vocab-sized, read per λ
+      .pin // held-out-bigram-vocab-sized, read per λ
     val oov = scored.filter(col("_puni") <= 0.0d)
       .agg(coalesce(sum(col("n")), lit(0L)).as("n_oov"))
     val sess = train.sparkSession
@@ -729,9 +725,7 @@ object TextAnalysis {
       discount: Double = 0.75, hotK: Int = 4096): DataFrame = {
     require(discount > 0.0 && discount < 1.0,
       s"absolute discount must lie in (0, 1), got $discount")
-    // r16: pin the (doc, p, c, n) probe table — the ranked-head probe
-    // and the final join otherwise each re-ran tokenize+explode+agg
-    val docBi = docBigrams(df, idCol, textCol).localCheckpoint(true)
+    val docBi = docBigrams(df, idCol, textCol).pin // ranked head + join
     val pairCnt = docBi.groupBy(col("p"), col("c")).agg(sum(col("_n")).as("cpc"))
     val ctx = pairCnt.groupBy(col("p"))
       .agg(sum(col("cpc")).as("cp"), count(lit(1)).as("n1p"))
@@ -786,8 +780,8 @@ object TextAnalysis {
     * a skewed bare-token key.
     *
     * Materialization: `bi`/`uni` feed two-or-more model-side
-    * enrichments each and are checkpointed here; `tri` feeds exactly
-    * one (itself checkpointed inside [[scoreBackoffTrigrams]]), so the
+    * enrichments each and are pinned here; `tri` feeds exactly
+    * one (itself pinned inside [[scoreBackoffTrigrams]]), so the
     * train corpus is scanned once per n-gram order. */
   def stupidBackoffTrigram(df: DataFrame, idCol: String, textCol: String,
       testPred: Column, alpha: Double = 0.4, hotK: Int = 4096): DataFrame = {
@@ -797,12 +791,10 @@ object TextAnalysis {
     val train = df.filter(!testPred)
     val (tri, bi, uni) = trigramModel(train, textCol)
     // the three pins are independent jobs over the one pinned token pass
-    // — overlap them (guide §2.6) instead of three serial barriers
-    val pins = Seq(
-      () => docTrigrams(df.filter(testPred), idCol, textCol)
-        .localCheckpoint(true),
-      () => bi.localCheckpoint(true),
-      () => uni.localCheckpoint(true)).par.map(_.apply()).toIndexedSeq
+    // — overlap them (guide §2.6) instead of three serial barriers; each
+    // is filled by its own count before the scoring plan reads it
+    val pins = Seq(docTrigrams(df.filter(testPred), idCol, textCol), bi, uni)
+      .par.map { d => val p = d.pin; p.count(); p }.toIndexedSeq
     scoreBackoffTrigrams(pins(0), idCol, tri, pins(1), pins(2), alpha, hotK)
   }
 
@@ -839,7 +831,8 @@ object TextAnalysis {
     // UNCHANGED from the per-order forms (same explode/transform, same
     // filters), so every count — and the oracle hash — is identical.
     val toks = train.select(tokens(col(textCol)).as("_w"))
-      .localCheckpoint(true)
+      .pin
+    toks.count() // filled before callers' concurrent reads (LmIndex)
     val tri = toks
       .filter(size(col("_w")) >= 3)
       .select(explode(expr(
@@ -882,7 +875,7 @@ object TextAnalysis {
       ("m1", m1, Seq("w1", "w2", "w3"), "c123"),
       ("m2", m2, Seq("w2", "w3"), "c23"),
       ("m3", m3, Seq("w3"), "c3")).par.map { case (_, m, keys, w) =>
-      val pinned = m.localCheckpoint(true)
+      val pinned = m.pin
       (pinned, Skew.hotSet(pinned, keys, col(w), hotK))
     }.toIndexedSeq
     scoreBackoffTrigramsOn(docTri, idCol,
@@ -895,7 +888,7 @@ object TextAnalysis {
     * persisted-serving path ([[graft.ops.LmIndex]]) can pin them ONCE
     * per committed snapshot in [[graft.ops.SnapshotCache]] instead of
     * re-running the three vocab × vocab enrichment joins on every probe;
-    * the live path pins them per run with localCheckpoint exactly as
+    * the live path pins them per run with [[graft.core.Pin]] exactly as
     * before. Expression trees unchanged — every micro value (and the
     * oracle hash) is identical.
     *
@@ -952,13 +945,13 @@ object TextAnalysis {
       Skew.hotSet(m1tab, Seq("w1", "w2", "w3"), col("c123"), hotK),
       Skew.hotSet(m2tab, Seq("w2", "w3"), col("c23"), hotK),
       Skew.hotSet(m3tab, Seq("w3"), col("c3"), hotK)))
-    // checkpoint every OTHER stage: the hot/cold union doubles the left
+    // pin every OTHER stage: the hot/cold union doubles the left
     // lineage per level, so an un-materialized k-stage chain recomputes
-    // 2^k times; one checkpoint mid-chain caps the three-stage factor
+    // 2^k times; one pin mid-chain caps the three-stage factor
     val joined = Skew.hotColdJoinWith(docTri, m1tab, Seq("w1", "w2", "w3"),
         h1, "left")
       .transform(d => Skew.hotColdJoinWith(d, m2tab,
-        Seq("w2", "w3"), h2, "left").localCheckpoint(true))
+        Seq("w2", "w3"), h2, "left").pin)
       .transform(d => Skew.hotColdJoinWith(d, m3tab,
         Seq("w3"), h3, "left"))
       .crossJoin(broadcast(nv))
@@ -1368,11 +1361,11 @@ object TextAnalysis {
         "raise batchR; driver rounds are the scale bound, not merges")
     val spark = df.sparkSession
     import spark.implicits._
-    var words = df.select(explode(tokens(col(textCol))).as("w"))
+    var words = Pin.cut(df.select(explode(tokens(col(textCol))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("sym"), col("freq"))
-      .localCheckpoint(true)
+      .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("sym"),
+        col("freq")), eager = true)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var exhausted = false
     var round = 0
@@ -1426,7 +1419,7 @@ object TextAnalysis {
         val symN = accepted.foldLeft(col("sym")) { case (c, (pair, _)) =>
           bpeApply(c, pair, pair.replace(" ", ""))
         }
-        words = words.select(symN.as("sym"), col("freq")).localCheckpoint(true)
+        words = Pin.cut(words.select(symN.as("sym"), col("freq")), eager = true)
       }
     }
     out.toSeq.toDF("iter", "pair", "merged", "cnt")
@@ -1524,7 +1517,7 @@ object TextAnalysis {
       .select(col(idCol), posexplode(tokens(col(textCol))).as(Seq("pos", "w")))
       .filter(length(col("w")) > 0)
     val words = docToks.groupBy(col("w")).agg(count(lit(1)).as("freq"))
-      .localCheckpoint(true) // alphabet scan + fold + typed probe
+      .pin // alphabet scan + fold + typed probe
     val vocabDf = vocabFromWords(words, merges)
     // fold the merges over the vocab-sized word table
     val sym0 = trim(regexp_replace(col("w"), "(.)", "$1 "))
@@ -1541,7 +1534,7 @@ object TextAnalysis {
       .agg(collect_list(struct(col("subpos"), col("tok_id"))).as("_sl"),
         sum(when(col("tok_id").isNull, lit(1L)).otherwise(lit(0L)))
           .as("_bad"))
-      .persist() // vocab-sized; guard + the hot-cold join read the cache
+      .pin // vocab-sized; guard + the hot-cold join read the cache
     val unseen = wordIds0.filter(col("_bad") > 0L).count()
     require(unseen == 0L,
       "bpeEncode: a folded subword is neither a base character nor a " +
@@ -1615,7 +1608,7 @@ object TextAnalysis {
       .groupBy(col(idCol))
       .agg(collect_list(struct(col("pos"), col("sub"))).as("_sl"),
         sum(when(col("sub").isNull, lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .persist() // docs-sized (the op's output frame); 2 cached reads
+      .pin // docs-sized (the op's output frame); 2 cached reads
     val unknown = dec0.filter(col("_bad") > 0L).count()
     require(unknown == 0L,
       "bpeDecode: a token id does not resolve in the vocab — the id " +
@@ -1864,7 +1857,7 @@ object TextAnalysis {
       .filter(length(col("_w")) > 0)
     val wc = words.groupBy(col("_w")).agg(count(lit(1)).as("_r"))
     val coc = wc.groupBy(col("_r")).agg(count(lit(1)).as("n_words"))
-      .localCheckpoint(true) // frequency-of-frequency-sized; read 3×
+      .pin // frequency-of-frequency-sized; read 3×
     val tot = coc.agg(
       sum(col("_r") * col("n_words")).as("_n"),
       coalesce(sum(when(col("_r") === 1L, col("n_words"))), lit(0L))
@@ -2168,7 +2161,7 @@ object TextAnalysis {
     val gw = df.select(col(groupCol).as("group"),
         explode(cleanTokens(col(textCol))).as("_w"))
       .groupBy(col("group"), col("_w")).agg(count(lit(1)).as("_a"))
-      .localCheckpoint(true) // re-aggregated three ways
+      .pin // re-aggregated three ways
     val k = gw.select(col("group")).distinct().count()
     require(k >= 2L, s"keywordsLlr needs >= 2 groups, got $k")
     val vocab = gw.groupBy(col("_w")).agg(sum(col("_a")).as("_cw"))
@@ -2228,7 +2221,7 @@ object TextAnalysis {
     val gw = df.select(col(groupCol).as("group"),
         explode(cleanTokens(col(textCol))).as("_w"))
       .groupBy(col("group"), col("_w")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true)
+      .pin
     val k = gw.select(col("group")).distinct().count()
     require(k >= 2L, s"burrowsDelta needs >= 2 groups, got $k")
     val top = gw.groupBy(col("_w")).agg(sum(col("_c")).as("_cw"))
@@ -2240,7 +2233,7 @@ object TextAnalysis {
       .join(gw, Seq("_w", "group"), "left")
       .withColumn("_f", round(coalesce(col("_c"), lit(0L)).cast("double") *
         1e9d / d("_ng")).cast("long"))
-      .localCheckpoint(true) // M×k rows
+      .pin // M×k rows
     val stats = f.groupBy(col("_w"))
       .agg(sum(col("_f").cast(dec)).as("_S"),
         sum(col("_f").cast(dec) * col("_f")).as("_Q"),
@@ -2250,7 +2243,7 @@ object TextAnalysis {
     val z = f.join(stats, Seq("_w"))
       .select(col("_w"), col("group"),
         ((d("_f") - d("_S") / d("_k")) / sqrt(col("_var"))).as("_z"))
-      .localCheckpoint(true)
+      .pin
     val m = z.select(col("_w")).distinct().count()
     require(m >= 1L,
       "burrowsDelta: every top word has zero cross-group variance")
@@ -2291,7 +2284,7 @@ object TextAnalysis {
     val gw = df.select(col(groupCol).as("group"),
         explode(cleanTokens(col(textCol))).as("_w"))
       .groupBy(col("group"), col("_w")).agg(count(lit(1)).as("_v"))
-      .localCheckpoint(true)
+      .pin
     val top = gw.groupBy(col("_w")).agg(sum(col("_v")).as("_f"))
       .orderBy(col("_f").desc, col("_w").asc).limit(topK)
     val marg = gw.groupBy(col("group")).agg(sum(col("_v")).as("_ng"))

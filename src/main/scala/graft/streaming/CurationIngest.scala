@@ -4,6 +4,8 @@ import graft.ops.{Curation, Dedup, PiiScrub, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Pin
+import graft.core.Pin._
 
 /** Streaming corpus-curation ingest: the batch curation ladder — rule
   * quality gate (q127), PII redaction (q66), cross-batch exact dedup
@@ -71,7 +73,7 @@ object CurationIngest {
           .select(col("_fp"))
       else spark.emptyDataFrame.select(lit("").as("_fp")).limit(0)
     val fresh = reps.join(known, Seq("_fp"), "left_anti")
-      .localCheckpoint(true) // one pass feeds both sinks
+      .pin // one pass feeds both sinks
     fresh.select(col(idCol), col("redacted"), col("n_redacted"))
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     fresh.select(col("_fp"))
@@ -139,12 +141,12 @@ object CurationIngest {
     val knownFps = readPart(spark, s"$indexDir/fps", batchId)
       .map(_.select(col("_fp")))
     val fresh = knownFps.fold(reps)(k => reps.join(k, Seq("_fp"), "left_anti"))
-      .localCheckpoint(true) // feeds signatures, admission and both sinks
+      .pin // feeds signatures, admission and both sinks
 
     // ---- near-dup tier: banded candidates + components routing ------
     val bb = Dedup.bandedSignatures(fresh, idCol, "redacted",
         numHashes, bands, w)
-      .localCheckpoint(true) // joined twice (cross + self) + sink
+      .pin // joined twice (cross + self) + sink
     val corpusSigs = readPart(spark, s"$indexDir/sigs", batchId)
     val crossCand = corpusSigs.map(cs =>
         Dedup.incrementalCandidates(bb, cs, idCol, numHashes, threshold)
@@ -154,7 +156,7 @@ object CurationIngest {
         numHashes, threshold)
       .filter(col("batch_id") < col("corpus_id"))
       .select(col("batch_id").as("a_id"), col("corpus_id").as("b_id"))
-    val pairs = crossCand.unionByName(selfCand).localCheckpoint(true)
+    val pairs = crossCand.unionByName(selfCand).pin
 
     // current labeling = latest-batch-wins over the label deltas
     val oldLabels = readPart(spark, s"$indexDir/labels", batchId)
@@ -172,14 +174,14 @@ object CurationIngest {
     val labelsAll = resolved
       .unionByName(batchIds.join(resolved, Seq("id"), "left_anti")
         .select(col("id"), col("id").as("component")))
-      .localCheckpoint(true)
+      .pin
 
     // clusters this batch touched — admission + the labels delta
     val touchedComps = labelsAll.join(batchIds, Seq("id"))
       .select(col("component")).distinct()
     val touchedRows = labelsAll.join(touchedComps, Seq("component"))
       .join(batchIds.withColumn("_isb", lit(1L)), Seq("id"), "left")
-      .localCheckpoint(true)
+      .pin
     val admittedIds = touchedRows
       .groupBy(col("component"))
       .agg(min(when(col("_isb") === 1L, col("id"))).as("_keep"),
@@ -187,7 +189,7 @@ object CurationIngest {
       .filter(col("_has_corpus") === 0L)
       .select(col("_keep").as(idCol))
     val admitted = fresh.join(admittedIds, Seq(idCol))
-      .localCheckpoint(true) // docs + sigs sinks
+      .pin // docs + sigs sinks
 
     // ---- exactly-once sinks (batch=<id> overwrite) ------------------
     admitted.select(col(idCol), col("redacted"), col("n_redacted"))
@@ -233,8 +235,9 @@ object CurationIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchNearDup(batch, batchId, idCol, textCol, indexDir,
-          outDir, minWords, numHashes, bands, w, threshold)
+        try processBatchNearDup(batch, batchId, idCol, textCol, indexDir,
+            outDir, minWords, numHashes, bands, w, threshold)
+        finally Pin.release(batch.sparkSession)
       }
       .start()
 
@@ -284,7 +287,8 @@ object CurationIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        funnelStatsBatch(batch, batchId, gates, statsDir)
+        try funnelStatsBatch(batch, batchId, gates, statsDir)
+        finally Pin.release(batch.sparkSession)
       }
       .start()
 
@@ -304,7 +308,8 @@ object CurationIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, idCol, textCol, indexDir, outDir, minWords)
+        try processBatch(batch, batchId, idCol, textCol, indexDir, outDir, minWords)
+        finally Pin.release(batch.sparkSession)
       }
       .start()
 }

@@ -4,6 +4,7 @@ import graft.ops.ChangeDetect
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Pin
 
 /** Streaming CUSUM drift monitor — the q214 sequential change detector
   * ([[graft.ops.ChangeDetect.cusum]]) run at ingest time: each
@@ -63,7 +64,8 @@ object CusumMonitor {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        observeBatch(batch, batchId, gridDir, bucketCol, valueCol)
+        try observeBatch(batch, batchId, gridDir, bucketCol, valueCol)
+        finally Pin.release(batch.sparkSession)
       }
       .start()
 

@@ -4,6 +4,7 @@ import graft.ops.ClassifierEval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Pin
 
 /** Streaming score-distribution DRIFT monitor — the q200 PSI readout
   * ([[graft.ops.ClassifierEval.scoreDrift]]) run at ingest time: the
@@ -67,7 +68,8 @@ object DriftMonitor {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        driftStatsBatch(batch, batchId, refDir, confCol, statsDir, bins)
+        try driftStatsBatch(batch, batchId, refDir, confCol, statsDir, bins)
+        finally Pin.release(batch.sparkSession)
       }
       .start()
 

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.ops.{LmIndex, Manifest, TextIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Pin
 
 /** Streaming EXACTLY-ONCE ingest for the two text-side Manifest index
   * families — [[IvfIngest]]'s discipline applied to the LM count tables
@@ -61,7 +62,8 @@ object IndexIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        lmProcessBatch(batch, batchId, textCol, dir)
+        try lmProcessBatch(batch, batchId, textCol, dir)
+        finally Pin.release(batch.sparkSession)
       }
       .start()
 

@@ -4,6 +4,7 @@ import graft.ops.Spectral
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Pin
 
 /** Streaming EMBEDDING-COLLAPSE monitor — the q252 isotropy canary
   * ([[graft.ops.Spectral.isotropy]]) run at ingest time: each
@@ -56,7 +57,8 @@ object IsotropyMonitor {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        observeBatch(batch, batchId, stateDir, vecCol)
+        try observeBatch(batch, batchId, stateDir, vecCol)
+        finally Pin.release(batch.sparkSession)
       }
       .start()
 

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.Pin
 
 /** Streaming LM-perplexity quality gate — the PRODUCTION use of the
   * persisted stupid-backoff model ([[graft.ops.LmIndex]]): every
@@ -61,8 +62,9 @@ object LmGate {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, idCol, textCol, modelDir, outDir,
-          minAvgLogprob, alpha, hotK)
+        try processBatch(batch, batchId, idCol, textCol, modelDir, outDir,
+            minAvgLogprob, alpha, hotK)
+        finally Pin.release(batch.sparkSession)
       }
       .start()
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import graft.core.Pin
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Dev tool: profile one query. Prints
@@ -39,7 +40,7 @@ object Explain {
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
-      val n = df.collect().length
+      val n = try df.collect().length finally Pin.release(spark)
       println(f"RUN$i: ${(System.nanoTime() - t0) / 1e9}%.3f s " +
         f"(build $tBuild%.3f s, $n rows)")
       df

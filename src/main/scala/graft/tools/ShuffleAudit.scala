@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
+import graft.core.Pin
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
@@ -42,10 +43,11 @@ object ShuffleAudit {
     sb.append("| query | input MB | shuffle write MB | shuffle read MB | spill MB |\n")
     sb.append("|---|---|---|---|---|\n")
     for (q <- SparkEntry.all) {
-      q.run(spark, sfDir).count() // warm (listener counts it, reset below)
+      // warm (listener counts it, reset below); each run drops its pins
+      try q.run(spark, sfDir).count() finally Pin.release(spark)
       Thread.sleep(500) // let async listener events drain (dev tool)
       Seq(read, write, spillMem, spillDisk, input).foreach(_.set(0))
-      q.run(spark, sfDir).count()
+      try q.run(spark, sfDir).count() finally Pin.release(spark)
       Thread.sleep(500) // let async listener events drain (dev tool)
       sb.append(s"| ${q.name} | ${mb(input.get)} | ${mb(write.get)} | ${mb(read.get)} " +
         s"| ${mb(spillMem.get + spillDisk.get)} |\n")

@@ -460,10 +460,12 @@ class PlanShapeSpec extends SparkSpecBase {
         s"$q: hot tokens must broadcast:\n${p.take(1200)}")
       // the pre-aggregate either plans inline (HashAggregate on the
       // multi-key) or — since the r16 pin — is materialized once and
-      // enters the join as the pinned (group, gram…, _n) relation; both
+      // enters the join as the pinned (group, gram…, _n) relation (a
+      // checkpointed RDD scan or a persisted in-memory scan); both
       // forms prove the corpus collapsed before any join
       val pre = (raw"HashAggregate\(keys=\[$grp#\d+L?, ").r
-      val pinned = (raw"Scan ExistingRDD\[$grp#\d+L?,(token|p)#").r
+      val pinned =
+        (raw"(Scan ExistingRDD|InMemoryTableScan )\[$grp#\d+L?, ?(token|p)#").r
       assert(pre.findFirstIn(p).isDefined || pinned.findFirstIn(p).isDefined,
         s"$q: corpus must pre-aggregate to (group, token, n) before any join:\n${p.take(1500)}")
     }
@@ -529,10 +531,11 @@ class PlanShapeSpec extends SparkSpecBase {
     val p = plan("q157_kn_bigram")
     assert(p.contains("BroadcastHashJoin"),
       s"hot pairs must broadcast:\n${p.take(1200)}")
-    // inline pre-aggregate or the r16 pinned (doc, p, c, _n) relation —
-    // both prove the corpus collapsed before any join
+    // inline pre-aggregate or the r16 pinned (doc, p, c, _n) relation,
+    // checkpointed or persisted — both prove the corpus collapsed
+    // before any join
     val pre = raw"HashAggregate\(keys=\[doc_id#\d+L?, ".r
-    val pinned = raw"Scan ExistingRDD\[doc_id#\d+L?,p#".r
+    val pinned = raw"(Scan ExistingRDD|InMemoryTableScan )\[doc_id#\d+L?, ?p#".r
     assert(pre.findFirstIn(p).isDefined || pinned.findFirstIn(p).isDefined,
       s"corpus must pre-aggregate to (doc, p, c, n) before any join:\n${p.take(1500)}")
   }

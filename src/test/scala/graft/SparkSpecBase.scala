@@ -1,6 +1,8 @@
 package graft
 
+import graft.core.Pin
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One SparkSession shared across all suites (tests run in a single forked
@@ -18,4 +20,8 @@ object SharedSpark {
 
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SharedSpark.spark
+
+  // each test releases the pins its ops made, so no test reads another's
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test) finally Pin.release(spark)
 }

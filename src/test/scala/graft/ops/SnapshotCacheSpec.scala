@@ -51,6 +51,41 @@ class SnapshotCacheSpec extends SparkSpecBase {
       fail("must be a hit"))() == "b")
   }
 
+  test("a compute that throws leaves no latch behind; the next call computes") {
+    SnapshotCache.clear()
+    val before = SnapshotCache.pendingBuilds
+    val e = intercept[IllegalStateException] {
+      SnapshotCache.getOrCompute[AnyRef]("throwingBuild") {
+        throw new IllegalStateException("build failed")
+      }()
+    }
+    assert(e.getMessage == "build failed")
+    assert(SnapshotCache.pendingBuilds == before)
+    var computes = 0
+    val v = SnapshotCache.getOrCompute[AnyRef]("throwingBuild") {
+      computes += 1; "rebuilt"
+    }()
+    assert(v == "rebuilt" && computes == 1)
+    assert(SnapshotCache.pendingBuilds == before)
+  }
+
+  test("persisted holds a frame per key; a new key over grown files is " +
+      "not served the old cache; clear() unpersists") {
+    SnapshotCache.clear()
+    val dir = Files.createTempDirectory("snap_persisted_").toString
+    spark.range(0, 10).write.parquet(s"$dir/part=1")
+    def total(k: String) = SnapshotCache.persisted(k)(
+      spark.read.parquet(dir).agg(sum(col("id")).as("s")))
+    val a = total("t|1")
+    assert(a.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    assert(a.head().getLong(0) == 45L)
+    assert(total("t|1") eq a)
+    spark.range(10, 20).write.parquet(s"$dir/part=2")
+    assert(total("t|2").head().getLong(0) == 190L)
+    SnapshotCache.clear()
+    assert(a.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("same-key racers compute exactly once (per-key latch, r17)") {
     SnapshotCache.clear()
     val computes = new java.util.concurrent.atomic.AtomicInteger(0)
