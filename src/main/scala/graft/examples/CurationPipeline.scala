@@ -64,15 +64,18 @@ object CurationPipeline {
       .pin // read three times: candidates, survivors, dedup
 
     // 3. near-dup dedup, longest-doc survivor
-    val pairs = Dedup.minHashCandidates(gated, "doc_id", "text",
-      threshold = 0.5).select(col("a_id"), col("b_id"))
-      .pin // read twice: survivors and components
+    // read twice (survivors, losers); cut, not pinned, so the plans below
+    // the losers carry no MinHash lineage
+    val pairs = Pin.cut(Dedup.minHashCandidates(gated, "doc_id", "text",
+      threshold = 0.5).select(col("a_id"), col("b_id")), eager = true)
     val keep = Components.bestPerCluster(
         gated.withColumn("n_chars", length(col("text"))),
         "doc_id", pairs, "n_chars")
       .select(col("keep_id").as("doc_id"))
-    val losers = Components.connectedComponents(pairs)
-      .select(col("id").as("doc_id"))
+    // every id in a pair lies in exactly one component, so the losers are
+    // the paired ids minus the survivors — no second components solve
+    val losers = pairs.select(explode(array(col("a_id"), col("b_id"))).as("doc_id"))
+      .distinct()
       .join(keep, Seq("doc_id"), "left_anti")
     val deduped = gated.join(losers, Seq("doc_id"), "left_anti")
 

@@ -931,6 +931,10 @@ object ClassifierEval {
     out.toList.reduce(_ unionByName _).orderBy(col("signal"))
   }
 
+  // k groups expand to k(k-1)/2 pairs: past this the group list is not
+  // source-count-sized and the driver-side pair grid is the wrong plan
+  private val MannWhitneyMaxGroups = 1000
+
   /** PAIRWISE Mann–Whitney MATRIX across k groups — the drill-down
     * behind [[kruskal]]'s single "somewhere differs" verdict: for every
     * unordered group pair, the tie-corrected z and rank-biserial effect
@@ -960,7 +964,9 @@ object ClassifierEval {
     // below is a broadcast local relation, not a shuffled self-join
     val perG = g.groupBy(col("_g")).agg(
         sum(when(col("_sm").isNull, lit(1L)).otherwise(lit(0L))).as("_bad"))
-      .collect()
+      .limit(MannWhitneyMaxGroups + 1).collect()
+    require(perG.length <= MannWhitneyMaxGroups,
+      s"mannWhitneyMatrix supports at most $MannWhitneyMaxGroups groups in '$groupCol'")
     require(!perG.exists(r => r.isNullAt(0) || r.getLong(1) > 0L),
       s"mannWhitneyMatrix needs non-NULL '$groupCol' and '$scoreCol'")
     val nG = perG.length.toLong

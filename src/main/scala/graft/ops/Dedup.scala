@@ -667,8 +667,9 @@ object Dedup {
         lit(tm).cast(dec) * lit(tm))
       .select(col("a._id").as("a_id"), col("b._id").as("b_id"))
       .distinct()
-    // r17 verify audit (VERDICT item #7): instrumented at sf0.1 via
-    // graft.tools.ProbeQ266 — 268 K prefix-join rows → 142 K distinct
+    // r17 verify audit (VERDICT item #7): instrumented at sf0.1 by a
+    // probe (tools/ProbeQ266, deleted; last present at 18416b5) that
+    // re-ran this op's stages — 268 K prefix-join rows → 142 K distinct
     // candidates → 256 verified pairs (~555 candidates per emitted
     // pair). The prefix/tail bounds are already the sharp Cauchy–
     // Schwarz bounds on the quantized grid (all norms² = 10¹², so no

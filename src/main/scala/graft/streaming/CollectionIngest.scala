@@ -35,12 +35,8 @@ object CollectionIngest {
       embedder: Embedder,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Embed.withEmbedding(batch, "document", "embedding", embedder)
-          .write.mode("append").parquet(coll.info.path)
-      }
-      .start()
+    MicroBatch.start(docsStream, checkpointDir, trigger) { (batch, _) =>
+      Embed.withEmbedding(batch, "document", "embedding", embedder)
+        .write.mode("append").parquet(coll.info.path)
+    }
 }

@@ -4,7 +4,6 @@ import graft.ops.{Curation, Dedup, PiiScrub, TextAnalysis}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.Pin
 import graft.core.Pin._
 
 /** Streaming corpus-curation ingest: the batch curation ladder — rule
@@ -231,15 +230,10 @@ object CurationIngest {
       minWords: Int = 5, numHashes: Int = 32, bands: Int = 8,
       w: Int = 3, threshold: Double = 0.5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try processBatchNearDup(batch, batchId, idCol, textCol, indexDir,
-            outDir, minWords, numHashes, bands, w, threshold)
-        finally Pin.release(batch.sparkSession)
-      }
-      .start()
+    MicroBatch.start(docsStream, checkpointDir, trigger) { (batch, batchId) =>
+      processBatchNearDup(batch, batchId, idCol, textCol, indexDir,
+        outDir, minWords, numHashes, bands, w, threshold)
+    }
 
   /** One micro-batch of STREAMING funnel attrition monitoring — the
     * q192 readout kept live at ingest: the batch's
@@ -283,14 +277,9 @@ object CurationIngest {
       statsDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try funnelStatsBatch(batch, batchId, gates, statsDir)
-        finally Pin.release(batch.sparkSession)
-      }
-      .start()
+    MicroBatch.start(docsStream, checkpointDir, trigger) { (batch, batchId) =>
+      funnelStatsBatch(batch, batchId, gates, statsDir)
+    }
 
   /** Start the curated ingest: docsStream(idCol, textCol) → quality
     * gate → PII-redacted text → never-seen-before docs appended under
@@ -304,12 +293,7 @@ object CurationIngest {
       checkpointDir: String,
       minWords: Int = 5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try processBatch(batch, batchId, idCol, textCol, indexDir, outDir, minWords)
-        finally Pin.release(batch.sparkSession)
-      }
-      .start()
+    MicroBatch.start(docsStream, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, idCol, textCol, indexDir, outDir, minWords)
+    }
 }

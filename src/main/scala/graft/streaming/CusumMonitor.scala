@@ -4,7 +4,6 @@ import graft.ops.ChangeDetect
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.Pin
 
 /** Streaming CUSUM drift monitor — the q214 sequential change detector
   * ([[graft.ops.ChangeDetect.cusum]]) run at ingest time: each
@@ -60,14 +59,9 @@ object CusumMonitor {
       valueCol: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    obsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try observeBatch(batch, batchId, gridDir, bucketCol, valueCol)
-        finally Pin.release(batch.sparkSession)
-      }
-      .start()
+    MicroBatch.start(obsStream, checkpointDir, trigger) { (batch, batchId) =>
+      observeBatch(batch, batchId, gridDir, bucketCol, valueCol)
+    }
 
   /** The CUSUM trajectory over every observation persisted so far —
     * identical rows to [[graft.ops.ChangeDetect.cusum]] on the union

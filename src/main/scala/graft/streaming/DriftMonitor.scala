@@ -4,7 +4,6 @@ import graft.ops.ClassifierEval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.Pin
 
 /** Streaming score-distribution DRIFT monitor — the q200 PSI readout
   * ([[graft.ops.ClassifierEval.scoreDrift]]) run at ingest time: the
@@ -64,14 +63,9 @@ object DriftMonitor {
       checkpointDir: String,
       bins: Int = 10,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    predStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try driftStatsBatch(batch, batchId, refDir, confCol, statsDir, bins)
-        finally Pin.release(batch.sparkSession)
-      }
-      .start()
+    MicroBatch.start(predStream, checkpointDir, trigger) { (batch, batchId) =>
+      driftStatsBatch(batch, batchId, refDir, confCol, statsDir, bins)
+    }
 
   /** The per-batch drift trajectory: one row per monitored batch,
     * worst first — `psi_total` is constant within a batch's rows, so

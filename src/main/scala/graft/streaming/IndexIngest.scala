@@ -3,7 +3,6 @@ package graft.streaming
 import graft.ops.{LmIndex, Manifest, TextIndex}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.Pin
 
 /** Streaming EXACTLY-ONCE ingest for the two text-side Manifest index
   * families — [[IvfIngest]]'s discipline applied to the LM count tables
@@ -58,25 +57,16 @@ object IndexIngest {
   def lmAppendStream(docsStream: DataFrame, textCol: String, dir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try lmProcessBatch(batch, batchId, textCol, dir)
-        finally Pin.release(batch.sparkSession)
-      }
-      .start()
+    MicroBatch.start(docsStream, checkpointDir, trigger) { (batch, batchId) =>
+      lmProcessBatch(batch, batchId, textCol, dir)
+    }
 
   /** Stream documents into a persisted BM25 index. */
   def textAppendStream(docsStream: DataFrame, idCol: String,
       textCol: String, dir: String, checkpointDir: String,
       buckets: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        textProcessBatch(batch, batchId, idCol, textCol, dir, buckets)
-      }
-      .start()
+    MicroBatch.start(docsStream, checkpointDir, trigger) { (batch, batchId) =>
+      textProcessBatch(batch, batchId, idCol, textCol, dir, buckets)
+    }
 }

@@ -4,7 +4,6 @@ import graft.ops.Spectral
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.Pin
 
 /** Streaming EMBEDDING-COLLAPSE monitor — the q252 isotropy canary
   * ([[graft.ops.Spectral.isotropy]]) run at ingest time: each
@@ -53,14 +52,9 @@ object IsotropyMonitor {
       vecCol: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try observeBatch(batch, batchId, stateDir, vecCol)
-        finally Pin.release(batch.sparkSession)
-      }
-      .start()
+    MicroBatch.start(vecStream, checkpointDir, trigger) { (batch, batchId) =>
+      observeBatch(batch, batchId, stateDir, vecCol)
+    }
 
   /** The isotropy readout over every vector ingested so far —
     * identical row to [[graft.ops.Spectral.isotropy]] on the union of

@@ -61,11 +61,7 @@ object IvfIngest {
   def appendStream(vecsStream: DataFrame, vecCol: String, path: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, vecCol, path)
-      }
-      .start()
+    MicroBatch.start(vecsStream, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, vecCol, path)
+    }
 }

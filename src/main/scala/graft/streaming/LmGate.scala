@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.core.Pin
 
 /** Streaming LM-perplexity quality gate — the PRODUCTION use of the
   * persisted stupid-backoff model ([[graft.ops.LmIndex]]): every
@@ -58,13 +57,8 @@ object LmGate {
       minAvgLogprob: Double,
       alpha: Double = 0.4, hotK: Int = 4096,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docsStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        try processBatch(batch, batchId, idCol, textCol, modelDir, outDir,
-            minAvgLogprob, alpha, hotK)
-        finally Pin.release(batch.sparkSession)
-      }
-      .start()
+    MicroBatch.start(docsStream, checkpointDir, trigger) { (batch, batchId) =>
+      processBatch(batch, batchId, idCol, textCol, modelDir, outDir,
+        minAvgLogprob, alpha, hotK)
+    }
 }

@@ -48,13 +48,9 @@ object SkewMonitor {
       key: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    rowStream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        observeBatch(batch, batchId, stateDir, key)
-      }
-      .start()
+    MicroBatch.start(rowStream, checkpointDir, trigger) { (batch, batchId) =>
+      observeBatch(batch, batchId, stateDir, key)
+    }
 
   /** The skew report over every row observed so far — identical rows
     * to [[graft.ops.Skew.skewReport]] on the union of all monitored

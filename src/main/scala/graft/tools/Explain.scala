@@ -1,57 +1,116 @@
 package graft.tools
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
 import graft.{GraftSession, SparkEntry}
 import graft.core.Pin
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
-/** Dev tool: profile one query. Prints
-  *  1. the formatted physical plan;
-  *  2. for each run, every Spark job's wall time and call site, then a
-  *     `RUN` line with the total and the DataFrame build time, so a
-  *     query's time splits into its jobs (driver-side gaps show up as the
-  *     difference);
-  *  3. operator counts from the last run's final (post-AQE) plan — scans,
-  *     exchanges, reuse, joins — the quick "how many times does this
-  *     recompute the corpus" readout.
-  * Each run collects the result, so the counted plan is the one executed.
-  *   sbt "runMain graft.tools.Explain <query> [sfDir] [reps]"
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+/** Dev tool: the per-query profiler. For each named query it prints
+  *  1. `== <query>`, then its formatted physical plan;
+  *  2. for each run, every Spark job's wall time, the shuffle write,
+  *     shuffle read, spill (memory + disk) and input bytes of the stages
+  *     it ran, and its call site; then a `RUN<i> <query>:` line with the
+  *     run's wall and DataFrame build time, its job count and the four
+  *     byte totals, so a query's time splits into its jobs (driver-side
+  *     gaps show up as the difference);
+  *  3. an `OPS <query>:` line of operator counts from the last run's final
+  *     (post-AQE) plan — scans, exchanges, reuse, joins — the quick "how
+  *     many times does this recompute the corpus" readout.
+  * Each run collects the result, so the counted plan is the one executed,
+  * and releases its pins, so no run reads the previous run's.
+  *   sbt "runMain graft.tools.Explain <query>[,<query>...]|all [sfDir] [reps]"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    require(reps >= 1, s"reps must be >= 1, got $reps")
-    val fn = SparkEntry.queries(name)
     val spark = GraftSession.local()
-    fn(spark, sfDir).explain("formatted")
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        // the result stage (highest id) is named after the job's call site
-        starts.put(e.jobId, (System.nanoTime(),
-          e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name)))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val (t0, site) = starts.getOrDefault(e.jobId, (0L, "?"))
-        println(f"[job ${e.jobId}%3d] ${(System.nanoTime() - t0) / 1e9}%7.3f s  $site")
-      }
-    })
-    val last = (1 to reps).map { i =>
-      val t0 = System.nanoTime()
-      val df = fn(spark, sfDir)
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      val n = try df.collect().length finally Pin.release(spark)
-      println(f"RUN$i: ${(System.nanoTime() - t0) / 1e9}%.3f s " +
-        f"(build $tBuild%.3f s, $n rows)")
-      df
-    }.last
-    val p = last.queryExecution.executedPlan.toString
-    def c(op: String) = op.r.findAllIn(p).size
-    println(s"== $name")
-    println(s"  scans=${c("Scan parquet")} exch=${c("Exchange hashpartitioning")}" +
-      s" reusedExch=${c("ReusedExchange")} bcastJoin=${c("BroadcastHashJoin")}" +
-      s" smj=${c("SortMergeJoin")} shj=${c("ShuffledHashJoin")}" +
-      s" agg=${c("HashAggregate")} cache=${c("InMemoryTableScan")}")
-    spark.stop()
+    try profile(spark, args(0), sfDir, reps) finally spark.stop()
+  }
+
+  /** Profiles `names` — comma-separated registry names, or `all` for the
+    * whole registry in order — with `reps` runs each. Every name is
+    * checked before any query runs. */
+  def profile(spark: SparkSession, names: String, sfDir: String, reps: Int): Unit = {
+    require(reps >= 1, s"reps must be >= 1, got $reps")
+    val queries = if (names == "all") SparkEntry.all else {
+      val byName = SparkEntry.all.map(q => q.name -> q).toMap
+      val wanted = names.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val unknown = wanted.filterNot(byName.contains)
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+      wanted.map(byName)
+    }
+    val jobs = new JobListener
+    spark.sparkContext.addSparkListener(jobs)
+    try for (q <- queries) {
+      println(s"== ${q.name}")
+      try q.run(spark, sfDir).explain("formatted") finally Pin.release(spark)
+      val last = (1 to reps).map { i =>
+        ListenerBridge.drain(spark.sparkContext)
+        jobs.ended.clear()
+        val t0 = System.nanoTime()
+        val df = q.run(spark, sfDir)
+        val tBuild = (System.nanoTime() - t0) / 1e9
+        val n = try df.collect().length finally Pin.release(spark)
+        val wall = (System.nanoTime() - t0) / 1e9
+        ListenerBridge.drain(spark.sparkContext)
+        val done = jobs.ended.asScala.toSeq.sortBy(_.id)
+        done.foreach(j => println(f"[job ${j.id}%3d] ${j.seconds}%7.3f s  ${j.bytes}  ${j.site}"))
+        println(f"RUN$i ${q.name}: $wall%.3f s (build $tBuild%.3f s, $n rows) " +
+          s"jobs=${done.size} ${done.map(_.bytes).foldLeft(Bytes.zero)(_ + _)}")
+        df
+      }.last
+      val p = last.queryExecution.executedPlan.toString
+      def c(op: String) = op.r.findAllIn(p).size
+      println(s"OPS ${q.name}: scans=${c("Scan parquet")} exch=${c("Exchange hashpartitioning")}" +
+        s" reusedExch=${c("ReusedExchange")} bcastJoin=${c("BroadcastHashJoin")}" +
+        s" smj=${c("SortMergeJoin")} shj=${c("ShuffledHashJoin")}" +
+        s" agg=${c("HashAggregate")} cache=${c("InMemoryTableScan")}")
+    } finally spark.sparkContext.removeSparkListener(jobs)
+  }
+
+  private final case class Bytes(shuffleWrite: Long, shuffleRead: Long, spill: Long, input: Long) {
+    def +(o: Bytes): Bytes = Bytes(shuffleWrite + o.shuffleWrite,
+      shuffleRead + o.shuffleRead, spill + o.spill, input + o.input)
+    override def toString: String =
+      s"shuffle_write=$shuffleWrite shuffle_read=$shuffleRead spill=$spill input=$input"
+  }
+  private object Bytes { val zero: Bytes = Bytes(0L, 0L, 0L, 0L) }
+
+  private final case class Job(id: Int, seconds: Double, site: String, bytes: Bytes)
+
+  /** Job start/end plus stage completion: each completed stage's task
+    * metrics are added to the first job that listed the stage. Only the
+    * listener bus thread touches the maps; `ended` is read after a drain. */
+  private final class JobListener extends SparkListener {
+    val ended = new ConcurrentLinkedQueue[Job]()
+    private val started = mutable.Map.empty[Int, (Long, String)]
+    private val stageJob = mutable.Map.empty[Int, Int]
+    private val bytes = mutable.Map.empty[Int, Bytes]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      // the result stage (highest id) is named after the job's call site
+      started(e.jobId) = (e.time, e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name))
+      e.stageIds.foreach(stageJob.getOrElseUpdate(_, e.jobId))
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val m = e.stageInfo.taskMetrics
+      for (job <- stageJob.get(e.stageInfo.stageId) if m != null)
+        bytes(job) = bytes.getOrElse(job, Bytes.zero) + Bytes(m.shuffleWriteMetrics.bytesWritten,
+          m.shuffleReadMetrics.totalBytesRead, m.memoryBytesSpilled + m.diskBytesSpilled,
+          m.inputMetrics.bytesRead)
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = {
+      val (t0, site) = started.remove(e.jobId).getOrElse((e.time, "?"))
+      ended.add(Job(e.jobId, (e.time - t0) / 1e3, site, bytes.remove(e.jobId).getOrElse(Bytes.zero)))
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.core.Pin
+import graft.core.Pin._
 import graft.expr.VectorExprs
 import org.apache.spark.sql.functions._
 
@@ -25,7 +27,7 @@ object KernelBench {
       col("id"),
       expr(s"transform(sequence(1, $dim), i -> cast(pmod(id * i, 97) / 97.0 as float))").as("a"),
       expr(s"transform(sequence(1, $dim), i -> cast(pmod(id + i, 89) / 89.0 as float))").as("b"))
-      .persist()
+      .pin
     df.count() // materialize input once
 
     val hof = expr(
@@ -61,7 +63,7 @@ object KernelBench {
     val qdf = df.select(col("id"),
       graft.ops.Quantize.toInt8(col("a"), lit(127.0d)).as("qa"),
       graft.ops.Quantize.toInt8(col("b"), lit(127.0d)).as("qb"))
-      .persist()
+      .pin
     qdf.count()
     def timeQ(label: String)(c: org.apache.spark.sql.Column): Double = {
       qdf.select(sum(c)).head()
@@ -77,7 +79,7 @@ object KernelBench {
     val qi = timeQ("int8 codegen kernel")(
       graft.expr.QuantExprs.dotI8(col("qa"), col("qb")))
     println(f"int8 vs float codegen: ${ce / qi}%.1fx (plus 4x smaller scans at rest)")
-    qdf.unpersist()
+    Pin.release(spark) // df and qdf
 
     // ---- text-sketch kernels: one-pass codegen vs expression pipelines --
     val nDocs = math.max(n / 20, 1000L)
@@ -85,7 +87,7 @@ object KernelBench {
       col("id"),
       expr("""array_join(transform(sequence(1, 60),
               i -> concat('w', pmod(id * i + i, 211))), ' ')""").as("text"))
-      .persist()
+      .pin
     docs.count()
     def timeDf(label: String)(mk: => org.apache.spark.sql.DataFrame): Double = {
       mk.count() // warm
@@ -147,7 +149,7 @@ object KernelBench {
     }
     val vecs = spark.range(nVec).select(expr(
       s"transform(sequence(1, $sdim), i -> cast(round(pmod(id * i, 199) / 199.0 * 1e6) as bigint))")
-      .as("vm")).persist()
+      .as("vm")).pin
     vecs.count()
     println(s"\nSpectral moments over $nVec vectors x $sdim dims (local, min of 3):")
     println("| kernel                 | time       | throughput      |")
@@ -164,7 +166,7 @@ object KernelBench {
         .groupBy(col("e.p"), col("e.q"))
         .agg(sum(col("e.prod").cast("decimal(38,0)")).as("sxy")))
     println(f"moments aggregate vs explode formulation: ${se / sa}%.1fx")
-    vecs.unpersist()
+    Pin.release(spark) // docs and vecs
     spark.stop()
   }
 }

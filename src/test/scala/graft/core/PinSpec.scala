@@ -82,7 +82,6 @@ class PinSpec extends SparkSpecBase {
     assert(Files.isDirectory(root), s"run from the project root, not ${Paths.get("").toAbsolutePath}")
     val files = Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.startsWith(root.resolve("tools")))
       .toSeq
     def hits(p: Path, needles: Seq[String]): Seq[String] =
       Files.readAllLines(p).asScala.zipWithIndex.collect {

@@ -877,6 +877,11 @@ class ClassifierEvalSpec extends SparkSpecBase {
     intercept[IllegalArgumentException](ClassifierEval.mannWhitneyMatrix(
       Seq(("s1", Option.empty[Double]), ("s2", Some(1.0d)))
         .toDF("src", "conf"), "src", "conf"))
+    // the group list is collected to the driver: past the cap it fails
+    // before any pair is expanded
+    val overCap = intercept[IllegalArgumentException](ClassifierEval.mannWhitneyMatrix(
+      (0 to 1000).map(i => (s"s$i", i.toDouble)).toDF("src", "conf"), "src", "conf"))
+    assert(overCap.getMessage.contains("at most 1000 groups in 'src'"), overCap.getMessage)
   }
 
   test("kendallW: perfect / zero concordance, tie correction, guards") {
