@@ -1,9 +1,11 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets
+import java.io.{FileNotFoundException, InputStream}
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileContext, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** One collection's catalog entry — the Spark-native form of the
   * reference's `KeyViewIndexer` + `key-{view}` pointer scheme
@@ -18,62 +20,32 @@ final case class CollectionInfo(
     createdAt: Long,
     partitionCols: Seq[String] = Seq.empty)
 
-/** The collections catalog: a tiny Parquet table under
-  * `{warehouse}/_catalog` mapping view → (key, data path, model config).
+/** The collections catalog: one JSON file, `{warehouse}/_catalog.json`,
+  * holding the array of [[CollectionInfo]] entries (view → key, data path,
+  * model config).
   *
   * The reference keeps three LMDB keys ("keys", "views", "key-{view}") that
   * it read-modify-writes on every mutation (embeddings.rs:481-539); here
-  * that collapses into one small table, made reader-safe with a versioned
-  * layout: each write lands in a fresh `v_{nonce}` directory and a CURRENT
-  * pointer file is swapped over it with an atomic OVERWRITE rename —
-  * readers always resolve a complete version, never a half-written or
-  * momentarily-deleted directory. At 100 TB the catalog stays tiny (one
-  * row per collection) — only collection *data* scales. (Concurrent
-  * *writers* still need external coordination — same single-writer model
-  * as the reference's lock, database.rs:28-31.)
+  * that collapses into one small file read and written on the driver, with
+  * no Spark job. A write lands in `_catalog.json.tmp` and is renamed over
+  * the file with an atomic OVERWRITE rename, so a reader sees either the
+  * old catalog or the new one, never a half-written one. At 100 TB the
+  * catalog stays tiny (one entry per collection) — only collection *data*
+  * scales. (Concurrent *writers* still need external coordination — same
+  * single-writer model as the reference's lock, database.rs:28-31.)
   */
 final class Catalog(spark: SparkSession, warehouse: String) {
-  import spark.implicits._
+  private val file = new Path(s"$warehouse/_catalog.json")
+  private def conf = spark.sparkContext.hadoopConfiguration
+  private def fs = file.getFileSystem(conf)
 
-  private val catalogPath = s"$warehouse/_catalog"
-  private val currentPtr = new Path(s"$catalogPath/CURRENT")
-
-  private def fs = new Path(warehouse)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Resolve the current version's data dir via the pointer file. */
-  private def currentDir(): Option[String] = {
-    if (!fs.exists(currentPtr)) return None
-    val in = fs.open(currentPtr)
+  /** Every entry, by view; empty before the first collection is created. */
+  def list(): Seq[CollectionInfo] =
     try {
-      val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      Some(s"$catalogPath/${new String(bytes, StandardCharsets.UTF_8).trim}")
-    } finally in.close()
-  }
-
-  /** Forward-compatible read of a catalog version dir: columns added to
-    * CollectionInfo after a warehouse was written (e.g. partitionCols)
-    * are filled with their defaults — encoder resolution alone would
-    * throw on the missing column and brick every pre-existing warehouse. */
-  private def readVersion(dir: String): DataFrame = {
-    val raw = spark.read.parquet(dir)
-    val withPartitionCols =
-      if (raw.columns.contains("partitionCols")) raw
-      else raw.withColumn("partitionCols",
-        org.apache.spark.sql.functions.typedLit(Seq.empty[String]))
-    withPartitionCols
-  }
-
-  def list(): Seq[CollectionInfo] = currentDir() match {
-    case None => Seq.empty
-    case Some(dir) =>
-      readVersion(dir).as[CollectionInfo].collect().toSeq.sortBy(_.view)
-  }
-
-  def listDf(): DataFrame = currentDir() match {
-    case None => spark.emptyDataset[CollectionInfo].toDF()
-    case Some(dir) => readVersion(dir)
-  }
+      val in: InputStream = fs.open(file)
+      try Catalog.mapper.readValue(in, classOf[Array[CollectionInfo]]).toSeq.sortBy(_.view)
+      finally in.close()
+    } catch { case _: FileNotFoundException => Seq.empty }
 
   /** All view names (reference: fetch_collection_keys(views=true),
     * embeddings.rs:312-324). */
@@ -106,27 +78,15 @@ final class Catalog(spark: SparkSession, warehouse: String) {
     write(current.filterNot(_.view == info.view) :+ info)
   }
 
-  private def write(rows: Seq[CollectionInfo]): Unit = {
-    val prev = currentDir()
-    val version = s"v_${System.nanoTime()}"
-    spark.createDataset(rows).coalesce(1).write.mode("overwrite")
-      .parquet(s"$catalogPath/$version")
-    // atomic pointer swap (FileContext rename with OVERWRITE — atomic on
-    // posix-local and HDFS): readers see either the old or the new version
-    val tmp = new Path(s"$catalogPath/CURRENT.tmp")
+  private def write(entries: Seq[CollectionInfo]): Unit = {
+    val tmp = new Path(s"$file.tmp")
     val out = fs.create(tmp, true)
-    try out.write(version.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    FileContext.getFileContext(tmp.toUri, spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, currentPtr, Options.Rename.OVERWRITE)
-    // best-effort cleanup: keep current + immediately-previous version (an
-    // in-flight reader may have resolved the old pointer); drop older ones
-    val keep = Set(Some(s"$catalogPath/$version"), prev).flatten
-      .map(p => new Path(p).getName)
-    try {
-      fs.listStatus(new Path(catalogPath)).foreach { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("v_") && !keep.contains(n)) fs.delete(st.getPath, true)
-      }
-    } catch { case _: Exception => () }
+    try out.write(Catalog.mapper.writeValueAsBytes(entries)) finally out.close()
+    // FileContext rename with OVERWRITE is atomic on posix-local and HDFS
+    FileContext.getFileContext(tmp.toUri, conf).rename(tmp, file, Options.Rename.OVERWRITE)
   }
+}
+
+object Catalog {
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 }

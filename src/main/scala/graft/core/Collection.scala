@@ -8,8 +8,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** A collection: the reference's `EmbeddingCollection`
   * (src/embeddings.rs:218-236) re-expressed as a Parquet-backed DataFrame
   * with schema (id: string, document: string, metadata: array<string>,
-  * embedding: array<float>) plus a catalog row for the collection-level
-  * config — per the mapping in SURVEY.md §1.5.
+  * embedding: array<float>) plus a [[Catalog]] entry for the
+  * collection-level config — per the mapping in SURVEY.md §1.5. Every
+  * version of a collection's data is a directory
+  * `{warehouse}/collections/{view}/v<n>`: create() writes the first,
+  * compact() and reembed() each write the next, and the catalog entry's
+  * `path` names the live one.
   *
   * The reference serializes all columns and the embedding matrix into one
   * bincode blob loaded fully into RAM per query (embeddings.rs:342,
@@ -67,16 +71,13 @@ final class Collection private[core] (
     * read would be absent from the compacted version and deleted with the
     * old dir by a later compact. Stop (or checkpoint-quiesce) the
     * CollectionIngest stream before compacting.
-    * Writes a new versioned data dir under `.compact/{view}/` (view names
-    * are `[a-zA-Z0-9_]+`, so the dot-prefixed sibling can never collide
-    * with another collection's directory), re-applying the hive
-    * `partitionBy` layout chosen at create(), then swaps the catalog
-    * entry's path (atomic pointer swap inside Catalog).
+    * Writes a new version dir `collections/{view}/v<n>`, re-applying the
+    * hive `partitionBy` layout chosen at create(), then swaps the catalog
+    * entry's path (atomic rename inside Catalog).
     *
     * Deletion is deferred: the immediately-previous version is kept so a
     * concurrent reader that resolved the old path before the swap keeps a
-    * consistent snapshot; only versions older than that are removed (the
-    * same keep-current-plus-previous policy as Catalog.write).
+    * consistent snapshot; only versions older than that are removed.
     * Returns the updated Collection handle. */
   def compact(warehouse: String, numFiles: Int = 1): Collection = {
     require(numFiles > 0, "numFiles must be positive")
@@ -89,45 +90,29 @@ final class Collection private[core] (
     * the whole DB). One distributed mapPartitions embed pass over the
     * stored documents (Embed.withEmbedding semantics: per-executor model,
     * grouped batches) — nothing materializes on the driver. Same
-    * versioned-dir + atomic catalog-pointer-swap + deferred-delete
-    * pattern and single-writer contract as [[compact]]; catalog metadata
-    * (modelType, dim) updates with the pointer, so readers always see a
-    * CONSISTENT (vectors, dim) pair. */
+    * version-dir + atomic catalog swap + deferred-delete pattern and
+    * single-writer contract as [[compact]]; catalog metadata (modelType,
+    * dim) updates with the path, so readers always see a CONSISTENT
+    * (vectors, dim) pair. */
   def reembed(warehouse: String, embedder: Embedder,
       modelType: String = "custom"): Collection =
     swapToNewVersion(warehouse,
       Embed.withEmbedding(df.drop("embedding"), "document", "embedding", embedder),
       p => info.copy(path = p, modelType = modelType, dim = embedder.dim))
 
-  /** Shared rewrite path: write `out` as a new version dir (re-applying
-    * the collection's hive layout), swap the catalog pointer, then
-    * best-effort-delete versions older than the immediately-previous one
-    * (kept for in-flight readers — see [[compact]]'s scaladoc). */
+  /** Shared rewrite path: write `out` as a new version dir, swap the
+    * catalog entry, then best-effort-delete every sibling version but the
+    * new one and the immediately-previous one (kept for in-flight readers
+    * — see [[compact]]'s scaladoc). */
   private def swapToNewVersion(warehouse: String, out: DataFrame,
       mutate: String => CollectionInfo): Collection = {
-    val versionsDir = s"$warehouse/collections/.compact/${info.view}"
-    val newPath = s"$versionsDir/v${System.nanoTime()}"
-    val writer = out.write.mode("overwrite")
-    (if (info.partitionCols.nonEmpty) writer.partitionBy(info.partitionCols: _*)
-     else writer).parquet(newPath)
-    val cat = Collection.catalog(spark, warehouse)
-    val updated = mutate(newPath)
-    cat.update(updated)
-    // Best-effort cleanup of versions older than the previous one.
-    val keep = Set(newPath, info.path).map(p => new Path(p).getName)
-    val vd = new Path(versionsDir)
-    val fs = vd.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      if (fs.exists(vd)) fs.listStatus(vd).foreach { st =>
-        if (!keep(st.getPath.getName)) fs.delete(st.getPath, true)
-      }
-      // The original create() dir is a version too — drop it once it is
-      // no longer the immediately-previous version (i.e. from the second
-      // rewrite onward, when `info.path` already points into .compact/).
-      val orig = new Path(s"$warehouse/collections/${info.view}")
-      val prevIsOrig =
-        new Path(info.path).toUri.getPath == orig.toUri.getPath
-      if (!prevIsOrig && fs.exists(orig)) fs.delete(orig, true)
+    val updated = mutate(Collection.writeVersion(warehouse, info.view, out, info.partitionCols))
+    Collection.catalog(spark, warehouse).update(updated)
+    val keep = Set(updated.path, info.path).map(p => new Path(p).getName)
+    val dir = new Path(Collection.viewDir(warehouse, info.view))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try fs.listStatus(dir).foreach { st =>
+      if (!keep(st.getPath.getName)) fs.delete(st.getPath, true)
     } catch { case _: Exception => () }
     new Collection(spark, updated)
   }
@@ -159,11 +144,8 @@ object Collection {
     val cat = catalog(spark, warehouse)
     if (cat.find(name).isDefined) throw DuplicateView(name)
     val key = s"key-${java.util.UUID.randomUUID()}"
-    val path = s"$warehouse/collections/$name"
-    val writer = Embed.withEmbedding(docs, "document", "embedding", embedder)
-      .write.mode("overwrite")
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(path)
+    val path = writeVersion(warehouse, name,
+      Embed.withEmbedding(docs, "document", "embedding", embedder), partitionBy)
     val info = CollectionInfo(
       view = name, key = key, path = path, modelType = modelType,
       dim = embedder.dim, createdAt = System.currentTimeMillis(),
@@ -188,22 +170,27 @@ object Collection {
 
   /** Delete collection data + catalog entry (reference: delete,
     * embeddings.rs:419-455 — which panics on a missing view; we raise
-    * [[ViewNotFound]], SURVEY.md §2.1 #8). */
+    * [[ViewNotFound]], SURVEY.md §2.1 #8). Every version of the
+    * collection lives under `collections/{view}`, so one recursive delete
+    * removes the current one and any kept for in-flight readers. */
   def delete(spark: SparkSession, warehouse: String, view: String): Unit = {
-    val cat = catalog(spark, warehouse)
-    val info = cat.find(view).getOrElse(throw ViewNotFound(view))
-    val p = new Path(info.path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    // Also drop any compacted versions kept for concurrent readers, AND
-    // the original create() dir — after exactly one compact() the catalog
-    // points into .compact/ while the create() dir is still retained as
-    // the previous version; without this, delete would silently keep the
-    // full pre-compact corpus on disk.
-    val versions = new Path(s"$warehouse/collections/.compact/$view")
-    if (fs.exists(versions)) fs.delete(versions, true)
-    val orig = new Path(s"$warehouse/collections/$view")
-    if (fs.exists(orig)) fs.delete(orig, true)
-    cat.remove(view)
+    catalog(spark, warehouse).remove(view)
+    val dir = new Path(viewDir(warehouse, view))
+    dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+  }
+
+  /** The directory that holds every version of `view`. */
+  private def viewDir(warehouse: String, view: String): String =
+    s"$warehouse/collections/$view"
+
+  /** Writes `out` as a fresh version dir `collections/{view}/v<n>`,
+    * hive-partitioned by `partitionCols`, and returns its path. */
+  private def writeVersion(warehouse: String, view: String, out: DataFrame,
+      partitionCols: Seq[String]): String = {
+    val path = s"${viewDir(warehouse, view)}/v${System.nanoTime()}"
+    val writer = out.write
+    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+      .parquet(path)
+    path
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * versioning primitive (Kimball): an incoming batch of (key, value)
   * updates closes the current version of changed keys and opens a new
   * one, preserving full history. The valentinus reference versions whole
-  * collections (CURRENT-pointer swap); SCD2 is the row-level counterpart
+  * collections (atomic catalog swap); SCD2 is the row-level counterpart
   * a dimension table needs.
   *
   * Representation: (key, value, valid_from, valid_to, is_current) with

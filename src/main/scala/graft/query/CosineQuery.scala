@@ -24,23 +24,15 @@ object CosineQuery {
       collectionDf: DataFrame,
       queryVec: Array[Float],
       numResults: Int,
-      whereFilters: Seq[String] = Seq.empty,
-      embeddingCol: String = "embedding",
-      metadataCol: String = "metadata",
-      sortBySimilarity: Boolean = true): DataFrame = {
+      whereFilters: Seq[String] = Seq.empty): DataFrame = {
     val filtered =
       if (whereFilters.isEmpty) collectionDf
-      else collectionDf.filter(MetaFilter.compileArray(col(metadataCol), whereFilters))
-    val scored = filtered
-      .withColumn("similarity", VectorExprs.dot(col(embeddingCol), lit(queryVec)))
+      else collectionDf.filter(MetaFilter.compileArray(col("metadata"), whereFilters))
+    val ordered = filtered
+      .withColumn("similarity", VectorExprs.dot(col("embedding"), lit(queryVec)))
       .filter(col("similarity") > 0.0d)
-      .select(col("id"), col("document"), col("similarity"), col(metadataCol))
-    // strict reference-compat mode (sortBySimilarity=false): first-k in
-    // collection (id) order, like the reference's unsorted truncate —
-    // still deterministic here because ids are a total order.
-    val ordered =
-      if (sortBySimilarity) scored.orderBy(col("similarity").desc, col("id"))
-      else scored.orderBy(col("id"))
+      .select(col("id"), col("document"), col("similarity"), col("metadata"))
+      .orderBy(col("similarity").desc, col("id"))
     if (numResults > 0) ordered.limit(numResults) else ordered
   }
 }

@@ -21,10 +21,9 @@ object NearestQuery {
   def run(
       collectionDf: DataFrame,
       queryVec: Array[Float],
-      k: Int = 1,
-      embeddingCol: String = "embedding"): DataFrame =
+      k: Int = 1): DataFrame =
     collectionDf
-      .withColumn("l2_distance", VectorExprs.l2(col(embeddingCol), lit(queryVec)))
+      .withColumn("l2_distance", VectorExprs.l2(col("embedding"), lit(queryVec)))
       .orderBy(col("l2_distance").asc, col("id"))
       .limit(math.max(k, 1))
 }

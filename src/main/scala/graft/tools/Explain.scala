@@ -4,7 +4,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import graft.{GraftSession, SparkEntry}
 import graft.core.Pin
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.ListenerBridge
 
@@ -15,7 +16,10 @@ import scala.jdk.CollectionConverters._
   *  1. `== <query>`, then its formatted physical plan;
   *  2. for each run, every Spark job's wall time, the shuffle write,
   *     shuffle read, spill (memory + disk) and input bytes of the stages
-  *     it ran, and its call site; then a `RUN<i> <query>:` line with the
+  *     it ran, its SQL execution id (`exec=`, `-` for a job run outside
+  *     one) and its call site — for a job of an adaptive query stage,
+  *     whose call site is the stage thread pool's, the scope of its final
+  *     stage's last RDD instead; then a `RUN<i> <query>:` line with the
   *     run's wall and DataFrame build time, its job count and the four
   *     byte totals, so a query's time splits into its jobs (driver-side
   *     gaps show up as the difference);
@@ -61,7 +65,8 @@ object Explain {
         val wall = (System.nanoTime() - t0) / 1e9
         ListenerBridge.drain(spark.sparkContext)
         val done = jobs.ended.asScala.toSeq.sortBy(_.id)
-        done.foreach(j => println(f"[job ${j.id}%3d] ${j.seconds}%7.3f s  ${j.bytes}  ${j.site}"))
+        done.foreach(j =>
+          println(f"[job ${j.id}%3d] ${j.seconds}%7.3f s  exec=${j.execution}  ${j.bytes}  ${j.site}"))
         println(f"RUN$i ${q.name}: $wall%.3f s (build $tBuild%.3f s, $n rows) " +
           s"jobs=${done.size} ${done.map(_.bytes).foldLeft(Bytes.zero)(_ + _)}")
         df
@@ -83,20 +88,21 @@ object Explain {
   }
   private object Bytes { val zero: Bytes = Bytes(0L, 0L, 0L, 0L) }
 
-  private final case class Job(id: Int, seconds: Double, site: String, bytes: Bytes)
+  private final case class Job(id: Int, seconds: Double, execution: String, site: String, bytes: Bytes)
 
   /** Job start/end plus stage completion: each completed stage's task
     * metrics are added to the first job that listed the stage. Only the
     * listener bus thread touches the maps; `ended` is read after a drain. */
   private final class JobListener extends SparkListener {
     val ended = new ConcurrentLinkedQueue[Job]()
-    private val started = mutable.Map.empty[Int, (Long, String)]
+    private val started = mutable.Map.empty[Int, (Long, String, String)]
     private val stageJob = mutable.Map.empty[Int, Int]
     private val bytes = mutable.Map.empty[Int, Bytes]
 
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      // the result stage (highest id) is named after the job's call site
-      started(e.jobId) = (e.time, e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(_.name))
+      val execution = Option(e.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      started(e.jobId) = (e.time, execution.getOrElse("-"),
+        e.stageInfos.sortBy(_.stageId).lastOption.fold("?")(site))
       e.stageIds.foreach(stageJob.getOrElseUpdate(_, e.jobId))
     }
 
@@ -109,8 +115,17 @@ object Explain {
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-      val (t0, site) = started.remove(e.jobId).getOrElse((e.time, "?"))
-      ended.add(Job(e.jobId, (e.time - t0) / 1e3, site, bytes.remove(e.jobId).getOrElse(Bytes.zero)))
+      val (t0, execution, site) = started.remove(e.jobId).getOrElse((e.time, "-", "?"))
+      ended.add(Job(e.jobId, (e.time - t0) / 1e3, execution, site,
+        bytes.remove(e.jobId).getOrElse(Bytes.zero)))
     }
+
+    /** The result stage (highest id) is named after the job's call site,
+      * except in an adaptive query stage, which is submitted from a pool
+      * thread and named after that thread's frame. */
+    private def site(result: StageInfo): String =
+      if (!result.name.contains("withThreadLocalCaptured")) result.name
+      else result.rddInfos.sortBy(_.id).lastOption.flatMap(ListenerBridge.scopeName)
+        .getOrElse(result.name)
   }
 }

@@ -133,33 +133,59 @@ class CollectionSpec extends SparkSpecBase {
     assert(v1.zip(v2).forall { case (a, b) => a.sameElements(b) })
   }
 
-  test("catalog reads version dirs written before partitionCols existed") {
+  test("catalog reads entries written before partitionCols existed") {
     val wh = freshWarehouse()
-    Collection.create(spark, wh, "old_schema", reviewDocs(), embedder)
-    // simulate a warehouse written by the pre-partitionCols code: rewrite
-    // the current catalog version without that column
-    val cat = Collection.catalog(spark, wh)
-    val dir = {
-      val cur = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$wh/_catalog/CURRENT")).trim
-      s"$wh/_catalog/$cur"
-    }
-    val legacy = spark.read.parquet(dir).drop("partitionCols")
-    val legacyDir = s"$wh/_catalog/v_legacy"
-    legacy.coalesce(1).write.parquet(legacyDir)
-    // swap the pointer through the Hadoop FS (keeps the .crc sidecar valid)
-    val ptr = new org.apache.hadoop.fs.Path(s"$wh/_catalog/CURRENT")
-    val fs = ptr.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(ptr, true)
-    try out.write("v_legacy".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val coll = Collection.create(spark, wh, "old_schema", reviewDocs(), embedder)
+    // a catalog written by the pre-partitionCols code: the entry has no
+    // such field (written through the Hadoop FS, which keeps the .crc
+    // sidecar valid)
+    val info0 = coll.info
+    val legacy =
+      s"""[{"view":"old_schema","key":"${info0.key}","path":"${info0.path}",""" +
+      s""""modelType":"${info0.modelType}","dim":${info0.dim},"createdAt":${info0.createdAt}}]"""
+    val file = new org.apache.hadoop.fs.Path(s"$wh/_catalog.json")
+    val out = file.getFileSystem(spark.sparkContext.hadoopConfiguration).create(file, true)
+    try out.write(legacy.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    // list/find must still decode (partitionCols defaults to empty) …
-    val info = cat.find("old_schema").getOrElse(fail("view not found"))
-    assert(info.partitionCols.isEmpty)
-    assert(cat.listDf().columns.contains("partitionCols"))
+    // find must still decode (partitionCols defaults to empty) …
+    val info = Collection.catalog(spark, wh).find("old_schema").getOrElse(fail("view not found"))
+    assert(info == info0)
     // … and the collection remains fully usable
     val found = Collection.find(spark, wh, Some("old_schema"))
     assert(found.df.count() == 6)
+  }
+
+  test("catalog round-trips quotes, backslashes, tabs and non-ASCII text") {
+    val wh = freshWarehouse()
+    val cat = Collection.catalog(spark, wh)
+    val odd = "a \"quoted\" \\ back\tslash ü"
+    val info = CollectionInfo(view = "odd_chars", key = "key-odd", path = s"$wh/$odd",
+      modelType = odd, dim = 8, createdAt = 1L, partitionCols = Seq("lang"))
+    cat.add(info)
+    assert(Collection.catalog(spark, wh).find("odd_chars") == Some(info))
+    assert(cat.findByKey("key-odd") == Some(info))
+  }
+
+  test("find, views and keys run no Spark job") {
+    val wh = freshWarehouse()
+    val coll = Collection.create(spark, wh, "no_jobs", reviewDocs(), embedder)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      assert(Collection.find(spark, wh, Some("no_jobs")).info == coll.info)
+      assert(Collection.find(spark, wh, None, Some(coll.info.key)).info == coll.info)
+      val cat = Collection.catalog(spark, wh)
+      assert(cat.views() == Seq("no_jobs") && cat.keys() == Seq(coll.info.key))
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+      assert(jobs.get() == 0, s"${jobs.get()} Spark jobs")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("reembed migrates to a new model: new dim, same docs, old version kept") {

@@ -56,21 +56,6 @@ class EdgeCaseSpec extends SparkSpecBase {
     assert(docs.length == 2 && docs.forall(_.embedding.length == 16))
   }
 
-  test("strict reference-compat mode: first-k in collection order, unsorted by sim") {
-    val (_, coll) = mkColl("edge_compat")
-    val qv = embedder.embedBatch(Seq("alpha beta")).head
-    val compat = graft.query.CosineQuery.run(coll.df, qv, 1, sortBySimilarity = false)
-      .collect()
-    val sorted = graft.query.CosineQuery.run(coll.df, qv, 0)
-      .collect()
-    // compat mode returns the first matching id, not necessarily the best
-    assert(compat.length <= 1)
-    if (compat.nonEmpty && sorted.nonEmpty) {
-      assert(compat.head.getAs[String]("id") ==
-        sorted.map(_.getAs[String]("id")).min)
-    }
-  }
-
   test("duplicate documents: metadata stays row-keyed (divergence from rposition)") {
     // reference resolves metadata by last-duplicate text match
     // (embeddings.rs:358); we key by row id — each dup keeps its own metadata

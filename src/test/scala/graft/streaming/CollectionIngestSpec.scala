@@ -62,7 +62,7 @@ class CollectionIngestSpec extends SparkSpecBase {
     // delete() removes current data, kept versions, and the catalog entry
     Collection.delete(spark, wh, "compact_me")
     assert(!new java.io.File(again.info.path).exists())
-    assert(!new java.io.File(s"$wh/collections/.compact/compact_me").exists())
+    assert(!new java.io.File(s"$wh/collections/compact_me").exists())
   }
 
   test("compact preserves the hive partitionBy layout chosen at create()") {
@@ -96,9 +96,9 @@ class CollectionIngestSpec extends SparkSpecBase {
     assert(new java.io.File(origPath).exists())
     Collection.delete(spark, wh, "del_once")
     // nothing of the collection survives deletion — not the compacted
-    // version, not the version store, and not the pre-compact original
+    // version, not the pre-compact original, not their directory
     assert(!new java.io.File(compacted.info.path).exists())
-    assert(!new java.io.File(s"$wh/collections/.compact/del_once").exists())
     assert(!new java.io.File(origPath).exists())
+    assert(!new java.io.File(s"$wh/collections/del_once").exists())
   }
 }

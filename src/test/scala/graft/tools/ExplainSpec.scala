@@ -20,7 +20,14 @@ class ExplainSpec extends SparkSpecBase {
     val runs = lines.filter(_.startsWith("RUN"))
     assert(runs.size == 2, all)
     assert(runs.map(_.takeWhile(_ != ':')) == Seq("RUN1 q30_dedup_exact", "RUN2 q30_dedup_exact"), all)
-    assert(lines.exists(_.startsWith("[job ")), all)
+    val jobLines = lines.filter(_.startsWith("[job "))
+    assert(jobLines.nonEmpty, all)
+    // every job names its SQL execution and a call site, not the adaptive
+    // query stage pool's frame
+    jobLines.foreach { j =>
+      assert(j.contains(" exec="), j)
+      assert(!j.contains("withThreadLocalCaptured"), j)
+    }
     // q30 groups by fingerprint: every run writes shuffle bytes
     runs.foreach { r =>
       val write = "shuffle_write=(\\d+)".r.findFirstMatchIn(r).map(_.group(1).toLong)
