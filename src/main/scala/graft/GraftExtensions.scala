@@ -33,6 +33,20 @@ object GraftExtensions {
       f(args(0), args(1))
     }
 
+  /** `name(text, params…)` of a one-pass text kernel: checks the arity
+    * and that every param is an INT literal, then builds the kernel. */
+  private def sketch(name: String, text: String, params: String*)(
+      f: (Expression, Seq[Int]) => Expression): (String, Seq[Expression] => Expression) =
+    name -> { args =>
+      require(args.length == params.length + 1,
+        s"$name expects (${(text +: params).mkString(", ")}), got ${args.length} args")
+      val ints = args.tail.collect { case Literal(v: Int, _) => v }
+      if (ints.length != params.length) throw new IllegalArgumentException(
+        s"$name: ${params.mkString(" and ")} must be " +
+          (if (params.length == 1) "an INT literal" else "INT literals"))
+      f(args.head, ints)
+    }
+
   val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     binary("vec_dot", DotProduct),
     binary("vec_cosine", CosineSimilarity),
@@ -59,46 +73,11 @@ object GraftExtensions {
     },
     // the one-pass text-sketch kernels (inputs must be pre-normalized —
     // compose with lower/trim/regexp_replace as graft.ops.Dedup.normText)
-    "minhash_sig" -> { args =>
-      require(args.length == 3,
-        s"minhash_sig expects (normText, numHashes, w), got ${args.length} args")
-      (args(1), args(2)) match {
-        case (Literal(n: Int, _), Literal(w: Int, _)) => MinHashSig(args(0), n, w)
-        case _ => throw new IllegalArgumentException(
-          "minhash_sig: numHashes and w must be INT literals")
-      }
-    },
-    "simhash62" -> { args =>
-      require(args.length == 1, s"simhash62 expects (normText), got ${args.length} args")
-      SimHash62(args(0))
-    },
-    "ngram_dup_counts" -> { args =>
-      require(args.length == 2,
-        s"ngram_dup_counts expects (normText, n), got ${args.length} args")
-      args(1) match {
-        case Literal(n: Int, _) => NgramDupCounts(args(0), n)
-        case _ => throw new IllegalArgumentException(
-          "ngram_dup_counts: n must be an INT literal")
-      }
-    },
-    "distinct_ngram_codes" -> { args =>
-      require(args.length == 2,
-        s"distinct_ngram_codes expects (normText, n), got ${args.length} args")
-      args(1) match {
-        case Literal(n: Int, _) => DistinctNgramCodes(args(0), n)
-        case _ => throw new IllegalArgumentException(
-          "distinct_ngram_codes: n must be an INT literal")
-      }
-    },
-    "winnow_fp" -> { args =>
-      require(args.length == 3,
-        s"winnow_fp expects (text, k, t), got ${args.length} args")
-      (args(1), args(2)) match {
-        case (Literal(k: Int, _), Literal(t: Int, _)) => WinnowFp(args(0), k, t)
-        case _ => throw new IllegalArgumentException(
-          "winnow_fp: k and t must be INT literals")
-      }
-    })
+    sketch("minhash_sig", "normText", "numHashes", "w") { (t, p) => MinHashSig(t, p(0), p(1)) },
+    sketch("simhash62", "normText") { (t, _) => SimHash62(t) },
+    sketch("ngram_dup_counts", "normText", "n") { (t, p) => NgramDupCounts(t, p(0)) },
+    sketch("distinct_ngram_codes", "normText", "n") { (t, p) => DistinctNgramCodes(t, p(0)) },
+    sketch("winnow_fp", "text", "k", "t") { (t, p) => WinnowFp(t, p(0), p(1)) })
 
   /** Imperative registration on an already-built session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

@@ -1,19 +1,17 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
 /** Bloom membership test over a plan-embedded bitset (see
   * [[graft.ops.BloomJoin]]): true iff the key's k double-hashed bit
   * positions are all set. The bitset rides along as an expression field
   * (an IndexedSeq for value equality, so plan canonicalization works) and
-  * is registered once as a codegen reference object — NOT a per-row
+  * is a kernel constant — one codegen reference object, NOT a per-row
   * literal — so the generated probe filter is one static-array loop,
   * fused into the scan's WholeStageCodegen. */
 case class BloomMightContain(child: Expression, bits: IndexedSeq[Long],
-    numBits: Int, k: Int) extends UnaryExpression {
+    numBits: Int, k: Int) extends UnaryKernel {
   require(numBits >= 64 && (numBits & 63) == 0 && bits.length == numBits >> 6,
     s"bitset length ${bits.length} inconsistent with numBits $numBits")
   require(k >= 1, s"need k >= 1 hash functions, got $k")
@@ -22,22 +20,20 @@ case class BloomMightContain(child: Expression, bits: IndexedSeq[Long],
 
   override def prettyName: String = "bloom_might_contain"
   override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a bigint key, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = LongType
+  override protected def kernel: String = "graft.expr.BloomKernel.mightContain"
+  override protected def constants: Seq[Any] = Seq(arr, numBits, k)
 
   override def nullSafeEval(input: Any): Any =
-    graft.ops.BloomJoin.test(arr, numBits, k, input.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bitsRef = ctx.addReferenceObj("bloomBits", arr, "long[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ops.BloomJoin.test($bitsRef, $numBits, $k, $c);")
-  }
+    BloomKernel.mightContain(input.asInstanceOf[Long], arr, numBits, k)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** [[graft.ops.BloomJoin.test]] with the key first, as a kernel call
+  * passes its input before its constants. */
+object BloomKernel {
+  def mightContain(key: Long, bits: Array[Long], numBits: Int, k: Int): Boolean =
+    graft.ops.BloomJoin.test(bits, numBits, k, key)
 }

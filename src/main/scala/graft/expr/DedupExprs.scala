@@ -1,12 +1,10 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-document dedup-sketch kernels (MinHash signature, SimHash
@@ -404,25 +402,16 @@ object DedupKernel {
 
 /** array<long> MinHash signature of a normalized document (see
   * [[DedupKernel.minHashSig]]). */
-case class MinHashSig(child: Expression, numHashes: Int, w: Int)
-    extends UnaryExpression {
+case class MinHashSig(child: Expression, numHashes: Int, w: Int) extends UnaryKernel {
   require(numHashes > 0 && w > 0, s"need positive numHashes/w, got $numHashes/$w")
-
   override def prettyName: String = "minhash_sig"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = StringType
+  override protected def kernel: String = "graft.expr.DedupKernel.minHashSig"
+  override protected def constants: Seq[Any] = Seq(numHashes, w)
 
   override def nullSafeEval(input: Any): Any =
     DedupKernel.minHashSig(input.asInstanceOf[UTF8String], numHashes, w)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.DedupKernel.minHashSig($c, $numHashes, $w);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -430,24 +419,16 @@ case class MinHashSig(child: Expression, numHashes: Int, w: Int)
 
 /** array<long> hashed unigram+bigram feature buckets of a normalized text
   * (see [[DedupKernel.featureBuckets]]); empty array for empty text. */
-case class FeatureBuckets(child: Expression, k: Int) extends UnaryExpression {
+case class FeatureBuckets(child: Expression, k: Int) extends UnaryKernel {
   require(k >= 1, s"need positive bucket count, got $k")
-
   override def prettyName: String = "feature_buckets"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = StringType
+  override protected def kernel: String = "graft.expr.DedupKernel.featureBuckets"
+  override protected def constants: Seq[Any] = Seq(k)
 
   override def nullSafeEval(input: Any): Any =
     DedupKernel.featureBuckets(input.asInstanceOf[UTF8String], k)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.DedupKernel.featureBuckets($c, $k);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -455,31 +436,17 @@ case class FeatureBuckets(child: Expression, k: Int) extends UnaryExpression {
 
 /** array<float> portable hash-projection embedding of a normalized text;
   * null when the text has no tokens (see [[DedupKernel.polyEmbed]]). */
-case class PolyEmbed(child: Expression, dim: Int) extends UnaryExpression {
+case class PolyEmbed(child: Expression, dim: Int) extends UnaryKernel {
   require(dim > 0, s"need positive dim, got $dim")
   override def prettyName: String = "poly_embed"
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.FloatType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${other.simpleString}")
-  }
+  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
+  override protected def inputType: DataType = StringType
+  override protected def kernel: String = "graft.expr.DedupKernel.polyEmbed"
+  override protected def constants: Seq[Any] = Seq(dim)
+  override protected def nullResult: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     DedupKernel.polyEmbed(input.asInstanceOf[UTF8String], dim)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val arr = ctx.freshName("arr")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $arr =
-         |  graft.expr.DedupKernel.polyEmbed($c, $dim);
-         |if ($arr == null) { ${ev.isNull} = true; } else { ${ev.value} = $arr; }
-       """.stripMargin)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -487,28 +454,15 @@ case class PolyEmbed(child: Expression, dim: Int) extends UnaryExpression {
 
 /** 62-bit SimHash fingerprint of a normalized document; null when the
   * document has no tokens (see [[DedupKernel.simHash62]]). */
-case class SimHash62(child: Expression) extends UnaryExpression {
+case class SimHash62(child: Expression) extends UnaryKernel {
   override def prettyName: String = "simhash62"
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = StringType
+  override protected def kernel: String = "graft.expr.DedupKernel.simHash62"
+  override protected def nullResult: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     DedupKernel.simHash62(input.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val boxed = ctx.freshName("boxed")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |java.lang.Long $boxed = graft.expr.DedupKernel.simHash62($c);
-         |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.longValue(); }
-       """.stripMargin)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -517,23 +471,16 @@ case class SimHash62(child: Expression) extends UnaryExpression {
 /** array<long> distinct word n-gram codes of a normalized document, in
   * first-occurrence order; empty when it has fewer than n tokens (see
   * [[DedupKernel.distinctNgramCodes]]). */
-case class DistinctNgramCodes(child: Expression, n: Int) extends UnaryExpression {
+case class DistinctNgramCodes(child: Expression, n: Int) extends UnaryKernel {
   require(n >= 1, s"need positive n-gram size, got $n")
   override def prettyName: String = "distinct_ngram_codes"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = StringType
+  override protected def kernel: String = "graft.expr.DedupKernel.distinctNgramCodes"
+  override protected def constants: Seq[Any] = Seq(n)
 
   override def nullSafeEval(input: Any): Any =
     DedupKernel.distinctNgramCodes(input.asInstanceOf[UTF8String], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.DedupKernel.distinctNgramCodes($c, $n);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -542,23 +489,16 @@ case class DistinctNgramCodes(child: Expression, n: Int) extends UnaryExpression
 /** array<long> ALL word n-gram codes of a normalized document in
   * positional order; empty when it has fewer than n tokens (see
   * [[DedupKernel.allNgramCodes]]). */
-case class AllNgramCodes(child: Expression, n: Int) extends UnaryExpression {
+case class AllNgramCodes(child: Expression, n: Int) extends UnaryKernel {
   require(n >= 1, s"need positive n-gram size, got $n")
   override def prettyName: String = "all_ngram_codes"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = StringType
+  override protected def kernel: String = "graft.expr.DedupKernel.allNgramCodes"
+  override protected def constants: Seq[Any] = Seq(n)
 
   override def nullSafeEval(input: Any): Any =
     DedupKernel.allNgramCodes(input.asInstanceOf[UTF8String], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.DedupKernel.allNgramCodes($c, $n);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -567,30 +507,17 @@ case class AllNgramCodes(child: Expression, n: Int) extends UnaryExpression {
 /** [n_ngrams, n_distinct] word n-gram repetition counts of a normalized
   * document; null when it has fewer than n tokens (see
   * [[DedupKernel.ngramDupCounts]]). */
-case class NgramDupCounts(child: Expression, n: Int) extends UnaryExpression {
+case class NgramDupCounts(child: Expression, n: Int) extends UnaryKernel {
   require(n >= 1, s"need positive n-gram size, got $n")
   override def prettyName: String = "ngram_dup_counts"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = StringType
+  override protected def kernel: String = "graft.expr.DedupKernel.ngramDupCounts"
+  override protected def constants: Seq[Any] = Seq(n)
+  override protected def nullResult: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     DedupKernel.ngramDupCounts(input.asInstanceOf[UTF8String], n)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val arr = ctx.freshName("arr")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $arr =
-         |  graft.expr.DedupKernel.ngramDupCounts($c, $n);
-         |if ($arr == null) { ${ev.isNull} = true; } else { ${ev.value} = $arr; }
-       """.stripMargin)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

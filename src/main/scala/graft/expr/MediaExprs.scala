@@ -1,9 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
@@ -59,30 +57,17 @@ object MediaKernel {
     ColumnBridge.column(AvgHash64(ColumnBridge.expression(payload)))
 }
 
-/** 64-bit average-hash of a binary payload (see [[MediaKernel.avgHash64]]).
-  * Codegen: one static call per row, map-only. */
-case class AvgHash64(child: Expression) extends UnaryExpression {
+/** 64-bit average-hash of a binary payload (see [[MediaKernel.avgHash64]]);
+  * null for an empty payload. */
+case class AvgHash64(child: Expression) extends UnaryKernel {
   override def prettyName: String = "avg_hash64"
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a binary argument, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = BinaryType
+  override protected def kernel: String = "graft.expr.MediaKernel.avgHash64"
+  override protected def nullResult: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     MediaKernel.avgHash64(input.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val boxed = ctx.freshName("boxed")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""
-         |java.lang.Long $boxed = graft.expr.MediaKernel.avgHash64($c);
-         |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.longValue(); }
-       """.stripMargin)
-  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

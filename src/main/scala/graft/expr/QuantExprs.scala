@@ -1,57 +1,25 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, LongType}
 
 /** Integer dot product over int8-quantized vectors
   * (`ArrayType(ByteType)`, see [[graft.ops.Quantize]]): Σ aᵢ·bᵢ as a
-  * LONG — exact integer arithmetic (|q| ≤ 127, so dims up to 2⁴⁸ cannot
-  * overflow), codegen'd as a tight primitive loop like the float kernels
-  * in [[VectorExprs]]. The quantized scan reads 4× fewer bytes per
-  * vector than float32 — at 100 TB of embeddings the memory-bandwidth
-  * win IS the speedup; this kernel keeps the compute integer so the
-  * saving isn't spent widening to double per element. */
-case class Int8Dot(left: Expression, right: Expression) extends BinaryExpression {
+  * LONG ([[VectorKernel.dotI8]]) — exact integer arithmetic (|q| ≤ 127,
+  * so dims up to 2⁴⁸ cannot overflow). The quantized scan reads 4× fewer
+  * bytes per vector than float32 — at 100 TB of embeddings the
+  * memory-bandwidth win IS the speedup; this kernel keeps the compute
+  * integer so the saving isn't spent widening to double per element. */
+case class Int8Dot(left: Expression, right: Expression) extends BinaryKernel {
   override def prettyName: String = "vec_dot_i8"
   override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(ByteType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<tinyint> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0L; var i = 0
-    while (i < n) { acc += x.getByte(i).toLong * y.getByte(i).toLong; i += 1 }
-    acc
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $acc = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (long) $a.getByte($i) * (long) $b.getByte($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
+  override protected def inputType: DataType = ArrayType(ByteType)
+  override protected def kernel: String = "graft.expr.VectorKernel.dotI8"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.dotI8(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

@@ -1,72 +1,37 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
-/** Vector similarity/distance kernels over `ArrayType(FloatType)` columns.
+/** Vector similarity/distance kernels over `ArrayType(FloatType)` columns
+  * (and the int8 dot of [[Int8Dot]]).
   *
   * The reference computes an unnormalized dot product it calls "cosine"
   * (reference: src/embeddings.rs:365) and L2 distance via an external
-  * KdTree crate (src/embeddings.rs:92,402-408). Here each kernel is a
-  * native Catalyst `Expression` with whole-stage codegen (`doGenCode`
-  * emits a tight primitive loop over the array buffers — no per-row lambda
-  * allocation, no boxing), which is the 100 TB-scale path: the expression
-  * runs inside WholeStageCodegen fused with the scan/filter above it.
+  * KdTree crate (src/embeddings.rs:92,402-408). Here each kernel is one
+  * static method below, wrapped by a [[RowKernel]] expression: generated
+  * code is a single call per row, fused with the scan/filter above it in
+  * WholeStageCodegen — no per-row lambda allocation, no boxing — which is
+  * the 100 TB-scale path.
   *
-  * All kernels accumulate in double (float inputs widened per element) and
-  * iterate in array order, so results are deterministic and bit-stable.
-  */
-abstract class VectorBinaryExpression extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects two array<float> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-}
-
-/** dot(a, b) = Σ aᵢ·bᵢ — the reference's similarity (embeddings.rs:365). */
-case class DotProduct(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "vec_dot"
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  * The float kernels accumulate in double (float inputs widened per
+  * element) and iterate in array order, so results are deterministic and
+  * bit-stable; arrays of unequal length are read up to the shorter one. */
+object VectorKernel {
+  /** dot(a, b) = Σ aᵢ·bᵢ — the reference's similarity (embeddings.rs:365). */
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0d; var i = 0
     while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
     acc
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
 
-/** cosine(a, b) = dot / (‖a‖·‖b‖); 0.0 when either norm is zero.
-  * One pass over both arrays (dot + both norms fused). */
-case class CosineSimilarity(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "vec_cosine"
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  /** cosine(a, b) = dot / (‖a‖·‖b‖); 0.0 when either norm is zero.
+    * One pass over both arrays (dot + both norms fused). */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0d; var na = 0.0d; var nb = 0.0d; var i = 0
     while (i < n) {
@@ -76,33 +41,10 @@ case class CosineSimilarity(left: Expression, right: Expression) extends VectorB
     if (na == 0.0d || nb == 0.0d) 0.0d
     else dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $a.getFloat($i);
-         |  double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |${ev.value} = ($na == 0.0 || $nb == 0.0) ? 0.0
-         |  : $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
 
-/** l2(a, b) = sqrt(Σ (aᵢ-bᵢ)²) — the reference's KdTree metric
-  * (embeddings.rs:92,402-408), as a flat scan kernel. */
-case class L2Distance(left: Expression, right: Expression) extends VectorBinaryExpression {
-  override def prettyName: String = "vec_l2"
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+  /** l2(a, b) = sqrt(Σ (aᵢ-bᵢ)²) — the reference's KdTree metric
+    * (embeddings.rs:92,402-408), as a flat scan kernel. */
+  def l2(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0d; var i = 0
     while (i < n) {
@@ -111,62 +53,32 @@ case class L2Distance(left: Expression, right: Expression) extends VectorBinaryE
     }
     java.lang.Math.sqrt(acc)
   }
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $a.getFloat($i) - (double) $b.getFloat($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($acc);
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
 
-/** All L SRP-LSH bucket codes of a float vector in one fused pass:
-  * quantize once (round(x·10⁶) as long — HALF_UP, engine-portable), then
-  * L×b integer plane dots in a tight generated loop. Bit p of table t's
-  * code = sign of ⟨q, plane_{t,p}⟩ with the deterministic integer planes
-  * of [[graft.ops.Similarity.planesInt]] (seed + 1000·t per table) — the
-  * exact arithmetic the DuckDB oracles replay. Output: array<long> of
-  * length numTables. Replaces a 10-table union of lambda-aggregate
-  * projections (L source scans, codegen-hostile) with one codegen'd
-  * expression. */
-case class SrpBuckets(child: Expression, numPlanes: Int, dim: Int,
-    numTables: Int, seed: Long) extends UnaryExpression {
-  require(numPlanes >= 1 && numPlanes <= 62, "numPlanes must be in [1, 62]")
-  override def prettyName: String = "srp_buckets"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float>, got ${t.simpleString}")
+  /** Σ aᵢ·bᵢ over int8-quantized vectors, exact in a long. */
+  def dotI8(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0L; var i = 0
+    while (i < n) { acc += x.getByte(i).toLong * y.getByte(i).toLong; i += 1 }
+    acc
   }
 
-  @transient private lazy val planes: Array[Array[Array[Long]]] =
-    Array.tabulate(numTables) { t =>
-      graft.ops.Similarity.planesInt(numPlanes, dim, seed + 1000L * t)
-    }
-
-  /** round-half-away-from-zero, matching Spark/DuckDB round() on doubles. */
-  private def q(x: Double): Long =
-    (if (x < 0) math.ceil(x - 0.5d) else math.floor(x + 0.5d)).toLong
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  /** All SRP-LSH bucket codes of a float vector, one per table of
+    * `planes`: quantize once (round(x·10⁶) as long, half away from zero —
+    * Spark/DuckDB round() on doubles), then bit p of table t's code = sign
+    * of the integer dot ⟨q, planes(t)(p)⟩ over the first `dim` elements. */
+  def srpBuckets(v: ArrayData, planes: Array[Array[Array[Long]]],
+      numPlanes: Int, dim: Int): ArrayData = {
     val n = math.min(v.numElements(), dim)
     val qv = new Array[Long](n)
     var d = 0
-    while (d < n) { qv(d) = q(v.getFloat(d).toDouble * 1000000.0d); d += 1 }
-    val out = new Array[Long](numTables)
+    while (d < n) {
+      val x = v.getFloat(d).toDouble * 1000000.0d
+      qv(d) = (if (x < 0) math.ceil(x - 0.5d) else math.floor(x + 0.5d)).toLong
+      d += 1
+    }
+    val out = new Array[Long](planes.length)
     var t = 0
-    while (t < numTables) {
+    while (t < planes.length) {
       var bucket = 0L; var p = 0
       while (p < numPlanes) {
         val w = planes(t)(p); var dot = 0L; var i = 0
@@ -176,40 +88,68 @@ case class SrpBuckets(child: Expression, numPlanes: Int, dim: Int,
       }
       out(t) = bucket; t += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
+}
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val pl = ctx.addReferenceObj("srpPlanes", planes, "long[][][]")
-      val n = ctx.freshName("n"); val qv = ctx.freshName("qv")
-      val d = ctx.freshName("d"); val xd = ctx.freshName("xd")
-      val out = ctx.freshName("out"); val t = ctx.freshName("t")
-      val p = ctx.freshName("p"); val w = ctx.freshName("w")
-      val dot = ctx.freshName("dot"); val i = ctx.freshName("i")
-      val bucket = ctx.freshName("bucket")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $dim);
-         |long[] $qv = new long[$n];
-         |for (int $d = 0; $d < $n; $d++) {
-         |  double $xd = (double) $a.getFloat($d) * 1000000.0;
-         |  $qv[$d] = (long) ($xd < 0 ? java.lang.Math.ceil($xd - 0.5)
-         |                             : java.lang.Math.floor($xd + 0.5));
-         |}
-         |long[] $out = new long[$numTables];
-         |for (int $t = 0; $t < $numTables; $t++) {
-         |  long $bucket = 0L;
-         |  for (int $p = 0; $p < $numPlanes; $p++) {
-         |    long[] $w = $pl[$t][$p];
-         |    long $dot = 0L;
-         |    for (int $i = 0; $i < $n; $i++) { $dot += $qv[$i] * $w[$i]; }
-         |    if ($dot > 0L) $bucket |= (1L << $p);
-         |  }
-         |  $out[$t] = $bucket;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+/** double [[VectorKernel.dot]] of two array<float>. */
+case class DotProduct(left: Expression, right: Expression) extends BinaryKernel {
+  override def prettyName: String = "vec_dot"
+  override def dataType: DataType = DoubleType
+  override protected def inputType: DataType = ArrayType(FloatType)
+  override protected def kernel: String = "graft.expr.VectorKernel.dot"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** double [[VectorKernel.cosine]] of two array<float>. */
+case class CosineSimilarity(left: Expression, right: Expression) extends BinaryKernel {
+  override def prettyName: String = "vec_cosine"
+  override def dataType: DataType = DoubleType
+  override protected def inputType: DataType = ArrayType(FloatType)
+  override protected def kernel: String = "graft.expr.VectorKernel.cosine"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** double [[VectorKernel.l2]] of two array<float>. */
+case class L2Distance(left: Expression, right: Expression) extends BinaryKernel {
+  override def prettyName: String = "vec_l2"
+  override def dataType: DataType = DoubleType
+  override protected def inputType: DataType = ArrayType(FloatType)
+  override protected def kernel: String = "graft.expr.VectorKernel.l2"
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernel.l2(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+/** All L SRP-LSH bucket codes of a float vector in one fused pass
+  * ([[VectorKernel.srpBuckets]]) with the deterministic integer planes of
+  * [[graft.ops.Similarity.planesInt]] (seed + 1000·t per table) — the
+  * exact arithmetic the DuckDB oracles replay. Output: array<long> of
+  * length numTables. Replaces a 10-table union of lambda-aggregate
+  * projections (L source scans, codegen-hostile) with one kernel call. */
+case class SrpBuckets(child: Expression, numPlanes: Int, dim: Int,
+    numTables: Int, seed: Long) extends UnaryKernel {
+  require(numPlanes >= 1 && numPlanes <= 62, "numPlanes must be in [1, 62]")
+  override def prettyName: String = "srp_buckets"
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def inputType: DataType = ArrayType(FloatType)
+  override protected def kernel: String = "graft.expr.VectorKernel.srpBuckets"
+
+  @transient private lazy val planes: Array[Array[Array[Long]]] =
+    Array.tabulate(numTables) { t =>
+      graft.ops.Similarity.planesInt(numPlanes, dim, seed + 1000L * t)
+    }
+  override protected def constants: Seq[Any] = Seq(planes, numPlanes, dim)
+
+  override def nullSafeEval(input: Any): Any =
+    VectorKernel.srpBuckets(input.asInstanceOf[ArrayData], planes, numPlanes, dim)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

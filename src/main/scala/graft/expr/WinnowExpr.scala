@@ -1,9 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -26,24 +24,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * per character plus three O(L) arrays per document. At 100 TB this is a
   * map-only kernel fused into WholeStageCodegen above the scan.
   */
-case class WinnowFp(child: Expression, k: Int, t: Int) extends UnaryExpression {
+case class WinnowFp(child: Expression, k: Int, t: Int) extends UnaryKernel {
   require(k > 0 && t > 0 && k <= 16, s"need 0 < k <= 16 and t > 0, got $k/$t")
 
   override def prettyName: String = "winnow_fp"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects a string argument, got ${other.simpleString}")
-  }
+  override protected def inputType: DataType = StringType
+  override protected def kernel: String = "graft.expr.WinnowKernel.compute"
+  override protected def constants: Seq[Any] = Seq(k, t)
 
   override def nullSafeEval(input: Any): Any =
     WinnowKernel.compute(input.asInstanceOf[UTF8String], k, t)
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expr.WinnowKernel.compute($c, $k, $t);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -53,9 +44,7 @@ object WinnowKernel {
   final val P = 1000000007L
   final val B = 131L
 
-  /** Shared by interpreted eval and generated code (the generated snippet
-    * is a single static call — the loop itself is JIT-compiled Scala, and
-    * the expression stays inside the WholeStageCodegen span). */
+  /** The [[WinnowFp]] kernel. */
   def compute(s: UTF8String, k: Int, t: Int): ArrayData = {
     val str = s.toString
     val n = str.length

@@ -1146,10 +1146,11 @@ object ClassifierEval {
   def cupedLift(df: DataFrame, armCol: String, yCol: String,
       xCol: String): DataFrame = {
     // r17: the y/x null guard is fused into the moment aggregate below
-    // (one pass saved); a NULL arm surfaces in the bounded distinct and
+    // (one pass saved); a NULL arm surfaces in the bounded distinct —
+    // ascending order puts it first, so the limit never drops it — and
     // fails here with the same typed message
-    val armRows = df.select(col(armCol).cast("string")).distinct()
-      .limit(3).collect()
+    val armRows = df.select(col(armCol).cast("string").as("_arm"))
+      .distinct().orderBy(col("_arm")).limit(3).collect()
     require(armRows.forall(!_.isNullAt(0)),
       s"cupedLift needs non-NULL '$armCol'/'$yCol'/'$xCol' values")
     val arms = armRows.map(_.getString(0)).sorted.toSeq

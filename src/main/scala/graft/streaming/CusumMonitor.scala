@@ -113,10 +113,6 @@ object CusumMonitor {
 
   /** The stacked per-batch partials — resolved once per probe; typed
     * failure before the first batch lands. */
-  private def partials(spark: SparkSession, gridDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(gridDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no monitored batches under $gridDir yet")
-    spark.read.parquet(gridDir).select(col("bucket"), col("n"), col("_sm"))
-  }
+  private def partials(spark: SparkSession, gridDir: String): DataFrame =
+    MicroBatch.read(spark, gridDir).select(col("bucket"), col("n"), col("_sm"))
 }

@@ -69,9 +69,9 @@ object DriftMonitor {
 
   /** The per-batch drift trajectory: one row per monitored batch,
     * worst first — `psi_total` is constant within a batch's rows, so
-    * max() just lifts it. */
+    * max() just lifts it. Typed failure before the first batch lands. */
   def driftHistory(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(statsDir)
+    MicroBatch.read(spark, statsDir)
       .groupBy(col("batch"))
       .agg(max(col("psi_total")).as("psi_total"),
         sum(col("n_b")).as("n_docs"))

@@ -60,12 +60,8 @@ object IsotropyMonitor {
     * identical row to [[graft.ops.Spectral.isotropy]] on the union of
     * all monitored batches, whatever the batch boundaries or arrival
     * order. Typed failure before the first batch lands. */
-  def isotropyState(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no monitored batches under $stateDir yet")
+  def isotropyState(spark: SparkSession, stateDir: String): DataFrame =
     Spectral.isotropyFromPartials(
-      spark.read.parquet(stateDir)
+      MicroBatch.read(spark, stateDir)
         .select(col("_dim"), col("_cnt"), col("_s"), col("_q")))
-  }
 }

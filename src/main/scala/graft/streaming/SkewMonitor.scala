@@ -57,12 +57,8 @@ object SkewMonitor {
     * batches, whatever the batch boundaries or arrival order. Typed
     * failure before the first batch lands. */
   def skewState(spark: SparkSession, stateDir: String, partitions: Int,
-      topK: Int = 10): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"no monitored batches under $stateDir yet")
+      topK: Int = 10): DataFrame =
     Skew.skewReportFromCounts(
-      spark.read.parquet(stateDir).select(col("key"), col("cnt")),
+      MicroBatch.read(spark, stateDir).select(col("key"), col("cnt")),
       partitions, topK)
-  }
 }

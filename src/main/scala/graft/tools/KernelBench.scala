@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * ArrayType(FloatType), at 1M rows × 64 dims —
   *   (a) graft's codegen Catalyst Expression (the engine's kernel),
   *   (b) built-in higher-order functions (aggregate ∘ zip_with),
-  *   (c) a Scala UDF.
+  *   (c) a Scala UDF —
+  * next to the vec_cosine and vec_l2 kernels over the same vectors.
   * Quantifies the SURVEY §4.3 design choice. Appends nothing; prints a
   * markdown table (paste into BENCH notes).
   *
@@ -55,6 +56,8 @@ object KernelBench {
     println("| kernel                 | time       | throughput      |")
     println("|------------------------|------------|-----------------|")
     val ce = time("codegen Expression")(VectorExprs.dot(col("a"), col("b")))
+    time("vec_cosine kernel")(VectorExprs.cosine(col("a"), col("b")))
+    time("vec_l2 kernel")(VectorExprs.l2(col("a"), col("b")))
     val hf = time("HoF zip_with+aggregate")(hof)
     val ud = time("Scala UDF")(udf_(col("a"), col("b")))
     println(f"speedup vs HoF: ${hf / ce}%.1fx; vs UDF: ${ud / ce}%.1fx")

@@ -65,4 +65,21 @@ class GraftExtensionsSpec extends SparkSpecBase {
       spark.sql("SELECT minhash_sig(text, doc_id, 3) FROM ext_docs").head())
     assert(e.getMessage.contains("minhash_sig"))
   }
+
+  test("sketch functions: wrong arity and non-literal params fail with the function's message") {
+    GraftExtensions.register(spark)
+    import spark.implicits._
+    Seq((1L, "a b c")).toDF("doc_id", "text").createOrReplaceTempView("ext_args")
+    val cases = Seq(
+      "minhash_sig(text, 8)" -> "minhash_sig expects (normText, numHashes, w), got 2 args",
+      "minhash_sig(text, doc_id, 3)" -> "minhash_sig: numHashes and w must be INT literals",
+      "simhash62(text, 1)" -> "simhash62 expects (normText), got 2 args",
+      "ngram_dup_counts(text, doc_id)" -> "ngram_dup_counts: n must be an INT literal",
+      "distinct_ngram_codes(text)" -> "distinct_ngram_codes expects (normText, n), got 1 args",
+      "winnow_fp(text, 8, CAST(4 AS BIGINT))" -> "winnow_fp: k and t must be INT literals")
+    for ((call, msg) <- cases) {
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM ext_args").head())
+      assert(e.getMessage.contains(msg), s"$call: ${e.getMessage}")
+    }
+  }
 }

@@ -68,9 +68,9 @@ class PlanShapeSpec extends SparkSpecBase {
       finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert(codegen.contains("WholeStageCodegen subtree"),
       s"expected codegen subtrees:\n${codegen.take(500)}")
-    // the DotProduct doGenCode loop reads floats directly from ArrayData
-    assert(codegen.contains(".getFloat("),
-      "expected the generated dot-product loop (no CodegenFallback)")
+    // the generated code calls the dot kernel itself (no CodegenFallback)
+    assert(codegen.contains("graft.expr.VectorKernel.dot("),
+      "expected the generated call of the dot kernel (no CodegenFallback)")
   }
 
   test("q24: metadata DSL predicates are pushed to the parquet scan") {

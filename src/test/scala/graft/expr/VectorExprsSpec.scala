@@ -1,11 +1,11 @@
 package graft.expr
 
 import graft.SparkSpecBase
-import org.apache.spark.sql.functions._
 import scala.util.Random
 
 /** Vector kernels vs a plain-Scala reference implementation on seeded
-  * random vectors, in both codegen and interpreted (eval) paths.
+  * random vectors, in both the interpreted (eval) and the generated path
+  * (see [[RowKernelSpec.withFactoryMode]]).
   */
 class VectorExprsSpec extends SparkSpecBase {
   import spark.implicits._
@@ -20,18 +20,15 @@ class VectorExprsSpec extends SparkSpecBase {
     if (na == 0 || nb == 0) 0.0 else d / (na * nb)
   }
 
-  private def engine(a: Seq[Float], b: Seq[Float], codegen: Boolean): (Double, Double, Double) = {
-    val prev = spark.conf.get("spark.sql.codegen.wholeStage")
-    spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
-    try {
-      val df = Seq((a.toArray, b.toArray)).toDF("a", "b")
+  private def engine(a: Seq[Float], b: Seq[Float], codegen: Boolean): (Double, Double, Double) =
+    RowKernelSpec.withFactoryMode(spark, codegen) {
+      val df = spark.sparkContext.parallelize(Seq((a.toArray, b.toArray)), 1).toDF("a", "b")
       val r = df.select(
         VectorExprs.dot($"a", $"b"),
         VectorExprs.cosine($"a", $"b"),
         VectorExprs.l2($"a", $"b")).head()
       (r.getDouble(0), r.getDouble(1), r.getDouble(2))
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
-  }
+    }
 
   test("property: dot/cosine/l2 match reference (codegen and interpreted)") {
     val rnd = new Random(7)

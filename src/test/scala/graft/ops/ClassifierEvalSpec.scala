@@ -332,6 +332,14 @@ class ClassifierEvalSpec extends SparkSpecBase {
         .toDF("u", "arm", "y", "x"), "arm", "y", "x"))
   }
 
+  test("cupedLift: a NULL arm next to three others reports the NULL, not the arm count") {
+    val df = Seq(Option("a"), Option("b"), Option("c"), None).zipWithIndex
+      .map { case (arm, i) => (s"u$i", arm, 1.0, 1.0) }.toDF("u", "arm", "y", "x")
+    val e = intercept[IllegalArgumentException](
+      ClassifierEval.cupedLift(df, "arm", "y", "x"))
+    assert(e.getMessage.contains("needs non-NULL 'arm'/'y'/'x' values"), e.getMessage)
+  }
+
   test("cochranQ: hand-traced statistic; unanimous docs cancel") {
     // C=(3,2,1), T=6, sumR2=14: Q = 2*(3*14-36)/(18-14) = 3.0
     val df = Seq(

@@ -81,4 +81,12 @@ class DriftMonitorSpec extends SparkSpecBase {
         Seq((1L, -3L)).toDF("bin", "n_a"), pred, "conf")
     }
   }
+
+  test("driftHistory before the first batch fails typed") {
+    val base = java.nio.file.Files.createTempDirectory("drift_").toString
+    val e = intercept[IllegalArgumentException](
+      DriftMonitor.driftHistory(spark, s"$base/never"))
+    assert(e.getMessage.contains(s"no monitored batches under $base/never yet"),
+      e.getMessage)
+  }
 }
