@@ -1953,23 +1953,14 @@ object PipelineQueries {
       .orderBy($"q_id")
   }
 
-  private val bm25IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once persisted BM25 postings index (the q52/q111 cached-index
     * pattern applied to text): corpus fingerprint keyed, temp-dir
     * persisted, rebuilt only when the testdata regenerates. */
   private def bm25IndexFor(s: SparkSession, dir: String): String =
-    bm25IndexCache.computeIfAbsent(VectorQueries.corpusFingerprint(s, dir), _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_bm25_index").toFile
-      d.deleteOnExit()
+    VectorQueries.tempIndexDir(s, dir, "graft_bm25_index") { path =>
       graft.ops.TextIndex.writeIndex(
-        Tables.documents(s, dir), "doc_id", "text", d.toString)
-      d.toString
-    })
-
-  private val bm25AppendCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+        Tables.documents(s, dir), "doc_id", "text", path)
+    }
 
   /** Build-once cache for the q123 INCREMENTALLY MAINTAINED text index:
     * postings built from the "historic" slice (doc_id < 250) only, then
@@ -1977,17 +1968,14 @@ object PipelineQueries {
     * additive, stats re-aggregate from docstats; the corpus is never
     * re-tokenized. */
   private def bm25AppendIndexFor(s: SparkSession, dir: String): String =
-    bm25AppendCache.computeIfAbsent(VectorQueries.corpusFingerprint(s, dir), _ => {
+    VectorQueries.tempIndexDir(s, dir, "graft_bm25_append") { path =>
       import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft_bm25_append").toFile
-      d.deleteOnExit()
       val docs = Tables.documents(s, dir)
       graft.ops.TextIndex.writeIndex(
-        docs.filter($"doc_id" < 250), "doc_id", "text", d.toString)
+        docs.filter($"doc_id" < 250), "doc_id", "text", path)
       graft.ops.TextIndex.appendToIndex(
-        docs.filter($"doc_id" >= 250), "doc_id", "text", d.toString)
-      d.toString
-    })
+        docs.filter($"doc_id" >= 250), "doc_id", "text", path)
+    }
 
   /** q123: BM25 serving from the APPENDED index — build-then-append must
     * be indistinguishable from a one-shot build over the whole corpus,
@@ -2004,26 +1992,20 @@ object PipelineQueries {
       .orderBy($"q_id", $"rnk")
   }
 
-  private val bm25CompactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once cache for the q184 COMPACTED text index: the q123
     * stack (build < 250, append ≥ 250) followed by
     * [[graft.ops.TextIndex.compact]] — postings/docstats/stats deltas
     * merged into ONE delta through the shared manifest commit. */
   private def bm25CompactIndexFor(s: SparkSession, dir: String): String =
-    bm25CompactCache.computeIfAbsent(VectorQueries.corpusFingerprint(s, dir), _ => {
+    VectorQueries.tempIndexDir(s, dir, "graft_bm25_compact") { path =>
       import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft_bm25_compact").toFile
-      d.deleteOnExit()
       val docs = Tables.documents(s, dir)
       graft.ops.TextIndex.writeIndex(
-        docs.filter($"doc_id" < 250), "doc_id", "text", d.toString)
+        docs.filter($"doc_id" < 250), "doc_id", "text", path)
       graft.ops.TextIndex.appendToIndex(
-        docs.filter($"doc_id" >= 250), "doc_id", "text", d.toString)
-      graft.ops.TextIndex.compact(s, d.toString, "doc_id")
-      d.toString
-    })
+        docs.filter($"doc_id" >= 250), "doc_id", "text", path)
+      graft.ops.TextIndex.compact(s, path, "doc_id")
+    }
 
   /** q184: BM25 serving from the COMPACTED index — the q180 contract
     * for the text family: after compaction the probe reads ONE delta
@@ -2379,20 +2361,14 @@ object PipelineQueries {
     graft.ops.Sampling.jackknifeRate(fl, "source", "keep")
   }
 
-  private val bpeIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once cache for the q234 PERSISTED tokenizer (the lmIndexFor
     * discipline): trains q171's exact merge list once and commits it
     * through the manifest protocol. */
   private def bpeIndexFor(s: SparkSession, dir: String): String =
-    bpeIndexCache.computeIfAbsent(VectorQueries.corpusFingerprint(s, dir), _ => {
-      val d = java.nio.file.Files.createTempDirectory("graft_bpe_idx").toFile
-      d.deleteOnExit()
-      graft.ops.BpeIndex.build(Tables.documents(s, dir), "text", d.toString,
+    VectorQueries.tempIndexDir(s, dir, "graft_bpe_idx") { path =>
+      graft.ops.BpeIndex.build(Tables.documents(s, dir), "text", path,
         merges = 6, batchR = 2)
-      d.toString
-    })
+    }
 
   /** q234: corpus encode from the PERSISTED tokenizer
     * ([[graft.ops.BpeIndex.encode]]) — the q181 chain served from a
@@ -2685,22 +2661,16 @@ object PipelineQueries {
       .orderBy($"doc_id")
   }
 
-  private val lmIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once persisted stupid-backoff LM model (the bm25IndexFor
     * pattern): counts from the doc_id % 10 ≠ 0 slice, temp-dir
     * persisted, rebuilt only when the testdata regenerates. */
   private def lmIndexFor(s: SparkSession, dir: String): String =
-    lmIndexCache.computeIfAbsent(VectorQueries.corpusFingerprint(s, dir), _ => {
+    VectorQueries.tempIndexDir(s, dir, "graft_lm_index") { path =>
       import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft_lm_index").toFile
-      d.deleteOnExit()
       graft.ops.LmIndex.build(
         Tables.documents(s, dir).filter($"doc_id" % 10 =!= 0), "text",
-        d.toString)
-      d.toString
-    })
+        path)
+    }
 
   /** q168: stupid-backoff scoring from the PERSISTED LM model
     * ([[graft.ops.LmIndex]]) — the serving path: the model is built
@@ -2716,23 +2686,17 @@ object PipelineQueries {
       .orderBy($"doc_id")
   }
 
-  private val lmAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once cache for the q170 INCREMENTALLY EXTENDED LM model:
     * counts built from the historic train slice (doc_id < 250), then
     * the newer train batch (doc_id ≥ 250) APPENDED — counts are
     * additive parquet parts, re-aggregated at read; no rebuild. */
   private def lmAppendIndexFor(s: SparkSession, dir: String): String =
-    lmAppendCache.computeIfAbsent(VectorQueries.corpusFingerprint(s, dir), _ => {
+    VectorQueries.tempIndexDir(s, dir, "graft_lm_append") { path =>
       import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft_lm_append").toFile
-      d.deleteOnExit()
       val train = Tables.documents(s, dir).filter($"doc_id" % 10 =!= 0)
-      graft.ops.LmIndex.build(train.filter($"doc_id" < 250), "text", d.toString)
-      graft.ops.LmIndex.append(train.filter($"doc_id" >= 250), "text", d.toString)
-      d.toString
-    })
+      graft.ops.LmIndex.build(train.filter($"doc_id" < 250), "text", path)
+      graft.ops.LmIndex.append(train.filter($"doc_id" >= 250), "text", path)
+    }
 
   /** q170: stupid-backoff scoring from the APPENDED LM model — must
     * hash-match q167's live computation and q168's one-shot build
@@ -2746,25 +2710,19 @@ object PipelineQueries {
       .orderBy($"doc_id")
   }
 
-  private val lmCompactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once cache for the q180 COMPACTED LM model: the q170 stack
     * (build < 250, append ≥ 250) followed by [[graft.ops.LmIndex
     * .compact]] — the delta stack merged into ONE delta through the
     * shared manifest commit; the spec additionally asserts the
     * single-delta layout, this query proves the SERVING equivalence. */
   private def lmCompactIndexFor(s: SparkSession, dir: String): String =
-    lmCompactCache.computeIfAbsent(VectorQueries.corpusFingerprint(s, dir), _ => {
+    VectorQueries.tempIndexDir(s, dir, "graft_lm_compact") { path =>
       import s.implicits._
-      val d = java.nio.file.Files.createTempDirectory("graft_lm_compact").toFile
-      d.deleteOnExit()
       val train = Tables.documents(s, dir).filter($"doc_id" % 10 =!= 0)
-      graft.ops.LmIndex.build(train.filter($"doc_id" < 250), "text", d.toString)
-      graft.ops.LmIndex.append(train.filter($"doc_id" >= 250), "text", d.toString)
-      graft.ops.LmIndex.compact(s, d.toString)
-      d.toString
-    })
+      graft.ops.LmIndex.build(train.filter($"doc_id" < 250), "text", path)
+      graft.ops.LmIndex.append(train.filter($"doc_id" >= 250), "text", path)
+      graft.ops.LmIndex.compact(s, path)
+    }
 
   /** q180: stupid-backoff scoring from the COMPACTED LM model — the
     * read-amplification fix for long-lived persisted models: after

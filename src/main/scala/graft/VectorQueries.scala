@@ -211,8 +211,16 @@ object VectorQueries {
     * Training is deterministic, so a rebuilt index in a fresh JVM is
     * bit-identical and the cache is a cost optimization, not a
     * correctness dependency. */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def ivfIndexFor(s: SparkSession, dir: String): String =
+    tempIndexDir(s, dir, "graft_ivf_index") { path =>
+      import s.implicits._
+      val cands = Tables.embeddings(s, dir).filter($"vec_id" >= 3)
+        .select($"vec_id".as("n_id"), $"embedding".as("nv"))
+      val model = graft.ops.Ivf.train(
+        cands.select($"n_id".as("id"), $"nv".as("v")), "id", "v",
+        nc = 16, iters = 2)
+      graft.ops.Ivf.writeIndex(cands, "nv", model, path)
+    }
 
   /** Cache key = corpus dir + a fingerprint of its file listing
     * (name, length, mtime): regenerating the parquet under `dir` within
@@ -234,23 +242,22 @@ object VectorQueries {
     s"$dir#${digest.map("%02x".format(_)).mkString}"
   }
 
-  private def tempIndexDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
-    d.deleteOnExit()
-    d.toString
-  }
+  private val indexDirs =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private[graft] def ivfIndexFor(s: SparkSession, dir: String): String =
-    ivfIndexCache.computeIfAbsent(corpusFingerprint(s, dir), _ => {
-      import s.implicits._
-      val cands = Tables.embeddings(s, dir).filter($"vec_id" >= 3)
-        .select($"vec_id".as("n_id"), $"embedding".as("nv"))
-      val model = graft.ops.Ivf.train(
-        cands.select($"n_id".as("id"), $"nv".as("v")), "id", "v",
-        nc = 16, iters = 2)
-      val path = tempIndexDir("graft_ivf_index")
-      graft.ops.Ivf.writeIndex(cands, "nv", model, path)
-      path
+  /** The build-once index directory of every persisted query index: on
+    * first use per (`prefix`, corpus fingerprint) `build` writes the
+    * index into a fresh deleteOnExit temp dir named after `prefix`;
+    * later calls return that dir. A `build` must not call another
+    * `…IndexFor` — a nested computeIfAbsent on the one shared map
+    * throws "Recursive update". */
+  private[graft] def tempIndexDir(s: SparkSession, dir: String,
+      prefix: String)(build: String => Unit): String =
+    indexDirs.computeIfAbsent(s"$prefix|${corpusFingerprint(s, dir)}", _ => {
+      val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+      d.deleteOnExit()
+      build(d.toString)
+      d.toString
     })
 
   /** IVF ANN twin of q35: coarse k-means cells + nprobe probing + exact
@@ -282,11 +289,8 @@ object VectorQueries {
     * Deterministic assignment makes the appended index bit-identical to
     * a one-shot build of the union under the same model (IvfSpec), so
     * the cache stays a cost optimization. */
-  private val appendIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def appendedIndexFor(s: SparkSession, dir: String): String =
-    appendIndexCache.computeIfAbsent(corpusFingerprint(s, dir), _ => {
+    tempIndexDir(s, dir, "graft_ivf_append") { path =>
       import s.implicits._
       val e = Tables.embeddings(s, dir)
       val old = e.filter($"vec_id" >= 3 && $"vec_id" < 400)
@@ -294,13 +298,11 @@ object VectorQueries {
       val model = graft.ops.Ivf.train(
         old.select($"n_id".as("id"), $"nv".as("v")), "id", "v",
         nc = 16, iters = 2)
-      val path = tempIndexDir("graft_ivf_append")
       graft.ops.Ivf.writeIndex(old, "nv", model, path)
       graft.ops.Ivf.appendToIndex(
         e.filter($"vec_id" >= 400).select($"vec_id".as("n_id"), $"embedding".as("nv")),
         "nv", path)
-      path
-    })
+    }
 
   /** Probe over the incrementally maintained index (q52's probe against
     * the [[appendedIndexFor]] artifact): the quantizer saw only the
@@ -321,7 +323,7 @@ object VectorQueries {
 
   /** q191: TIME-TRAVEL IVF probing ([[graft.ops.Ivf.probeIndexAt]]) —
     * the q186/q190 snapshot contract for the vector family, completing
-    * it across all three manifest-backed indexes: q111's directory
+    * it across the LM, text and vector manifest indexes: q111's directory
     * holds version 1 (build on 3 ≤ vec_id < 400 under the historic
     * model) and version 2 (the ≥ 400 assign-only append); probing AS OF
     * version 1 sees neither the appended vectors nor any later model,
@@ -796,22 +798,17 @@ object VectorQueries {
         $"skewness", $"ex_kurtosis", $"max_occ", $"n_antihubs")
   }
 
-  private val sqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once quantized index (same pattern as [[ivfIndexFor]]): the
     * int8 projection persisted to parquet, so probes scan the 4×-smaller
     * columns instead of re-quantizing the corpus per query. */
   private[graft] def sqIndexFor(s: SparkSession, dir: String): String =
-    sqIndexCache.computeIfAbsent(corpusFingerprint(s, dir), _ => {
+    tempIndexDir(s, dir, "graft_sq_index") { path =>
       import s.implicits._
-      val path = tempIndexDir("graft_sq_index")
       Quantize.withInt8(
           Tables.embeddings(s, dir).filter($"vec_id" =!= 0)
             .select($"vec_id", $"embedding"), "embedding")
         .write.mode("overwrite").parquet(path)
-      path
-    })
+    }
 
   /** Int8 scalar-quantized cosine top-k (ops.Quantize): a PREBUILT
     * quantized index (persisted once per corpus, [[sqIndexFor]]) is

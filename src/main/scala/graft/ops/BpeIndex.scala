@@ -29,33 +29,32 @@ object BpeIndex {
     * manifest swap, a crash anywhere leaves the previous tokenizer
     * serving. */
   def build(train: DataFrame, textCol: String, dir: String,
-      merges: Int, batchR: Int = 2): Unit = {
-    val spark = train.sparkSession
-    val staging = Manifest.stage(dir)
-    TextAnalysis.bpeMergesBatched(train, textCol, merges, batchR)
-      .select(col("iter"), col("pair"), col("merged"))
-      .coalesce(1) // rank-ordered and vocab-bounded (<= 65536 rows)
-      .write.mode("overwrite").parquet(s"$staging/merges")
-    Manifest.commit(spark, dir, Seq(staging), removeAll = true)
-    Manifest.gc(spark, dir)
-  }
+      merges: Int, batchR: Int = 2): Unit =
+    Manifest.rebuild(train.sparkSession, dir) { staging =>
+      TextAnalysis.bpeMergesBatched(train, textCol, merges, batchR)
+        .select(col("iter"), col("pair"), col("merged"))
+        .coalesce(1) // rank-ordered and vocab-bounded (<= 65536 rows)
+        .write.mode("overwrite").parquet(s"$staging/merges")
+    }
 
   /** The live persisted merge list in training-rank order — the
     * driver-side artifact [[encode]] folds (bounded by the 65536-merge
-    * training ceiling, the same footprint the in-memory callers carry). */
+    * training ceiling, the same footprint the in-memory callers carry).
+    * Typed failure on a directory nothing was ever built into. */
   def merges(s: SparkSession, dir: String): Seq[(String, String)] =
-    mergesFrom(s, Manifest.livePaths(s, dir))
+    mergesFrom(s, dir, None)
 
   /** The merge list as of manifest `version` — the snapshot contract
     * (q186/q190/q191) for tokenizers: re-encode exactly what an old
     * shard was encoded with. */
   def mergesAt(s: SparkSession, dir: String, version: Long): Seq[(String, String)] =
-    mergesFrom(s, Manifest.livePathsAt(s, dir, version))
+    mergesFrom(s, dir, Some(version))
 
-  private def mergesFrom(s: SparkSession,
-      paths: Seq[String]): Seq[(String, String)] = {
+  private def mergesFrom(s: SparkSession, dir: String,
+      version: Option[Long]): Seq[(String, String)] = {
     import s.implicits._
-    s.read.parquet(paths.map(p => s"$p/merges"): _*)
+    s.read.parquet(Manifest.snapshot(s, dir, version, "BPE tokenizer")
+        .deltas.map(d => s"$dir/$d/merges"): _*)
       .orderBy(col("iter"))
       .select(col("pair"), col("merged"))
       .as[(String, String)].collect().toSeq

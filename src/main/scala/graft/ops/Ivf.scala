@@ -194,50 +194,64 @@ object Ivf {
       path: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    val staging = Manifest.stage(path)
-    assign(df, vecCol, m)
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(s"$staging/cells")
-    m.centroids.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$staging/model")
-    // build-time health snapshot: the baseline [[rebuildIfStale]]
-    // compares appended drift against (one extra scan of the staged
-    // cells, amortized over the index lifetime)
-    stalenessOf(spark.read.parquet(s"$staging/cells"), m, vecCol)
-      .coalesce(1).write.mode("overwrite").parquet(s"$staging/stats")
-    Manifest.commit(spark, path, Seq(staging), removeAll = true)
-    Manifest.gc(spark, path)
+    Manifest.rebuild(spark, path) { staging =>
+      writeCells(assign(df, vecCol, m), s"$staging/cells")
+      writeOne(m.centroids.zipWithIndex.toSeq
+        .map { case (c, i) => (i, c.toSeq) }
+        .toDF("cell", "centroid"), s"$staging/model")
+      // build-time health snapshot: the baseline [[rebuildIfStale]]
+      // compares appended drift against (one extra scan of the staged
+      // cells, amortized over the index lifetime)
+      writeOne(stalenessOf(spark.read.parquet(s"$staging/cells"), m, vecCol),
+        s"$staging/stats")
+    }
   }
+
+  /** Cells rows hive-partitioned by `ivf_cell` — the one layout every
+    * build, append and compaction writes. */
+  private def writeCells(cells: DataFrame, out: String): Unit =
+    cells.write.mode("overwrite").partitionBy("ivf_cell").parquet(out)
+
+  /** A small single-file table (model, stats). */
+  private def writeOne(df: DataFrame, out: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(out)
 
   private def fsOf(spark: org.apache.spark.sql.SparkSession, path: String) =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Live delta paths that contain `sub`, in commit order — one
-    * manifest resolution per call site. */
-  private def liveWith(spark: org.apache.spark.sql.SparkSession,
-      path: String, sub: String): Seq[String] =
-    filterSub(spark, path, Manifest.livePaths(spark, path), sub)
-
-  private def filterSub(spark: org.apache.spark.sql.SparkSession,
-      path: String, paths: Seq[String], sub: String): Seq[String] = {
+  /** The delta paths of `snap` that contain `sub`, in commit order. */
+  private def holding(spark: org.apache.spark.sql.SparkSession,
+      path: String, snap: Manifest.State, sub: String): Seq[String] = {
     val fs = fsOf(spark, path)
-    paths.filter(p => fs.exists(new org.apache.hadoop.fs.Path(s"$p/$sub")))
+    snap.deltas.map(d => s"$path/$d")
+      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(s"$p/$sub")))
   }
+
+  /** [[holding]], failing typed when no delta of `snap` has `sub`. */
+  private def needing(spark: org.apache.spark.sql.SparkSession,
+      path: String, snap: Manifest.State, sub: String): Seq[String] = {
+    val live = holding(spark, path, snap, sub)
+    require(live.nonEmpty,
+      s"manifest version ${snap.version} of $path lists no $sub delta")
+    live
+  }
+
+  /** The committed snapshot a read serves (typed failure when empty). */
+  private def snapOf(spark: org.apache.spark.sql.SparkSession, path: String,
+      version: Option[Long]): Manifest.State =
+    Manifest.snapshot(spark, path, version, "IVF index")
 
   /** The committed corpus: every live delta's `cells` unioned — probes,
     * audits and rebuilds all read through this one snapshot view. */
   def readCells(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    cellsSnap(spark, path, Manifest.current(spark, path),
-      s"no live IVF index under $path — writeIndex first")
+    cellsSnap(spark, path, snapOf(spark, path, None))
 
   /** [[readCells]] AS OF a retained manifest version (time travel). */
   def readCellsAt(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Long): DataFrame =
-    cellsSnap(spark, path, Manifest.stateAt(spark, path, version),
-      s"manifest version $version of $path lists no cells deltas")
+    cellsSnap(spark, path, snapOf(spark, path, Some(version)))
 
   /** The union scan PLAN over one committed snapshot's cells deltas,
     * cached by (dir, manifest version) — the plan (listing, existence
@@ -246,13 +260,11 @@ object Ivf {
     * is deliberately NOT persisted (cells are corpus-sized — the scan
     * itself stays partition-pruned per probe). */
   private def cellsSnap(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: Manifest.State, emptyMsg: String): DataFrame =
+      path: String, snap: Manifest.State): DataFrame =
     SnapshotCache.getOrCompute(
       SnapshotCache.key(spark, "ivf", path, snap.version, "cells")) {
-      val live =
-        filterSub(spark, path, snap.deltas.map(d => s"$path/$d"), "cells")
-      require(live.nonEmpty, emptyMsg)
-      live.map(p => spark.read.parquet(s"$p/cells")).reduce(_ unionAll _)
+      needing(spark, path, snap, "cells")
+        .map(p => spark.read.parquet(s"$p/cells")).reduce(_ unionAll _)
     }()
 
   /** Load the coarse quantizer persisted by [[writeIndex]] — the newest
@@ -260,16 +272,14 @@ object Ivf {
     * since builds commit `removeAll`). */
   def loadModel(spark: org.apache.spark.sql.SparkSession,
       path: String): IvfModel =
-    modelSnap(spark, path, Manifest.current(spark, path),
-      s"no live IVF model under $path — writeIndex first")
+    modelSnap(spark, path, snapOf(spark, path, None))
 
   /** [[loadModel]] AS OF a retained manifest version — after a
     * [[rebuildIfStale]] retrain this is the OLD quantizer, so a
     * time-travel probe reproduces pre-rebuild serving exactly. */
   def loadModelAt(spark: org.apache.spark.sql.SparkSession,
       path: String, version: Long): IvfModel =
-    modelSnap(spark, path, Manifest.stateAt(spark, path, version),
-      s"manifest version $version of $path lists no model delta")
+    modelSnap(spark, path, snapOf(spark, path, Some(version)))
 
   /** The collected quantizer of one committed snapshot, cached by
     * (dir, manifest version) — the centroid collect is a Spark job the
@@ -277,21 +287,14 @@ object Ivf {
     * floats (model-sized by construction). Rebuilds publish a new
     * version → new key; time travel pins old versions. */
   private def modelSnap(spark: org.apache.spark.sql.SparkSession,
-      path: String, snap: Manifest.State, emptyMsg: String): IvfModel =
+      path: String, snap: Manifest.State): IvfModel =
     SnapshotCache.getOrCompute(
       SnapshotCache.key(spark, "ivf", path, snap.version, "model")) {
-      val live =
-        filterSub(spark, path, snap.deltas.map(d => s"$path/$d"), "model")
-      require(live.nonEmpty, emptyMsg)
-      modelFrom(spark, live.last)
+      val newest = needing(spark, path, snap, "model").last
+      val rows = spark.read.parquet(s"$newest/model")
+        .select(col("cell"), col("centroid")).orderBy(col("cell")).collect()
+      IvfModel(rows.map(_.getSeq[Float](1).toArray))
     }()
-
-  private def modelFrom(spark: org.apache.spark.sql.SparkSession,
-      delta: String): IvfModel = {
-    val rows = spark.read.parquet(s"$delta/model")
-      .select(col("cell"), col("centroid")).orderBy(col("cell")).collect()
-    IvfModel(rows.map(_.getSeq[Float](1).toArray))
-  }
 
   /** Append a batch to a prebuilt index WITHOUT retraining — the
     * operational 100 TB maintenance mode: new data arrives continuously,
@@ -304,14 +307,16 @@ object Ivf {
     * ([[rebuildIfStale]], the Collection.reembed discipline), triggered
     * when [[indexStaleness]] drifts past the build-time baseline, never
     * an implicit side effect of ingest. */
-  def appendToIndex(df: DataFrame, vecCol: String, path: String): Unit = {
-    val spark = df.sparkSession
-    val m = loadModel(spark, path)
-    val staging = Manifest.stage(path)
-    assign(df, vecCol, m)
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(s"$staging/cells")
-    Manifest.commit(spark, path, Seq(staging))
-  }
+  def appendToIndex(df: DataFrame, vecCol: String, path: String): Unit =
+    Manifest.append(df.sparkSession, path)(writeDelta(df, vecCol, path))
+
+  /** Write `df` assigned under the LIVE frozen quantizer as a cells-only
+    * delta into `staging` — the IVF append writer for [[Manifest.append]]
+    * (and the streaming [[graft.streaming.IvfIngest]]). */
+  private[graft] def writeDelta(df: DataFrame, vecCol: String, path: String)(
+      staging: String): Unit =
+    writeCells(assign(df, vecCol, loadModel(df.sparkSession, path)),
+      s"$staging/cells")
 
   /** Merge the cells delta stack into ONE delta — the [[LmIndex.compact]]
     * contract for the vector index: probes union every live cells delta,
@@ -319,39 +324,16 @@ object Ivf {
     * after thousands. The merge is a pure REWRITE of the committed rows
     * (assignments are already materialized — no model math, no
     * re-normalization), repartitioned into the same hive layout; the
-    * model/stats delta is untouched and carried through the commit.
-    * `remove = exactly the cells deltas read`, so a concurrent append
-    * survives. Probe results are identical before and after (IvfSpec). */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val snap = Manifest.current(spark, path)
-    val fs = fsOf(spark, path)
-    val cellsDeltas = snap.deltas.filter(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d/cells")))
-    if (cellsDeltas.size <= 1) return
-    val staging = Manifest.stage(path)
-    cellsDeltas.map(d => spark.read.parquet(s"$path/$d/cells"))
-      .reduce(_ unionAll _)
-      .write.mode("overwrite").partitionBy("ivf_cell").parquet(s"$staging/cells")
-    // the model/stats-bearing delta may be one of the merged cells
-    // deltas (writeIndex stages all three together): carry model+stats
-    // forward into the staging delta so the commit never drops them
-    val modelDelta = snap.deltas.filter(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d/model")))
-    modelDelta.lastOption.foreach { d =>
-      if (cellsDeltas.contains(d)) {
-        spark.read.parquet(s"$path/$d/model")
-          .coalesce(1).write.mode("overwrite").parquet(s"$staging/model")
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$d/stats")))
-          spark.read.parquet(s"$path/$d/stats")
-            .coalesce(1).write.mode("overwrite").parquet(s"$staging/stats")
-      }
-    }
-    // exactly-once ingest markers ride the merge: a replayed streaming
-    // batch must still find its idempotency key after compaction
-    Manifest.copyMarkers(spark, path, cellsDeltas, staging)
-    Manifest.commit(spark, path, Seq(staging), remove = cellsDeltas)
-    Manifest.gc(spark, path)
-  }
+    * newest model and stats tables are carried into the merged delta
+    * unchanged. [[Manifest.compact]] commits `remove = exactly the
+    * deltas read`, so a concurrent append survives. Probe results are
+    * identical before and after (IvfSpec). */
+  def compact(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    Manifest.compact(spark, path, Seq(
+      ("cells", (ins, out) =>
+        writeCells(ins.map(spark.read.parquet(_)).reduce(_ unionAll _), out)),
+      ("model", (ins, out) => writeOne(spark.read.parquet(ins.last), out)),
+      ("stats", (ins, out) => writeOne(spark.read.parquet(ins.last), out))))
 
   /** Staleness audit of a prebuilt index: per cell, the row count and the
     * mean quantization error (L2 of each unit vector to its own frozen
@@ -431,14 +413,13 @@ object Ivf {
       iters: Int = 2, seed: Long = 42L,
       errGrowth: Double = 1.2, skewGrowth: Double = 2.0): RebuildDecision = {
     val cur = health(indexStaleness(spark, path, vecCol))
-    val statsDeltas = liveWith(spark, path, "stats")
+    val statsDeltas =
+      holding(spark, path, Manifest.current(spark, path), "stats")
     if (statsDeltas.isEmpty) {
       // legacy pre-snapshot index: commit the current state as the
       // baseline (a stats-only delta) and compare on the next audit
-      val staging = Manifest.stage(path)
-      indexStaleness(spark, path, vecCol)
-        .coalesce(1).write.mode("overwrite").parquet(s"$staging/stats")
-      Manifest.commit(spark, path, Seq(staging))
+      Manifest.append(spark, path)(staging =>
+        writeOne(indexStaleness(spark, path, vecCol), s"$staging/stats"))
       return RebuildDecision(rebuilt = false,
         "pre-snapshot index: baseline initialized, compare on next audit",
         cur, cur)
@@ -480,18 +461,8 @@ object Ivf {
     * should join on ivf_cell instead and rely on dynamic partition
     * pruning. Re-rank is identical to [[topK]]. */
   def probeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    // ONE pointer resolution for model + cells — the pair always reads
-    // the same committed snapshot (never a torn quantizer/corpus view
-    // across a concurrent rebuild)
-    val snap = Manifest.current(spark, path)
-    probeFrom(
-      modelSnap(spark, path, snap,
-        s"no live IVF model under $path — writeIndex first"),
-      cellsSnap(spark, path, snap,
-        s"no live IVF index under $path — writeIndex first"),
-      queries, k, nprobe)
-  }
+      queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame =
+    probeLiterally(spark, path, None, queries, k, nprobe)
 
   /** TIME TRAVEL probing — [[LmIndex.scoreAt]] / [[TextIndex
     * .probeIndexAt]]'s contract for the vector family: probe the index
@@ -501,29 +472,39 @@ object Ivf {
     * the pre-append version is bit-equal to probing a fresh index built
     * on the historic corpus alone (q191 oracle + IvfSpec). */
   def probeIndexAt(spark: org.apache.spark.sql.SparkSession, path: String,
-      version: Long, queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val snap = Manifest.stateAt(spark, path, version)
-    probeFrom(
-      modelSnap(spark, path, snap,
-        s"manifest version $version of $path lists no model delta"),
-      cellsSnap(spark, path, snap,
-        s"manifest version $version of $path lists no cells deltas"),
-      queries, k, nprobe)
+      version: Long, queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame =
+    probeLiterally(spark, path, Some(version), queries, k, nprobe)
+
+  private def probeLiterally(spark: org.apache.spark.sql.SparkSession,
+      path: String, version: Option[Long], queries: DataFrame, k: Int,
+      nprobe: Int): DataFrame = {
+    // ONE pointer resolution for model + cells — the pair always reads
+    // the same committed snapshot (never a torn quantizer/corpus view
+    // across a concurrent rebuild)
+    val snap = snapOf(spark, path, version)
+    probeAndRank(queries, modelSnap(spark, path, snap), k, nprobe) { probes =>
+      val probedCells = probes.select(col("ivf_cell")).distinct()
+        .collect().map(_.getInt(0)).sorted
+      cellsSnap(spark, path, snap)
+        .filter(col("ivf_cell").isin(probedCells.toIndexedSeq: _*))
+    }
   }
 
-  private def probeFrom(m: IvfModel, allCells: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
+  /** The one probe-and-rank body: each query's `nprobe` nearest cells
+    * (`probes`), joined on `ivf_cell` to the candidates `cands(probes)`
+    * with the (small) probe side broadcast — never a cross join — and
+    * re-ranked by exact cosine, top `k` per query. Ranks on the
+    * 6-dp-rounded cosine (ties → n_id) — same cross-engine
+    * reproducibility rationale as Similarity.lshBucketTopK (oracle q52). */
+  private def probeAndRank(queries: DataFrame, m: IvfModel, k: Int,
+      nprobe: Int)(cands: DataFrame => DataFrame): DataFrame = {
     val probes = queries
       .withColumn("_graft_qu", unit(col("qv")))
       .select(col("q_id"), col("qv"),
         explode(probeCellsUnit(col("_graft_qu"), m, nprobe)).as("ivf_cell"))
-    val probedCells = probes.select(col("ivf_cell")).distinct()
-      .collect().map(_.getInt(0)).sorted
-    val cells = allCells
-      .filter(col("ivf_cell").isin(probedCells.toIndexedSeq: _*))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(round(col("sim"), 6).desc, col("n_id"))
-    cells.join(broadcast(probes), Seq("ivf_cell"))
+    cands(probes).join(broadcast(probes), Seq("ivf_cell"))
       .withColumn("sim", VectorExprs.cosine(col("nv"), col("qv")))
       .select(col("q_id"), col("n_id"), col("sim"))
       .withColumn("rnk", row_number().over(w))
@@ -543,22 +524,9 @@ object Ivf {
     * filter prunes at plan time instead. Results are identical. */
   def probeIndexBatch(spark: org.apache.spark.sql.SparkSession, path: String,
       queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val snap = Manifest.current(spark, path)
-    val m = modelSnap(spark, path, snap,
-      s"no live IVF model under $path — writeIndex first")
-    val probes = queries
-      .withColumn("_graft_qu", unit(col("qv")))
-      .select(col("q_id"), col("qv"),
-        explode(probeCellsUnit(col("_graft_qu"), m, nprobe)).as("ivf_cell"))
-    val cells = cellsSnap(spark, path, snap,
-      s"no live IVF index under $path — writeIndex first")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("sim"), 6).desc, col("n_id"))
-    cells.join(broadcast(probes), Seq("ivf_cell"))
-      .withColumn("sim", VectorExprs.cosine(col("nv"), col("qv")))
-      .select(col("q_id"), col("n_id"), col("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    val snap = snapOf(spark, path, None)
+    probeAndRank(queries, modelSnap(spark, path, snap), k, nprobe)(_ =>
+      cellsSnap(spark, path, snap))
   }
 
   /** Approximate top-k: each query probes its `nprobe` nearest cells;
@@ -567,20 +535,6 @@ object Ivf {
     * cross join; the per-query candidate set is ~N·nprobe/nc. Schemas:
     * queries (q_id, qv), candidates (n_id, nv). */
   def topK(queries: DataFrame, candidates: DataFrame, m: IvfModel,
-      k: Int, nprobe: Int = 2): DataFrame = {
-    val probes = queries
-      .withColumn("_graft_qu", unit(col("qv")))
-      .select(col("q_id"), col("qv"),
-        explode(probeCellsUnit(col("_graft_qu"), m, nprobe)).as("ivf_cell"))
-    val cands = assign(candidates, "nv", m)
-    // rank on the 6-dp-rounded cosine (ties → n_id) — same cross-engine
-    // reproducibility rationale as Similarity.lshBucketTopK (oracle q52)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(round(col("sim"), 6).desc, col("n_id"))
-    cands.join(broadcast(probes), Seq("ivf_cell"))
-      .withColumn("sim", VectorExprs.cosine(col("nv"), col("qv")))
-      .select(col("q_id"), col("n_id"), col("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
+      k: Int, nprobe: Int = 2): DataFrame =
+    probeAndRank(queries, m, k, nprobe)(_ => assign(candidates, "nv", m))
 }

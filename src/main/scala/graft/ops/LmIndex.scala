@@ -40,12 +40,8 @@ object LmIndex {
     * fully serving (the pre-manifest delete-then-promote window is
     * gone). Incremental updates should still prefer [[append]] (no
     * retraining scan of old data). */
-  def build(train: DataFrame, textCol: String, dir: String): Unit = {
-    val spark = train.sparkSession
-    Manifest.commit(spark, dir,
-      Seq(stageDelta(train, textCol, dir)), removeAll = true)
-    Manifest.gc(spark, dir)
-  }
+  def build(train: DataFrame, textCol: String, dir: String): Unit =
+    Manifest.rebuild(train.sparkSession, dir)(writeDelta(train, textCol))
 
   /** Incrementally extend the model with a new training batch: n-gram
     * counts are ADDITIVE, so the batch's own count tables land as one
@@ -55,60 +51,50 @@ object LmIndex {
     * single manifest publish, so "append ≡ rebuild" holds for every
     * append that returns — a failed append leaves the model unchanged.
     * Proven in spec and by the q170 oracle hash match. */
-  def append(batch: DataFrame, textCol: String, dir: String): Unit = {
-    val spark = batch.sparkSession
-    Manifest.commit(spark, dir, Seq(stageDelta(batch, textCol, dir)))
-  }
+  def append(batch: DataFrame, textCol: String, dir: String): Unit =
+    Manifest.append(batch.sparkSession, dir)(writeDelta(batch, textCol))
 
   /** Merge the whole delta stack into ONE delta — the read-amplification
     * fix for long-lived models: [[score]] re-aggregates every live delta
     * per probe, which is fine at tens of deltas but unbounded after
     * thousands of appends. Compaction runs the same per-key aggregation
-    * ONCE (vocabulary-sized, map-side combined), writes the merged
-    * tables as a new delta, and commits `remove = exactly the deltas it
-    * read` — so an append committed concurrently (after the snapshot)
-    * SURVIVES the compaction ([[Manifest.commit]] re-reads the live list
-    * at commit time). Serving is hash-identical before and after (the
-    * q180 oracle and LmIndexSpec prove compacted ≡ delta-stack ≡ live).
-    * No-op on an empty or already-single-delta model. */
-  def compact(s: SparkSession, dir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val snap = Manifest.current(s, dir)
-    if (snap.deltas.size <= 1) return
-    val paths = snap.deltas.map(d => s"$dir/$d")
-    val staging = Manifest.stage(dir)
-    // the three merged-table writes are independent — overlap them
-    // (guide §2.6), same as stageDelta
-    import scala.collection.parallel.CollectionConverters._
-    Seq(
-      () => s.read.parquet(paths.map(p => s"$p/tri"): _*)
-        .groupBy(col("w1"), col("w2"), col("w3"))
-        .agg(sum(col("c123")).as("c123"))
-        .write.mode("overwrite").parquet(s"$staging/tri"),
-      () => s.read.parquet(paths.map(p => s"$p/bi"): _*)
-        .groupBy(col("wa"), col("wb")).agg(sum(col("cab")).as("cab"))
-        .write.mode("overwrite").parquet(s"$staging/bi"),
-      () => s.read.parquet(paths.map(p => s"$p/uni"): _*)
-        .groupBy(col("w")).agg(sum(col("c")).as("c"))
-        .write.mode("overwrite").parquet(s"$staging/uni")
-    ).par.foreach(_.apply())
-    // streaming-ingest idempotency keys survive the merge
-    Manifest.copyMarkers(s, dir, snap.deltas, staging)
-    Manifest.commit(s, dir, Seq(staging), remove = snap.deltas)
-    Manifest.gc(s, dir)
+    * ONCE ([[merged]], vocabulary-sized, map-side combined) and commits
+    * through [[Manifest.compact]] — `remove = exactly the deltas it
+    * read`, so an append committed concurrently SURVIVES. Serving is
+    * hash-identical before and after (the q180 oracle and LmIndexSpec
+    * prove compacted ≡ delta-stack ≡ live). No-op on an empty or
+    * already-single-delta model. */
+  def compact(s: SparkSession, dir: String): Unit =
+    Manifest.compact(s, dir, CountTables.map { case (t, _) =>
+      t -> ((ins: Seq[String], out: String) =>
+        merged(s, t, ins).write.mode("overwrite").parquet(out))
+    })
+
+  /** The three count tables: name -> (key columns, count column), the
+    * [[TextAnalysis.trigramModel]] schemas. */
+  private val CountTables = Seq(
+    "tri" -> (Seq("w1", "w2", "w3"), "c123"),
+    "bi" -> (Seq("wa", "wb"), "cab"),
+    "uni" -> (Seq("w"), "c"))
+
+  /** One count table re-aggregated per key over its delta parts — counts
+    * are additive, so this is both the compaction merge and the serving
+    * read ([[modelTables]]). */
+  private def merged(s: SparkSession, table: String,
+      paths: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, sum}
+    val (keys, c) = CountTables.toMap.apply(table)
+    s.read.parquet(paths: _*)
+      .groupBy(keys.map(col): _*).agg(sum(col(c)).as(c))
   }
 
-  /** Staging hook for the streaming exactly-once ingest
-    * ([[graft.streaming.IndexIngest]]): stage a delta WITHOUT
-    * committing, so the caller can [[Manifest.mark]] it first. */
-  private[graft] def stageDeltaFor(df: DataFrame, textCol: String,
-      dir: String): String = stageDelta(df, textCol, dir)
-
-  /** Write the batch's three count tables under an invisible staging
-    * dir; returns the staging path for [[Manifest.commit]]. */
-  private def stageDelta(df: DataFrame, textCol: String, dir: String): String = {
+  /** Write the batch's three count tables into the delta `staging` —
+    * the LM family's delta writer for [[Manifest.rebuild]]/
+    * [[Manifest.append]] (and the streaming [[graft.streaming
+    * .IndexIngest]]). */
+  private[graft] def writeDelta(df: DataFrame, textCol: String)(
+      staging: String): Unit = {
     import scala.collection.parallel.CollectionConverters._
-    val staging = Manifest.stage(dir)
     val (tri, bi, uni) = TextAnalysis.trigramModel(df, textCol)
     // the three order aggregates are independent reads of the one
     // pinned token pass — overlap their write jobs (guide §2.6) instead
@@ -117,7 +103,6 @@ object LmIndex {
       case (name, t) =>
         t.write.mode("overwrite").parquet(s"$staging/$name")
     }
-    staging
   }
 
   /** Serve: score a batch against the persisted model. Count parts
@@ -133,11 +118,8 @@ object LmIndex {
     * a hard-coded 4096 (results are K-invariant — routing only). */
   def score(s: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String,
-      alpha: Double = 0.4, hotK: Int = Skew.Auto): DataFrame = {
-    val snap = Manifest.current(s, dir)
-    require(snap.deltas.nonEmpty, s"no live LM model under $dir — build() first")
-    scoreFrom(s, dir, snap, batch, idCol, textCol, alpha, hotK)
-  }
+      alpha: Double = 0.4, hotK: Int = Skew.Auto): DataFrame =
+    scoreFrom(s, dir, None, batch, idCol, textCol, alpha, hotK)
 
   /** TIME TRAVEL serving: score against the model AS OF an explicit
     * manifest version — the snapshot a past [[build]]/[[append]]/
@@ -151,12 +133,8 @@ object LmIndex {
     * computation on the historic slice. */
   def scoreAt(s: SparkSession, dir: String, version: Long, batch: DataFrame,
       idCol: String, textCol: String,
-      alpha: Double = 0.4, hotK: Int = Skew.Auto): DataFrame = {
-    val snap = Manifest.stateAt(s, dir, version)
-    require(snap.deltas.nonEmpty,
-      s"manifest version $version of $dir lists no deltas — empty model")
-    scoreFrom(s, dir, snap, batch, idCol, textCol, alpha, hotK)
-  }
+      alpha: Double = 0.4, hotK: Int = Skew.Auto): DataFrame =
+    scoreFrom(s, dir, Some(version), batch, idCol, textCol, alpha, hotK)
 
   /** The re-aggregated count tables of ONE committed snapshot,
     * persisted and cached by (dir, manifest version) in
@@ -170,21 +148,13 @@ object LmIndex {
     * model-sized-only memory contract. */
   private def modelTables(s: SparkSession, dir: String,
       snap: Manifest.State): (DataFrame, DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions._
     import org.apache.spark.storage.StorageLevel
-    val paths = snap.deltas.map(d => s"$dir/$d")
     SnapshotCache.getOrCompute(
       SnapshotCache.key(s, "lm", dir, snap.version)) {
-      val tri = s.read.parquet(paths.map(p => s"$p/tri"): _*)
-        .groupBy(col("w1"), col("w2"), col("w3"))
-        .agg(sum(col("c123")).as("c123"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val bi = s.read.parquet(paths.map(p => s"$p/bi"): _*)
-        .groupBy(col("wa"), col("wb")).agg(sum(col("cab")).as("cab"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val uni = s.read.parquet(paths.map(p => s"$p/uni"): _*)
-        .groupBy(col("w")).agg(sum(col("c")).as("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val Seq(tri, bi, uni) = CountTables.map { case (t, _) =>
+        merged(s, t, snap.deltas.map(d => s"$dir/$d/$t"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+      }
       (tri, bi, uni)
     } { case (t, b, u) =>
       t.unpersist(false); b.unpersist(false); u.unpersist(false)
@@ -226,9 +196,10 @@ object LmIndex {
     }
   }
 
-  private def scoreFrom(s: SparkSession, dir: String, snap: Manifest.State,
+  private def scoreFrom(s: SparkSession, dir: String, version: Option[Long],
       batch: DataFrame, idCol: String, textCol: String,
       alpha: Double, hotK: Int): DataFrame = {
+    val snap = Manifest.snapshot(s, dir, version, "LM model")
     val (m1, m2, m3, nv, hots) = microTables(s, dir, snap, alpha, hotK)
     TextAnalysis.scoreBackoffTrigramsOn(
       // cut, not pinned: the serving plan then holds no corpus scan

@@ -3,8 +3,9 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Shared MANIFEST-POINTER commit protocol for the three persisted index
-  * families ([[LmIndex]], [[TextIndex]], [[Ivf]]) — the table-format
+/** Shared MANIFEST-POINTER commit protocol and index lifecycle for the
+  * four persisted index families ([[LmIndex]], [[TextIndex]], [[Ivf]],
+  * [[BpeIndex]]) — the table-format
   * answer (Iceberg/Delta's core idea, re-expressed minimally) to the
   * question "how does a persisted index survive crashes and serve a
   * consistent snapshot while being rebuilt, appended and compacted?":
@@ -36,6 +37,12 @@ import org.apache.spark.sql.SparkSession
   *     threshold, so an in-flight writer's staging dir or an in-flight
   *     reader's just-unreferenced snapshot is never yanked mid-use (the
   *     r14 tmp-GC gap).
+  *
+  * The lifecycle — [[rebuild]], [[append]] (exactly-once with a key),
+  * [[compact]] and [[snapshot]] — lives here once; a family declares
+  * only how it writes a delta's tables and how each table merges.
+  * [[stage]], [[mark]], [[copyMarkers]] and [[commit]] are the steps
+  * those entry points are made of.
   *
   * Concurrency contract: atomic-rename filesystems (HDFS, POSIX) give
   * lost-update protection between concurrent committers best-effort
@@ -225,6 +232,74 @@ object Manifest {
         }
       }
     }
+  }
+
+  // ---- the index lifecycle -----------------------------------------
+
+  /** The committed state a read serves: the live one (`version = None`)
+    * or a retained one ([[stateAt]]). Typed failure when it lists no
+    * deltas — `what` names the index in the message — so no family
+    * ever serves a silent empty model. */
+  def snapshot(spark: SparkSession, dir: String, version: Option[Long],
+      what: String): State = {
+    val st = version.fold(current(spark, dir))(stateAt(spark, dir, _))
+    require(st.deltas.nonEmpty, version match {
+      case None => s"no live $what under $dir — build first"
+      case Some(v) => s"manifest version $v of $dir lists no deltas — empty $what"
+    })
+    st
+  }
+
+  /** REBUILD: `write` fills one fresh staged delta, which commits as the
+    * ONLY live delta (`removeAll`), then [[gc]]. Atomic: the previous
+    * index serves until the pointer flips. */
+  def rebuild(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
+    val staging = stage(dir)
+    write(staging)
+    commit(spark, dir, Seq(staging), removeAll = true)
+    gc(spark, dir)
+  }
+
+  /** APPEND: `write` fills one staged delta, committed on top of the live
+    * ones. With a `key` the append is EXACTLY-ONCE: a key already live
+    * ([[isCommitted]]) returns before `write` runs; otherwise the delta
+    * is [[mark]]ed with it before the commit (the streaming
+    * `batch=<id>` discipline). */
+  def append(spark: SparkSession, dir: String, key: Option[String] = None)(
+      write: String => Unit): Unit = {
+    if (key.exists(isCommitted(spark, dir, _))) return
+    val staging = stage(dir)
+    write(staging)
+    key.foreach(mark(spark, staging, _))
+    commit(spark, dir, Seq(staging))
+  }
+
+  /** One table's merge: that table's paths in the deltas being merged
+    * (commit order), and the path to write the merged table to. */
+  type Merge = (Seq[String], String) => Unit
+
+  /** COMPACTION: merge the live deltas holding any of `tables` into ONE
+    * delta. The table merges are independent and run in parallel;
+    * idempotency markers are carried forward ([[copyMarkers]]) and the
+    * commit removes exactly the deltas read, so an append committed
+    * meanwhile survives. No-op when at most one delta holds the tables. */
+  def compact(spark: SparkSession, dir: String,
+      tables: Seq[(String, Merge)]): Unit = {
+    import scala.collection.parallel.CollectionConverters._
+    val (fs, base) = fsOf(spark, dir)
+    val live = current(spark, dir).deltas
+    val holders = tables.map { case (t, merge) =>
+      (t, merge, live.filter(d => fs.exists(new Path(new Path(base, d), t))))
+    }
+    val read = live.filter(d => holders.exists(_._3.contains(d)))
+    if (read.size <= 1) return
+    val staging = stage(dir)
+    holders.filter(_._3.nonEmpty).par.foreach { case (t, merge, ds) =>
+      merge(ds.map(d => s"$dir/$d/$t"), s"$staging/$t")
+    }
+    copyMarkers(spark, dir, read, staging)
+    commit(spark, dir, Seq(staging), remove = read)
+    gc(spark, dir)
   }
 
   /** The retained version history, oldest first — which snapshots

@@ -59,41 +59,42 @@ object TextIndex {
     text.toLowerCase.trim.replaceAll("\\s+", " ")
       .split(" ").toSeq.filter(_.nonEmpty)
 
-  /** Write one delta's three tables under an invisible staging dir;
-    * returns the staging path for [[Manifest.commit]]. */
-  private[graft] def stageDeltaFor(df: DataFrame, idCol: String,
-      textCol: String, path: String, buckets: Int): String =
-    stageDelta(df, idCol, textCol, path, buckets)
-
-  private def stageDelta(df: DataFrame, idCol: String, textCol: String,
-      path: String, buckets: Int): String = {
+  /** Write one delta's three tables into `staging` — the text family's
+    * delta writer for [[Manifest.rebuild]]/[[Manifest.append]] (and the
+    * streaming [[graft.streaming.IndexIngest]]). */
+  private[graft] def writeDelta(df: DataFrame, idCol: String, textCol: String,
+      buckets: Int)(staging: String): Unit = {
     require(buckets >= 1, s"need >= 1 buckets, got $buckets")
-    val staging = Manifest.stage(path)
     val toks = df
       .select(col(idCol), explode(TextAnalysis.tokens(col(textCol))).as("token"))
       .filter(length(col("token")) > 0)
-    toks.groupBy(col("token"), col(idCol))
-      .agg(count(lit(1)).as("tf"))
-      .withColumn("bucket", termBucketCol(col("token"), buckets))
-      .write.partitionBy("bucket").mode("overwrite")
-      .parquet(s"$staging/postings")
+    writePostings(toks.groupBy(col("token"), col(idCol))
+      .agg(count(lit(1)).as("tf")), buckets, s"$staging/postings")
     val dl = TextAnalysis.docLengths(df, idCol, textCol)
     dl.write.mode("overwrite").parquet(s"$staging/docstats")
     dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
       .write.mode("overwrite").parquet(s"$staging/stats")
-    staging
   }
+
+  /** (token, id, tf) rows hive-partitioned by their term bucket. */
+  private def writePostings(tf: DataFrame, buckets: Int, out: String): Unit =
+    tf.withColumn("bucket", termBucketCol(col("token"), buckets))
+      .write.partitionBy("bucket").mode("overwrite").parquet(out)
+
+  /** The global (n_docs, total_len) row: the sum of the delta partials —
+    * both the compaction merge of `stats` and the serving read. */
+  private def statsOf(s: SparkSession, paths: Seq[String]): DataFrame =
+    s.read.parquet(paths: _*)
+      .agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("total_len")).as("total_len"))
 
   /** Build and persist the index. One corpus pass. A full REBUILD: the
     * new manifest lists only the new delta — atomic, and the previous
     * index serves until the pointer flips. */
   def writeIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, buckets: Int = 64): Unit = {
-    val spark = df.sparkSession
-    Manifest.commit(spark, path,
-      Seq(stageDelta(df, idCol, textCol, path, buckets)), removeAll = true)
-    Manifest.gc(spark, path)
-  }
+      path: String, buckets: Int = 64): Unit =
+    Manifest.rebuild(df.sparkSession, path)(
+      writeDelta(df, idCol, textCol, buckets))
 
   /** Append a new document batch to an existing index WITHOUT touching
     * the already-indexed corpus — the operational ingest mode (the
@@ -108,48 +109,32 @@ object TextIndex {
     * append). */
   def appendToIndex(batch: DataFrame, idCol: String, textCol: String,
       path: String, buckets: Int = 64): Unit =
-    Manifest.commit(batch.sparkSession, path,
-      Seq(stageDelta(batch, idCol, textCol, path, buckets)))
+    Manifest.append(batch.sparkSession, path)(
+      writeDelta(batch, idCol, textCol, buckets))
 
   /** Merge the whole delta stack into ONE delta — [[LmIndex.compact]]'s
     * contract for postings: probes union every live delta's postings,
     * which is fine at tens of deltas but unbounded read amplification
     * after thousands of appends. The merge re-groups (token, id) tf
     * rows (a no-op sum under the disjoint-ids append contract, safe
-    * regardless), unions docstats, re-sums the stats partials, and
-    * commits `remove = exactly the deltas read` so a concurrent append
+    * regardless), unions docstats, re-sums the stats partials
+    * ([[statsOf]]), and commits through [[Manifest.compact]] —
+    * `remove = exactly the deltas read`, so a concurrent append
     * survives. Serving is hash-identical before and after
     * (TextIndexSpec proves compacted ≡ delta-stack ≡ from-scratch). */
   def compact(s: SparkSession, path: String, idCol: String,
       buckets: Int = 64): Unit = {
     require(buckets >= 1, s"need >= 1 buckets, got $buckets")
-    val snap = Manifest.current(s, path)
-    if (snap.deltas.size <= 1) return
-    val paths = snap.deltas.map(d => s"$path/$d")
-    val staging = Manifest.stage(path)
-    // the three merged-table writes are independent — overlap them
-    // (guide §2.6), same as LmIndex.compact
-    import scala.collection.parallel.CollectionConverters._
-    Seq(
-      () => paths.map(p => s.read.parquet(s"$p/postings")
-          .select(col("token"), col(idCol), col("tf")))
-        .reduce(_ unionAll _)
-        .groupBy(col("token"), col(idCol))
-        .agg(sum(col("tf")).as("tf"))
-        .withColumn("bucket", termBucketCol(col("token"), buckets))
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$staging/postings"),
-      () => s.read.parquet(paths.map(p => s"$p/docstats"): _*)
-        .write.mode("overwrite").parquet(s"$staging/docstats"),
-      () => s.read.parquet(paths.map(p => s"$p/stats"): _*)
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("total_len")).as("total_len"))
-        .write.mode("overwrite").parquet(s"$staging/stats")
-    ).par.foreach(_.apply())
-    // streaming-ingest idempotency keys survive the merge
-    Manifest.copyMarkers(s, path, snap.deltas, staging)
-    Manifest.commit(s, path, Seq(staging), remove = snap.deltas)
-    Manifest.gc(s, path)
+    Manifest.compact(s, path, Seq(
+      ("postings", (ins, out) => writePostings(
+        ins.map(p => s.read.parquet(p).select(col("token"), col(idCol), col("tf")))
+          .reduce(_ unionAll _)
+          .groupBy(col("token"), col(idCol)).agg(sum(col("tf")).as("tf")),
+        buckets, out)),
+      ("docstats", (ins, out) =>
+        s.read.parquet(ins: _*).write.mode("overwrite").parquet(out)),
+      ("stats", (ins, out) =>
+        statsOf(s, ins).write.mode("overwrite").parquet(out))))
   }
 
   /** BM25 scores for literal `queries` (q_id, query text) against a
@@ -160,14 +145,8 @@ object TextIndex {
     * docFreq). */
   def probeIndex(s: SparkSession, path: String, idCol: String,
       queries: Seq[(Long, String)], buckets: Int = 64,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // ONE manifest resolution shared by postings/docstats/stats — a
-    // consistent committed snapshot even while appends land concurrently
-    val snap = Manifest.current(s, path)
-    require(snap.deltas.nonEmpty,
-      s"no live text index under $path — writeIndex first")
-    probeFrom(s, path, snap, idCol, queries, buckets, k1, b)
-  }
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    probeFrom(s, path, None, idCol, queries, buckets, k1, b)
 
   /** TIME TRAVEL serving — [[LmIndex.scoreAt]]'s contract for the text
     * family: BM25 against the index AS OF an explicit manifest version
@@ -177,12 +156,8 @@ object TextIndex {
     * on a never-committed or gc'd version. */
   def probeIndexAt(s: SparkSession, path: String, version: Long,
       idCol: String, queries: Seq[(Long, String)], buckets: Int = 64,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val snap = Manifest.stateAt(s, path, version)
-    require(snap.deltas.nonEmpty,
-      s"manifest version $version of $path lists no deltas — empty index")
-    probeFrom(s, path, snap, idCol, queries, buckets, k1, b)
-  }
+      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    probeFrom(s, path, Some(version), idCol, queries, buckets, k1, b)
 
   /** Which documents entered or left the index between two retained
     * versions — the corpus-diff readout the manifest history makes free
@@ -195,11 +170,9 @@ object TextIndex {
     * rule — surfaced, not hidden). */
   def versionDiff(s: SparkSession, path: String, fromV: Long, toV: Long,
       idCol: String): DataFrame = {
-    def stats(v: Long) = {
-      val live = Manifest.livePathsAt(s, path, v)
-      require(live.nonEmpty, s"manifest version $v of $path lists no deltas")
-      s.read.parquet(live.map(p => s"$p/docstats"): _*)
-    }
+    def stats(v: Long) = s.read.parquet(
+      Manifest.snapshot(s, path, Some(v), "text index").deltas
+        .map(d => s"$path/$d/docstats"): _*)
     stats(fromV).select(col(idCol), col("dl").as("_dl_from"))
       .join(stats(toV).select(col(idCol), col("dl").as("_dl_to")),
         Seq(idCol), "full")
@@ -228,14 +201,12 @@ object TextIndex {
           .select(col("bucket"), col("token"), col(idCol), col("tf")))
         .reduce(_ unionAll _)
       val dl = s.read.parquet(live.map(p => s"$p/docstats"): _*)
-      val stats = s.read.parquet(live.map(p => s"$p/stats"): _*)
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("total_len")).as("total_len"))
+      val stats = statsOf(s, live.map(p => s"$p/stats"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (postings, dl, stats)
     } { case (_, _, st) => st.unpersist(false) }
 
-  private def probeFrom(s: SparkSession, path: String, snap: Manifest.State,
+  private def probeFrom(s: SparkSession, path: String, version: Option[Long],
       idCol: String, queries: Seq[(Long, String)], buckets: Int,
       k1: Double, b: Double): DataFrame = {
     val qTerms = queries
@@ -243,7 +214,10 @@ object TextIndex {
     val probeTerms = qTerms.map(_._2).distinct
     require(probeTerms.nonEmpty, "queries produced no probe terms")
     val bucketLits = probeTerms.map(termBucket(_, buckets)).distinct
-    val (allPostings, dl, stats) = snapPlans(s, path, snap, idCol)
+    // ONE manifest resolution shared by postings/docstats/stats — a
+    // consistent committed snapshot even while appends land concurrently
+    val (allPostings, dl, stats) = snapPlans(s, path,
+      Manifest.snapshot(s, path, version, "text index"), idCol)
     val postings = allPostings
       .filter(col("bucket").isin(bucketLits.map(x => x: Any): _*))
       .filter(col("token").isin(probeTerms.map(x => x: Any): _*))

@@ -12,16 +12,16 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * retrains inside ingest) and lands as one more immutable cells delta
   * behind ONE atomic manifest commit.
   *
-  * EXACTLY-ONCE, not at-least-once: every batch's delta is tagged with
-  * the idempotency key `batch=<batchId>` BEFORE the commit
-  * ([[Manifest.mark]]); a replayed micro-batch (crash after the manifest
-  * commit, before the stream checkpoint commit) finds its key already
-  * live ([[Manifest.isCommitted]]) and skips — so N appends of the same
+  * EXACTLY-ONCE, not at-least-once: every batch is one
+  * [[Manifest.append]] keyed `batch=<batchId>`, so its delta is tagged
+  * with the key BEFORE the commit; a replayed micro-batch (crash after
+  * the manifest commit, before the stream checkpoint commit) finds its
+  * key already live and skips — so N appends of the same
   * batchId are ONE delta, and the served index is bit-identical to a
   * single batch [[Ivf.writeIndex]] of the union corpus under the same
   * model (the IvfSpec append≡build property, now crash-safe).
-  * [[Ivf.compact]] carries markers forward ([[Manifest.copyMarkers]]),
-  * so compaction between batches cannot break the replay probe.
+  * [[Ivf.compact]] carries markers forward ([[Manifest.compact]]), so
+  * compaction between batches cannot break the replay probe.
   *
   * Drift: ingest NEVER retrains implicitly. [[Ivf.indexStaleness]] is
   * the probe — audit after every K batches (or on a schedule) and let
@@ -41,19 +41,9 @@ object IvfIngest {
     * column(s) the index was built with (everything lands in the cells
     * delta, exactly like [[Ivf.appendToIndex]]). */
   def processBatch(batch: DataFrame, batchId: Long, vecCol: String,
-      path: String): Unit = {
-    val spark = batch.sparkSession
-    val key = s"batch=$batchId"
-    if (Manifest.isCommitted(spark, path, key)) return // replay: done
-    val m = Ivf.loadModel(spark, path)
-    val staging = Manifest.stage(path)
-    Ivf.assign(batch, vecCol, m)
-      .write.mode("overwrite").partitionBy("ivf_cell")
-      .parquet(s"$staging/cells")
-    Manifest.mark(spark, staging, key)
-    Manifest.commit(spark, path, Seq(staging))
-    ()
-  }
+      path: String): Unit =
+    Manifest.append(batch.sparkSession, path, Some(s"batch=$batchId"))(
+      Ivf.writeDelta(batch, vecCol, path))
 
   /** Start the stream: assign-and-append every micro-batch into the
     * index at `path` (which must already exist — [[Ivf.writeIndex]]

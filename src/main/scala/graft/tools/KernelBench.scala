@@ -13,11 +13,33 @@ import org.apache.spark.sql.functions._
   *   (c) a Scala UDF —
   * next to the vec_cosine and vec_l2 kernels over the same vectors.
   * Quantifies the SURVEY §4.3 design choice. Appends nothing; prints a
-  * markdown table (paste into BENCH notes).
+  * markdown table (paste into BENCH notes). Every row is warmed up once;
+  * a kernel row is the best of 3 timed runs, a portable baseline row
+  * (HoF, UDF, expression pipelines, explode) one timed run — baselines
+  * are 10-100x slower and their ratio to the kernels is what the table
+  * reports.
   *
   *   sbt "runMain graft.tools.KernelBench"
   */
 object KernelBench {
+  private val KernelRuns = 3
+  private val BaselineRuns = 1
+
+  /** Warm `run` up once, then time `runs` runs and print the best as one
+    * table row: seconds, and `rows` per second scaled by `scale` into
+    * `unit`. Returns the best seconds. */
+  private def time(label: String, rows: Long, scale: Double, unit: String,
+      runs: Int)(run: => Any): Double = {
+    run
+    val best = (1 to runs).map { _ =>
+      val t0 = System.nanoTime()
+      run
+      (System.nanoTime() - t0) / 1e9
+    }.min
+    println(f"| $label%-22s | $best%8.3f s | ${rows / best / scale}%8.1f $unit%-8s |")
+    best
+  }
+
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 1000000L
     val spark = GraftSession.local()
@@ -40,26 +62,17 @@ object KernelBench {
       acc
     })
 
-    def time(label: String)(c: org.apache.spark.sql.Column): Double = {
-      df.select(sum(c)).head() // warm
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        df.select(sum(c)).head()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val best = runs.min
-      println(f"| $label%-22s | $best%8.3f s | ${n / best / 1e6}%8.1f M rows/s |")
-      best
-    }
+    def dot(label: String, runs: Int)(c: org.apache.spark.sql.Column) =
+      time(label, n, 1e6, "M rows/s", runs)(df.select(sum(c)).head())
 
-    println(s"Dot product over $n rows x $dim float dims (local, min of 3):")
+    println(s"Dot product over $n rows x $dim float dims (local):")
     println("| kernel                 | time       | throughput      |")
     println("|------------------------|------------|-----------------|")
-    val ce = time("codegen Expression")(VectorExprs.dot(col("a"), col("b")))
-    time("vec_cosine kernel")(VectorExprs.cosine(col("a"), col("b")))
-    time("vec_l2 kernel")(VectorExprs.l2(col("a"), col("b")))
-    val hf = time("HoF zip_with+aggregate")(hof)
-    val ud = time("Scala UDF")(udf_(col("a"), col("b")))
+    val ce = dot("codegen Expression", KernelRuns)(VectorExprs.dot(col("a"), col("b")))
+    dot("vec_cosine kernel", KernelRuns)(VectorExprs.cosine(col("a"), col("b")))
+    dot("vec_l2 kernel", KernelRuns)(VectorExprs.l2(col("a"), col("b")))
+    val hf = dot("HoF zip_with+aggregate", BaselineRuns)(hof)
+    val ud = dot("Scala UDF", BaselineRuns)(udf_(col("a"), col("b")))
     println(f"speedup vs HoF: ${hf / ce}%.1fx; vs UDF: ${ud / ce}%.1fx")
 
     // int8 path: same vectors quantized once, then the integer kernel
@@ -68,19 +81,8 @@ object KernelBench {
       graft.ops.Quantize.toInt8(col("b"), lit(127.0d)).as("qb"))
       .pin
     qdf.count()
-    def timeQ(label: String)(c: org.apache.spark.sql.Column): Double = {
-      qdf.select(sum(c)).head()
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        qdf.select(sum(c)).head()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val best = runs.min
-      println(f"| $label%-22s | $best%8.3f s | ${n / best / 1e6}%8.1f M rows/s |")
-      best
-    }
-    val qi = timeQ("int8 codegen kernel")(
-      graft.expr.QuantExprs.dotI8(col("qa"), col("qb")))
+    val qi = time("int8 codegen kernel", n, 1e6, "M rows/s", KernelRuns)(
+      qdf.select(sum(graft.expr.QuantExprs.dotI8(col("qa"), col("qb")))).head())
     println(f"int8 vs float codegen: ${ce / qi}%.1fx (plus 4x smaller scans at rest)")
     Pin.release(spark) // df and qdf
 
@@ -92,44 +94,35 @@ object KernelBench {
               i -> concat('w', pmod(id * i + i, 211))), ' ')""").as("text"))
       .pin
     docs.count()
-    def timeDf(label: String)(mk: => org.apache.spark.sql.DataFrame): Double = {
-      mk.count() // warm
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val best = runs.min
-      println(f"| $label%-22s | $best%8.3f s | ${nDocs / best / 1e3}%8.1f K docs/s |")
-      best
-    }
-    println(s"\nText sketches over $nDocs docs x 60 words (local, min of 3):")
+    def text(label: String, runs: Int)(mk: => org.apache.spark.sql.DataFrame) =
+      time(label, nDocs, 1e3, "K docs/s", runs)(mk.count())
+    println(s"\nText sketches over $nDocs docs x 60 words (local):")
     println("| kernel                 | time       | throughput      |")
     println("|------------------------|------------|-----------------|")
-    val mk = timeDf("minhash kernel")(
+    val mk = text("minhash kernel", KernelRuns)(
       graft.ops.Dedup.minHashSignatures(docs, "id", "text"))
-    val mp = timeDf("minhash portable")(
+    val mp = text("minhash portable", BaselineRuns)(
       graft.ops.Dedup.minHashSignaturesPortable(docs, "id", "text"))
-    val sk = timeDf("simhash kernel")(
+    val sk = text("simhash kernel", KernelRuns)(
       graft.ops.Dedup.simHash(docs, "id", "text"))
-    val sp = timeDf("simhash portable")(
+    val sp = text("simhash portable", BaselineRuns)(
       graft.ops.Dedup.simHashPortable(docs, "id", "text"))
-    val wk = timeDf("winnow kernel")(
+    val wk = text("winnow kernel", KernelRuns)(
       graft.ops.TextAnalysis.winnowFingerprints(docs, "id", "text"))
-    val nk = timeDf("ngram-dup kernel")(
+    val nk = text("ngram-dup kernel", KernelRuns)(
       graft.ops.TextAnalysis.repetitionStats(docs, "id", "text"))
-    val np = timeDf("ngram-dup portable HOF")(
+    val np = text("ngram-dup portable HOF", BaselineRuns)(
       docs.select(col("id"),
         graft.ops.TextAnalysis.ngramCodes(col("text"), 2).as("ng"))
         .filter(size(col("ng")) > 0)
         .select(col("id"), size(col("ng")), size(array_distinct(col("ng")))))
     // the filter on the computed column forces evaluation — a bare
     // select would be column-pruned away under count()
-    val dk = timeDf("distinct-ngram kernel")(
+    val dk = text("distinct-ngram kernel", KernelRuns)(
       docs.select(col("id"),
         graft.ops.Decontaminate.ngramSet(col("text"), 8).as("ng"))
         .filter(size(col("ng")) > 0))
-    val dp = timeDf("distinct-ngram HOF")(
+    val dp = text("distinct-ngram HOF", BaselineRuns)(
       docs.select(col("id"),
         array_distinct(graft.ops.TextAnalysis.ngramCodes(col("text"), 8)).as("ng"))
         .filter(size(col("ng")) > 0))
@@ -139,28 +132,19 @@ object KernelBench {
     // ---- spectral moments: one-pass 128-bit aggregate vs explode ----
     val nVec = math.max(n / 5, 10000L)
     val sdim = 64
-    def timeDfN(label: String, rows: Long)(mk: => org.apache.spark.sql.DataFrame): Double = {
-      mk.count() // warm
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        mk.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val best = runs.min
-      println(f"| $label%-22s | $best%8.3f s | ${rows / best / 1e3}%8.1f K vecs/s |")
-      best
-    }
+    def moments(label: String, runs: Int)(mk: => org.apache.spark.sql.DataFrame) =
+      time(label, nVec, 1e3, "K vecs/s", runs)(mk.count())
     val vecs = spark.range(nVec).select(expr(
       s"transform(sequence(1, $sdim), i -> cast(round(pmod(id * i, 199) / 199.0 * 1e6) as bigint))")
       .as("vm")).pin
     vecs.count()
-    println(s"\nSpectral moments over $nVec vectors x $sdim dims (local, min of 3):")
+    println(s"\nSpectral moments over $nVec vectors x $sdim dims (local):")
     println("| kernel                 | time       | throughput      |")
     println("|------------------------|------------|-----------------|")
-    val sa = timeDfN("moments aggregate", nVec)(
+    val sa = moments("moments aggregate", KernelRuns)(
       vecs.agg(graft.expr.SpectralMoments.of(col("vm"), sdim).as("m"))
         .select(col("m.n"), col("m.sxy")))
-    val se = timeDfN("explode + groupBy", nVec)(
+    val se = moments("explode + groupBy", BaselineRuns)(
       vecs.select(explode(expr(
           s"flatten(transform(sequence(0, ${sdim - 1}), p -> " +
             s"transform(sequence(p, ${sdim - 1}), q -> named_struct(" +

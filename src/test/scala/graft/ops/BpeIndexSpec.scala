@@ -43,4 +43,13 @@ class BpeIndexSpec extends SparkSpecBase {
     // a never-committed version fails typed, never a silent empty model
     intercept[IllegalArgumentException](BpeIndex.mergesAt(spark, dir, 99L))
   }
+
+  test("a tokenizer that was never built fails typed, naming the build") {
+    val dir = java.nio.file.Files.createTempDirectory("bpe_empty").toString
+    val e = intercept[IllegalArgumentException](BpeIndex.merges(spark, dir))
+    assert(e.getMessage.contains("no live BPE tokenizer") &&
+      e.getMessage.contains("build first"), e.getMessage)
+    intercept[IllegalArgumentException](
+      BpeIndex.encode(spark, dir, docs, "doc_id", "text"))
+  }
 }

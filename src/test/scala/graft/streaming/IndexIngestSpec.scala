@@ -9,6 +9,11 @@ case class IndexIngestDoc(doc_id: Long, text: String)
 class IndexIngestSpec extends SparkSpecBase {
   import spark.implicits._
 
+  /** A skipped replay returns before staging anything. */
+  private def noStaging(dir: String): Unit =
+    assert(!new java.io.File(dir).list().exists(_.startsWith("tmp_")),
+      "a skipped replay must not stage a delta")
+
   private def lmScores(dir: String): Seq[(Long, Double)] = {
     val probe = Seq((99L, "a b c d")).toDF("doc_id", "text")
     LmIndex.score(spark, dir, probe, "doc_id", "text")
@@ -25,6 +30,7 @@ class IndexIngestSpec extends SparkSpecBase {
     // every probability — the key must skip it
     IndexIngest.lmProcessBatch(b1, 1L, "text", dir)
     assert(lmScores(dir) == afterB1, "replay changed the served model")
+    noStaging(dir)
     IndexIngest.lmProcessBatch(b2, 2L, "text", dir)
     val streamed = lmScores(dir)
     // reference: one batch build over the union corpus
@@ -48,6 +54,7 @@ class IndexIngestSpec extends SparkSpecBase {
     IndexIngest.textProcessBatch(b1, 1L, "doc_id", "text", dir) // replay
     assert(Manifest.current(spark, dir).deltas.size == 1,
       "replay must not add a delta")
+    noStaging(dir)
     assert(probe(dir) == after1)
     IndexIngest.textProcessBatch(b2, 2L, "doc_id", "text", dir)
     val dir2 = java.nio.file.Files.createTempDirectory("txtbatch").toString
@@ -71,6 +78,31 @@ class IndexIngestSpec extends SparkSpecBase {
     IndexIngest.lmProcessBatch(b1, 1L, "text", dir) // replay after merge
     assert(lmScores(dir) == before,
       "post-compaction replay must not re-add counts")
+    noStaging(dir)
+  }
+
+  test("Text compaction carries markers; replay after compact still skips") {
+    val dir = java.nio.file.Files.createTempDirectory("txtcomp").toString
+    val b1 = Seq((1L, "spark streams data")).toDF("doc_id", "text")
+    val b2 = Seq((2L, "data lakes spark")).toDF("doc_id", "text")
+    def probe() =
+      TextIndex.probeIndex(spark, dir, "doc_id", Seq((0L, "spark data")))
+        .select($"q_id", $"doc_id", $"sum_micro", $"bm25")
+        .as[(Long, Long, Long, Double)].collect().toSet
+    IndexIngest.textProcessBatch(b1, 1L, "doc_id", "text", dir)
+    IndexIngest.textProcessBatch(b2, 2L, "doc_id", "text", dir)
+    val before = probe()
+    TextIndex.compact(spark, dir, "doc_id")
+    assert(Manifest.current(spark, dir).deltas.size == 1)
+    assert(Manifest.isCommitted(spark, dir, "batch=1") &&
+      Manifest.isCommitted(spark, dir, "batch=2"),
+      "markers must survive text compaction")
+    assert(probe() == before, "compaction changed the served scores")
+    IndexIngest.textProcessBatch(b1, 1L, "doc_id", "text", dir) // replay
+    assert(Manifest.current(spark, dir).deltas.size == 1,
+      "post-compaction replay must not add a delta")
+    noStaging(dir)
+    assert(probe() == before, "post-compaction replay must not re-post")
   }
 
   test("end-to-end LM stream with restart appends exactly once") {

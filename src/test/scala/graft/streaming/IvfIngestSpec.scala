@@ -24,6 +24,11 @@ class IvfIngestSpec extends SparkSpecBase {
     base
   }
 
+  /** A skipped replay returns before staging anything. */
+  private def noStaging(dir: String): Unit =
+    assert(!new java.io.File(dir).list().exists(_.startsWith("tmp_")),
+      "a skipped replay must not stage a delta")
+
   private def probeSet(dir: String): Set[(Long, Long)] = {
     val queries = mkVecs(100 until 103)
       .toDF().select($"n_id".as("q_id"), $"nv".as("qv"))
@@ -42,6 +47,7 @@ class IvfIngestSpec extends SparkSpecBase {
     IvfIngest.processBatch(b1, 1L, "nv", dir)
     assert(Manifest.current(spark, dir).deltas == deltasAfterB1,
       "replayed batch must not commit a second delta")
+    noStaging(dir)
     IvfIngest.processBatch(b2, 2L, "nv", dir)
     val streamed = probeSet(dir)
     // a corpus row count audit: no duplicates from the replay
@@ -76,6 +82,7 @@ class IvfIngestSpec extends SparkSpecBase {
     IvfIngest.processBatch(b1, 7L, "nv", dir) // replay after compaction
     assert(Ivf.readCells(spark, dir).count() == 50L,
       "post-compaction replay must not re-append")
+    noStaging(dir)
   }
 
   test("end-to-end stream: restart with a new batch appends exactly once") {
